@@ -1,7 +1,8 @@
 """Table loading and view registration.
 
 Single chokepoint for reading the driver-generated parquet (TESTDATA.md):
-every operator goes through :func:`load_table` so the events nanosecond
+every operator goes through :func:`load_table` (streams through
+:func:`read_raw` + :func:`canonicalize`) so the events nanosecond
 workaround and session confs are applied uniformly regardless of who built
 the SparkSession (the driver builds its own for verify runs).
 
@@ -51,13 +52,40 @@ def prepare(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one of the 10 operative tables from ``{sf_dir}/{name}.parquet``.
+def read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Batch read of ``{sf_dir}/{name}.parquet`` in its physical layout.
 
-    ``events`` is canonicalized (FIXTURES.md "events") to the pair ``ts``
-    (TimestampNTZ, µs) + ``ts_us`` (bigint epoch-µs — for arithmetic that
-    must exactly match a DuckDB oracle computing ``epoch_ns(ts)//1000``),
-    handling BOTH physical layouts the driver has generated across rounds:
+    Every table but ``events`` is read with the PINNED schema (schemas.py,
+    measured from the driver parquet): skipping per-read footer schema
+    inference is ~7× less driver latency per call (measured 73 ms → 10 ms
+    at sf0.1 — round-14; multi-table queries paid it per table per run),
+    and a production 100 TB reader pins schemas anyway so file-set sampling
+    never runs. Parquet reconciles by name and errors loudly on a type
+    change; the full-registry emulator sweep (all three scales) plus
+    tests/parity guard against silent drift.
+
+    ``events``' physical layout varies by driver round (ns-bigint vs µs
+    TIMESTAMP_NTZ), so it is detected from one footer read per call
+    (driver-side milliseconds; NOT cached, every invocation re-reads the
+    input). Its ``schema`` is what a stream over the same file reads with.
+    """
+    prepare(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        from .schemas import SCHEMAS
+
+        return spark.read.schema(SCHEMAS[name]).parquet(path)
+    return spark.read.parquet(path)
+
+
+def canonicalize(df: DataFrame, name: str) -> DataFrame:
+    """Project a :func:`read_raw`-shaped frame — batch or streaming — to the
+    engine-facing shape (schemas.py); only ``events`` changes.
+
+    ``events`` becomes the pair ``ts`` (TimestampNTZ, µs) + ``ts_us``
+    (bigint epoch-µs — for arithmetic that must exactly match a DuckDB
+    oracle computing ``epoch_ns(ts)//1000``), handling BOTH physical
+    layouts the driver has generated across rounds:
 
     - timestamp[ns] parquet — Spark 4 reads it only via nanosAsLong=true as
       a bigint; floor-truncate to µs with *integer* division (``ts div
@@ -67,41 +95,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       TIMESTAMP_NTZ; with the session pinned to UTC (prepare) the
       ntz→ltz cast is wall-clock identity, so ``unix_micros`` is exact.
     """
-    prepare(spark)
-    path = f"{sf_dir}/{name}.parquet"
     if name != "events":
-        # Read with the PINNED schema (schemas.py, measured from the driver
-        # parquet): skipping per-read footer schema inference is ~7× less
-        # driver latency per load_table call (measured 73 ms → 10 ms at
-        # sf0.1 — round-14; multi-table queries paid it per table per run),
-        # and a production 100 TB reader pins schemas anyway so file-set
-        # sampling never runs. Parquet reconciles by name and errors loudly
-        # on a type change; the full-registry emulator sweep (all three
-        # scales) plus tests/parity guard against silent drift.
-        from .schemas import SCHEMAS
+        return df
+    if isinstance(df.schema["ts"].dataType, LongType):
+        ts = F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
+        ts_us = F.expr("ts div 1000")
+    else:
+        ts = F.col("ts").cast("timestamp_ntz")
+        ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    return df.select(
+        "event_id",
+        ts.alias("ts"),
+        ts_us.alias("ts_us"),
+        "user_id",
+        "event_type",
+        "value",
+        "props",
+    )
 
-        return spark.read.schema(SCHEMAS[name]).parquet(path)
-    # events: the physical layout varies by driver round (ns-bigint vs µs
-    # TIMESTAMP_NTZ) — detect it from one footer read per call (driver-side
-    # milliseconds; NOT cached, every invocation re-reads the input)
-    df = spark.read.parquet(path)
-    if name == "events":
-        if isinstance(df.schema["ts"].dataType, LongType):
-            ts = F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-            ts_us = F.expr("ts div 1000")
-        else:
-            ts = F.col("ts").cast("timestamp_ntz")
-            ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-        df = df.select(
-            "event_id",
-            ts.alias("ts"),
-            ts_us.alias("ts_us"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-    return df
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one of the 10 operative tables from ``{sf_dir}/{name}.parquet``
+    in its canonical shape (:func:`read_raw` + :func:`canonicalize`)."""
+    return canonicalize(read_raw(spark, sf_dir, name), name)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -1816,8 +1816,9 @@ def _lloyd_centroids(q, iters: int = 3):
     md5(vec_id) rows of THIS frame; every step is integer-exact with
     (d2, cluster) argmin tie-breaks, so the trajectory is identical
     across engines and partitionings. Returns ((cluster, carr) frame,
-    assign_fn) where assign_fn(centroids) labels q's vectors with their
-    nearest centroid and exact integer d2.
+    assign) where the zero-argument closure assign() labels q's vectors
+    with their nearest trained centroid and exact integer d2; its
+    ``n_total`` attribute is |q| from the last training rollup.
 
     Round-14 shape: the k·dim centroid table lives ON THE DRIVER between
     iterations (k = 8 fixed — O(1) state at any corpus size, the standard

@@ -858,8 +858,13 @@ def sample_coreset_kcenter(spark, sf_dir):
     out_schema = "rank long, vec_id long, label int, coverage_radius_d2 long"
     if not seed_rows:  # empty corpus → empty selection, like the old shape
         return spark.createDataFrame([], out_schema)
-    r0 = seed_rows[0]
-    chosen = [(1, int(r0["vec_id"]), int(r0["label"]), [int(x) for x in r0["qv"]])]
+
+    def _center(rank, row):
+        # a null label passes through as null, as in the oracle
+        label = None if row["label"] is None else int(row["label"])
+        return (rank, int(row["vec_id"]), label, [int(x) for x in row["qv"]])
+
+    chosen = [_center(1, seed_rows[0])]
 
     for i in range(2, _KCENTER_K + 1):
         pick = (
@@ -869,9 +874,7 @@ def sample_coreset_kcenter(spark, sf_dir):
             .select("vec_id", "label", "qv")
             .collect()[0]
         )
-        chosen.append(
-            (i, int(pick["vec_id"]), int(pick["label"]), [int(x) for x in pick["qv"]])
-        )
+        chosen.append(_center(i, pick))
 
     radius = int(
         q.agg(F.max(_min_d2(chosen)).cast("long").alias("r")).first()["r"]

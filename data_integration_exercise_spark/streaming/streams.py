@@ -1,11 +1,17 @@
 """Structured Streaming surface over ``events`` (SURVEY.md §2.9).
 
-Strategy (batch-equivalence verification): each operator stages the canonical
-events table to parquet, consumes it with ``spark.readStream`` + an
-``availableNow`` trigger into a sink, and returns the sink contents. For a
-bounded input the windowed/stateful semantics match a batch SQL equivalent,
-which is the DuckDB oracle; the two genuinely trigger-dependent ops
-(watermark drops, foreachBatch) stay rows-only [SURVEY §2.9].
+Strategy (batch-equivalence verification): each operator consumes an input
+table with ``spark.readStream`` + an ``availableNow`` trigger into a sink,
+and returns the sink contents. For a bounded input the windowed/stateful
+semantics match a batch SQL equivalent, which is the DuckDB oracle; the two
+genuinely trigger-dependent ops (watermark drops, foreachBatch) stay
+rows-only [SURVEY §2.9].
+
+Inputs (_table_stream): a single-batch stream reads ``{sf_dir}/{table}.parquet``
+in place — no copy is written. Only the multi-batch keys stage their input,
+as a range split into part files read one per micro-batch, and the
+deterministic-watermark key stages its three pinned batches; both stages
+are written once per process (_STAGED).
 
 Scale posture: these pipelines are written exactly as they would run
 unbounded — keyed state (window/session/dedup aggregations partitioned by
@@ -13,20 +19,23 @@ time bucket or user), watermarks bounding state, no global collects.
 Sinks match output cardinality: windowed aggregates whose row count grows
 with data volume land in an executor-written parquet sink
 (_parquet_result); only provably small keyed results (≤ tens of users /
-segments) use the driver-resident memory sink.
+segments) use the driver-resident memory sink. State stores run one task
+wave (_state_partitions).
 
-Determinism: event time is the µs-truncated ``ts`` (io.load_table), so
-window boundaries hash-match oracles computing on epoch_ns(ts)//1000.
+Determinism: event time is the µs-truncated ``ts`` (io.canonicalize, the
+same projection batch reads get), so window boundaries hash-match oracles
+computing on epoch_ns(ts)//1000.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..io import load_table, sf_cache_tag
+from ..io import canonicalize, load_table, read_raw, sf_cache_tag
 from ..registry_util import new_registry
 from ..schemas import EVENTS
 
@@ -36,41 +45,72 @@ _US_15MIN = 900_000_000
 _US_30MIN = 1_800_000_000
 
 
-_STAGED: set[str] = set()  # staged inputs written by THIS process (read-only data)
+_STAGED: set[str] = set()  # stages written by THIS process (read-only data)
 
 
-def _staged_events_stream(spark, sf_dir: str, n_files: int = 1):
-    """Stage canonical events → parquet; return a file-source stream over it.
+def _table_stream(spark, sf_dir: str, table: str, n_files: int = 1, order_col: str = "ts"):
+    """File-source stream over one input table, canonicalized exactly like
+    its batch read (io.canonicalize); ``events``' ts arrives as
+    TimestampType for watermarks.
 
-    The stage is rewritten once per process per (sf, layout): the source
-    parquet is driver-generated and immutable, so a copy this process
-    already wrote is current — later queries in the same verify/bench run
-    skip straight to the readStream."""
-    # Full-path tag (not basename): two sf_dirs sharing a basename in one
-    # process must not alias each other's staged copy (ADVICE r6 item 1).
-    tag = sf_cache_tag(sf_dir)
-    # PID-unique: a concurrent process must not rewrite a stage mid-read.
-    path = f"/tmp/die_spark_stage/p{os.getpid()}/{tag}/events_stream_{n_files}"
-    if path not in _STAGED:
-        ev = load_table(spark, sf_dir, "events")
-        writer = ev.repartitionByRange(n_files, "ts") if n_files > 1 else ev.coalesce(1)
-        writer.write.mode("overwrite").parquet(path)
-        _STAGED.add(path)
-    reader = spark.readStream.schema(EVENTS)
+    ``n_files == 1`` reads ``{sf_dir}/{table}.parquet`` in place, with the
+    schema of the batch read's footer. ``readStream`` rejects a file path
+    ("Option 'basePath' must be a directory"), so a single-file table
+    streams ``sf_dir`` filtered to its file name; a Spark-written table
+    directory streams the directory.
+
+    ``n_files > 1`` stages a MULTI-micro-batch source for operators whose
+    cross-batch merge is the thing under test: a deterministic
+    repartitionByRange split on ``order_col`` into ``n_files`` part files,
+    read one per trigger. The split is written once per process per
+    (sf, table, n_files): the source is immutable, so a copy this process
+    already wrote is current. Its path is PID-unique (a concurrent process
+    must not rewrite a stage mid-read) and full-path sf-tagged (two
+    sf_dirs sharing a basename must not alias each other's stage — ADVICE
+    r6 item 1)."""
+    raw = read_raw(spark, sf_dir, table)
+    reader = spark.readStream.schema(raw.schema)
+    path = f"{sf_dir}/{table}.parquet"
     if n_files > 1:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    # Watermarks require TimestampType (ltz), not ntz; with the session pinned
-    # to UTC (io.prepare) the cast is wall-clock identity, and outputs are
-    # cast back to ntz so hashes stay timezone-free.
-    return reader.parquet(path).withColumn("ts", F.col("ts").cast("timestamp"))
+        tag = sf_cache_tag(sf_dir)
+        stage = f"/tmp/die_spark_stage/p{os.getpid()}/{tag}/{table}_stream_{n_files}"
+        if stage not in _STAGED:
+            raw.repartitionByRange(n_files, order_col).write.mode("overwrite").parquet(stage)
+            _STAGED.add(stage)
+        src = reader.option("maxFilesPerTrigger", 1).parquet(stage)
+    elif os.path.isdir(path):
+        src = reader.parquet(path)
+    else:
+        src = reader.option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
+    s = canonicalize(src, table)
+    if table == "events":
+        # Watermarks require TimestampType (ltz), not ntz; with the session
+        # pinned to UTC (io.prepare) the cast is wall-clock identity, and
+        # outputs are cast back to ntz so hashes stay timezone-free.
+        s = s.withColumn("ts", F.col("ts").cast("timestamp"))
+    return s
 
 
-#: state-store task count for local-scale runs. Stateful streaming has no AQE
-#: coalescing, so every micro-batch pays one task per shuffle partition —
-#: measured 2.05s→1.17s at sf0.1 going 32→8. On a real cluster this scales
-#: with executor cores (it also fixes the state-store count for the
-#: checkpoint's lifetime, so it's a deliberate deployment choice).
-STREAM_SHUFFLE_PARTITIONS = "8"
+def _state_partitions(spark) -> str:
+    """State-store task count: one task wave, at most 8. Stateful streaming
+    has no AQE coalescing, so every micro-batch pays one task per shuffle
+    partition — measured 2.05s→1.17s at sf0.1 going 32→8 at local[32];
+    below 8 cores, 8 tasks would run as two mostly idle waves. On a real
+    cluster this scales with executor cores (it also fixes the state-store
+    count for the checkpoint's lifetime, so it's a deliberate deployment
+    choice). Outputs do not depend on it (tests/test_streaming.py)."""
+    return str(min(8, spark.sparkContext.defaultParallelism))
+
+
+@contextmanager
+def _stream_partitions(spark):
+    """Run a streaming query with _state_partitions shuffle partitions."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", _state_partitions(spark))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _sink_scope(name: str, sf_dir: str) -> str:
@@ -91,10 +131,7 @@ def _sink_scope(name: str, sf_dir: str) -> str:
 
 
 def _run_to_memory(stream_df, name: str, mode: str) -> None:
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
+    with _stream_partitions(stream_df.sparkSession):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -103,8 +140,6 @@ def _run_to_memory(stream_df, name: str, mode: str) -> None:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _memory_result(spark, stream_df, name: str, mode: str, sf_dir: str) -> DataFrame:
@@ -127,13 +162,11 @@ def _parquet_result(spark, stream_df, name: str, mode: str, sf_dir: str) -> Data
     complete mode (which the parquet sink proper doesn't support) uses
     foreachBatch + overwrite — the standard idempotent complete-mode file
     sink, each micro-batch replacing the whole aggregate. The returned
-    DataFrame scans the final state lazily. The path is sf-scoped
-    (_sink_scope) so two scales in one process can't alias each other's
-    checkpoint or output."""
+    DataFrame scans the final state lazily, with the stream's schema (no
+    footer inference). The path is sf-scoped (_sink_scope) so two scales
+    in one process can't alias each other's checkpoint or output."""
     out = f"/tmp/die_spark_stage/p{os.getpid()}/sink/{_sink_scope(name, sf_dir)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
+    with _stream_partitions(spark):
         if mode == "complete":
             writer = stream_df.writeStream.foreachBatch(
                 lambda batch_df, _id: batch_df.write.mode("overwrite").parquet(out)
@@ -147,9 +180,7 @@ def _parquet_result(spark, stream_df, name: str, mode: str, sf_dir: str) -> Data
             )
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.read.parquet(out)
+    return spark.read.schema(stream_df.schema).parquet(out)
 
 
 @register(
@@ -167,7 +198,7 @@ def stream_tumbling(spark, sf_dir):
     """Per-hour × event-type tumbling-window aggregation. State is keyed by
     (window, type) — bounded by watermark in unbounded operation; identical
     to a date_trunc group-by on a bounded input."""
-    s = _staged_events_stream(spark, sf_dir)
+    s = _table_stream(spark, sf_dir, "events")
     agg = (
         s.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -200,7 +231,7 @@ def stream_sliding(spark, sf_dir):
     The oracle reconstructs Spark's epoch-aligned window starts by exploding
     each event into floor15(ts) - i·15min for i∈0..3 — exactly the window
     set Spark assigns."""
-    s = _staged_events_stream(spark, sf_dir)
+    s = _table_stream(spark, sf_dir, "events")
     agg = (
         s.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type")
@@ -240,7 +271,7 @@ def stream_session(spark, sf_dir):
     semantics, pinned by tests/test_properties.py on a hand-built frame: an
     event at exactly prev_end (= last_ts + gap) MERGES into the session, so
     the oracle's new-session rule is ``diff > gap`` (strict)."""
-    s = _staged_events_stream(spark, sf_dir)
+    s = _table_stream(spark, sf_dir, "events")
     agg = (
         s.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -261,7 +292,7 @@ def stream_watermark_late(spark, sf_dir):
     after the 10-minute watermark advances past their window are dropped —
     how many depends on batch boundaries, which is exactly why this op is
     rows-only (SURVEY §2.9)."""
-    s = _staged_events_stream(spark, sf_dir, n_files=8)
+    s = _table_stream(spark, sf_dir, "events", n_files=8)
     agg = (
         s.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "15 minutes"), "event_type")
@@ -417,7 +448,7 @@ def stream_dedup(spark, sf_dir):
     survives is batch-order-dependent, so the query projects exactly the
     dedup key — the key SET is deterministic and hash-verifiable. State is
     bounded by the watermark in unbounded operation."""
-    s = _staged_events_stream(spark, sf_dir)
+    s = _table_stream(spark, sf_dir, "events")
     dedup = (
         s.withWatermark("ts", "1 hour")
         .select(
@@ -445,7 +476,7 @@ def stream_static_join(spark, sf_dir):
     (user_id ↔ c_custkey, 15 users) then aggregates per segment. The static
     side is broadcast to every micro-batch — the standard dimension-enrich
     shape for streaming ETL."""
-    s = _staged_events_stream(spark, sf_dir)
+    s = _table_stream(spark, sf_dir, "events")
     dim = F.broadcast(
         load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 15)
     )
@@ -474,14 +505,10 @@ def stream_foreachbatch(spark, sf_dir):
             .parquet(f"{out}/batch_{batch_id}")
         )
 
-    s = _staged_events_stream(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
+    s = _table_stream(spark, sf_dir, "events")
+    with _stream_partitions(spark):
         q = s.writeStream.foreachBatch(upsert).trigger(availableNow=True).start()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (
         spark.read.parquet(f"{out}/*")
         .groupBy("event_type")
@@ -513,7 +540,7 @@ def stream_stateful_running(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    s = _staged_events_stream(spark, sf_dir, n_files=4)
+    s = _table_stream(spark, sf_dir, "events", n_files=4)
 
     def update(key, pdfs, state):
         import pandas as pd
@@ -569,7 +596,7 @@ def stream_stream_join(spark, sf_dir):
     ever late) the result equals the batch interval join the oracle runs.
     Output carries epoch-µs bigints so hashes are timezone-free."""
     views = (
-        _staged_events_stream(spark, sf_dir)
+        _table_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "view")
         .select(
             F.col("user_id"),
@@ -580,7 +607,7 @@ def stream_stream_join(spark, sf_dir):
         .withWatermark("view_ts", "1 hour")
     )
     purchases = (
-        _staged_events_stream(spark, sf_dir)
+        _table_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user_id"),
@@ -641,7 +668,7 @@ def stream_cdc_upsert(spark, sf_dir):
     length."""
     from pyspark.sql import Window
 
-    src = _staged_events_stream(spark, sf_dir, n_files=4)
+    src = _table_stream(spark, sf_dir, "events", n_files=4)
     snap = f"/tmp/die_spark_stage/p{os.getpid()}/sink/stream_cdc_upsert_state"
     ckpt = f"/tmp/die_spark_stage/p{os.getpid()}/sink/stream_cdc_upsert_ckpt"
     import shutil
@@ -680,9 +707,7 @@ def stream_cdc_upsert(spark, sf_dir):
             merged = latest_b
         merged.write.mode("overwrite").parquet(snap)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
+    with _stream_partitions(spark):
         q = (
             src.writeStream.foreachBatch(merge)
             .trigger(availableNow=True)
@@ -690,8 +715,6 @@ def stream_cdc_upsert(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (
         spark.read.parquet(snap)
         .filter(F.col("event_type") != "error")
@@ -737,7 +760,7 @@ def stream_topk_per_window(spark, sf_dir):
     100 TB: stream state is (windows × types) rows regardless of event
     volume; the rank pass partitions by window over the sink — never a
     global sort, never per-event work."""
-    s = _staged_events_stream(spark, sf_dir)
+    s = _table_stream(spark, sf_dir, "events")
     agg = (
         s.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -757,44 +780,6 @@ def stream_topk_per_window(spark, sf_dir):
     return (
         counts.withColumn("rnk", rnk.cast("long")).filter(F.col("rnk") <= 3)
     )
-
-
-def _staged_table_stream(
-    spark,
-    sf_dir: str,
-    table: str,
-    n_files: int = 1,
-    max_files_per_trigger: int | None = None,
-    order_col: str | None = None,
-):
-    """Stage a canonical table → parquet; return a file-source stream.
-
-    Same contract as _staged_events_stream (process-private PID-unique
-    path, full-path sf tag, staged once per (sf, pid), immutable source) —
-    the ONE parameterized helper behind the table streams so those
-    invariants live in a single place. ``n_files`` > 1 (with
-    ``order_col`` for a deterministic repartitionByRange split and
-    ``max_files_per_trigger`` on the reader) stages a MULTI-micro-batch
-    source for operators whose cross-batch merge is the thing under
-    test."""
-    from ..schemas import SCHEMAS
-
-    tag = sf_cache_tag(sf_dir)
-    suffix = "" if n_files == 1 else f"_{n_files}f"
-    path = f"/tmp/die_spark_stage/p{os.getpid()}/{tag}/{table}_stream{suffix}"
-    if path not in _STAGED:
-        src = load_table(spark, sf_dir, table)
-        src = (
-            src.coalesce(1)
-            if n_files == 1
-            else src.repartitionByRange(n_files, order_col)
-        )
-        src.write.mode("overwrite").parquet(path)
-        _STAGED.add(path)
-    reader = spark.readStream.schema(SCHEMAS[table])
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path)
 
 
 def _minhash_sig_oracle() -> str:
@@ -856,7 +841,7 @@ def stream_dedup_minhash(spark, sf_dir):
         f" * {_V ** p}L"
         for p, (a, b) in enumerate(MINHASH_PERMS)
     )
-    s = _staged_table_stream(spark, sf_dir, "documents")
+    s = _table_stream(spark, sf_dir, "documents")
     kept = (
         s.withColumn("_idxs", F.expr(idxs))
         .select("doc_id", "lang", F.expr(f"CAST({terms} AS BIGINT)").alias("sig"))
@@ -992,7 +977,7 @@ def stream_ann_ingest(spark, sf_dir):
     clist_sql = "array(" + ", ".join(f"{int(c)}L" for c, _ in model) + ")"
     k = len(model)
 
-    s = _staged_table_stream(spark, sf_dir, "embeddings")
+    s = _table_stream(spark, sf_dir, "embeddings")
     scored = s.select(
         "vec_id", F.expr(_QUANT_SPARK).alias("_q")
     ).select(
@@ -1100,14 +1085,7 @@ def stream_quantile_ingest(spark, sf_dir):
     retained sample identical to what a batch job over the full corpus
     would keep, which is what makes streaming-vs-batch parity testable
     at all (the lambda-architecture reconciliation property)."""
-    stream = _staged_table_stream(
-        spark,
-        sf_dir,
-        "orders",
-        n_files=4,
-        max_files_per_trigger=1,
-        order_col="o_orderkey",
-    )
+    stream = _table_stream(spark, sf_dir, "orders", n_files=4, order_col="o_orderkey")
 
     base = (
         f"/tmp/die_spark_stage/p{os.getpid()}/sink/"
@@ -1193,9 +1171,7 @@ def stream_quantile_ingest(spark, sf_dir):
         shutil.rmtree(out, ignore_errors=True)
         os.rename(tmp, out)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
+    with _stream_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(_merge)
             .option("checkpointLocation", base + "_ckpt")
@@ -1203,8 +1179,6 @@ def stream_quantile_ingest(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     final = _latest_version()
     sample = spark.read.parquet(f"{base}_v{final}/sample")

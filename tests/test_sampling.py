@@ -7,6 +7,7 @@ import pytest
 from data_integration_exercise_spark.io import load_table
 from data_integration_exercise_spark.operators import sampling
 
+from .conftest import SF_SMOKE
 from .parity import assert_parity
 
 SF = "/root/testdata/sf0.01"
@@ -253,6 +254,38 @@ def test_systematic_matches_naive_global_rank(spark):
         for r in sampling.QUERIES["sample_systematic"](spark, SF).collect()
     }
     assert got == expect
+
+
+def test_kcenter_passes_null_label_through(spark, tmp_path):
+    """Degenerate input: a chosen center whose label is null comes back
+    with a null label (not a driver-side TypeError), and the selection
+    still matches the oracle."""
+    import hashlib
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_integration_exercise_spark.schemas import TABLES
+
+    for t in TABLES:
+        if t != "embeddings":
+            os.symlink(f"{SF_SMOKE}/{t}.parquet", tmp_path / f"{t}.parquet")
+    tbl = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    ids = tbl.column("vec_id").to_pylist()
+    # the k-center seed: the hash-smallest vec_id
+    seed = min(ids, key=lambda v: (hashlib.md5(str(v).encode()).hexdigest(), v))
+    i = tbl.schema.get_field_index("label")
+    labels = [
+        None if v == seed else lab
+        for v, lab in zip(ids, tbl.column(i).to_pylist())
+    ]
+    tbl = tbl.set_column(i, tbl.schema.field(i), pa.array(labels, tbl.schema.field(i).type))
+    pq.write_table(tbl, tmp_path / "embeddings.parquet")
+
+    rows = sampling.QUERIES["sample_coreset_kcenter"](spark, str(tmp_path)).collect()
+    assert {r.vec_id: r.label for r in rows}[seed] is None
+    assert_parity(spark, "sample_coreset_kcenter", str(tmp_path))
 
 
 def test_kcenter_greedy_invariants(spark):

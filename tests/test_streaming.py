@@ -6,9 +6,21 @@ import pytest
 
 from data_integration_exercise_spark.streaming import streams
 
+from .conftest import SF_SMOKE as SMOKE
 from .parity import assert_parity, run_rows_only
 
 SF = "/root/testdata/sf0.01"
+
+
+def _staged_streams(sf_dir):
+    """Stream-input stages this process wrote for ``sf_dir``."""
+    import glob
+    import os
+
+    from data_integration_exercise_spark.io import sf_cache_tag
+
+    root = f"/tmp/die_spark_stage/p{os.getpid()}/{sf_cache_tag(sf_dir)}"
+    return glob.glob(f"{root}/*_stream*")
 
 
 @pytest.mark.parametrize("key", sorted(streams.ORACLES))
@@ -295,3 +307,63 @@ def test_stream_quantile_ingest_merges_across_batches(spark):
     assert len(versions) >= 2, (
         f"expected multi-batch state history, found {versions}"
     )
+
+
+@pytest.mark.parametrize("layout", ["spark_dir", "ns_file"])
+def test_in_place_source_layouts(spark, tmp_path, layout):
+    """A single-batch stream reads its table in place in every input
+    layout and gets the rows the testdata's single µs file gives: a
+    Spark-written table directory (the sf1 replica's layout) and a
+    timestamp[ns] single file (the rounds-1-3 driver layout, canonicalized
+    on the stream by the same projection as batch reads). Neither writes a
+    staged copy."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_integration_exercise_spark.io import read_raw
+
+    copy = tmp_path / "sf0.001"
+    if layout == "spark_dir":
+        read_raw(spark, SMOKE, "events").write.parquet(str(copy / "events.parquet"))
+    else:
+        tbl = pq.read_table(f"{SMOKE}/events.parquet")
+        i = tbl.schema.get_field_index("ts")
+        tbl = tbl.set_column(i, "ts", tbl.column(i).cast(pa.timestamp("ns")))
+        copy.mkdir()
+        pq.write_table(tbl, copy / "events.parquet")
+    fn = streams.QUERIES["stream_tumbling"]
+    want = sorted(fn(spark, SMOKE).collect())
+    got = sorted(fn(spark, str(copy)).collect())
+    assert want and got == want
+    assert _staged_streams(str(copy)) == []
+
+
+def test_single_batch_keys_stage_nothing(spark, tmp_path):
+    """On a fresh input path, single-batch stream keys over events and over
+    documents leave no staged ``*_stream*`` copy behind."""
+    import os
+
+    alias = tmp_path / "sf0.001"
+    os.symlink(SMOKE, alias)
+    for key in ("stream_tumbling", "stream_dedup_minhash"):
+        assert streams.QUERIES[key](spark, str(alias)).collect()
+    assert _staged_streams(str(alias)) == []
+
+
+@pytest.mark.parametrize("key", ["stream_tumbling", "stream_session"])
+def test_output_independent_of_state_partitions(spark, monkeypatch, key):
+    """The state-store partition count follows the core count
+    (_state_partitions); the rows must not: one partition and eight give
+    the same result."""
+    results = {}
+    for n in ("1", "8"):
+        calls = []
+
+        def fixed(_spark, n=n, calls=calls):
+            calls.append(n)
+            return n
+
+        monkeypatch.setattr(streams, "_state_partitions", fixed)
+        results[n] = sorted(streams.QUERIES[key](spark, SF).collect())
+        assert calls, "the derived partition count was never consulted"
+    assert results["1"] and results["1"] == results["8"]
