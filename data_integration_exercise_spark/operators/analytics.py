@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..registry_util import new_registry
+from .joins import ORACLES as _JOIN_ORACLES
+from .joins import join_multiway_star
 
 QUERIES, ORACLES, register = new_registry()
 
@@ -907,61 +909,17 @@ def tpch_q20_dominant_supplier(spark, sf_dir):
 
 @register(
     "tpch_q5_local_supplier",
-    oracle="""
-    SELECT n_name,
-           round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-    JOIN nation   ON s_nationkey = n_nationkey
-    JOIN region   ON n_regionkey = r_regionkey
-    WHERE r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-    GROUP BY n_name
-    ORDER BY revenue DESC
-    """,
+    oracle=_JOIN_ORACLES["join_multiway_star"] + "\nORDER BY revenue DESC",
 )
 def tpch_q5_local_supplier(spark, sf_dir):
     """Q5: local-supplier revenue by nation — same-nation customer/supplier
-    pairs inside one region for one order year. The last uncovered TPC-H
-    shape (q1 is agg_pricing_summary; q2-q22 all have keys): its signature
-    feature is the co-location predicate c_nationkey = s_nationkey riding
-    the supplier equi-join, which Catalyst folds into the join condition
-    (no post-filter).
+    pairs inside one region for one order year, largest revenue first. The
+    last uncovered TPC-H shape (q1 is agg_pricing_summary; q2-q22 all have
+    keys): its signature feature is the co-location predicate
+    c_nationkey = s_nationkey, folded into an equi-join condition (no
+    post-filter).
 
-    100 TB: the two fact tables join on orderkey (one co-partitioned
-    shuffle) and the year filter prunes orders before that shuffle;
-    customer is fact-sized at TPC-H ratios so it joins via a keyed
-    shuffle, NOT a broadcast — only supplier/nation/region (1000×
-    smaller) broadcast, with the ASIA filter shrinking the supplier
-    hash table before it ships. 5 output rows, no second fact pass."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    asia_s = (
-        s.join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .filter(F.col("r_name") == "ASIA")
-        .select("s_suppkey", "s_nationkey", "n_name")
-    )
-    return (
-        o.filter(
-            (F.col("o_orderdate") >= _ts("1996-01-01 00:00:00"))
-            & (F.col("o_orderdate") < _ts("1997-01-01 00:00:00"))
-        )
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(
-            F.broadcast(asia_s),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .groupBy("n_name")
-        .agg(F.round(F.sum(_net()), 4).alias("revenue"))
-        .orderBy(F.col("revenue").desc())
-    )
+    The plan is join_multiway_star's dimension-first Q5 (lineitem meets
+    the broadcast ASIA suppliers before any shuffle; orders and customer
+    follow unhinted) plus the ORDER BY over its 5 output rows."""
+    return join_multiway_star(spark, sf_dir).orderBy(F.col("revenue").desc())

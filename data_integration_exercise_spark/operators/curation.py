@@ -1818,7 +1818,8 @@ def _lloyd_centroids(q, iters: int = 3):
     across engines and partitionings. Returns ((cluster, carr) frame,
     assign) where the zero-argument closure assign() labels q's vectors
     with their nearest trained centroid and exact integer d2; its
-    ``n_total`` attribute is |q| from the last training rollup.
+    ``n_total`` attribute is |q| from the last training rollup (absent
+    when ``iters == 0``).
 
     Round-14 shape: the k·dim centroid table lives ON THE DRIVER between
     iterations (k = 8 fixed — O(1) state at any corpus size, the standard
@@ -1907,7 +1908,6 @@ def _lloyd_centroids(q, iters: int = 3):
         )
 
     dim = len(cents[0]) if cents else 0
-    n_total = 0
     for _ in range(iters):
         cent_rows = (
             assign_with(cents, cent_ids)
@@ -1947,9 +1947,11 @@ def _lloyd_centroids(q, iters: int = 3):
         # different centroid frame (ADVICE r14 item 2)
         return assign_with(cents, cent_ids)
 
-    # corpus cardinality, free from the last training rollup (0 when
-    # iters == 0 was never trained — no consumer uses that combination)
-    assign.n_total = n_total
+    # corpus cardinality, free from the last training rollup; left unset
+    # when iters == 0 never ran one, so reading it fails loudly instead of
+    # passing a silent 0 on
+    if iters:
+        assign.n_total = n_total
 
     return carr, assign
 

@@ -123,7 +123,9 @@ def graph_pagerank(spark, sf_dir):
     # the same job (eager paid a separate materialization pass — round-14)
     edges = _edges(spark, sf_dir).localCheckpoint(eager=False)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    n = deg.count()  # scalar probe: node count → exact integer literals below
+    # scalar probe: node count → exact integer literals below (no edges:
+    # every frame below is empty, as in the oracle, whatever the literal)
+    n = max(deg.count(), 1)
     teleport = (15 * (_SCALE // n)) // 100
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(_SCALE // n).cast("long").alias("r")
@@ -1533,7 +1535,9 @@ def graph_hits(spark, sf_dir):
     # ONE distinct-customer frame for both the cardinality probe and the
     # init vector (was two separate distinct passes over edges — round-14)
     hc = edges.select("c").distinct().localCheckpoint(eager=False)
-    n_cust = hc.count()  # scalar cardinality probe
+    # scalar cardinality probe (no edges: every frame below is empty, as
+    # in the oracle, whatever the literal)
+    n_cust = max(hc.count(), 1)
     h = hc.select("c", F.lit(_SCALE // n_cust).cast("long").alias("h"))
     a = None
     for _ in range(_HITS_ITERS):

@@ -93,30 +93,41 @@ def join_broadcast_dim(spark, sf_dir):
     """,
 )
 def join_multiway_star(spark, sf_dir):
-    """TPC-H Q5 shape: 6-table star join, ASIA revenue by nation. The big
-    fact⋈fact (lineitem⋈orders) shuffles on orderkey; all dims broadcast.
-    The local-supplier condition (c_nationkey = s_nationkey) rides the
-    supplier join as an extra equi-key."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
+    """TPC-H Q5: 6-table star join, local-supplier revenue by ASIA nation.
+    The one Q5 plan (tpch_q5_local_supplier orders this frame by revenue).
+
+    Dimension-first: lineitem first meets the broadcast ASIA suppliers
+    (s ⋈ n ⋈ r filtered to one region, ~1/5 of suppliers) map-side, so
+    the other regions' lineitem rows are gone before any shuffle. The
+    year-filtered orders then join on l_orderkey, and customer on
+    (c_custkey, c_nationkey) = (o_custkey, s_nationkey): the local-supplier
+    condition rides that join as a second equi-key. Neither of those two
+    joins carries a hint — Catalyst broadcasts the filtered orders while
+    they are small (sf1) and shuffles them at 100 TB, where the exchange
+    on l_orderkey then carries only the ASIA slice of lineitem."""
     li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
+    asia_s = (
+        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(F.broadcast(r.filter(r.r_name == "ASIA")), n.n_regionkey == r.r_regionkey)
+        .select("s_suppkey", "s_nationkey", "n_name")
+    )
+    year_o = o.filter(
+        (o.o_orderdate >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
+        & (o.o_orderdate < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
+    )
     return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .filter(
-            (o.o_orderdate >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
-            & (o.o_orderdate < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
-        )
-        .join(li, li.l_orderkey == o.o_orderkey)
+        li.join(F.broadcast(asia_s), li.l_suppkey == asia_s.s_suppkey)
+        .join(year_o, li.l_orderkey == year_o.o_orderkey)
         .join(
-            F.broadcast(s),
-            (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
+            c,
+            (c.c_custkey == year_o.o_custkey)
+            & (c.c_nationkey == asia_s.s_nationkey),
         )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .filter(r.r_name == "ASIA")
         .groupBy("n_name")
         .agg(
             F.round(

@@ -504,3 +504,22 @@ def test_lloyd_centroids_keep_original_ids_when_a_cluster_empties(spark):
         r.vec_id: (r.cluster, r.d2) for r in assign().collect()
     }
     assert got_assign == expect_assign
+
+
+def test_lloyd_n_total_unset_without_training(spark):
+    """|q| rides the training rollups: after ``iters=0`` there was none, so
+    reading ``n_total`` must raise instead of handing block sizing a
+    silent 0. One trained pass sets it to the corpus size."""
+    from data_integration_exercise_spark.operators.curation import (
+        _lloyd_centroids,
+    )
+
+    q = spark.createDataFrame(
+        [(i, "x", [i, 0]) for i in range(5)],
+        "vec_id long, label string, qarr array<long>",
+    )
+    _, untrained = _lloyd_centroids(q, iters=0)
+    with pytest.raises(AttributeError):
+        untrained.n_total
+    _, trained = _lloyd_centroids(q, iters=1)
+    assert trained.n_total == 5

@@ -6,6 +6,7 @@ import pytest
 
 from data_integration_exercise_spark.operators import graph
 
+from .conftest import SF_SMOKE
 from .parity import assert_parity
 
 SF = "/root/testdata/sf0.01"
@@ -408,3 +409,18 @@ def test_ppr_mass_bound_and_seed_dominance(spark):
     assert int(seeds.ppr_fp.iloc[0]) == int(pdf.ppr_fp.max())
     assert (pdf.ppr_fp > 0).all()
     assert int(pdf.ppr_fp.sum()) <= SCALE
+
+
+@pytest.mark.parametrize("key", ["graph_pagerank", "graph_hits"])
+def test_empty_input_matches_oracle(spark, tmp_path, key):
+    """Degenerate input: on zero-row copies of every table the node-count
+    probe sees no nodes; the key must return its oracle's (empty) answer
+    instead of dividing by zero on the driver."""
+    import pyarrow.parquet as pq
+
+    from data_integration_exercise_spark.schemas import TABLES
+
+    for t in TABLES:
+        schema = pq.read_schema(f"{SF_SMOKE}/{t}.parquet")
+        pq.write_table(schema.empty_table(), tmp_path / f"{t}.parquet")
+    assert_parity(spark, key, str(tmp_path))

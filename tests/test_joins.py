@@ -221,3 +221,55 @@ def test_asof_nearest_agrees_with_backward_and_prefers_closer(spark):
     b_gap = fwd.purchase_ts_us - b_ts
     farther_or_absent = b_ts.isna() | (b_gap > fwd.gap_us)
     assert farther_or_absent.all()
+
+
+def _subtree(plan: str, head: str) -> str:
+    """The lines of a physical-plan tree string from the first node whose
+    text contains ``head`` down to the end of that node's subtree."""
+    import re
+
+    def depth(line):
+        m = re.search(r"[+:]- ", line)
+        return m.start() if m else -1
+
+    lines = plan.splitlines()
+    i = next(i for i, line in enumerate(lines) if head in line)
+    out = [lines[i]]
+    for line in lines[i + 1 :]:
+        if depth(line) <= depth(lines[i]):
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
+@pytest.mark.parametrize("key", ["join_multiway_star", "tpch_q5_local_supplier"])
+def test_q5_lineitem_meets_asia_suppliers_before_its_shuffle(spark, key):
+    """The 100 TB posture of the one Q5 plan: with size-based broadcasts
+    off and no AQE to rescue the plan, lineitem still joins the broadcast
+    ASIA suppliers map-side, so the exchange on l_orderkey ships only the
+    ASIA slice of lineitem — never the whole fact table."""
+    from data_integration_exercise_spark.registry import queries
+
+    from .conftest import SF_T2 as sf
+
+    # built first: load_table re-applies the session's AQE setting
+    keys = ("join_multiway_star", "tpch_q5_local_supplier")
+    frames = {k: queries()[k](spark, sf) for k in keys}
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.enabled": "false",
+    }
+    prior = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        plan = frames[key]._jdf.queryExecution().executedPlan().toString()
+        assert not plan.startswith("AdaptiveSparkPlan"), plan
+        below = _subtree(plan, "Exchange hashpartitioning(l_orderkey")
+        assert "BroadcastHashJoin [l_suppkey" in below, plan
+        assert "(r_name#" in below and "= ASIA)" in below, below
+        star, q5 = (sorted(df.collect()) for df in frames.values())
+        assert star == q5 and star
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)

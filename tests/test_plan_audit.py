@@ -73,7 +73,8 @@ _PYTHON_MARKS = (
 EXPECTED_EXCHANGES = {
     #                       (data shuffles, broadcast exchanges)
     "agg_pricing_summary": (1, 0),  # one partial->final agg shuffle
-    "join_multiway_star": (1, 5),  # all five dims broadcast; 1 agg shuffle
+    "join_multiway_star": (1, 5),  # nation, ASIA region, ASIA suppliers,
+    #   year-filtered orders and customer broadcast at this SF; 1 agg shuffle
     "win_topn_per_group": (1, 0),
     "agg_count_distinct": (2, 0),  # distinct expand + final agg
     "sim_topk_cosine": (1, 0),  # one label-block shuffle into the kernel
@@ -164,8 +165,8 @@ EXPECTED_EXCHANGES = {
     #   distributions + matrix (stream_topk_per_window is streaming —
     #   excluded like the rest of §2.9)
     # Round-8 seventh/eighth waves (pinned at birth):
-    "tpch_q5_local_supplier": (2, 5),  # fact-join shuffle + agg; all dims
-    #   + (at sf0.01) the year-filtered orders side broadcast by AQE
+    "tpch_q5_local_supplier": (2, 5),  # join_multiway_star's plan: agg
+    #   shuffle + the orderBy range exchange; same five broadcasts
     "win_rsi": (2, 0),  # day rollup + priority delta/sum window
     "agg_kendall_tau": (3, 1),  # monthly rollup, pair join, pair rollup
     "text_bigram_richness": (2, 0),  # (lang,bg) rollup + lang rollup
