@@ -2692,11 +2692,12 @@ def plan_ivf_probe_geometry(spark, sf_dir):
             F.coalesce("sc", F.lit(0)).cast("long").alias("scanned_rows"),
             F.expr(
                 "CAST(1000 * coalesce(sc, 0)"
-                " div (n_queries * n_corpus) AS BIGINT)"
+                " div nullif(n_queries * n_corpus, 0) AS BIGINT)"
             ).alias("scanned_permille"),
             F.coalesce("ht", F.lit(0)).cast("long").alias("truth_hits"),
             F.expr(
-                "CAST(1000 * coalesce(ht, 0) div (10 * n_queries) AS BIGINT)"
+                "CAST(1000 * coalesce(ht, 0)"
+                " div nullif(10 * n_queries, 0) AS BIGINT)"
             ).alias("recall_permille"),
         )
     )

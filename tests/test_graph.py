@@ -411,11 +411,14 @@ def test_ppr_mass_bound_and_seed_dominance(spark):
     assert int(pdf.ppr_fp.sum()) <= SCALE
 
 
-@pytest.mark.parametrize("key", ["graph_pagerank", "graph_hits"])
+@pytest.mark.parametrize(
+    "key", ["graph_pagerank", "graph_hits", "plan_ivf_probe_geometry"]
+)
 def test_empty_input_matches_oracle(spark, tmp_path, key):
     """Degenerate input: on zero-row copies of every table the node-count
-    probe sees no nodes; the key must return its oracle's (empty) answer
-    instead of dividing by zero on the driver."""
+    probe sees no nodes and the IVF planner sees no queries; each key must
+    return its oracle's answer (empty, or NULL ratios) instead of dividing
+    by zero on the driver or in an ANSI `div`."""
     import pyarrow.parquet as pq
 
     from data_integration_exercise_spark.schemas import TABLES

@@ -132,168 +132,6 @@ def test_no_unrounded_float_aggregates_in_oracles():
             )
 
 
-# The driver's correctness harness oracles exactly the first 50 queries()
-# keys each round. Pin the round-15 window so a module reorder or
-# priority-list edit can't silently re-verify already-green keys and waste
-# a round.
-#
-# Composition (executes the pre-pinned round-14 plan + this round's own
-# rewrites, registry.py `_PRIORITY` block comment): slots 1-2 are ALL
-# remaining never-driver-verified keys (`_ADDED_R14`, stable queue order);
-# slots 3-7 re-verify the round-14 rewrite-after-green keys the driver has
-# never run on current code (VERDICT r14 item 1 — `dedup_semdedup`'s output
-# changed by design in r14); slots 8-11 re-verify this round's own rewrites;
-# slots 12-16 re-verify the round-5 tail; slots 17-50 re-verify the stalest
-# green cohort — the first 34 remaining round-6 keys, stable registry order
-# (the last 11 queue as the round-16 head).
-EXPECTED_R15_WINDOW = [
-    "sink_manifest_atomic",
-    "sink_manifest_expire",
-    "dedup_semdedup",
-    "dedup_soft_weights",
-    "sim_ann_lsh",
-    "sim_ann_graph",
-    "dedup_minhash_openvocab",
-    "dedup_containment_bigram",
-    "dedup_minhash_lsh",
-    "stream_stateful_running",
-    "plan_ivf_probe_geometry",
-    "sim_threshold_join",
-    "sim_knn_query",
-    "text_tfidf",
-    "dedup_exact_text",
-    "text_lang_id",
-    "agg_ks_test",
-    "agg_chi_square",
-    "agg_mann_whitney",
-    "win_ewma",
-    "etl_gdpr_cascade",
-    "text_pii_scrub",
-    "multimodal_phash_dedup",
-    "agg_heavy_hitters",
-    "win_cusum_drift",
-    "events_attribution",
-    "events_anomaly_mad",
-    "join_interval_overlap",
-    "sample_priority_topk",
-    "join_bloom_prefilter",
-    "sim_mmr_diversify",
-    "agg_bootstrap_ci",
-    "sample_balanced_classes",
-    "etl_cdc_deletes",
-    "text_ccnet_buckets",
-    "pipeline_corpus_curate",
-    "sink_zorder",
-    "graph_bfs_distances",
-    "scan_manifest_pruned",
-    "sample_temperature_mix",
-    "agg_benford_deviation",
-    "events_dau_wau",
-    "etl_incremental_agg_refresh",
-    "sink_idempotent_overwrite",
-    "agg_hhi_concentration",
-    "events_churn_hazard",
-    "sql_adhoc_interface",
-    "agg_winsorized_mean",
-    "agg_pareto_crossover",
-    "win_drawdown",
-]
-
-#: window slots holding keys with NO driver row in CORRECTNESS_r01-r14:
-#: the two round-14 additions (slots 1-2).
-_R15_NEVER_VERIFIED = EXPECTED_R15_WINDOW[:2]
-
-#: rewrite-after-green re-verification slots (3-11): round-14 rewrites the
-#: driver never ran on current code, then this round's own rewrites.
-_R15_REVERIFY = EXPECTED_R15_WINDOW[2:11]
-
-
-def _driver_rows_through(last_round: int) -> dict:
-    """key -> latest round with a driver row, across CORRECTNESS_r01..rN."""
-    import json
-
-    latest = {}
-    for r in range(1, last_round + 1):
-        try:
-            d = json.load(open(f"/root/repo/CORRECTNESS_r{r:02d}.json"))
-        except FileNotFoundError:
-            continue
-        for k in d:
-            latest[k] = r
-    return latest
-
-
-def test_round15_verification_window_is_pinned():
-    assert list(queries())[:50] == EXPECTED_R15_WINDOW
-
-
-def test_round15_window_never_verified_slots_are_fresh():
-    """The never-verified slots must hold keys with NO prior driver row —
-    they exist to convert emulation-only keys to driver truth; every other
-    slot is deliberate re-verification of keys that already have rows."""
-    latest = _driver_rows_through(14)
-    if not latest:
-        return  # correctness files absent (fresh checkout)
-    stale = set(_R15_NEVER_VERIFIED) & set(latest)
-    assert not stale, (
-        f"never-verified slots waste coverage on already-verified keys: "
-        f"{sorted(stale)}"
-    )
-
-
-def test_round15_window_covers_every_unverified_key():
-    """never-verified slots ∪ _ADDED_R15 must be exactly the keys without
-    a driver row, so round 15 converges to full driver coverage."""
-    latest = _driver_rows_through(14)
-    if not latest:
-        return
-    from data_integration_exercise_spark.registry import _ADDED_R15
-
-    unverified = set(queries()) - set(latest)
-    queue = set(_R15_NEVER_VERIFIED) | set(_ADDED_R15)
-    assert queue == unverified, (
-        f"queue misses: {sorted(unverified - queue)}; "
-        f"wastes slots on: {sorted(queue - unverified)}; "
-        "a key added this round must be listed in registry._ADDED_R15"
-    )
-
-
-def test_round15_window_reverify_slots_target_rewrites():
-    """Slots 3-7 must be exactly VERDICT r14 item 1's rewrite-after-green
-    list; slots 8-11 this round's own rewrite targets."""
-    assert _R15_REVERIFY[:5] == [
-        "dedup_semdedup",
-        "dedup_soft_weights",
-        "sim_ann_lsh",
-        "sim_ann_graph",
-        "dedup_minhash_openvocab",
-    ]
-    assert _R15_REVERIFY[5:] == [
-        "dedup_containment_bigram",
-        "dedup_minhash_lsh",
-        "stream_stateful_running",
-        "plan_ivf_probe_geometry",
-    ]
-
-
-def test_round15_window_tail_reverifies_stalest_keys():
-    """The freshness slots must target the stalest green cohort: every key
-    whose latest driver row is round <= 5 is in the window; round-6 keys
-    are in the window or the pinned round-16 head (`_VERIFIED_R6`)."""
-    latest = _driver_rows_through(14)
-    if not latest:
-        return
-    from data_integration_exercise_spark.registry import _VERIFIED_R6
-
-    stale5 = {k for k, r in latest.items() if r <= 5}
-    missing5 = stale5 - set(EXPECTED_R15_WINDOW)
-    assert not missing5, f"round-5-stale keys left out: {sorted(missing5)}"
-    stale6 = {k for k, r in latest.items() if r == 6}
-    missing6 = stale6 - set(EXPECTED_R15_WINDOW) - set(_VERIFIED_R6)
-    assert not missing6, f"round-6-stale keys left out: {sorted(missing6)}"
-    assert len(_VERIFIED_R6) == 11
-
-
 def test_queries_count_matches_survey_addendum():
     """SURVEY §8 documents the registry totals; keep them in sync."""
     survey = open("/root/repo/SURVEY.md").read()

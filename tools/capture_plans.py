@@ -1,8 +1,10 @@
 #!/usr/bin/env python
-"""Capture .explain('formatted') for every bench-tier query into plans/r15/.
+"""Capture .explain('formatted') for every bench-tier query into a fresh
+temporary directory (``plans-*`` under the system temp dir; the path is
+printed first). Nothing is written inside the repository.
 
 Usage:
-    python tools/capture_plans.py before            # plans/r15/<key>_before.txt
+    python tools/capture_plans.py before            # <tmp>/<key>_before.txt
     python tools/capture_plans.py after key1 key2   # only the named keys
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/capture_plans.py before
 
@@ -17,6 +19,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
@@ -43,8 +46,8 @@ def main() -> None:
     if only:
         keys = [k for k in keys if k in only] + sorted(only - set(keys))
 
-    out_dir = os.path.join(REPO, "plans", "r15")
-    os.makedirs(out_dir, exist_ok=True)
+    out_dir = tempfile.mkdtemp(prefix="plans-")
+    print(f"writing plans to {out_dir}")
 
     spark = get_session("capture_plans")
     qs = queries()
