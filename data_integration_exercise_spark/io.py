@@ -10,9 +10,20 @@ Scale posture: these are plain ``spark.read.parquet`` scans — Catalyst gets
 full predicate pushdown / column pruning, and on a cluster the same code
 reads a 100 TB table as a partitioned file listing. No collect, no caching
 policy here (callers opt in per workload).
+
+Staging: every copy, sink and checkpoint an operator writes lives under
+``/tmp/die_spark_stage/p<pid>/`` — copies of inputs at
+``<sf_cache_tag>/<key>`` (:func:`stage_dir`), stream sinks and their state
+at ``sink/<scope_tag>__<name>`` (:func:`sink_dir`). Copies of immutable
+inputs are written once per process (:func:`stage_once`).
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
+import re
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,13 +44,63 @@ def sf_cache_tag(sf_dir: str) -> str:
     basename for human-readable paths, disambiguate with a digest of the
     full absolute path.
     """
-    import hashlib
-    import os
-    import re
-
     full = os.path.abspath(sf_dir.rstrip("/") or "/")
     base = re.sub(r"[^A-Za-z0-9._-]", "_", os.path.basename(full) or "root")
     return f"{base}_{hashlib.md5(full.encode()).hexdigest()[:8]}"
+
+
+def scope_tag(sf_dir: str) -> str:
+    """:func:`sf_cache_tag` spelled as a catalog identifier (every character
+    outside ``[A-Za-z0-9_]`` becomes ``_``), for names that must differ per
+    ``sf_dir``: catalog tables, memory-sink views, stream sinks. A name
+    without it, reused by a run at another scale in the same process,
+    would leave a still-live lazy handle reading the other scale's data."""
+    return re.sub(r"[^A-Za-z0-9_]", "_", sf_cache_tag(sf_dir))
+
+
+def sink_scope(sf_dir: str, name: str) -> str:
+    """Per-(sf_dir, operator) name of a stream's sink, view, state or
+    checkpoint. Name alone is NOT enough: the same operator run at two
+    sf_dirs in one process would share one checkpoint — in append mode the
+    second run restarts the first run's query, whose file-source log
+    points at the other scale's input and whose output still holds the
+    other scale's rows. Reuse at the same (sf_dir, name) is deliberate:
+    an append-mode rerun replays an all-files-processed checkpoint
+    idempotently."""
+    return f"{scope_tag(sf_dir)}__{name}"
+
+
+def _process_root() -> str:
+    # PID component: a concurrent driver verify and a local pytest run must
+    # not overwrite each other's staged copies mid-read (stage_once is
+    # per-process, so the paths must be too).
+    return f"/tmp/die_spark_stage/p{os.getpid()}"
+
+
+def stage_dir(sf_dir: str, key: str) -> str:
+    """Where this process stages ``key``'s copy of ``sf_dir``'s data."""
+    return os.path.join(_process_root(), sf_cache_tag(sf_dir), key)
+
+
+def sink_dir(sf_dir: str, name: str) -> str:
+    """Where this process keeps stream sink, state or checkpoint ``name``
+    for ``sf_dir`` (scoped by :func:`sink_scope`)."""
+    return os.path.join(_process_root(), "sink", sink_scope(sf_dir, name))
+
+
+_staged: set[str] = set()  # paths stage_once has written in THIS process
+
+
+def stage_once(path: str, write: Callable[[], object]) -> None:
+    """Run ``write()`` unless this process already staged ``path``.
+
+    For copies of immutable inputs: the source cannot change under a
+    running process, so a copy this process wrote is current. ``path`` is
+    recorded only once ``write`` returns, so a write that raises (a failed
+    audit) runs again on the next call."""
+    if path not in _staged:
+        write()
+        _staged.add(path)
 
 
 def prepare(spark: SparkSession) -> SparkSession:

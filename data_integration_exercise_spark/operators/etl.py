@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, stage_dir, stage_once
 from ..registry_util import new_registry
 
 QUERIES, ORACLES, register = new_registry()
@@ -338,16 +338,9 @@ def etl_schema_evolution(spark, sf_dir):
     merging costs a file-listing pass) and declare the superset schema
     explicitly — the null-filling behavior is the same; the demo turns it
     on to prove the union semantics."""
-    import os
+    base = stage_dir(sf_dir, "etl_schema_evolution")
 
-    from ..io import sf_cache_tag
-
-    base = os.path.join(
-        f"/tmp/die_spark_stage/p{os.getpid()}",
-        sf_cache_tag(sf_dir),
-        "etl_schema_evolution",
-    )
-    if base not in _EVOLVE_STAGED:
+    def write():
         o = load_table(spark, sf_dir, "orders")
         gen1 = o.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_custkey", "o_totalprice"
@@ -357,7 +350,8 @@ def etl_schema_evolution(spark, sf_dir):
         )
         gen1.write.mode("overwrite").parquet(base + "/gen=1")
         gen2.write.mode("overwrite").parquet(base + "/gen=2")
-        _EVOLVE_STAGED.add(base)
+
+    stage_once(base, write)
     merged = spark.read.option("mergeSchema", "true").parquet(
         base + "/gen=1", base + "/gen=2"
     )
@@ -370,9 +364,6 @@ def etl_schema_evolution(spark, sf_dir):
             F.round(F.sum("o_totalprice"), 4).alias("total_price"),
         )
     )
-
-
-_EVOLVE_STAGED: set[str] = set()
 
 
 @register(
@@ -1103,31 +1094,17 @@ def etl_partition_backfill_plan(spark, sf_dir):
     plan is a directory listing plus a |months|-row join. Spine bounds
     come from data (min/max), never literals, so the plan tracks the
     source as it grows."""
-    import os
-
     o = load_table(spark, sf_dir, "orders")
     ym = (F.year("o_orderdate") * 100 + F.month("o_orderdate")).cast("long")
     midx = F.year("o_orderdate") * 12 + F.month("o_orderdate")
-    from ..io import sf_cache_tag
-
-    # sf_cache_tag (full-path digest, not basename) so two sf_dirs sharing
-    # a basename can't alias each other's staged copy (ADVICE r6 item 1).
-    base = os.path.join(
-        f"/tmp/die_spark_stage/p{os.getpid()}",
-        sf_cache_tag(sf_dir),
-        "etl_partition_backfill",
+    base = stage_dir(sf_dir, "etl_partition_backfill")
+    landed = o.filter(midx % 9 != 0).withColumn("ym", ym)
+    stage_once(
+        base,
+        lambda: landed.write.mode("overwrite").partitionBy("ym").parquet(base),
     )
-    if base not in _BACKFILL_STAGED:
-        (
-            o.filter(midx % 9 != 0)
-            .withColumn("ym", ym)
-            .write.mode("overwrite")
-            .partitionBy("ym")
-            .parquet(base)
-        )
-        _BACKFILL_STAGED.add(base)
     present = (
-        spark.read.parquet(base)
+        spark.read.schema(landed.schema).parquet(base)
         .groupBy("ym")
         .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
     )
@@ -1153,9 +1130,6 @@ def etl_partition_backfill_plan(spark, sf_dir):
         F.coalesce(F.col("n_rows"), F.lit(0)).cast("long").alias("n_rows"),
         F.when(F.col("n_rows").isNull(), "missing").otherwise("ok").alias("status"),
     )
-
-
-_BACKFILL_STAGED: set[str] = set()
 
 
 # ---------------------------------------------------------------------------

@@ -7,15 +7,15 @@ Reference parity: the pandas exercise ingests heterogeneous flat files
 at scale), parquet as the canonical columnar sink, partitioned writes for
 partition-pruned downstream reads.
 
-Round-trip staging writes go under /tmp/die_spark_stage/<sf>/<key>; the
-returned DataFrame is always read back *from the staged artifact*, so the
+Round-trip staging writes go to io.stage_dir(sf_dir, key) (``p<pid>/<sf
+tag>/<key>`` under the stage root); the returned DataFrame is always read
+back *from the staged artifact*, with the written frame's schema, so the
 oracle comparison proves write→read fidelity, not just the transform.
 """
 
 from __future__ import annotations
 
 import os
-import re
 from functools import reduce
 
 from pyspark.sql import functions as F
@@ -27,24 +27,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..io import load_table, sf_cache_tag
+from ..io import load_table, scope_tag, stage_dir, stage_once
 from ..registry_util import new_registry
 from ..schemas import CUSTOMER, TABLES
 
 QUERIES, ORACLES, register = new_registry()
-
-
-def _stage_dir(sf_dir: str, key: str) -> str:
-    # PID component: a concurrent driver verify and a local pytest run must
-    # not overwrite each other's staged copies mid-read (the staged-once
-    # guards are per-process, so the paths must be too). sf_cache_tag
-    # carries a full-path digest so two sf_dirs sharing a basename can't
-    # alias each other's staged copies (ADVICE r6 item 1).
-    return os.path.join(
-        f"/tmp/die_spark_stage/p{os.getpid()}",
-        sf_cache_tag(sf_dir),
-        key,
-    )
 
 
 @register(
@@ -102,7 +89,7 @@ def ingest_csv(spark, sf_dir):
     source format): customer → CSV → typed read-back. Schema is pinned
     (schemas.CUSTOMER) — inferSchema would cost an extra full pass and can
     mistype empty/ambiguous columns."""
-    path = _stage_dir(sf_dir, "ingest_csv")
+    path = stage_dir(sf_dir, "ingest_csv")
     c = load_table(spark, sf_dir, "customer")
     c.write.mode("overwrite").option("header", True).csv(path)
     return spark.read.csv(path, schema=CUSTOMER, header=True)
@@ -137,7 +124,7 @@ def ingest_json(spark, sf_dir):
     typed read-back. Time travels as epoch-µs bigints (exact), the nested
     props JSON travels as an escaped string — doubles survive via Jackson's
     shortest-round-trip formatting."""
-    path = _stage_dir(sf_dir, "ingest_json")
+    path = stage_dir(sf_dir, "ingest_json")
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts_us", "user_id", "event_type", "value", "props"
     )
@@ -159,7 +146,7 @@ def sink_parquet(spark, sf_dir):
     """The exercise's 'unified output table': orders⋈customer written to
     parquet, read back, aggregated — the oracle compares against the direct
     aggregation, so any write/read corruption surfaces as a value mismatch."""
-    path = _stage_dir(sf_dir, "sink_parquet")
+    path = stage_dir(sf_dir, "sink_parquet")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     unified = o.join(c, o.o_custkey == c.c_custkey)
@@ -192,7 +179,7 @@ def sink_jdbc(spark, sf_dir):
     through a real DBAPI boundary. In production this is the same code
     against Postgres/MySQL with partitionColumn/numPartitions for parallel
     reads; embedded Derby is single-JVM, which local mode satisfies."""
-    db = _stage_dir(sf_dir, "derby") + "/db"
+    db = stage_dir(sf_dir, "derby") + "/db"
     url = f"jdbc:derby:{db};create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     c = load_table(spark, sf_dir, "customer")
@@ -223,11 +210,11 @@ def sink_partitioned(spark, sf_dir):
     read-back: the filter on the partition column prunes directories before
     any file is opened — at 100 TB this is the primary data-skipping lever
     alongside predicate pushdown."""
-    path = _stage_dir(sf_dir, "sink_partitioned")
+    path = stage_dir(sf_dir, "sink_partitioned")
     li = load_table(spark, sf_dir, "lineitem")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
     return (
-        spark.read.parquet(path)
+        spark.read.schema(li.schema).parquet(path)
         .filter(F.col("l_returnflag") == "R")
         .groupBy("l_linestatus")
         .agg(
@@ -239,7 +226,7 @@ def sink_partitioned(spark, sf_dir):
 
 def bucketed_table_names(sf_dir: str) -> tuple[str, str]:
     """sf-scoped catalog names for sink_bucketed's two bucketed tables."""
-    tag = sf_cache_tag(sf_dir).replace(".", "_")
+    tag = scope_tag(sf_dir)
     return f"die_li_bucketed_{tag}", f"die_ord_bucketed_{tag}"
 
 
@@ -261,10 +248,10 @@ def sink_bucketed(spark, sf_dir):
     at write time removes the dominant shuffle from every downstream join.
     The in-memory catalog holds the bucket spec; data lands in the staging
     dir via the explicit path option. Catalog names are sf-scoped like the
-    data path (the streaming _sink_scope discipline): a name-only table
-    re-registered by a later run at another scale would leave any still-live
-    lazy handle pointing at replaced data."""
-    base = _stage_dir(sf_dir, "sink_bucketed")
+    data path (io.scope_tag): a name-only table re-registered by a later
+    run at another scale would leave any still-live lazy handle pointing
+    at replaced data."""
+    base = stage_dir(sf_dir, "sink_bucketed")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -313,12 +300,13 @@ def scan_dynamic_pruning(spark, sf_dir):
     in tests), so whole partition directories are skipped at runtime based
     on the join's build side. At 100 TB this is the mechanism that turns a
     date-dim filter into a fact-partition skip without any literal rewrite."""
-    path = _stage_dir(sf_dir, "scan_dynamic_pruning")
-    if path not in _DPP_STAGED:
-        li = load_table(spark, sf_dir, "lineitem")
-        li.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
-        _DPP_STAGED.add(path)
-    fact = spark.read.parquet(path)
+    path = stage_dir(sf_dir, "scan_dynamic_pruning")
+    li = load_table(spark, sf_dir, "lineitem")
+    stage_once(
+        path,
+        lambda: li.write.mode("overwrite").partitionBy("l_returnflag").parquet(path),
+    )
+    fact = spark.read.schema(li.schema).parquet(path)
     dim = spark.createDataFrame(
         [("A", "keep"), ("N", "drop"), ("R", "keep")], "flag string, action string"
     )
@@ -335,7 +323,9 @@ def scan_dynamic_pruning(spark, sf_dir):
     )
 
 
-_DPP_STAGED: set[str] = set()  # staged once per process; source data immutable
+def cbo_table_name(sf_dir: str, tbl: str) -> str:
+    """plan_cbo_stats' analyzed catalog copy of ``tbl``."""
+    return f"die_cbo_{tbl}_{os.getpid()}_{scope_tag(sf_dir)}"
 
 
 @register(
@@ -365,8 +355,6 @@ def plan_cbo_stats(spark, sf_dir):
     silently reuses the wrong data (caught by the registry-wide plan-audit
     sweep, which builds every key at sf0.001 before the sf0.01 parity
     tests run)."""
-    pid = os.getpid()
-    sf_tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_cache_tag(sf_dir))
     names = {}
     # every column the query touches needs stats, or CBO's cardinality
     # estimate goes undefined at the first operator missing one (filter
@@ -376,14 +364,14 @@ def plan_cbo_stats(spark, sf_dir):
         ("customer", "c_custkey, c_nationkey"),
         ("nation", "n_nationkey, n_name"),
     ]:
-        name = f"die_cbo_{tbl}_{pid}_{sf_tag}"
+        name = cbo_table_name(sf_dir, tbl)
         names[tbl] = name
         if not spark.catalog.tableExists(name):
             (
                 load_table(spark, sf_dir, tbl)
                 .write.mode("overwrite")
                 .format("parquet")
-                .option("path", _stage_dir(sf_dir, f"cbo_{tbl}"))
+                .option("path", stage_dir(sf_dir, f"cbo_{tbl}"))
                 .saveAsTable(name)
             )
             spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS {cols}")
@@ -462,15 +450,17 @@ def sink_compacted(spark, sf_dir):
     scale the same two-liner runs per partition directory with the target
     count derived from bytes/file, and bin-packing via AQE coalesce does
     the sizing automatically."""
-    fragmented = _stage_dir(sf_dir, "sink_compacted_fragmented")
-    compacted = _stage_dir(sf_dir, "sink_compacted")
-    if compacted not in _COMPACT_STAGED:
+    fragmented = stage_dir(sf_dir, "sink_compacted_fragmented")
+    compacted = stage_dir(sf_dir, "sink_compacted")
+
+    def write():
         o = load_table(spark, sf_dir, "orders")
         o.repartition(64).write.mode("overwrite").parquet(fragmented)
         spark.read.parquet(fragmented).repartition(4).write.mode(
             "overwrite"
         ).parquet(compacted)
-        _COMPACT_STAGED.add(compacted)
+
+    stage_once(compacted, write)
     return (
         spark.read.parquet(compacted)
         .groupBy("o_orderstatus")
@@ -479,9 +469,6 @@ def sink_compacted(spark, sf_dir):
             F.round(F.sum("o_totalprice"), 4).alias("total_price"),
         )
     )
-
-
-_COMPACT_STAGED: set[str] = set()  # staged once per process; source immutable
 
 
 @register(
@@ -501,10 +488,11 @@ def sink_orc(spark, sf_dir):
     and carries the same min/max stripe statistics parquet row-groups do,
     so every pushdown/pruning claim in this module holds for ORC lakes
     unchanged."""
-    path = _stage_dir(sf_dir, "sink_orc")
-    if path not in _ORC_STAGED:
-        load_table(spark, sf_dir, "orders").write.mode("overwrite").orc(path)
-        _ORC_STAGED.add(path)
+    path = stage_dir(sf_dir, "sink_orc")
+    stage_once(
+        path,
+        lambda: load_table(spark, sf_dir, "orders").write.mode("overwrite").orc(path),
+    )
     return (
         spark.read.orc(path)
         .groupBy("o_orderpriority")
@@ -513,9 +501,6 @@ def sink_orc(spark, sf_dir):
             F.round(F.sum("o_totalprice"), 4).alias("total_price"),
         )
     )
-
-
-_ORC_STAGED: set[str] = set()
 
 
 @register(
@@ -543,16 +528,15 @@ def sink_clustered(spark, sf_dir):
     read-back query below groups the January-1997 slice; the oracle runs
     the same cut on the un-clustered source, proving the rewrite is
     content-preserving."""
-    path = _stage_dir(sf_dir, "sink_clustered")
-    if path not in _CLUSTER_STAGED:
-        li = load_table(spark, sf_dir, "lineitem")
-        (
-            li.repartitionByRange(8, "l_shipdate")
-            .sortWithinPartitions("l_shipdate")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        _CLUSTER_STAGED.add(path)
+    path = stage_dir(sf_dir, "sink_clustered")
+    stage_once(
+        path,
+        lambda: load_table(spark, sf_dir, "lineitem")
+        .repartitionByRange(8, "l_shipdate")
+        .sortWithinPartitions("l_shipdate")
+        .write.mode("overwrite")
+        .parquet(path),
+    )
     lo = F.lit("1997-01-01").cast("timestamp_ntz")
     hi = F.lit("1997-02-01").cast("timestamp_ntz")
     return (
@@ -564,9 +548,6 @@ def sink_clustered(spark, sf_dir):
             F.round(F.sum("l_extendedprice"), 4).alias("revenue"),
         )
     )
-
-
-_CLUSTER_STAGED: set[str] = set()
 
 
 @register(
@@ -595,7 +576,7 @@ def sink_jsonl_shards(spark, sf_dir):
     produce multi-GB files; ceil(rows/cap) files per partition stream out
     with no extra shuffle). Re-read uses an explicit schema — schema
     inference over 100 TB of JSON is a full extra scan."""
-    path = _stage_dir(sf_dir, "sink_jsonl_shards")
+    path = stage_dir(sf_dir, "sink_jsonl_shards")
     d = load_table(spark, sf_dir, "documents")
     (
         d.select("doc_id", "text", "lang", "source", "n_chars")
@@ -663,10 +644,8 @@ def sink_manifest_atomic(spark, sf_dir):
     dominates planning on large tables."""
     import json
 
-    root = _stage_dir(sf_dir, "sink_manifest_atomic")
-    if root not in _MANIFEST_STAGED:
-        _manifest_stage(spark, sf_dir, root)
-        _MANIFEST_STAGED.add(root)
+    root = stage_dir(sf_dir, "sink_manifest_atomic")
+    stage_once(root, lambda: _manifest_stage(spark, sf_dir, root))
 
     def read_snapshot(vid):
         man = json.load(open(os.path.join(root, "_manifests", f"{vid}.json")))
@@ -680,9 +659,6 @@ def sink_manifest_atomic(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("o_totalprice"), 4).alias("total_price"),
     )
-
-
-_MANIFEST_STAGED: set[str] = set()
 
 
 def _manifest_stage(spark, sf_dir, root: str) -> None:
@@ -777,7 +753,7 @@ def sink_manifest_expire(spark, sf_dir):
 
     run = _EXPIRE_RUNS.get(sf_dir, 0) + 1
     _EXPIRE_RUNS[sf_dir] = run
-    base = _stage_dir(sf_dir, "sink_manifest_expire")
+    base = stage_dir(sf_dir, "sink_manifest_expire")
     # one staged copy at a time: drop earlier runs before staging the next
     # (review finding: unbounded /tmp growth under median-of-3 benching)
     shutil.rmtree(base, ignore_errors=True)
@@ -856,8 +832,9 @@ def ingest_csv_permissive(spark, sf_dir):
     no audit trail). The report counts quarantined vs parsed rows and
     checksums the parsed side; the oracle reconstructs both from the
     clean source."""
-    path = _stage_dir(sf_dir, "ingest_csv_permissive")
-    if path not in _PERMISSIVE_STAGED:
+    path = stage_dir(sf_dir, "ingest_csv_permissive")
+
+    def write():
         o = load_table(spark, sf_dir, "orders")
         line = F.concat_ws(
             ",",
@@ -869,7 +846,8 @@ def ingest_csv_permissive(spark, sf_dir):
             F.col("o_orderpriority"),
         )
         o.select(line.alias("value")).write.mode("overwrite").text(path)
-        _PERMISSIVE_STAGED.add(path)
+
+    stage_once(path, write)
     schema = StructType(
         [
             StructField("o_orderkey", LongType()),
@@ -898,9 +876,6 @@ def ingest_csv_permissive(spark, sf_dir):
     )
 
 
-_PERMISSIVE_STAGED: set[str] = set()
-
-
 @register(
     "plan_runtime_filter",
     oracle="""
@@ -925,7 +900,7 @@ def plan_runtime_filter(spark, sf_dir):
     are restored before returning, so later queries in the session keep
     their broadcast plans; tests assert `might_contain` lands in the
     optimized plan."""
-    path = _stage_dir(sf_dir, "plan_runtime_filter")
+    path = stage_dir(sf_dir, "plan_runtime_filter")
     prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     prev_th = spark.conf.get(
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
@@ -959,8 +934,6 @@ def plan_runtime_filter(spark, sf_dir):
         )
     return spark.read.parquet(path)
 
-
-_ZORDER_STAGED: set[str] = set()
 
 #: Z-order interleave of 11 partkey bits with 11 day bits — sized to the
 #: DOMAINS (ship-day span ~1300, partkey ~2k at sf0.01): oversized caps
@@ -1006,8 +979,9 @@ def sink_zorder(spark, sf_dir):
     on two+ dimensions without a second physically-sorted copy; write
     cost is one range-repartition + local sort, query cost falls by the
     box selectivity."""
-    path = _stage_dir(sf_dir, "sink_zorder")
-    if path not in _ZORDER_STAGED:
+    path = stage_dir(sf_dir, "sink_zorder")
+
+    def write():
         li = load_table(spark, sf_dir, "lineitem")
         day = F.greatest(
             F.lit(0),
@@ -1031,7 +1005,8 @@ def sink_zorder(spark, sf_dir):
             .write.mode("overwrite")
             .parquet(path)
         )
-        _ZORDER_STAGED.add(path)
+
+    stage_once(path, write)
     lo = F.lit("1996-01-01").cast("timestamp_ntz")
     hi = F.lit("1996-07-01").cast("timestamp_ntz")
     return (
@@ -1048,9 +1023,6 @@ def sink_zorder(spark, sf_dir):
             F.round(F.sum("l_extendedprice"), 4).alias("revenue"),
         )
     )
-
-
-_MANIFEST_STAGED: set[str] = set()
 
 
 @register(
@@ -1083,10 +1055,11 @@ def scan_manifest_pruned(spark, sf_dir):
     100 TB: the manifest is the difference between listing+opening a
     million footers and reading a KB-scale stats table; every lakehouse
     query planner starts here."""
-    base = _stage_dir(sf_dir, "scan_manifest")
+    base = stage_dir(sf_dir, "scan_manifest")
     data, manifest = base + "/data", base + "/manifest"
-    if base not in _MANIFEST_STAGED:
-        li = load_table(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
+
+    def write():
         (
             li.repartitionByRange(16, "l_shipdate")
             .sortWithinPartitions("l_shipdate")
@@ -1094,7 +1067,7 @@ def scan_manifest_pruned(spark, sf_dir):
             .parquet(data)
         )
         (
-            spark.read.parquet(data)
+            spark.read.schema(li.schema).parquet(data)
             .groupBy(F.input_file_name().alias("file"))
             .agg(
                 F.min("l_shipdate").alias("min_ship"),
@@ -1105,7 +1078,8 @@ def scan_manifest_pruned(spark, sf_dir):
             .write.mode("overwrite")
             .parquet(manifest)
         )
-        _MANIFEST_STAGED.add(base)
+
+    stage_once(base, write)
     lo = F.lit("1997-03-01").cast("timestamp_ntz")
     hi = F.lit("1997-06-01").cast("timestamp_ntz")
     # planning step: select overlapping files from the manifest (bounded by
@@ -1118,7 +1092,7 @@ def scan_manifest_pruned(spark, sf_dir):
         .collect()
     ]
     return (
-        spark.read.parquet(*files)
+        spark.read.schema(li.schema).parquet(*files)
         .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
         .groupBy("l_returnflag")
         .agg(
@@ -1165,7 +1139,7 @@ def sink_idempotent_overwrite(spark, sf_dir):
 
     100 TB: partition overwrite is a metadata swap per touched partition;
     the rewrite cost is the slice's size, never the table's."""
-    path = _stage_dir(sf_dir, "sink_idem_overwrite")
+    path = stage_dir(sf_dir, "sink_idem_overwrite")
     o = load_table(spark, sf_dir, "orders")
     y97 = o.filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
@@ -1189,7 +1163,7 @@ def sink_idempotent_overwrite(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return (
-        spark.read.parquet(path)
+        spark.read.schema(y97.schema).parquet(path)
         .groupBy("month")
         .agg(
             F.count("*").cast("long").alias("n"),
@@ -1199,8 +1173,6 @@ def sink_idempotent_overwrite(spark, sf_dir):
         )
     )
 
-
-_TT_STAGED: set[str] = set()  # staged once per process; source data immutable
 
 #: canonical row hash for the versioned-orders snapshots (the
 #: etl_table_fingerprint construction: 60-bit md5 prefix, integer cents)
@@ -1261,7 +1233,7 @@ def scan_time_travel(spark, sf_dir):
     data lake; the per-version scan is a plain pruned parquet read. The
     driver-side manifest collect is bounded by the file count (planning
     metadata, not data)."""
-    base = _stage_dir(sf_dir, "scan_time_travel")
+    base = stage_dir(sf_dir, "scan_time_travel")
     data, manifest = base + "/data", base + "/manifest"
     o = load_table(spark, sf_dir, "orders")
     v1 = o.select(
@@ -1275,12 +1247,13 @@ def scan_time_travel(spark, sf_dir):
         F.col("price_cents")
         + F.when(F.col("o_orderkey") % 11 == 0, 100).otherwise(0),
     )
-    if base not in _TT_STAGED:
+
+    def write():
         v1.write.mode("overwrite").parquet(data + "/v1")
         v2.write.mode("overwrite").parquet(data + "/v2")
         for ver in (1, 2):
             (
-                spark.read.parquet(f"{data}/v{ver}")
+                spark.read.schema(v1.schema).parquet(f"{data}/v{ver}")
                 .select(F.input_file_name().alias("file"))
                 .distinct()
                 .withColumn("version", F.lit(ver))
@@ -1288,12 +1261,13 @@ def scan_time_travel(spark, sf_dir):
                 .write.mode("append")
                 .parquet(manifest)
             )
-        _TT_STAGED.add(base)
+
+    stage_once(base, write)
     man = spark.read.parquet(manifest)
     out = None
     for ver in (1, 2):
         files = [r.file for r in man.filter(F.col("version") == ver).collect()]
-        snap = spark.read.parquet(*files)
+        snap = spark.read.schema(v1.schema).parquet(*files)
         summ = snap.agg(
             F.count("*").cast("long").alias("n_rows"),
             F.sum("price_cents").cast("long").alias("revenue_cents"),
@@ -1310,9 +1284,6 @@ def scan_time_travel(spark, sf_dir):
         )
         out = summ if out is None else out.unionByName(summ)
     return out
-
-
-_WAP_GUARD: set[str] = set()
 
 
 @register(
@@ -1361,9 +1332,10 @@ def sink_wap_publish(spark, sf_dir):
     decision — control flow, not data (the blessed cost-probe pattern)."""
     import shutil
 
-    base = _stage_dir(sf_dir, "sink_wap_publish")
+    base = stage_dir(sf_dir, "sink_wap_publish")
     staging, published = base + "/staging", base + "/published"
-    if base not in _WAP_GUARD:
+
+    def write():
         shutil.rmtree(base, ignore_errors=True)
         o = load_table(spark, sf_dir, "orders")
         cleaned = o.filter(F.col("o_orderstatus").isin("O", "F", "P")).select(
@@ -1392,7 +1364,8 @@ def sink_wap_publish(spark, sf_dir):
         if not ok:
             raise RuntimeError(f"WAP audit failed, refusing to publish: {audit}")
         os.rename(staging, published)  # atomic same-fs publish
-        _WAP_GUARD.add(base)
+
+    stage_once(base, write)
     pub = spark.read.parquet(published)
     agg = pub.agg(
         F.count("*").cast("long").alias("row_count"),
@@ -1413,9 +1386,6 @@ def sink_wap_publish(spark, sf_dir):
             'published_rows', row_count, true
         ) AS (check_name, observed, passed)"""
     )
-
-
-_PE_STAGED: set[str] = set()
 
 
 @register(
@@ -1447,31 +1417,26 @@ def scan_partition_evolution(spark, sf_dir):
     entire history to the new layout; with it, old data keeps its
     coarser pruning and new data gets the finer one — both pruned at
     PLANNING time via partition values, no footer reads."""
-    base = _stage_dir(sf_dir, "scan_partition_evolution")
+    base = stage_dir(sf_dir, "scan_partition_evolution")
     old_dir, new_dir = base + "/ym_layout", base + "/wk_layout"
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice", "l_shipdate"
     )
     split = F.lit("1997-01-01").cast("timestamp_ntz")
     anchor = F.lit("1995-01-01 00:00:00").cast("timestamp_ntz")
-    if base not in _PE_STAGED:
-        (
-            li.filter(F.col("l_shipdate") < split)
-            .withColumn("ym", F.date_format("l_shipdate", "yyyy-MM"))
-            .write.mode("overwrite")
-            .partitionBy("ym")
-            .parquet(old_dir)
-        )
-        (
-            li.filter(F.col("l_shipdate") >= split)
-            .withColumn("wk", F.expr(
-                "datediff(l_shipdate, TIMESTAMP_NTZ '1995-01-01 00:00:00') div 7"
-            ))
-            .write.mode("overwrite")
-            .partitionBy("wk")
-            .parquet(new_dir)
-        )
-        _PE_STAGED.add(base)
+    old = li.filter(F.col("l_shipdate") < split).withColumn(
+        "ym", F.date_format("l_shipdate", "yyyy-MM")
+    )
+    new = li.filter(F.col("l_shipdate") >= split).withColumn(
+        "wk",
+        F.expr("datediff(l_shipdate, TIMESTAMP_NTZ '1995-01-01 00:00:00') div 7"),
+    )
+
+    def write():
+        old.write.mode("overwrite").partitionBy("ym").parquet(old_dir)
+        new.write.mode("overwrite").partitionBy("wk").parquet(new_dir)
+
+    stage_once(base, write)
     lo = F.lit("1997-03-15").cast("timestamp_ntz")
     hi = F.lit("1997-04-20").cast("timestamp_ntz")
     import datetime as _dt
@@ -1480,14 +1445,14 @@ def scan_partition_evolution(spark, sf_dir):
     lo_wk = (_dt.date(1997, 3, 15) - _a).days // 7
     hi_wk = (_dt.date(1997, 4, 19) - _a).days // 7
     old_scan = (
-        spark.read.parquet(old_dir)
+        spark.read.schema(old.schema).parquet(old_dir)
         # month-granular residual on the old spec (prunes to ym dirs)
         .filter((F.col("ym") >= "1997-03") & (F.col("ym") <= "1997-04"))
         .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
         .drop("ym")
     )
     new_scan = (
-        spark.read.parquet(new_dir)
+        spark.read.schema(new.schema).parquet(new_dir)
         # week-granular residual on the evolved spec
         .filter((F.col("wk") >= lo_wk) & (F.col("wk") <= hi_wk))
         .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
@@ -1503,9 +1468,6 @@ def scan_partition_evolution(spark, sf_dir):
             ),
         )
     )
-
-
-_VACUUM_STAGED: set[str] = set()  # staged once per process; source immutable
 
 
 @register(
@@ -1551,12 +1513,13 @@ def etl_vacuum_retention_plan(spark, sf_dir):
     contract as scan_time_travel."""
     import os
 
-    base = _stage_dir(sf_dir, "etl_vacuum")
+    base = stage_dir(sf_dir, "etl_vacuum")
     data, manifest = base + "/data", base + "/manifest"
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", (F.col("o_orderkey") % 8).cast("long").alias("bucket")
     )
-    if base not in _VACUUM_STAGED:
+
+    def write():
         # commit 1: full table, one file per bucket (hash partition on the
         # bucket value routes each bucket to exactly one task)
         (
@@ -1582,12 +1545,12 @@ def etl_vacuum_retention_plan(spark, sf_dir):
         )
         # manifests record (version, file, n_rows, bucket) at commit time
         c1 = (
-            spark.read.parquet(data + "/commit1")
+            spark.read.schema(o.schema).parquet(data + "/commit1")
             .groupBy(F.input_file_name().alias("file"), "bucket")
             .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
         )
         c2 = (
-            spark.read.parquet(data + "/commit2")
+            spark.read.schema(o.schema).parquet(data + "/commit2")
             .groupBy(F.input_file_name().alias("file"), "bucket")
             .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
         )
@@ -1603,7 +1566,8 @@ def etl_vacuum_retention_plan(spark, sf_dir):
             .write.mode("overwrite")
             .parquet(manifest)
         )
-        _VACUUM_STAGED.add(base)
+
+    stage_once(base, write)
     man = spark.read.parquet(manifest)
     live = man.filter(F.col("version") == 2).select("file", "n_rows")
     expired = man.filter(F.col("version") == 1).select("file", "n_rows")
@@ -1649,8 +1613,6 @@ def etl_vacuum_retention_plan(spark, sf_dir):
         rows, "status string, n_files long, n_rows long"
     )
 
-_WAP_RB_GUARD: set[str] = set()
-
 
 @register(
     "etl_wap_rollback",
@@ -1691,11 +1653,12 @@ def etl_wap_rollback(spark, sf_dir):
     aggregate, metadata-only renames; rollback adds zero data movement."""
     import shutil
 
-    base = _stage_dir(sf_dir, "etl_wap_rollback")
+    base = stage_dir(sf_dir, "etl_wap_rollback")
     staging = base + "/staging"
     published = base + "/published"
     quarantine = base + "/quarantine"
-    if base not in _WAP_RB_GUARD:
+
+    def write():
         shutil.rmtree(base, ignore_errors=True)
         o = load_table(spark, sf_dir, "orders")
         # v1: good commit — publish
@@ -1707,7 +1670,8 @@ def etl_wap_rollback(spark, sf_dir):
         o.select(
             (F.col("o_orderkey") % 1000).alias("o_orderkey"), "o_totalprice"
         ).write.mode("overwrite").parquet(staging)
-        _WAP_RB_GUARD.add(base)
+
+    stage_once(base, write)
     staged = spark.read.parquet(staging) if os.path.exists(staging) else None
     if staged is not None:
         audit = staged.agg(

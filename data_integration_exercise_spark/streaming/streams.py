@@ -11,7 +11,7 @@ Inputs (_table_stream): a single-batch stream reads ``{sf_dir}/{table}.parquet``
 in place — no copy is written. Only the multi-batch keys stage their input,
 as a range split into part files read one per micro-batch, and the
 deterministic-watermark key stages its three pinned batches; both stages
-are written once per process (_STAGED).
+are written once per process (io.stage_once).
 
 Scale posture: these pipelines are written exactly as they would run
 unbounded — keyed state (window/session/dedup aggregations partitioned by
@@ -35,7 +35,15 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..io import canonicalize, load_table, read_raw, sf_cache_tag
+from ..io import (
+    canonicalize,
+    load_table,
+    read_raw,
+    sink_dir,
+    sink_scope,
+    stage_dir,
+    stage_once,
+)
 from ..registry_util import new_registry
 from ..schemas import EVENTS
 
@@ -43,9 +51,6 @@ QUERIES, ORACLES, register = new_registry()
 
 _US_15MIN = 900_000_000
 _US_30MIN = 1_800_000_000
-
-
-_STAGED: set[str] = set()  # stages written by THIS process (read-only data)
 
 
 def _table_stream(spark, sf_dir: str, table: str, n_files: int = 1, order_col: str = "ts"):
@@ -63,20 +68,18 @@ def _table_stream(spark, sf_dir: str, table: str, n_files: int = 1, order_col: s
     cross-batch merge is the thing under test: a deterministic
     repartitionByRange split on ``order_col`` into ``n_files`` part files,
     read one per trigger. The split is written once per process per
-    (sf, table, n_files): the source is immutable, so a copy this process
-    already wrote is current. Its path is PID-unique (a concurrent process
-    must not rewrite a stage mid-read) and full-path sf-tagged (two
-    sf_dirs sharing a basename must not alias each other's stage — ADVICE
-    r6 item 1)."""
+    (sf, table, n_files), through io.stage_once."""
     raw = read_raw(spark, sf_dir, table)
     reader = spark.readStream.schema(raw.schema)
     path = f"{sf_dir}/{table}.parquet"
     if n_files > 1:
-        tag = sf_cache_tag(sf_dir)
-        stage = f"/tmp/die_spark_stage/p{os.getpid()}/{tag}/{table}_stream_{n_files}"
-        if stage not in _STAGED:
-            raw.repartitionByRange(n_files, order_col).write.mode("overwrite").parquet(stage)
-            _STAGED.add(stage)
+        stage = stage_dir(sf_dir, f"{table}_stream_{n_files}")
+        stage_once(
+            stage,
+            lambda: raw.repartitionByRange(n_files, order_col)
+            .write.mode("overwrite")
+            .parquet(stage),
+        )
         src = reader.option("maxFilesPerTrigger", 1).parquet(stage)
     elif os.path.isdir(path):
         src = reader.parquet(path)
@@ -113,23 +116,6 @@ def _stream_partitions(spark):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _sink_scope(name: str, sf_dir: str) -> str:
-    """Per-(sf_dir, operator) result-sink scope. Name alone is NOT enough:
-    the same operator invoked at two sf_dirs in ONE process would alias one
-    sink/checkpoint — in append mode the second run restarts the first
-    run's checkpointed query (same query id), whose file-source log points
-    at the OTHER scale's staged input ('Wrong basePath' crash) and whose
-    output dir still holds the other scale's rows (silent pollution). The
-    exact bug class ADVICE r6 item 1 fixed for the staged INPUTS, caught on
-    the sinks in round 11 when the registry-wide schema-kind test started
-    executing every streaming key at sf0.001 in the same process as the
-    sf0.01 parity suite. Same (name, sf_dir) reuse stays deliberate:
-    append-mode reruns replay an all-files-processed checkpoint
-    idempotently (bench's median-of-3 depends on that)."""
-    tag = sf_cache_tag(sf_dir).replace(".", "_")
-    return f"{tag}__{name}"
-
-
 def _run_to_memory(stream_df, name: str, mode: str) -> None:
     with _stream_partitions(stream_df.sparkSession):
         q = (
@@ -146,10 +132,10 @@ def _memory_result(spark, stream_df, name: str, mode: str, sf_dir: str) -> DataF
     """Memory-sink runner — only for BOUNDED result sets (per-user/segment
     aggregates, ≤ a few thousand rows): the memory sink materializes on the
     driver. Growing-output windows use _parquet_result instead. The view
-    name is sf-scoped (_sink_scope): the returned handle is lazy, so a
+    name is sf-scoped (io.sink_scope): the returned handle is lazy, so a
     name-only view re-registered by a later run at another scale would
     silently swap its contents."""
-    scoped = _sink_scope(name, sf_dir)
+    scoped = sink_scope(sf_dir, name)
     _run_to_memory(stream_df, scoped, mode)
     return spark.table(scoped)
 
@@ -163,9 +149,9 @@ def _parquet_result(spark, stream_df, name: str, mode: str, sf_dir: str) -> Data
     foreachBatch + overwrite — the standard idempotent complete-mode file
     sink, each micro-batch replacing the whole aggregate. The returned
     DataFrame scans the final state lazily, with the stream's schema (no
-    footer inference). The path is sf-scoped (_sink_scope) so two scales
+    footer inference). The path is sf-scoped (io.sink_dir) so two scales
     in one process can't alias each other's checkpoint or output."""
-    out = f"/tmp/die_spark_stage/p{os.getpid()}/sink/{_sink_scope(name, sf_dir)}"
+    out = sink_dir(sf_dir, name)
     with _stream_partitions(spark):
         if mode == "complete":
             writer = stream_df.writeStream.foreachBatch(
@@ -332,11 +318,11 @@ def _staged_watermark_stream(spark, sf_dir: str):
     since the file source orders batches by modification time. Returns
     (stream, max_us); the two scalar collects are stage GEOMETRY, not
     data movement."""
-    tag = sf_cache_tag(sf_dir)
-    stage = f"/tmp/die_spark_stage/p{os.getpid()}/{tag}/events_wm_det"
+    stage = stage_dir(sf_dir, "events_wm_det")
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts_us")).collect()[0][0]
-    if stage not in _STAGED:
+
+    def write():
         late = (F.col("event_id") % 2 == 0) & (
             F.expr(f"ts_us div {_WM_WINDOW_US}") * _WM_WINDOW_US + _WM_WINDOW_US
             <= F.lit(mx - _WM_CLOSE_US)
@@ -371,7 +357,8 @@ def _staged_watermark_stream(spark, sf_dir: str):
             os.replace(os.path.join(tmp, part), dst)
             shutil.rmtree(tmp, ignore_errors=True)
             os.utime(dst, (mtime, mtime))
-        _STAGED.add(stage)
+
+    stage_once(stage, write)
     s = (
         spark.readStream.schema(EVENTS)
         .option("maxFilesPerTrigger", 1)
@@ -494,8 +481,7 @@ def stream_foreachbatch(spark, sf_dir):
     into a parquet area; the query returns the re-read final state. This is
     the escape hatch for sinks Structured Streaming lacks natively (JDBC
     upserts, MERGE targets)."""
-    tag = sf_cache_tag(sf_dir)
-    out = f"/tmp/die_spark_stage/p{os.getpid()}/{tag}/foreachbatch_out"
+    out = stage_dir(sf_dir, "foreachbatch_out")
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -669,8 +655,8 @@ def stream_cdc_upsert(spark, sf_dir):
     from pyspark.sql import Window
 
     src = _table_stream(spark, sf_dir, "events", n_files=4)
-    snap = f"/tmp/die_spark_stage/p{os.getpid()}/sink/stream_cdc_upsert_state"
-    ckpt = f"/tmp/die_spark_stage/p{os.getpid()}/sink/stream_cdc_upsert_ckpt"
+    snap = sink_dir(sf_dir, "stream_cdc_upsert_state")
+    ckpt = sink_dir(sf_dir, "stream_cdc_upsert_ckpt")
     import shutil
 
     # fresh state AND checkpoint per invocation: a stale checkpoint would
@@ -1076,7 +1062,7 @@ def stream_quantile_ingest(spark, sf_dir):
     global form directly. State versions are immutable parquet dirs (no
     read-then-overwrite-self); the latest version is discovered from the
     manifest at read time, so checkpointed re-runs (bench median-of-3)
-    replay nothing and read the settled state — the _sink_scope
+    replay nothing and read the settled state — the io.sink_scope
     discipline keeps scales apart.
 
     100 TB: per-batch work is one narrow projection + a groups×k-bounded
@@ -1087,10 +1073,7 @@ def stream_quantile_ingest(spark, sf_dir):
     at all (the lambda-architecture reconciliation property)."""
     stream = _table_stream(spark, sf_dir, "orders", n_files=4, order_col="o_orderkey")
 
-    base = (
-        f"/tmp/die_spark_stage/p{os.getpid()}/sink/"
-        f"{_sink_scope('stream_quantile_ingest', sf_dir)}"
-    )
+    base = sink_dir(sf_dir, "stream_quantile_ingest")
 
     def _latest_version(below: int | None = None) -> int:
         """Largest on-disk state version, optionally strictly below a

@@ -391,9 +391,9 @@ def test_wap_rollback_serves_v1_and_quarantines_v2(spark):
     assert pdf.loc["audit_v2_dup_pk", "observed"] == src.dups > 0
     assert pdf.loc["rollback_quarantined", "observed"] == src.n
     # the published files themselves still carry v1's full key space
-    from data_integration_exercise_spark.sources.connectors import _stage_dir
+    from data_integration_exercise_spark.io import stage_dir
 
-    pub = spark.read.parquet(_stage_dir(sf, "etl_wap_rollback") + "/published")
+    pub = spark.read.parquet(stage_dir(sf, "etl_wap_rollback") + "/published")
     assert pub.select("o_orderkey").distinct().count() == src.n
     again = C.QUERIES["etl_wap_rollback"](spark, sf).toPandas().set_index("step")
     assert (again == pdf).all().all()

@@ -412,13 +412,27 @@ def test_ppr_mass_bound_and_seed_dominance(spark):
 
 
 @pytest.mark.parametrize(
-    "key", ["graph_pagerank", "graph_hits", "plan_ivf_probe_geometry"]
+    "key",
+    [
+        "graph_pagerank",
+        "graph_hits",
+        "plan_ivf_probe_geometry",
+        "sink_partitioned",
+        "scan_dynamic_pruning",
+        "scan_manifest_pruned",
+        "sink_idempotent_overwrite",
+        "scan_time_travel",
+        "scan_partition_evolution",
+        "etl_partition_backfill_plan",
+    ],
 )
 def test_empty_input_matches_oracle(spark, tmp_path, key):
     """Degenerate input: on zero-row copies of every table the node-count
     probe sees no nodes and the IVF planner sees no queries; each key must
     return its oracle's answer (empty, or NULL ratios) instead of dividing
-    by zero on the driver or in an ANSI `div`."""
+    by zero on the driver or in an ANSI `div`. Staged copies of empty
+    tables may hold no data file at all, so read-backs must not infer
+    their schema from one."""
     import pyarrow.parquet as pq
 
     from data_integration_exercise_spark.schemas import TABLES

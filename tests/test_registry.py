@@ -2,10 +2,16 @@
 
 from __future__ import annotations
 
+import os
 import re
 
+import pytest
+
+from data_integration_exercise_spark.io import stage_dir
 from data_integration_exercise_spark.registry import oracle_sql, queries
 from data_integration_exercise_spark.schemas import TABLES
+
+from .conftest import SF_SMOKE
 
 ROWS_ONLY_ALLOWED = {
     # approximate or trigger-dependent by design (SURVEY §2 / §8)
@@ -118,6 +124,33 @@ def test_spark_and_oracle_dtype_kinds_agree(spark):
         "int-vs-float dtype splits the driver hash would fail on: "
         f"{mismatched}"
     )
+
+
+@pytest.mark.parametrize(
+    "key, stage",
+    [
+        ("sink_orc", "sink_orc"),
+        ("etl_partition_backfill_plan", "etl_partition_backfill"),
+        ("stream_cdc_upsert", "events_stream_4"),
+    ],
+)
+def test_immutable_input_copies_are_staged_once(spark, key, stage):
+    """io.stage_once: a second call of a key in the same process reuses the
+    copy of its input the first call staged — no file under it is
+    rewritten, added or removed."""
+
+    def files():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(stage_dir(SF_SMOKE, stage))
+            for f in fs
+        }
+
+    queries()[key](spark, SF_SMOKE).collect()
+    first = files()
+    assert first
+    queries()[key](spark, SF_SMOKE).collect()
+    assert files() == first
 
 
 def test_no_unrounded_float_aggregates_in_oracles():

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from data_integration_exercise_spark.io import stage_dir
 from data_integration_exercise_spark.operators import joins
 from data_integration_exercise_spark.plans import inspect
 from data_integration_exercise_spark.sources import connectors
@@ -76,11 +77,7 @@ def test_cbo_stats_drive_planning(spark):
     must plan with cbo enabled."""
     df = connectors.QUERIES["plan_cbo_stats"](spark, SF)
     assert spark.conf.get("spark.sql.cbo.enabled") == "true"
-    import os
-
-    from data_integration_exercise_spark.io import sf_cache_tag
-
-    tbl = f"die_cbo_orders_{os.getpid()}_{sf_cache_tag(SF)}".replace(".", "_")
+    tbl = connectors.cbo_table_name(SF, "orders")
     stats = spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").toPandas()
     stat_row = stats[stats.col_name == "Statistics"]
     assert not stat_row.empty and "rows" in stat_row.data_type.iloc[0], stats
@@ -99,8 +96,8 @@ def test_compaction_reduces_file_count(spark):
     import os
 
     connectors.QUERIES["sink_compacted"](spark, SF).collect()
-    frag = connectors._stage_dir(SF, "sink_compacted_fragmented")
-    comp = connectors._stage_dir(SF, "sink_compacted")
+    frag = stage_dir(SF, "sink_compacted_fragmented")
+    comp = stage_dir(SF, "sink_compacted")
     n_frag = len(glob.glob(os.path.join(frag, "*.parquet")))
     n_comp = len(glob.glob(os.path.join(comp, "*.parquet")))
     assert n_frag >= 32 and n_comp <= 8, (n_frag, n_comp)
@@ -118,7 +115,7 @@ def test_manifest_atomic_commit_hides_orphans_and_shares_files(spark):
     import os
 
     connectors.QUERIES["sink_manifest_atomic"](spark, SF).collect()
-    root = connectors._stage_dir(SF, "sink_manifest_atomic")
+    root = stage_dir(SF, "sink_manifest_atomic")
     data_files = os.listdir(os.path.join(root, "data"))
     assert any(f.startswith("orphan-") for f in data_files)
     assert open(os.path.join(root, "_current")).read().strip() == "v2"
@@ -149,7 +146,7 @@ def test_manifest_expire_removes_only_unreachable_files(spark):
     import os
 
     connectors.QUERIES["sink_manifest_expire"](spark, SF).collect()
-    base = connectors._stage_dir(SF, "sink_manifest_expire")
+    base = stage_dir(SF, "sink_manifest_expire")
     run = max(os.listdir(base))  # latest runN
     root = os.path.join(base, run)
     assert os.listdir(os.path.join(root, "_manifests")) == ["v2.json"]
@@ -173,7 +170,7 @@ def test_jsonl_shards_are_capped_and_keyrange_disjoint(spark):
 
     connectors.QUERIES["sink_jsonl_shards"](spark, SF).collect()
     files = sorted(
-        glob.glob(os.path.join(connectors._stage_dir(SF, "sink_jsonl_shards"), "*.json"))
+        glob.glob(os.path.join(stage_dir(SF, "sink_jsonl_shards"), "*.json"))
     )
     assert files, "no JSONL shards written"
     part_ranges = {}
@@ -201,7 +198,7 @@ def test_clustered_sink_files_prune(spark):
 
     connectors.QUERIES["sink_clustered"](spark, SF).collect()
     files = glob.glob(
-        os.path.join(connectors._stage_dir(SF, "sink_clustered"), "*.parquet")
+        os.path.join(stage_dir(SF, "sink_clustered"), "*.parquet")
     )
     assert len(files) >= 6, files
     spans = []
@@ -321,13 +318,13 @@ def test_zorder_layout_prunes_rowgroups_in_both_dimensions(spark):
     sf = "/root/testdata/sf0.01"
     # materialize the z-ordered copy via the operator itself
     connectors.QUERIES["sink_zorder"](spark, sf).collect()
-    zpath = connectors._stage_dir(sf, "sink_zorder")
+    zpath = stage_dir(sf, "sink_zorder")
     li = load_table(spark, sf, "lineitem")
     total = li.count()
     pred = (F.col("l_partkey") >= 100) & (F.col("l_partkey") < 150)
     z_rows = _scan_output_rows(spark.read.parquet(zpath).filter(pred))
     # 1-D date-clustered copy (the sink_clustered layout)
-    dpath = connectors._stage_dir(sf, "zorder_test_bydate")
+    dpath = stage_dir(sf, "zorder_test_bydate")
     li.repartitionByRange(8, "l_shipdate").sortWithinPartitions(
         "l_shipdate"
     ).write.mode("overwrite").parquet(dpath)
@@ -350,7 +347,7 @@ def test_manifest_pruning_skips_files_at_planning_time(spark):
     got = {tuple(r) for r in df.collect()}
     nf = len(df.inputFiles())
     assert 0 < nf < 16, f"manifest pruning read {nf} files"
-    data = connectors._stage_dir(sf, "scan_manifest") + "/data"
+    data = stage_dir(sf, "scan_manifest") + "/data"
     lo = F.lit("1997-03-01").cast("timestamp_ntz")
     hi = F.lit("1997-06-01").cast("timestamp_ntz")
     want = {

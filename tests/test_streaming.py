@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from data_integration_exercise_spark.io import sink_dir, sink_scope, stage_dir
 from data_integration_exercise_spark.streaming import streams
 
 from .conftest import SF_SMOKE as SMOKE
@@ -15,12 +16,8 @@ SF = "/root/testdata/sf0.01"
 def _staged_streams(sf_dir):
     """Stream-input stages this process wrote for ``sf_dir``."""
     import glob
-    import os
 
-    from data_integration_exercise_spark.io import sf_cache_tag
-
-    root = f"/tmp/die_spark_stage/p{os.getpid()}/{sf_cache_tag(sf_dir)}"
-    return glob.glob(f"{root}/*_stream*")
+    return glob.glob(stage_dir(sf_dir, "*_stream*"))
 
 
 @pytest.mark.parametrize("key", sorted(streams.ORACLES))
@@ -47,7 +44,7 @@ def test_stateful_running_state_spans_batches(spark):
     (4 staged files, one per trigger) rather than re-initializing."""
     streams.QUERIES["stream_stateful_running"](spark, SF).collect()
     emitted = spark.table(
-        streams._sink_scope("mem_stream_stateful_running", SF)
+        sink_scope(SF, "mem_stream_stateful_running")
     ).toPandas()
     per_user = emitted.groupby("user_id").size()
     assert per_user.max() > 1, per_user.to_dict()
@@ -55,6 +52,18 @@ def test_stateful_running_state_spans_batches(spark):
     for _, g in emitted.groupby("user_id"):
         ns = sorted(g.n_events)
         assert ns == sorted(set(ns)), ns
+
+
+def test_cdc_upsert_state_is_scoped_per_scale(spark):
+    """A stream_cdc_upsert result stays readable after the key runs at
+    another scale in the same process: each scale keeps its state under
+    its own sink name, so the second run's fresh state cannot delete the
+    files the first handle reads."""
+    cdc = streams.QUERIES["stream_cdc_upsert"]
+    smoke = cdc(spark, SMOKE)
+    expected = sorted(smoke.collect())
+    cdc(spark, SF)
+    assert sorted(smoke.collect()) == expected
 
 
 def test_live_unbounded_rate_source_semantics(spark):
@@ -282,7 +291,6 @@ def test_stream_quantile_ingest_merges_across_batches(spark):
     from pyspark.sql import functions as F
 
     from data_integration_exercise_spark.io import load_table
-    from data_integration_exercise_spark.streaming.streams import _sink_scope
 
     rows = streams.QUERIES["stream_quantile_ingest"](spark, SF).collect()
     assert len(rows) == 5
@@ -298,10 +306,7 @@ def test_stream_quantile_ingest_merges_across_batches(spark):
         assert r.m == min(r.n, 512)
         assert r.p50_cents <= r.p90_cents
 
-    base = (
-        f"/tmp/die_spark_stage/p{os.getpid()}/sink/"
-        f"{_sink_scope('stream_quantile_ingest', SF)}"
-    )
+    base = sink_dir(SF, "stream_quantile_ingest")
     root, prefix = os.path.dirname(base), os.path.basename(base) + "_v"
     versions = [d for d in os.listdir(root) if d.startswith(prefix)]
     assert len(versions) >= 2, (
