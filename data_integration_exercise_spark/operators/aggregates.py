@@ -2865,14 +2865,14 @@ def agg_kmv_set_ops(spark, sf_dir):
             est("k_u", "hk_u").alias("est_union"),
             F.expr(
                 f"""CAST(n_common * (CAST(k_u - 1 AS DECIMAL(38,0)) * {_KMV_M}
-                         div hk_u) div k_u AS BIGINT)"""
+                         div hk_u) div nullif(k_u, 0) AS BIGINT)"""
             ).alias("est_inter"),
-            F.expr("CAST(1000 * n_common div k_u AS BIGINT)").alias(
+            F.expr("CAST(1000 * n_common div nullif(k_u, 0) AS BIGINT)").alias(
                 "jaccard_est_permille"
             ),
-            F.expr("CAST(1000 * n_inter_exact div n_union_exact AS BIGINT)").alias(
-                "jaccard_exact_permille"
-            ),
+            F.expr(
+                "CAST(1000 * n_inter_exact div nullif(n_union_exact, 0) AS BIGINT)"
+            ).alias("jaccard_exact_permille"),
         )
     )
 

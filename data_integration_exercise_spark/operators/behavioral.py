@@ -1705,7 +1705,9 @@ def events_window_funnel(spark, sf_dir):
     return tiers.select(
         "depth",
         F.col("n_users").cast("long").alias("n_users"),
-        F.expr("CAST((1000 * reached) div c1 AS BIGINT)").alias("reach_permille"),
+        F.expr("CAST((1000 * reached) div nullif(c1, 0) AS BIGINT)").alias(
+            "reach_permille"
+        ),
     )
 
 

@@ -1665,8 +1665,10 @@ def graph_ppr(spark, sf_dir):
     # same job (round-14)
     edges = _edges(spark, sf_dir).localCheckpoint(eager=False)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    # scalar probe: deterministic max-degree seed (no edges: every frame
+    # below is empty, as in the oracle, whatever the literal)
     seed_row = deg.orderBy(F.col("d").desc(), F.col("src")).first()
-    seed = int(seed_row["src"])  # scalar probe: deterministic max-degree seed
+    seed = int(seed_row["src"]) if seed_row is not None else 0
     teleport = (15 * _SCALE) // 100
     ranks = deg.select(
         F.col("src").alias("node"),

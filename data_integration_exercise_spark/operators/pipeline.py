@@ -793,9 +793,12 @@ def dedup_lsh_pr_eval(spark, sf_dir):
     )
     return (
         cagg.crossJoin(F.broadcast(eagg))
-        .withColumn("recall_permille", F.expr("(1000 * n_found) div n_exact"))
         .withColumn(
-            "cand_precision_permille", F.expr("(1000 * n_found) div n_candidates")
+            "recall_permille", F.expr("(1000 * n_found) div nullif(n_exact, 0)")
+        )
+        .withColumn(
+            "cand_precision_permille",
+            F.expr("(1000 * n_found) div nullif(n_candidates, 0)"),
         )
     )
 

@@ -424,13 +424,19 @@ def test_ppr_mass_bound_and_seed_dominance(spark):
         "scan_time_travel",
         "scan_partition_evolution",
         "etl_partition_backfill_plan",
+        "graph_ppr",
+        "stream_watermark_deterministic",
+        "agg_kmv_set_ops",
+        "dedup_lsh_pr_eval",
+        "events_window_funnel",
     ],
 )
 def test_empty_input_matches_oracle(spark, tmp_path, key):
     """Degenerate input: on zero-row copies of every table the node-count
-    probe sees no nodes and the IVF planner sees no queries; each key must
-    return its oracle's answer (empty, or NULL ratios) instead of dividing
-    by zero on the driver or in an ANSI `div`. Staged copies of empty
+    and seed probes see no nodes, the watermark probe sees no max and the
+    IVF planner sees no queries; each key must return its oracle's answer
+    (empty, or NULL ratios) instead of failing on a driver-side probe or
+    dividing by zero in an ANSI `div`. Staged copies of empty
     tables may hold no data file at all, so read-backs must not infer
     their schema from one."""
     import pyarrow.parquet as pq

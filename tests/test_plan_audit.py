@@ -25,6 +25,7 @@ import re
 
 import pytest
 
+from data_integration_exercise_spark.plans.inspect import simple_plan
 from data_integration_exercise_spark.registry import queries
 
 SF = "/root/testdata/sf0.001"
@@ -270,39 +271,6 @@ def test_headline_plan_exchange_counts_are_pinned(spark, key):
     )
 
 
-def test_no_cartesian_product_and_python_stays_whitelisted(spark):
-    from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
-
-    violations = []
-    for key, fn in queries().items():
-        if key.startswith("stream_"):
-            continue
-        df = fn(spark, SF)
-        # The driver hashes result VALUES; raw array/map/struct/binary
-        # columns hash engine-specifically (the round-5 hashing-vectorizer
-        # landmine) — the house convention stringifies them before output.
-        complex_cols = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, BinaryType, StructType))
-        ]
-        if complex_cols:
-            violations.append(f"{key}: complex-typed output columns {complex_cols}")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        if "CartesianProduct" in plan:
-            violations.append(f"{key}: CartesianProduct in plan")
-        if "BatchEvalPython" in plan and key not in ROW_PYTHON_OK:
-            violations.append(f"{key}: row-at-a-time Python outside the §2.11 demos")
-        if (
-            any(m in plan for m in _PYTHON_MARKS)
-            and key not in ROW_PYTHON_OK
-            and key not in ARROW_PYTHON_OK
-        ):
-            marks = [m for m in _PYTHON_MARKS if m in plan]
-            violations.append(f"{key}: unexpected Python stage {marks}")
-    assert not violations, "\n".join(violations)
-
-
 # Keys whose executed plans contain a PARTITION-LESS window — allowed only
 # because each such window provably runs over a BOUNDED intermediate, never
 # raw fact rows (the claim VERDICT r6 accepted from inspection; pinned here
@@ -363,15 +331,54 @@ _WINDOWSPEC_RE = re.compile(r"windowspecdefinition\(([^)]*)\)")
 _NO_PARTITION_RE = re.compile(r"^(\S+ (ASC|DESC) NULLS|specifiedwindowframe)")
 
 
-def test_unpartitioned_windows_stay_whitelisted(spark):
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """Every non-streaming key built once at sf0.001, shared by the two
+    whitelist sweeps below: ``key -> (output schema, executed plan)``."""
+    built = {}
+    for key, fn in queries().items():
+        if key.startswith("stream_"):
+            continue
+        df = fn(spark, SF)
+        built[key] = (df.schema, simple_plan(df))
+    return built
+
+
+def test_no_cartesian_product_and_python_stays_whitelisted(registry_plans):
+    from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
+
+    violations = []
+    for key, (schema, plan) in registry_plans.items():
+        # The driver hashes result VALUES; raw array/map/struct/binary
+        # columns hash engine-specifically (the round-5 hashing-vectorizer
+        # landmine) — the house convention stringifies them before output.
+        complex_cols = [
+            f.name
+            for f in schema.fields
+            if isinstance(f.dataType, (ArrayType, MapType, BinaryType, StructType))
+        ]
+        if complex_cols:
+            violations.append(f"{key}: complex-typed output columns {complex_cols}")
+        if "CartesianProduct" in plan:
+            violations.append(f"{key}: CartesianProduct in plan")
+        if "BatchEvalPython" in plan and key not in ROW_PYTHON_OK:
+            violations.append(f"{key}: row-at-a-time Python outside the §2.11 demos")
+        if (
+            any(m in plan for m in _PYTHON_MARKS)
+            and key not in ROW_PYTHON_OK
+            and key not in ARROW_PYTHON_OK
+        ):
+            marks = [m for m in _PYTHON_MARKS if m in plan]
+            violations.append(f"{key}: unexpected Python stage {marks}")
+    assert not violations, "\n".join(violations)
+
+
+def test_unpartitioned_windows_stay_whitelisted(registry_plans):
     """Every partition-less window in every non-streaming plan must belong
     to a key whitelisted above with a documented bounded axis — a global
     window over unbounded rows is a one-executor sort at 100 TB."""
     violations = []
-    for key, fn in queries().items():
-        if key.startswith("stream_"):
-            continue
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    for key, (_, plan) in registry_plans.items():
         flagged = any(
             _NO_PARTITION_RE.match(m.group(1))
             for m in _WINDOWSPEC_RE.finditer(plan)
@@ -491,7 +498,7 @@ def test_aqe_skew_join_splits_hot_partition(spark):
             )
         )
         skewed = sorted((r.g, r.n, r.t) for r in agg.collect())
-        plan = agg._jdf.queryExecution().executedPlan().toString()
+        plan = simple_plan(agg)
         assert "skew=true" in plan, plan[:2000]
     finally:
         for k, v in prior.items():
