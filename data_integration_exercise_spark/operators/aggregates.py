@@ -5202,7 +5202,7 @@ def agg_ljung_box(spark, sf_dir):
 
     100 TB: everything downstream of the ACF's own day rollup is a 7-row
     frame + a 1-row n broadcast. The cost IS agg_acf_lags."""
-    acf = QUERIES["agg_acf_lags"](spark, sf_dir)
+    acf = agg_acf_lags(spark, sf_dir)
     nn = acf.agg(
         F.max(F.col("n_terms") + F.col("lag")).cast("long").alias("n")
     )

@@ -1,9 +1,19 @@
 """Graph analytics over the order network (extension tier).
 
-The graph: customers and suppliers are nodes, with an (undirected) edge
-whenever a customer's order contains a line shipped by a supplier —
-the bipartite trade network implied by orders ⋈ lineitem. Node ids are
-disjoint integers (customer c → 2c, supplier s → 2s+1).
+Three graphs, each built by one Spark helper and one SQL CTE that every
+key on it reads:
+
+- the CONTACT graph (``_pairs``/``_edges``, ``_CONTACT_CTE``): customers
+  and suppliers are nodes, with an (undirected) edge whenever a
+  customer's order contains a line shipped by a supplier — the bipartite
+  trade network implied by orders ⋈ lineitem. Node ids are disjoint
+  integers (customer c → 2c, supplier s → 2s+1), decoded back to
+  ``(node_type, node_key)`` by ``_decode``/``_decode_sql``;
+- the NATION co-trade graph (``_nation_flows``, ``_NATION_CTE``): an
+  undirected, line-count-weighted edge between the nations of every
+  cross-border customer/supplier pair;
+- the directed TOP-3 trade graph (``_trade_top3_edges``, ``_TOP3_CTE``):
+  each nation → its 3 largest supplier nations by revenue.
 
 Determinism discipline: PageRank is computed in FIXED-POINT integer
 arithmetic (rank scaled by 1e9, every division a floor-div) so each
@@ -32,14 +42,16 @@ _SCALE = 1_000_000_000
 _PR_ITERS = 5
 
 
-def _edges(spark, sf_dir):
-    """Distinct customer↔supplier contact edges, both directions.
+# ---------------------------------------------------------------------------
+# The contact graph
+# ---------------------------------------------------------------------------
 
-    The two direction sets are disjoint by id parity, so the union needs
-    no extra dedup shuffle."""
+
+def _pairs(spark, sf_dir):
+    """Distinct customer↔supplier contact pairs ``(cnode, snode)``."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
+    return (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select(
             (F.col("o_custkey") * 2).alias("cnode"),
@@ -47,51 +59,123 @@ def _edges(spark, sf_dir):
         )
         .distinct()
     )
+
+
+def _edges(spark, sf_dir):
+    """Distinct customer↔supplier contact edges, both directions.
+
+    The two direction sets are disjoint by id parity, so the union needs
+    no extra dedup shuffle."""
+    pairs = _pairs(spark, sf_dir)
     fwd = pairs.select(F.col("cnode").alias("src"), F.col("snode").alias("dst"))
     rev = pairs.select(F.col("snode").alias("src"), F.col("cnode").alias("dst"))
     return fwd.unionByName(rev)
 
 
-def _pagerank_oracle() -> str:
-    parts = [
-        """
-    WITH pairs AS (
+def _decode(node):
+    """``node_type`` and ``node_key`` of the encoded node id column ``node``."""
+    return [
+        F.when(F.col(node) % 2 == 0, F.lit("customer"))
+        .otherwise(F.lit("supplier"))
+        .alias("node_type"),
+        F.expr(f"{node} div 2").alias("node_key"),
+    ]
+
+
+# The contact graph in SQL: pairs(cnode, snode), edges(src, dst) in both
+# directions and deg(src, d). MATERIALIZED is load-bearing: DuckDB inlines
+# plain CTEs at every reference, so an unrolled loop would re-run the
+# orders⋈lineitem join once per reference.
+_CONTACT_CTE = """pairs AS MATERIALIZED (
         SELECT DISTINCT o.o_custkey * 2 AS cnode, l.l_suppkey * 2 + 1 AS snode
         FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ), edges AS (
+    ), edges AS MATERIALIZED (
         SELECT cnode AS src, snode AS dst FROM pairs
         UNION ALL
         SELECT snode AS src, cnode AS dst FROM pairs
-    ), deg AS (
+    ), deg AS MATERIALIZED (
         SELECT src, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY src
-    ), nn AS (
-        SELECT CAST(count(*) AS BIGINT) AS n FROM deg
-    ), r0 AS (
-        SELECT src AS node, """
-        + f"{_SCALE} // nn.n AS r FROM deg, nn"
-        + """
     )"""
-    ]
+
+
+def _decode_sql(node: str) -> str:
+    """The SQL twin of ``_decode``."""
+    return (
+        f"CASE WHEN {node} % 2 = 0 THEN 'customer' ELSE 'supplier' END"
+        f" AS node_type, {node} // 2 AS node_key"
+    )
+
+
+# ---------------------------------------------------------------------------
+# PageRank and personalized PageRank: one propagation loop
+# ---------------------------------------------------------------------------
+
+
+def _propagate(edges, deg, ranks, teleport):
+    """``_PR_ITERS`` fixed-point rank rounds over the checkpointed contact
+    edges: r'(v) = teleport(v) + (85·Σ floor(r_u / deg_u)) div 100 over
+    v's in-neighbors u. ``ranks`` is the initial ``(node, r)`` frame and
+    ``teleport`` a column over ``dst``, the receiving node.
+
+    The degree-annotated edge list is hash-partitioned on ``src`` once
+    before its own localCheckpoint, so every round's edges⋈ranks join
+    reuses that partitioning and only the node-sized rank table moves. No
+    per-round checkpoint — at a fixed 5 rounds the recurrence over the
+    checkpointed inputs stays one flat Catalyst plan; a long or
+    convergence-driven loop should instead cut lineage every K≈5 rounds
+    like propagate_min_labels does."""
+    edges_deg = edges.join(deg, "src").repartition("src").localCheckpoint(
+        eager=False  # first iteration's join materializes it (round-14)
+    )
+    for _ in range(_PR_ITERS):
+        contrib = edges_deg.join(
+            ranks, edges_deg.src == ranks.node
+        ).select("dst", F.expr("r div d").alias("c"))
+        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+        ranks = summed.select(
+            F.col("dst").alias("node"),
+            (teleport + F.expr("(85 * s) div 100")).cast("long").alias("r"),
+        )
+    return ranks
+
+
+def _rank_ctes(r0: str, teleport: str, scalars: str) -> str:
+    """The SQL twin of ``_propagate``: CTEs ``r0``..``r{_PR_ITERS}(node, r)``
+    over ``_CONTACT_CTE``. ``r0`` is the initial-rank query; ``teleport``
+    is an expression over ``inflow.node`` and the one-row CTE
+    ``scalars``."""
+    parts = [f""", r0 AS (
+        {r0}
+    )"""]
     for i in range(1, _PR_ITERS + 1):
         parts.append(
             f""", r{i} AS (
-        SELECT e.dst AS node,
-               (15 * ({_SCALE} // nn.n)) // 100
-               + (85 * CAST(sum(r.r // dg.d) AS BIGINT)) // 100 AS r
-        FROM edges e
-        JOIN r{i - 1} r ON r.node = e.src
-        JOIN deg dg ON dg.src = e.src, nn
-        GROUP BY e.dst, nn.n
+        SELECT inflow.node,
+               {teleport} + (85 * inflow.s) // 100 AS r
+        FROM (
+            SELECT e.dst AS node, CAST(sum(r.r // dg.d) AS BIGINT) AS s
+            FROM edges e
+            JOIN r{i - 1} r ON r.node = e.src
+            JOIN deg dg ON dg.src = e.src
+            GROUP BY e.dst
+        ) inflow, {scalars}
     )"""
         )
-    parts.append(
-        f"""
-    SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type,
-           node // 2 AS node_key,
-           CAST(r AS BIGINT) AS rank_fp
-    FROM r{_PR_ITERS}"""
-    )
     return "".join(parts)
+
+
+def _pagerank_oracle() -> str:
+    ranks = _rank_ctes(
+        r0=f"SELECT src AS node, {_SCALE} // nn.n AS r FROM deg, nn",
+        teleport=f"(15 * ({_SCALE} // nn.n)) // 100",
+        scalars="nn",
+    )
+    return f"""
+    WITH {_CONTACT_CTE}, nn AS (
+        SELECT CAST(count(*) AS BIGINT) AS n FROM deg
+    ){ranks}
+    SELECT {_decode_sql("node")}, CAST(r AS BIGINT) AS rank_fp
+    FROM r{_PR_ITERS}"""
 
 
 @register("graph_pagerank", oracle=_pagerank_oracle())
@@ -104,21 +188,16 @@ def graph_pagerank(spark, sf_dir):
     The undirected edge set guarantees every node has in-edges (no
     dangling-mass term needed).
 
-    Iteration shape (was 27.5s at sf0.1 in BENCH_r03; see BENCH_r04): the
-    edge list is checkpointed FIRST, so the orders⋈lineitem derivation
-    runs exactly once — before this cut, the un-materialized ``deg``/``nn``
-    subtree reappeared in the final plan once per iteration (6 full
-    fact-join rescans per collect). The node count is one scalar
-    ``count()`` to the driver (the blessed measured-cardinality probe
-    pattern, cf. pipeline.py plan_adaptive_threshold_join), folding the
-    per-node teleport term into an exact integer literal. The degree-
-    annotated edge list is hash-partitioned on ``src`` once before its own
-    localCheckpoint, so every iteration's edges⋈ranks join reuses that
-    partitioning and only the node-sized rank table moves. No
-    per-iteration checkpoint — at a fixed 5 iterations the recurrence over
-    the checkpointed inputs stays one flat Catalyst plan; a
-    long/convergence-driven loop should instead cut lineage every K≈5
-    rounds like propagate_min_labels does."""
+    Iteration shape: the edge list is checkpointed FIRST, so the
+    orders⋈lineitem derivation runs exactly once — before this cut, the
+    un-materialized ``deg``/``nn`` subtree reappeared in the final plan
+    once per iteration (6 full fact-join rescans per collect; the cut took
+    sf0.1 from 27.5 s to 3.1 s at local[32], SURVEY §9). The node count
+    is one scalar ``count()`` to the driver (the blessed
+    measured-cardinality probe pattern, cf. pipeline.py
+    plan_adaptive_threshold_join), folding the per-node teleport term into
+    an exact integer literal. The rounds are ``_propagate``, shared with
+    graph_ppr."""
     # lazy checkpoint: the deg.count() probe right below materializes it in
     # the same job (eager paid a separate materialization pass — round-14)
     edges = _edges(spark, sf_dir).localCheckpoint(eager=False)
@@ -126,49 +205,20 @@ def graph_pagerank(spark, sf_dir):
     # scalar probe: node count → exact integer literals below (no edges:
     # every frame below is empty, as in the oracle, whatever the literal)
     n = max(deg.count(), 1)
-    teleport = (15 * (_SCALE // n)) // 100
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(_SCALE // n).cast("long").alias("r")
     )
-    edges_deg = edges.join(deg, "src").repartition("src").localCheckpoint(
-        eager=False  # first iteration's join materializes it (round-14)
-    )
-    for _ in range(_PR_ITERS):
-        contrib = edges_deg.join(
-            ranks, edges_deg.src == ranks.node
-        ).select("dst", F.expr("r div d").alias("c"))
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = summed.select(
-            F.col("dst").alias("node"),
-            (F.lit(teleport) + F.expr("(85 * s) div 100")).cast("long").alias("r"),
-        )
-    return ranks.select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier"))
-        .alias("node_type"),
-        F.expr("node div 2").alias("node_key"),
-        F.col("r").alias("rank_fp"),
-    )
+    ranks = _propagate(edges, deg, ranks, F.lit((15 * (_SCALE // n)) // 100))
+    return ranks.select(*_decode("node"), F.col("r").alias("rank_fp"))
 
 
 @register(
     "graph_degree_distribution",
-    oracle="""
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey * 2 AS cnode, l.l_suppkey * 2 + 1 AS snode
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ), edges AS (
-        SELECT cnode AS src FROM pairs
-        UNION ALL
-        SELECT snode FROM pairs
-    ), deg AS (
-        SELECT src,
-               CASE WHEN src % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type,
-               CAST(count(*) AS BIGINT) AS d
-        FROM edges GROUP BY src
-    )
+    oracle=f"""
+    WITH {_CONTACT_CTE}
     SELECT node_type, d AS degree, CAST(count(*) AS BIGINT) AS n_nodes
-    FROM deg GROUP BY node_type, d
+    FROM (SELECT {_decode_sql("src")}, d FROM deg)
+    GROUP BY node_type, d
     """,
 )
 def graph_degree_distribution(spark, sf_dir):
@@ -176,99 +226,90 @@ def graph_degree_distribution(spark, sf_dir):
     diagnostic run on any new graph (skew in this histogram predicts
     which PageRank/label-propagation keys will hot-spot). Two shuffles:
     degree count, then histogram rollup."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("cnode"),
-            (F.col("l_suppkey") * 2 + 1).alias("snode"),
-        )
-        .distinct()
-    )
-    nodes = pairs.select(F.col("cnode").alias("src")).unionByName(
-        pairs.select(F.col("snode").alias("src"))
-    )
-    deg = nodes.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    deg = _edges(spark, sf_dir).groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     return (
-        deg.select(
-            F.when(F.col("src") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            F.col("d").alias("degree"),
-        )
+        deg.select(*_decode("src"), F.col("d").alias("degree"))
         .groupBy("node_type", "degree")
         .agg(F.count(F.lit(1)).alias("n_nodes"))
     )
 
 
-@register(
-    "graph_triangle_count",
-    oracle="""
-    WITH flows AS (
-        SELECT DISTINCT c.c_nationkey AS u, s.s_nationkey AS v
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-    ), e AS (
-        SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v FROM flows
-    )
-    SELECT e1.u AS n1, e1.v AS n2, e2.v AS n3
-    FROM e e1
-    JOIN e e2 ON e1.v = e2.u
-    JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
-    """,
-)
-def graph_triangle_count(spark, sf_dir):
-    """Triangle enumeration on the nation co-trade graph (undirected edge
-    when any customer in nation u buys from any supplier in nation v). The
-    customer↔supplier contact graph itself is bipartite — triangle-free by
-    construction — so the motif question only makes sense on this
-    projected nation graph. Edges are oriented u < v, so each triangle is
-    emitted exactly once as (n1 < n2 < n3): wedge join on the shared
-    middle vertex, closed by a third equi-join.
+# ---------------------------------------------------------------------------
+# The nation co-trade graph
+# ---------------------------------------------------------------------------
 
-    100 TB: the heavy part is the distinct-edge projection (big fact joins
-    feeding a low-cardinality distinct); the motif join runs on the tiny
-    projected edge list. The projection is localCheckpointed (the pagerank
-    discipline — SURVEY §9 lesson 3): the edge list feeds all THREE legs of
-    the triangle join, and without materialization each leg re-runs the
-    full fact-join subtree (observed: 3× the scan work in the physical
-    plan). For large graphs the same plan holds with degree-based
-    orientation (orient edges low-degree → high-degree) which bounds the
-    wedge fan-out — id order stands in for degree order here."""
+
+def _nation_flows(spark, sf_dir):
+    """The nation co-trade graph ``(u, v, w)``: an edge u < v whenever a
+    customer in one of the two nations buys from a supplier in the other,
+    weighted by the number of such lines. One map-side-combined fact
+    rollup to at most |nations|² rows."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    flows = (
+    return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
         .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
         .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
+        .groupBy(
             F.least("c_nationkey", "s_nationkey").alias("u"),
             F.greatest("c_nationkey", "s_nationkey").alias("v"),
         )
-        .distinct()
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("w"))
     )
-    e1 = flows.select(F.col("u").alias("n1"), F.col("v").alias("n2"))
-    e2 = flows.select(F.col("u").alias("m1"), F.col("v").alias("n3"))
-    e3 = flows.select(F.col("u").alias("k1"), F.col("v").alias("k2"))
-    wedges = e1.join(e2, e1.n2 == e2.m1)
+
+
+def _triangles(e):
+    """Triangles ``(n1 < n2 < n3)`` of an oriented ``u < v`` edge list:
+    wedge join on the shared middle vertex, closed by a third equi-join,
+    so each triangle is emitted exactly once."""
+    e1 = e.select(F.col("u").alias("n1"), F.col("v").alias("n2"))
+    e2 = e.select(F.col("u").alias("m1"), F.col("v").alias("n3"))
+    e3 = e.select(F.col("u").alias("k1"), F.col("v").alias("k2"))
     return (
-        wedges.join(e3, (F.col("n1") == e3.k1) & (F.col("n3") == e3.k2))
+        e1.join(e2, e1.n2 == e2.m1)
+        .join(e3, (F.col("n1") == e3.k1) & (F.col("n3") == e3.k2))
         .select("n1", "n2", "n3")
     )
 
 
-@register(
-    "graph_link_prediction",
-    oracle="""
-    WITH flows AS (
+def _strong_wedges(spark, sf_dir):
+    """The strong-trade nation graph and its wedges, as
+    ``(strong(u, v), deg(a, dg), wedges(u, mid, mid2, v))``.
+
+    The raw co-trade graph is complete, so edges are thresholded to the
+    TOP QUARTILE by weight (row_number over (w DESC, u, v) ≤ ⌊|E|/4⌋ —
+    exact integers, deterministic tiebreak). ``wedges`` holds every path
+    u – mid – v with u < v over both edge directions."""
+    flows = _nation_flows(spark, sf_dir)
+    stats = flows.agg(F.count(F.lit(1)).alias("ecnt"))
+    strong = (
+        flows.crossJoin(F.broadcast(stats))
+        .withColumn(
+            "rk",
+            F.row_number().over(Window.orderBy(F.desc("w"), "u", "v")),
+        )
+        # greatest(1, ·): a projected graph with <4 edges must keep its top
+        # edge, not silently go empty (ADVICE r6 item 3 — degenerate
+        # analogue of the sf0.1 empty-set failure fixed in round 6)
+        .filter(F.col("rk") <= F.greatest(F.lit(1), F.expr("ecnt div 4")))
+        .select("u", "v")
+        .localCheckpoint(eager=True)
+    )
+    d = strong.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
+        strong.select(F.col("v").alias("a"), F.col("u").alias("b"))
+    )
+    deg = d.groupBy("a").agg(F.count(F.lit(1)).alias("dg"))
+    d1 = d.select(F.col("a").alias("u"), F.col("b").alias("mid"))
+    d2 = d.select(F.col("a").alias("mid2"), F.col("b").alias("v"))
+    wedges = d1.join(d2, (F.col("mid") == F.col("mid2")) & (F.col("u") < F.col("v")))
+    return strong, deg, wedges
+
+
+# The nation graph in SQL: flows(u, v, w), the twin of _nation_flows.
+_NATION_CTE = """flows AS MATERIALIZED (
         SELECT least(c.c_nationkey, s.s_nationkey)    AS u,
                greatest(c.c_nationkey, s.s_nationkey) AS v,
                CAST(count(*) AS BIGINT)               AS w
@@ -278,7 +319,19 @@ def graph_triangle_count(spark, sf_dir):
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
         WHERE c.c_nationkey <> s.s_nationkey
         GROUP BY 1, 2
-    ), strong AS (
+    )"""
+
+# tri(n1, n2, n3) over flows, the twin of _triangles
+_TRIANGLES_CTE = """, tri AS (
+        SELECT e1.u AS n1, e1.v AS n2, e2.v AS n3
+        FROM flows e1
+        JOIN flows e2 ON e1.v = e2.u
+        JOIN flows e3 ON e3.u = e1.u AND e3.v = e2.v
+    )"""
+
+# strong(u, v), d(a, b), deg(a, dg) and wedge(u, v, mid) over flows, the
+# twin of _strong_wedges
+_STRONG_CTE = """, strong AS (
         SELECT u, v FROM (
             SELECT u, v,
                    row_number() OVER (ORDER BY w DESC, u, v) AS rk,
@@ -291,10 +344,45 @@ def graph_triangle_count(spark, sf_dir):
         SELECT v, u FROM strong
     ), deg AS (
         SELECT a, CAST(count(*) AS BIGINT) AS dg FROM d GROUP BY a
-    ), cn AS (
-        SELECT d1.a AS u, d2.b AS v, CAST(count(*) AS BIGINT) AS cn
+    ), wedge AS (
+        SELECT d1.a AS u, d2.b AS v, d1.b AS mid
         FROM d d1 JOIN d d2 ON d1.b = d2.a AND d1.a < d2.b
-        GROUP BY d1.a, d2.b
+    )"""
+
+
+@register(
+    "graph_triangle_count",
+    oracle=f"""
+    WITH {_NATION_CTE}{_TRIANGLES_CTE}
+    SELECT n1, n2, n3 FROM tri
+    """,
+)
+def graph_triangle_count(spark, sf_dir):
+    """Triangle enumeration on the nation co-trade graph (undirected edge
+    when any customer in nation u buys from any supplier in nation v). The
+    customer↔supplier contact graph itself is bipartite — triangle-free by
+    construction — so the motif question only makes sense on this
+    projected nation graph. Edges are oriented u < v, so each triangle is
+    emitted exactly once as (n1 < n2 < n3).
+
+    100 TB: the heavy part is the edge projection (big fact joins
+    feeding a low-cardinality rollup); the motif join runs on the tiny
+    projected edge list. The projection is localCheckpointed (the pagerank
+    discipline — SURVEY §9 lesson 3): the edge list feeds all THREE legs of
+    the triangle join, and without materialization each leg re-runs the
+    full fact-join subtree (observed: 3× the scan work in the physical
+    plan). For large graphs the same plan holds with degree-based
+    orientation (orient edges low-degree → high-degree) which bounds the
+    wedge fan-out — id order stands in for degree order here."""
+    e = _nation_flows(spark, sf_dir).select("u", "v").localCheckpoint(eager=True)
+    return _triangles(e)
+
+
+@register(
+    "graph_link_prediction",
+    oracle=f"""
+    WITH {_NATION_CTE}{_STRONG_CTE}, cn AS (
+        SELECT u, v, CAST(count(*) AS BIGINT) AS cn FROM wedge GROUP BY u, v
     ), nonadj AS (
         SELECT cn.u, cn.v, cn.cn FROM cn
         WHERE NOT EXISTS (
@@ -316,14 +404,13 @@ def graph_link_prediction(spark, sf_dir):
     graph: which nation pairs do NOT trade heavily today but share many
     strong trading partners — the classic who-should-connect-next score
     (Liben-Nowell–Kleinberg), and the graph-side analogue of
-    similarity-join candidate generation. The raw co-trade graph is
-    complete, so edges are first thresholded to the TOP QUARTILE by
-    weight (row_number over (w DESC, u, v) ≤ ⌊|E|/4⌋ — exact integers,
-    deterministic tiebreak). A rank cut keeps the strong-edge FRACTION
-    stable at every scale factor; the previous ≥1.25×-mean relative cut
-    was measured to empty out at sf0.1, where the 300 pair weights
-    concentrate (law of large numbers) until nothing clears 1.25× mean —
-    relative-to-mean is no more scale-stable than an absolute count.
+    similarity-join candidate generation. Strong edges are the top
+    quartile by weight (``_strong_wedges``). A rank cut keeps the
+    strong-edge FRACTION stable at every scale factor; the previous
+    ≥1.25×-mean relative cut was measured to empty out at sf0.1, where the
+    300 pair weights concentrate (law of large numbers) until nothing
+    clears 1.25× mean — relative-to-mean is no more scale-stable than an
+    absolute count.
 
     Exactness: weights, degrees, and common-neighbor counts are integers;
     the single float surface is the final Jaccard division, rounded 4dp.
@@ -333,46 +420,8 @@ def graph_link_prediction(spark, sf_dir):
     run on that tiny projection (the pagerank/triangle discipline). For
     billion-node graphs the identical plan holds with degree-ordered
     orientation bounding wedge fan-out."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    flows = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.least("c_nationkey", "s_nationkey").alias("u"),
-            F.greatest("c_nationkey", "s_nationkey").alias("v"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    stats = flows.agg(F.count(F.lit(1)).alias("ecnt"))
-    strong = (
-        flows.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "rk",
-            F.row_number().over(Window.orderBy(F.desc("w"), "u", "v")),
-        )
-        # greatest(1, ·): a projected graph with <4 edges must keep its top
-        # edge, not silently go empty (ADVICE r6 item 3 — degenerate
-        # analogue of the sf0.1 empty-set failure fixed in round 6)
-        .filter(F.col("rk") <= F.greatest(F.lit(1), F.expr("ecnt div 4")))
-        .select("u", "v")
-        .localCheckpoint(eager=True)
-    )
-    d = strong.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        strong.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
-    deg = d.groupBy("a").agg(F.count(F.lit(1)).alias("dg"))
-    d1 = d.select(F.col("a").alias("u"), F.col("b").alias("mid"))
-    d2 = d.select(F.col("a").alias("mid2"), F.col("b").alias("v"))
-    cn = (
-        d1.join(d2, (F.col("mid") == F.col("mid2")) & (F.col("u") < F.col("v")))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("cn"))
-    )
+    strong, deg, wedges = _strong_wedges(spark, sf_dir)
+    cn = wedges.groupBy("u", "v").agg(F.count(F.lit(1)).alias("cn"))
     nonadj = cn.join(strong, ["u", "v"], "left_anti")
     du = deg.select(F.col("a").alias("u"), F.col("dg").alias("du"))
     dv = deg.select(F.col("a").alias("v"), F.col("dg").alias("dv"))
@@ -399,22 +448,11 @@ _BFS_SEEDS = 5
 
 def _bfs_oracle() -> str:
     parts = [
-        """
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey * 2 AS cnode, l.l_suppkey * 2 + 1 AS snode
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ), edges AS (
-        SELECT cnode AS src, snode AS dst FROM pairs
-        UNION ALL
-        SELECT snode AS src, cnode AS dst FROM pairs
-    ), deg AS (
-        SELECT src, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY src
-    ), seeds AS (
+        f"""
+    WITH {_CONTACT_CTE}, seeds AS (
         SELECT src AS node FROM (
             SELECT src, row_number() OVER (ORDER BY d DESC, src) AS rn FROM deg
-        ) WHERE rn <= """
-        + str(_BFS_SEEDS)
-        + """
+        ) WHERE rn <= {_BFS_SEEDS}
     ), d0 AS MATERIALIZED (SELECT node, 0 AS dist FROM seeds),
     v0 AS MATERIALIZED (SELECT node FROM d0)"""
     ]
@@ -435,10 +473,7 @@ def _bfs_oracle() -> str:
         f"        SELECT node, dist FROM d{k}" for k in range(_BFS_MAX_DEPTH + 1)
     )
     parts.append(f"""
-    SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END
-               AS node_type,
-           CAST(node // 2 AS BIGINT) AS node_key,
-           CAST(dist AS BIGINT) AS dist
+    SELECT {_decode_sql("node")}, CAST(dist AS BIGINT) AS dist
     FROM ({union})""")
     return "".join(parts)
 
@@ -463,8 +498,6 @@ def graph_bfs_distances(spark, sf_dir):
     ball)."""
     edges = _edges(spark, sf_dir).localCheckpoint()
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.desc("d"), F.asc("src"))
     seeds = (
         deg.withColumn("rn", F.row_number().over(w))
@@ -503,29 +536,17 @@ def graph_bfs_distances(spark, sf_dir):
     alld = out[0]
     for f_ in out[1:]:
         alld = alld.unionByName(f_)
-    return alld.select(
-        F.when(F.col("node") % 2 == 0, "customer")
-        .otherwise("supplier")
-        .alias("node_type"),
-        F.expr("node div 2").cast("long").alias("node_key"),
-        F.col("dist").cast("long").alias("dist"),
-    )
+    return alld.select(*_decode("node"), F.col("dist").cast("long").alias("dist"))
 
 
 _LPA_ITERS = 4
 
 
-def _lpa_oracle() -> str:
+def _lpa_ctes() -> str:
+    """CTEs ``l0``..``l{_LPA_ITERS}(node, label)`` over ``_CONTACT_CTE``:
+    the SQL twin of ``_lpa_from_edges``."""
     parts = [
-        """
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey * 2 AS cnode, l.l_suppkey * 2 + 1 AS snode
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ), edges AS MATERIALIZED (
-        SELECT cnode AS src, snode AS dst FROM pairs
-        UNION ALL
-        SELECT snode AS src, cnode AS dst FROM pairs
-    ), l0 AS (
+        """, l0 AS (
         SELECT DISTINCT src AS node, src AS label FROM edges
     )"""
     ]
@@ -541,17 +562,17 @@ def _lpa_oracle() -> str:
         WHERE rn = 1
     )"""
         )
-    parts.append(
-        f"""
-    SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type,
-           node // 2 AS node_key,
-           CAST(label AS BIGINT) AS community
-    FROM l{_LPA_ITERS}"""
-    )
     return "".join(parts)
 
 
-@register("graph_label_propagation", oracle=_lpa_oracle())
+@register(
+    "graph_label_propagation",
+    oracle=f"""
+    WITH {_CONTACT_CTE}{_lpa_ctes()}
+    SELECT {_decode_sql("node")}, CAST(label AS BIGINT) AS community
+    FROM l{_LPA_ITERS}
+    """,
+)
 def graph_label_propagation(spark, sf_dir):
     """Community detection by synchronous label propagation over the trade
     network: every node starts as its own label; each of the 4 FIXED
@@ -572,11 +593,14 @@ def graph_label_propagation(spark, sf_dir):
     MATERIALIZED (SURVEY §10 lesson 7: plain CTE inlining is exponential
     in depth)."""
     edges = _edges(spark, sf_dir).localCheckpoint()
-    return _lpa_from_edges(edges)
+    return _lpa_from_edges(edges).select(
+        *_decode("node"), F.col("label").cast("long").alias("community")
+    )
 
 
 def _lpa_from_edges(edges):
-    """The 4 fixed LPA rounds over an already-checkpointed edge frame.
+    """The 4 fixed LPA rounds over an already-checkpointed edge frame:
+    ``(node, label)``.
 
     Split out so graph_modularity can share ONE edge materialization with
     the propagation it grades (it previously re-ran the orders⋈lineitem
@@ -585,8 +609,6 @@ def _lpa_from_edges(edges):
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    from pyspark.sql import Window
-
     for _ in range(_LPA_ITERS):
         counted = (
             edges.join(
@@ -609,13 +631,7 @@ def _lpa_from_edges(edges):
             .select("node", F.col("b.label").alias("label"))
             .localCheckpoint(eager=False)
         )
-    return labels.select(
-        F.when(F.col("node") % 2 == 0, "customer")
-        .otherwise("supplier")
-        .alias("node_type"),
-        F.expr("node div 2").cast("long").alias("node_key"),
-        F.col("label").cast("long").alias("community"),
-    )
+    return labels
 
 
 _KCORE_K = 3
@@ -624,15 +640,8 @@ _KCORE_ROUNDS = 6
 
 def _kcore_oracle() -> str:
     parts = [
-        """
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey * 2 AS cnode, l.l_suppkey * 2 + 1 AS snode
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ), e0 AS MATERIALIZED (
-        SELECT cnode AS src, snode AS dst FROM pairs
-        UNION ALL
-        SELECT snode AS src, cnode AS dst FROM pairs
-    )"""
+        f"""
+    WITH {_CONTACT_CTE}, e0 AS (SELECT src, dst FROM edges)"""
     ]
     for i in range(1, _KCORE_ROUNDS + 1):
         parts.append(
@@ -646,9 +655,7 @@ def _kcore_oracle() -> str:
         )
     parts.append(
         f"""
-    SELECT CASE WHEN src % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type,
-           src // 2 AS node_key,
-           CAST(count(*) AS BIGINT) AS core_degree
+    SELECT {_decode_sql("src")}, CAST(count(*) AS BIGINT) AS core_degree
     FROM e{_KCORE_ROUNDS} GROUP BY src"""
     )
     return "".join(parts)
@@ -695,26 +702,17 @@ def graph_k_core(spark, sf_dir):
         raise RuntimeError(
             f"k-core not converged after {_KCORE_ROUNDS} rounds; widen the unroll"
         )
-    return edges.groupBy("src").agg(F.count("*").cast("long").alias("core_degree")).select(
-        F.when(F.col("src") % 2 == 0, "customer").otherwise("supplier").alias("node_type"),
-        F.expr("src div 2").cast("long").alias("node_key"),
-        "core_degree",
+    return (
+        edges.groupBy("src")
+        .agg(F.count("*").cast("long").alias("core_degree"))
+        .select(*_decode("src"), "core_degree")
     )
 
 
 @register(
     "graph_assortativity",
-    oracle="""
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey * 2 AS cnode, l.l_suppkey * 2 + 1 AS snode
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ), edges AS (
-        SELECT cnode AS src, snode AS dst FROM pairs
-        UNION ALL
-        SELECT snode AS src, cnode AS dst FROM pairs
-    ), deg AS (
-        SELECT src, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY src
-    ), ed AS (
+    oracle=f"""
+    WITH {_CONTACT_CTE}, ed AS (
         SELECT CAST(ds.d AS HUGEINT) AS x, CAST(dd.d AS HUGEINT) AS y
         FROM edges e
         JOIN deg ds ON e.src = ds.src
@@ -794,34 +792,8 @@ def graph_assortativity(spark, sf_dir):
 
 @register(
     "graph_adamic_adar",
-    oracle="""
-    WITH flows AS (
-        SELECT least(c.c_nationkey, s.s_nationkey)    AS u,
-               greatest(c.c_nationkey, s.s_nationkey) AS v,
-               CAST(count(*) AS BIGINT)               AS w
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY 1, 2
-    ), strong AS (
-        SELECT u, v FROM (
-            SELECT u, v,
-                   row_number() OVER (ORDER BY w DESC, u, v) AS rk,
-                   count(*) OVER () AS ecnt
-            FROM flows)
-        WHERE rk <= greatest(1, ecnt // 4)
-    ), d AS (
-        SELECT u AS a, v AS b FROM strong
-        UNION ALL
-        SELECT v, u FROM strong
-    ), deg AS (
-        SELECT a, CAST(count(*) AS BIGINT) AS dg FROM d GROUP BY a
-    ), wedge AS (
-        SELECT d1.a AS u, d2.b AS v, d1.b AS mid
-        FROM d d1 JOIN d d2 ON d1.b = d2.a AND d1.a < d2.b
-    ), scored AS (
+    oracle=f"""
+    WITH {_NATION_CTE}{_STRONG_CTE}, scored AS (
         SELECT w.u, w.v,
                CAST(count(*) AS BIGINT) AS common_neighbors,
                CAST(sum(1000000000000 //
@@ -852,49 +824,14 @@ def graph_adamic_adar(spark, sf_dir):
     map-side to the ≤|nations|² edge list; the wedge join carries the mid
     node so its degree joins BEFORE the pair rollup (one extra broadcast
     join versus the CN count, same shuffle structure)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    flows = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.least("c_nationkey", "s_nationkey").alias("u"),
-            F.greatest("c_nationkey", "s_nationkey").alias("v"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    stats = flows.agg(F.count(F.lit(1)).alias("ecnt"))
-    strong = (
-        flows.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "rk",
-            F.row_number().over(Window.orderBy(F.desc("w"), "u", "v")),
-        )
-        # greatest(1, ·): a projected graph with <4 edges must keep its top
-        # edge, not silently go empty (ADVICE r6 item 3 — degenerate
-        # analogue of the sf0.1 empty-set failure fixed in round 6)
-        .filter(F.col("rk") <= F.greatest(F.lit(1), F.expr("ecnt div 4")))
-        .select("u", "v")
-        .localCheckpoint(eager=True)
-    )
-    d = strong.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        strong.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
-    deg = d.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("dg"))
-    d1 = d.select(F.col("a").alias("u"), F.col("b").alias("mid"))
-    d2 = d.select(F.col("a").alias("mid2"), F.col("b").alias("v"))
+    strong, deg, wedges = _strong_wedges(spark, sf_dir)
     dz = deg.select(F.col("a").alias("mid"), F.col("dg").alias("dg_mid"))
     term = F.expr(
         """1000000000000 div
            CAST(floor(1e6 * log2(CAST(dg_mid AS DOUBLE)) + 1e-6) AS BIGINT)"""
     )
     scored = (
-        d1.join(d2, (F.col("mid") == F.col("mid2")) & (F.col("u") < F.col("v")))
-        .join(F.broadcast(dz), "mid")
+        wedges.join(F.broadcast(dz), "mid")
         .groupBy("u", "v")
         .agg(
             F.count(F.lit(1)).cast("long").alias("common_neighbors"),
@@ -912,33 +849,20 @@ def graph_adamic_adar(spark, sf_dir):
 @register(
     "graph_modularity",
     oracle=f"""
-    WITH labs AS ({_lpa_oracle()}
-    ), nodes AS (
-        SELECT CASE WHEN node_type = 'customer' THEN node_key * 2
-                    ELSE node_key * 2 + 1 END AS node,
-               community
-        FROM labs
-    ), pairs AS (
-        SELECT DISTINCT o.o_custkey * 2 AS cnode, l.l_suppkey * 2 + 1 AS snode
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ), m AS (
+    WITH {_CONTACT_CTE}{_lpa_ctes()}, m AS (
         SELECT CAST(count(*) AS HUGEINT) AS m FROM pairs
-    ), deg AS (
-        SELECT node, CAST(count(*) AS BIGINT) AS d FROM (
-            SELECT cnode AS node FROM pairs
-            UNION ALL SELECT snode FROM pairs) GROUP BY node
     ), intra AS (
-        SELECT nc.community, CAST(count(*) AS BIGINT) AS e_c
+        SELECT nc.label AS community, CAST(count(*) AS BIGINT) AS e_c
         FROM pairs p
-        JOIN nodes nc ON p.cnode = nc.node
-        JOIN nodes ns ON p.snode = ns.node
-        WHERE nc.community = ns.community
-        GROUP BY nc.community
+        JOIN l{_LPA_ITERS} nc ON p.cnode = nc.node
+        JOIN l{_LPA_ITERS} ns ON p.snode = ns.node
+        WHERE nc.label = ns.label
+        GROUP BY nc.label
     ), dsum AS (
-        SELECT n.community, CAST(count(*) AS BIGINT) AS n_nodes,
+        SELECT n.label AS community, CAST(count(*) AS BIGINT) AS n_nodes,
                CAST(sum(CAST(deg.d AS HUGEINT)) AS HUGEINT) AS d_c
-        FROM nodes n JOIN deg ON n.node = deg.node
-        GROUP BY n.community
+        FROM l{_LPA_ITERS} n JOIN deg ON n.node = deg.src
+        GROUP BY n.label
     )
     SELECT CAST(d.community AS BIGINT) AS community, d.n_nodes,
            CAST(coalesce(i.e_c, 0) AS BIGINT) AS intra_edges,
@@ -976,13 +900,11 @@ def graph_modularity(spark, sf_dir):
     of duplicated shuffle at sf0.1 and a duplicated fact scan at any
     scale.)"""
     edges = _edges(spark, sf_dir).localCheckpoint()
-    labs = _lpa_from_edges(edges)
-    nodes = labs.select(
-        F.when(F.col("node_type") == "customer", F.col("node_key") * 2)
-        .otherwise(F.col("node_key") * 2 + 1)
-        .alias("node"),
-        "community",
-    ).localCheckpoint()
+    nodes = (
+        _lpa_from_edges(edges)
+        .withColumnsRenamed({"label": "community"})
+        .localCheckpoint()
+    )
     # fwd half of the bidirectional distinct frame = the undirected pairs
     pairs = edges.filter(F.col("src") % 2 == 0).select(
         F.col("src").alias("cnode"), F.col("dst").alias("snode")
@@ -1026,25 +948,11 @@ def graph_modularity(spark, sf_dir):
 
 @register(
     "graph_clustering_coefficient",
-    oracle="""
-    WITH flows AS (
-        SELECT DISTINCT c.c_nationkey AS u, s.s_nationkey AS v
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-    ), e AS (
-        SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v FROM flows
-    ), deg AS (
+    oracle=f"""
+    WITH {_NATION_CTE}{_TRIANGLES_CTE}, deg AS (
         SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-            SELECT u AS node FROM e UNION ALL SELECT v FROM e)
+            SELECT u AS node FROM flows UNION ALL SELECT v FROM flows)
         GROUP BY node
-    ), tri AS (
-        SELECT e1.u AS n1, e1.v AS n2, e2.v AS n3
-        FROM e e1
-        JOIN e e2 ON e1.v = e2.u
-        JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
     ), tri_node AS (
         SELECT node, CAST(count(*) AS BIGINT) AS n_triangles FROM (
             SELECT n1 AS node FROM tri
@@ -1081,37 +989,14 @@ def graph_clustering_coefficient(spark, sf_dir):
     motifs, and both coefficient levels run on the tiny projected graph.
     The global number rides every row via a 1-row broadcast, the same
     scalar-join idiom as percent-of-total."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.least("c_nationkey", "s_nationkey").alias("u"),
-            F.greatest("c_nationkey", "s_nationkey").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _nation_flows(spark, sf_dir).select("u", "v").localCheckpoint(eager=True)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
-    e1 = e.select(F.col("u").alias("n1"), F.col("v").alias("n2"))
-    e2 = e.select(F.col("u").alias("m1"), F.col("v").alias("n3"))
-    e3 = e.select(F.col("u").alias("k1"), F.col("v").alias("k2"))
-    tri = (
-        e1.join(e2, e1.n2 == e2.m1)
-        .join(e3, (F.col("n1") == e3.k1) & (F.col("n3") == e3.k2))
-        .select("n1", "n2", "n3")
-        .localCheckpoint(eager=True)
-    )
+    tri = _triangles(e).localCheckpoint(eager=True)
     tri_node = (
         tri.select(F.explode(F.array("n1", "n2", "n3")).alias("node"))
         .groupBy("node")
@@ -1151,33 +1036,30 @@ def graph_clustering_coefficient(spark, sf_dir):
 # neighborhood function -> effective diameter, so its oracle wraps the
 # bfs oracle as a subquery (DuckDB allows a WITH inside FROM (...)).
 _NEIGHBORHOOD_ORACLE = """
+    WITH rings AS MATERIALIZED (
+        SELECT dist, CAST(count(*) AS BIGINT) AS n_nodes
+        FROM ({bfs}) b GROUP BY dist
+    ), t AS (
+        SELECT CAST(sum(n_nodes) AS BIGINT) AS total,
+               CAST(min(CASE WHEN cum * 10 >= 9 * total THEN dist END)
+                   AS BIGINT) AS d90
+        FROM (
+            SELECT dist, n_nodes,
+                   sum(n_nodes) OVER (ORDER BY dist
+                                      ROWS UNBOUNDED PRECEDING) AS cum,
+                   sum(n_nodes) OVER () AS total
+            FROM rings
+        )
+    )
     SELECT r.dist,
            r.n_nodes,
            CAST(sum(r2.n_nodes) AS BIGINT) AS cum_nodes,
            1000 * CAST(sum(r2.n_nodes) AS BIGINT) // t.total
                AS coverage_permille,
            t.d90 AS eff_diameter_d90
-    FROM (
-        SELECT dist, CAST(count(*) AS BIGINT) AS n_nodes
-        FROM ({bfs}) b GROUP BY dist
-    ) r
-    JOIN (
-        SELECT dist, CAST(count(*) AS BIGINT) AS n_nodes
-        FROM ({bfs}) b GROUP BY dist
-    ) r2 ON r2.dist <= r.dist
-    CROSS JOIN (
-        SELECT CAST(sum(n) AS BIGINT) AS total,
-               CAST(min(CASE WHEN cum * 10 >= 9 * total THEN dist END)
-                   AS BIGINT) AS d90
-        FROM (
-            SELECT dist,
-                   CAST(count(*) AS BIGINT) AS n,
-                   sum(count(*)) OVER (ORDER BY dist
-                                       ROWS UNBOUNDED PRECEDING) AS cum,
-                   sum(count(*)) OVER () AS total
-            FROM ({bfs}) b GROUP BY dist
-        )
-    ) t
+    FROM rings r
+    JOIN rings r2 ON r2.dist <= r.dist
+    CROSS JOIN t
     GROUP BY r.dist, r.n_nodes, t.total, t.d90
 """
 
@@ -1201,9 +1083,7 @@ def graph_neighborhood_function(spark, sf_dir):
     100 TB: all post-BFS work is on a |depth|-row table (bounded by the
     oracle's unrolled 8 levels); the BFS itself is the documented
     bounded-shuffle frontier loop."""
-    from pyspark.sql import Window as _W  # noqa: F401  (parity with module style)
-
-    dist = QUERIES["graph_bfs_distances"](spark, sf_dir)
+    dist = graph_bfs_distances(spark, sf_dir)
     rings = (
         dist.groupBy("dist")
         .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
@@ -1241,6 +1121,11 @@ def graph_neighborhood_function(spark, sf_dir):
     )
 
 
+# ---------------------------------------------------------------------------
+# The directed top-3 trade graph
+# ---------------------------------------------------------------------------
+
+
 def _trade_top3_edges(spark, sf_dir):
     """Directed top-3-trading-partner nation edges (shared by
     graph_trade_reciprocity and graph_scc_condensation): nation A -> B iff
@@ -1276,10 +1161,10 @@ def _trade_top3_edges(spark, sf_dir):
     )
 
 
-@register(
-    "graph_trade_reciprocity",
-    oracle="""
-    WITH flow AS (
+# The top-3 graph in SQL: edges(src, dst), the twin of _trade_top3_edges.
+# MATERIALIZED: inlined at both sides of reciprocity's self-join, the fact
+# rollup under it took 25 s at sf0.1 in DuckDB, 0.15 s materialized.
+_TOP3_CTE = """flow AS (
         SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
                CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
                     AS BIGINT) AS cents
@@ -1294,7 +1179,13 @@ def _trade_top3_edges(spark, sf_dir):
                row_number() OVER (PARTITION BY src
                                   ORDER BY cents DESC, dst ASC) AS rk
         FROM flow
-    ), edges AS (SELECT src, dst FROM ranked WHERE rk <= 3)
+    ), edges AS MATERIALIZED (SELECT src, dst FROM ranked WHERE rk <= 3)"""
+
+
+@register(
+    "graph_trade_reciprocity",
+    oracle=f"""
+    WITH {_TOP3_CTE}
     SELECT n.n_name,
            CAST(count(*) AS BIGINT) AS out_deg,
            CAST(sum(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END)
@@ -1355,23 +1246,8 @@ def graph_trade_reciprocity(spark, sf_dir):
 
 @register(
     "graph_scc_condensation",
-    oracle="""
-    WITH flow AS (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-               CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-                    AS BIGINT) AS cents
-        FROM orders o
-        JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY 1, 2
-    ), ranked AS (
-        SELECT src, dst,
-               row_number() OVER (PARTITION BY src
-                                  ORDER BY cents DESC, dst ASC) AS rk
-        FROM flow
-    ), edges AS (SELECT src, dst FROM ranked WHERE rk <= 3),
+    oracle=f"""
+    WITH {_TOP3_CTE},
     closure AS (
         WITH RECURSIVE reach(a, b) AS (
             SELECT src, dst FROM edges
@@ -1459,27 +1335,29 @@ _HITS_ITERS = 3
 def _hits_oracle() -> str:
     parts = [
         f"""
-    WITH edges AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+    WITH {_CONTACT_CTE}, cs AS (
+        SELECT cnode // 2 AS c, snode // 2 AS s FROM pairs
     ), nc AS (
-        SELECT CAST(count(DISTINCT c) AS BIGINT) AS n FROM edges
+        SELECT CAST(count(DISTINCT c) AS BIGINT) AS n FROM cs
     ), h0 AS (
-        SELECT DISTINCT c, {_SCALE} // nc.n AS h FROM edges, nc
+        SELECT DISTINCT c, {_SCALE} // nc.n AS h FROM cs, nc
     )"""
     ]
     for i in range(1, _HITS_ITERS + 1):
+        # each raw half-step sum feeds its normalizer and the next join;
+        # inlined, DuckDB re-ran it at every reference (5.5 s at sf0.1,
+        # 0.45 s MATERIALIZED)
         parts.append(
-            f""", a{i}r AS (
+            f""", a{i}r AS MATERIALIZED (
         SELECT e.s, CAST(sum(h.h) AS BIGINT) AS ar
-        FROM edges e JOIN h{i - 1} h ON h.c = e.c GROUP BY e.s
+        FROM cs e JOIN h{i - 1} h ON h.c = e.c GROUP BY e.s
     ), a{i}t AS (
         SELECT CAST(sum(ar) AS BIGINT) AS t FROM a{i}r
     ), a{i} AS (
         SELECT s, ({_SCALE} * ar) // a{i}t.t AS a FROM a{i}r, a{i}t
-    ), h{i}r AS (
+    ), h{i}r AS MATERIALIZED (
         SELECT e.c, CAST(sum(a.a) AS BIGINT) AS hr
-        FROM edges e JOIN a{i} a ON a.s = e.s GROUP BY e.c
+        FROM cs e JOIN a{i} a ON a.s = e.s GROUP BY e.c
     ), h{i}t AS (
         SELECT CAST(sum(hr) AS BIGINT) AS t FROM h{i}r
     ), h{i} AS (
@@ -1523,12 +1401,10 @@ def graph_hits(spark, sf_dir):
     broadcast cross-joins for the normalizers — the data moved per round
     is node-sized, never fact-sized, and the edge frame's partitioning is
     reused by every round's join."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    # the directed (customer, supplier) edges are the decoded contact pairs
     edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
+        _pairs(spark, sf_dir)
+        .select(F.expr("cnode div 2").alias("c"), F.expr("snode div 2").alias("s"))
         # lazy: the customer-distinct probe below materializes it (round-14)
         .localCheckpoint(eager=False)
     )
@@ -1584,55 +1460,29 @@ def graph_hits(spark, sf_dir):
 # Personalized PageRank (round 10)
 # ---------------------------------------------------------------------------
 
-_PPR_ITERS = 5
-
 
 def _ppr_oracle() -> str:
-    parts = [
-        f"""
-    WITH pairs AS MATERIALIZED (
-        SELECT DISTINCT o.o_custkey * 2 AS cnode, l.l_suppkey * 2 + 1 AS snode
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ), edges AS MATERIALIZED (
-        SELECT cnode AS src, snode AS dst FROM pairs
-        UNION ALL
-        SELECT snode AS src, cnode AS dst FROM pairs
-    ), deg AS MATERIALIZED (
-        SELECT src, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY src
-    ), seed AS MATERIALIZED (
-        SELECT src AS snode FROM deg ORDER BY d DESC, src LIMIT 1
-    ), r0 AS (
-        SELECT deg.src AS node,
+    ranks = _rank_ctes(
+        r0=f"""SELECT deg.src AS node,
                CASE WHEN deg.src = seed.snode
                     THEN CAST({_SCALE} AS BIGINT) ELSE CAST(0 AS BIGINT)
                END AS r
-        FROM deg, seed
-    )"""
-    ]
-    for i in range(1, _PPR_ITERS + 1):
-        parts.append(
-            f""", r{i} AS (
-        SELECT e.dst AS node,
-               CASE WHEN e.dst = seed.snode
-                    THEN (15 * CAST({_SCALE} AS BIGINT)) // 100 ELSE 0 END
-               + (85 * CAST(sum(r.r // dg.d) AS BIGINT)) // 100 AS r
-        FROM edges e
-        JOIN r{i - 1} r ON r.node = e.src
-        JOIN deg dg ON dg.src = e.src, seed
-        GROUP BY e.dst, seed.snode
-    )"""
-        )
-    parts.append(
-        f"""
-    SELECT CASE WHEN r.node % 2 = 0 THEN 'customer' ELSE 'supplier' END
-               AS node_type,
-           r.node // 2 AS node_key,
+        FROM deg, seed""",
+        teleport=(
+            "CASE WHEN inflow.node = seed.snode"
+            f" THEN (15 * CAST({_SCALE} AS BIGINT)) // 100 ELSE 0 END"
+        ),
+        scalars="seed",
+    )
+    return f"""
+    WITH {_CONTACT_CTE}, seed AS MATERIALIZED (
+        SELECT src AS snode FROM deg ORDER BY d DESC, src LIMIT 1
+    ){ranks}
+    SELECT {_decode_sql("r.node")},
            CAST(r.r AS BIGINT) AS ppr_fp,
            r.node = seed.snode AS is_seed
-    FROM r{_PPR_ITERS} r, seed
+    FROM r{_PR_ITERS} r, seed
     WHERE r.r > 0"""
-    )
-    return "".join(parts)
 
 
 @register("graph_ppr", oracle=_ppr_oracle())
@@ -1649,18 +1499,13 @@ def graph_ppr(spark, sf_dir):
     measured-cardinality pattern — embedded as a literal; the oracle
     derives the identical seed via its own ORDER BY/LIMIT CTE).
 
-    Iterative contract (graph_pagerank template): FIXED 5 unrolled
-    rounds of r' = 0.15·SCALE·[node=seed] + 0.85·Σ floor(r_u/deg_u),
-    all-integer floor division, bit-exact vs the unrolled-CTE oracle.
-    Zero-mass nodes ride the frame explicitly (floor(0/d) = 0) so the
-    join shape is identical every round; rows that remain zero after 5
-    rounds (outside the seed's 5-hop ball) are filtered at the end in
-    both engines.
-
-    100 TB: same posture as graph_pagerank — the fact-join edge list
-    localCheckpoints once, the degree-annotated edge frame is hash-
-    partitioned on src once and reused by all 5 joins; only the
-    node-sized rank table moves per round."""
+    Iterative contract: graph_pagerank's ``_propagate`` loop (FIXED 5
+    rounds) with the initial mass and the teleport term on the seed only,
+    r' = 0.15·SCALE·[node=seed] + 0.85·Σ floor(r_u/deg_u), all-integer
+    floor division, bit-exact vs the unrolled-CTE oracle. Zero-mass
+    nodes ride the frame explicitly (floor(0/d) = 0) so the join shape is
+    identical every round; rows that remain zero after 5 rounds (outside
+    the seed's 5-hop ball) are filtered at the end in both engines."""
     # lazy checkpoint: the seed probe right below materializes it in the
     # same job (round-14)
     edges = _edges(spark, sf_dir).localCheckpoint(eager=False)
@@ -1669,7 +1514,6 @@ def graph_ppr(spark, sf_dir):
     # below is empty, as in the oracle, whatever the literal)
     seed_row = deg.orderBy(F.col("d").desc(), F.col("src")).first()
     seed = int(seed_row["src"]) if seed_row is not None else 0
-    teleport = (15 * _SCALE) // 100
     ranks = deg.select(
         F.col("src").alias("node"),
         F.when(F.col("src") == seed, F.lit(_SCALE))
@@ -1677,28 +1521,12 @@ def graph_ppr(spark, sf_dir):
         .cast("long")
         .alias("r"),
     )
-    edges_deg = edges.join(deg, "src").repartition("src").localCheckpoint(
-        eager=False  # first iteration's join materializes it (round-14)
+    teleport = F.when(F.col("dst") == seed, F.lit((15 * _SCALE) // 100)).otherwise(
+        F.lit(0)
     )
-    for _ in range(_PPR_ITERS):
-        contrib = edges_deg.join(
-            ranks, edges_deg.src == ranks.node
-        ).select("dst", F.expr("r div d").alias("c"))
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = summed.select(
-            F.col("dst").alias("node"),
-            (
-                F.when(F.col("dst") == seed, F.lit(teleport)).otherwise(F.lit(0))
-                + F.expr("(85 * s) div 100")
-            )
-            .cast("long")
-            .alias("r"),
-        )
+    ranks = _propagate(edges, deg, ranks, teleport)
     return ranks.filter(F.col("r") > 0).select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier"))
-        .alias("node_type"),
-        F.expr("node div 2").alias("node_key"),
+        *_decode("node"),
         F.col("r").alias("ppr_fp"),
         (F.col("node") == seed).alias("is_seed"),
     )

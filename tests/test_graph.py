@@ -413,9 +413,8 @@ def test_ppr_mass_bound_and_seed_dominance(spark):
 
 @pytest.mark.parametrize(
     "key",
-    [
-        "graph_pagerank",
-        "graph_hits",
+    sorted(graph.ORACLES)
+    + [
         "plan_ivf_probe_geometry",
         "sink_partitioned",
         "scan_dynamic_pruning",
@@ -424,7 +423,6 @@ def test_ppr_mass_bound_and_seed_dominance(spark):
         "scan_time_travel",
         "scan_partition_evolution",
         "etl_partition_backfill_plan",
-        "graph_ppr",
         "stream_watermark_deterministic",
         "agg_kmv_set_ops",
         "dedup_lsh_pr_eval",
@@ -432,8 +430,9 @@ def test_ppr_mass_bound_and_seed_dominance(spark):
     ],
 )
 def test_empty_input_matches_oracle(spark, tmp_path, key):
-    """Degenerate input: on zero-row copies of every table the node-count
-    and seed probes see no nodes, the watermark probe sees no max and the
+    """Degenerate input: on zero-row copies of every table every graph
+    key (so every shared graph helper) meets empty edge sets, the
+    node-count and seed probes see no nodes, the watermark probe sees no max and the
     IVF planner sees no queries; each key must return its oracle's answer
     (empty, or NULL ratios) instead of failing on a driver-side probe or
     dividing by zero in an ANSI `div`. Staged copies of empty

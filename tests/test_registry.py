@@ -77,7 +77,7 @@ def test_no_hugeint_typed_oracle_output_columns():
     )
 
 
-def test_spark_and_oracle_dtype_kinds_agree(spark):
+def test_spark_and_oracle_dtype_kinds_agree(registry_built):
     """Static cross-engine dtype-kind check (no data execution): for every
     hash-oracled key, Spark's LAZY result schema and DuckDB's DESCRIBE of
     the oracle must agree per column on the int-vs-float axis. The driver
@@ -86,7 +86,8 @@ def test_spark_and_oracle_dtype_kinds_agree(spark):
     numerically identical (the r10 `agg_calibration_ece` failure mode).
     The HUGEINT lint above catches the DuckDB-widening subclass; this test
     catches the whole class — including a Spark-side double against an
-    integer oracle — in one schema-only sweep (~2.5 min, plan time only)."""
+    integer oracle — in one schema-only sweep over the shared
+    ``registry_built`` frames."""
     import duckdb
 
     con = duckdb.connect()
@@ -112,10 +113,10 @@ def test_spark_and_oracle_dtype_kinds_agree(spark):
             return "f"
         return "o"
 
-    qs = queries()
     mismatched = []
     for k, sql in oracle_sql().items():
-        sp = {f.name: spark_kind(f.dataType) for f in qs[k](spark, sf).schema.fields}
+        schema = registry_built[k][0]
+        sp = {f.name: spark_kind(f.dataType) for f in schema.fields}
         du = {c: duck_kind(t) for c, t, *_ in con.execute(f"DESCRIBE {sql}").fetchall()}
         for c in sp:
             if c in du and {sp[c], du[c]} == {"i", "f"}:
