@@ -16,6 +16,17 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import (
+    hex_int_duck,
+    hex_int_sql,
+    md5_bucket,
+    md5_bucket_duck,
+    md5_hex_duck,
+    md5_hex_sql,
+    md5_int,
+    md5_int_duck,
+    md5_int_sql,
+)
 from ..io import load_table, register_views
 from ..registry_util import new_registry
 
@@ -150,8 +161,7 @@ _HLL_DET_TAIL = 1 << 42
     oracle=f"""
     WITH h AS (
         SELECT event_type,
-               ('0x' || substr(md5('hll:' || CAST(user_id AS VARCHAR)),
-                               1, 12))::BIGINT AS h
+               {md5_int_duck("'hll:' || CAST(user_id AS VARCHAR)", 12)} AS h
         FROM events
     ), rb AS (
         SELECT event_type, h // {_HLL_DET_TAIL} AS bucket,
@@ -198,10 +208,7 @@ def agg_hll_deterministic(spark, sf_dir):
     property agg_quantile_sketch_merge pins for quantiles, now pinned for
     distinct counts."""
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-    h = F.expr(
-        "CAST(conv(substr(md5(concat('hll:', CAST(user_id AS STRING))), "
-        "1, 12), 16, 10) AS BIGINT)"
-    )
+    h = F.expr(md5_int_sql("concat('hll:', CAST(user_id AS STRING))", 12))
     rb = ev.select(
         "event_type",
         F.pmod("user_id", F.lit(4)).alias("shard"),
@@ -822,11 +829,11 @@ def agg_gini_segments(spark, sf_dir):
 
 @register(
     "agg_ab_ttest",
-    oracle="""
+    oracle=f"""
     WITH x AS (
         SELECT o_orderpriority,
-               CASE WHEN (('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 4))::BIGINT
-                          % 10) < 5 THEN 'A' ELSE 'B' END AS grp,
+               CASE WHEN {md5_bucket_duck("o_orderkey", 10)} < 5
+                    THEN 'A' ELSE 'B' END AS grp,
                CAST(round(o_totalprice * 100) AS BIGINT) AS cents
         FROM orders
     ), s AS (
@@ -872,11 +879,7 @@ def agg_ab_ttest(spark, sf_dir):
     from pyspark.sql import functions as F
 
     o = load_table(spark, sf_dir, "orders")
-    grp = F.when(
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 10 < 5,
-        "A",
-    ).otherwise("B")
+    grp = F.when(md5_bucket("o_orderkey", 10) < 5, "A").otherwise("B")
     cents = F.round(F.col("o_totalprice") * 100).cast("decimal(18,0)")
     s = (
         o.select("o_orderpriority", grp.alias("grp"), cents.alias("cents"))
@@ -1200,11 +1203,11 @@ def agg_chi_square(spark, sf_dir):
 
 @register(
     "agg_mann_whitney",
-    oracle="""
+    oracle=f"""
     WITH x AS (
         SELECT o_orderpriority AS pri,
-               CASE WHEN (('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 4))::BIGINT
-                          % 10) < 5 THEN 1 ELSE 0 END AS is_a,
+               CASE WHEN {md5_bucket_duck("o_orderkey", 10)} < 5
+                    THEN 1 ELSE 0 END AS is_a,
                CAST(round(o_totalprice * 100) AS BIGINT) AS cents
         FROM orders
     ), g AS (
@@ -1269,13 +1272,7 @@ def agg_mann_whitney(spark, sf_dir):
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders")
-    is_a = F.when(
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 10
-        < 5,
-        1,
-    ).otherwise(0)
+    is_a = F.when(md5_bucket("o_orderkey", 10) < 5, 1).otherwise(0)
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     g = (
         o.select(
@@ -1418,13 +1415,12 @@ def _pois_case(h: str) -> str:
     ), hashed AS (
         SELECT pri, cents,
                list_transform(range(8),
-                   g -> md5(CAST(o_orderkey AS VARCHAR)
-                            || ':' || CAST(g AS VARCHAR))) AS hs
+                   g -> {md5_hex_duck(
+                       "CAST(o_orderkey AS VARCHAR) || ':' || CAST(g AS VARCHAR)")}) AS hs
         FROM base
     ), rep AS (
         SELECT b.pri, b.cents, t.i AS rb,
-               {_pois_case("('0x' || substr(b.hs[t.i // 8 + 1], "
-                           "1 + 4 * (t.i % 8), 4))::BIGINT")}
+               {_pois_case(hex_int_duck("b.hs[t.i // 8 + 1]", 4, "4 * (t.i % 8)"))}
                    AS w
         FROM hashed b CROSS JOIN (SELECT unnest(range({_BOOT_B})) AS i) t
     ), means AS (
@@ -1489,8 +1485,9 @@ def agg_bootstrap_ci(spark, sf_dir):
     hashed = base.withColumn(
         "hs",
         F.expr(
-            "transform(sequence(0, 7), "
-            "g -> md5(concat(CAST(o_orderkey AS STRING), ':', CAST(g AS STRING))))"
+            "transform(sequence(0, 7), g -> "
+            + md5_hex_sql("concat(CAST(o_orderkey AS STRING), ':', CAST(g AS STRING))")
+            + ")"
         ),
     )
     rep = hashed.withColumn(
@@ -1498,10 +1495,7 @@ def agg_bootstrap_ci(spark, sf_dir):
     ).withColumn(
         "w",
         F.expr(
-            _pois_case(
-                "CAST(conv(substring(hs[rb div 8], "
-                "1 + 4 * (rb % 8), 4), 16, 10) AS BIGINT)"
-            )
+            _pois_case(hex_int_sql("hs[rb div 8]", 4, "4 * (rb % 8)"))
         ),
     )
     means = rep.groupBy("pri", "rb").agg(
@@ -1912,14 +1906,13 @@ def agg_linear_trend(spark, sf_dir):
 
 @register(
     "agg_count_min_sketch",
-    oracle="""
+    oracle=f"""
     WITH ev AS (SELECT user_id FROM events),
     r AS (SELECT unnest([0, 1, 2]) AS r),
     cells AS (
         SELECT r.r,
-               ('0x' || substr(md5(CAST(r.r AS VARCHAR) || '|'
-                                   || CAST(ev.user_id AS VARCHAR)), 1, 4))::BIGINT
-                   % 32 AS b,
+               {md5_bucket_duck(
+                   "CAST(r.r AS VARCHAR) || '|' || CAST(ev.user_id AS VARCHAR)", 32)} AS b,
                CAST(count(*) AS BIGINT) AS c
         FROM ev CROSS JOIN r GROUP BY 1, 2
     ), keys AS (
@@ -1933,8 +1926,8 @@ def agg_linear_trend(spark, sf_dir):
     CROSS JOIN r
     JOIN cells c
       ON c.r = r.r
-     AND c.b = ('0x' || substr(md5(CAST(r.r AS VARCHAR) || '|'
-                                   || CAST(k.user_id AS VARCHAR)), 1, 4))::BIGINT % 32
+     AND c.b = {md5_bucket_duck(
+                   "CAST(r.r AS VARCHAR) || '|' || CAST(k.user_id AS VARCHAR)", 32)}
     GROUP BY k.user_id, k.exact_count
     """,
 )
@@ -1955,18 +1948,7 @@ def agg_count_min_sketch(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").select("user_id")
 
     def bucket(r, key_col):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{r}|"), F.col(key_col).cast("string"))),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 32
-        )
+        return md5_bucket(F.concat(F.lit(f"{r}|"), F.col(key_col).cast("string")), 32)
 
     hashed = e.select(
         F.explode(
@@ -2140,7 +2122,7 @@ def _nearest_rank_quantiles(frame, group_cols, total_alias, out50, out90):
         SELECT o_orderpriority AS pri, o_orderkey AS k,
                CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
                CAST(o_orderkey % 16 AS BIGINT) AS shard,
-               ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 12))::BIGINT
+               {md5_int_duck("o_orderkey", 12)}
                    AS skey
         FROM orders
     ), partials AS (
@@ -2226,10 +2208,7 @@ def agg_quantile_sketch_merge(spark, sf_dir):
         .withColumn("shard", F.pmod(F.col("k"), F.lit(16)))
         .withColumn(
             "skey",
-            F.expr(
-                "CAST(conv(substr(md5(CAST(k AS STRING)), 1, 12), 16, 10)"
-                " AS BIGINT)"
-            ),
+            md5_int("k", 12),
         )
     )
     wpart = Window.partitionBy("pri", "shard").orderBy("skey", "k")
@@ -2337,10 +2316,10 @@ def agg_seasonality_dow(spark, sf_dir):
 
 @register(
     "agg_ratio_delta_method",
-    oracle="""
+    oracle=f"""
     WITH u AS (
         SELECT user_id,
-               ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4))::BIGINT % 2
+               {md5_bucket_duck("user_id", 2)}
                    AS arm,
                CAST(count(*) AS BIGINT) AS y,
                CAST(sum(CASE WHEN event_type = 'purchase'
@@ -2396,11 +2375,7 @@ def agg_ratio_delta_method(spark, sf_dir):
     ratio metrics computable in one distributed pass (the naive
     alternative resamples users)."""
     e = load_table(spark, sf_dir, "events")
-    arm = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 2
-    )
+    arm = md5_bucket("user_id", 2)
     u = e.groupBy("user_id").agg(
         F.first(arm).alias("arm"),
         F.count("*").cast("long").alias("y"),
@@ -2459,10 +2434,10 @@ def agg_ratio_delta_method(spark, sf_dir):
 
 @register(
     "agg_ab_power_mde",
-    oracle="""
+    oracle=f"""
     WITH u AS (
         SELECT user_id,
-               ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4))::BIGINT % 2
+               {md5_bucket_duck("user_id", 2)}
                    AS arm,
                CAST(sum(CASE WHEN event_type = 'purchase'
                              THEN CAST(round(value * 100) AS BIGINT)
@@ -2512,11 +2487,7 @@ def agg_ab_power_mde(spark, sf_dir):
     100 TB: one user rollup + a single global moment fold — the
     experiment-sizing query runs at the same cost as a count."""
     e = load_table(spark, sf_dir, "events")
-    arm = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 2
-    )
+    arm = md5_bucket("user_id", 2)
     u = e.groupBy("user_id").agg(
         F.first(arm).alias("arm"),
         F.sum(
@@ -2710,9 +2681,10 @@ def agg_yoy_growth(spark, sf_dir):
 #: Domain M = 2^60; the classic estimator D-hat = (k-1)*M / h_(k).
 _KMV_K = 128
 _KMV_M = 1 << 60
-_KMV_H = (
-    "('0x' || substr(md5('kmv|' || CAST(user_id AS VARCHAR) || '@' || "
-    "CAST(epoch_ns(ts) // 1000 // 86400000000 AS VARCHAR)), 1, 15))::BIGINT"
+_KMV_H = md5_int_duck(
+    "'kmv|' || CAST(user_id AS VARCHAR) || '@' || "
+    "CAST(epoch_ns(ts) // 1000 // 86400000000 AS VARCHAR)",
+    15,
 )
 
 
@@ -2790,22 +2762,15 @@ def agg_kmv_set_ops(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("kmv|"),
-                    F.col("user_id").cast("string"),
-                    F.lit("@"),
-                    F.expr("ts_us div 86400000000").cast("string"),
-                )
-            ),
-            1,
-            15,
+    h = md5_int(
+        F.concat(
+            F.lit("kmv|"),
+            F.col("user_id").cast("string"),
+            F.lit("@"),
+            F.expr("ts_us div 86400000000").cast("string"),
         ),
-        16,
-        10,
-    ).cast("long")
+        15,
+    )
     ud = (
         e.select(F.col("event_type").alias("side"), h.alias("h"))
         .distinct()
@@ -2880,15 +2845,24 @@ def agg_kmv_set_ops(spark, sf_dir):
 #: experiment cutover: events strictly before this epoch-µs instant are the
 #: "pre" period (2024-01-16T00:00:00Z — the midpoint of the 30-day log).
 _DID_CUT_US = 1_705_363_200_000_000
+#: the treatment arm of a user: half of the salted md5 buckets, 'T' or 'C'
+_DID_ARM_DUCK = (
+    "CASE WHEN "
+    + md5_bucket_duck("'did|' || CAST(user_id AS VARCHAR)", 10)
+    + " < 5 THEN 'T' ELSE 'C' END"
+)
+
+
+def _did_arm():
+    did = F.concat(F.lit("did|"), F.col("user_id").cast("string"))
+    return F.when(md5_bucket(did, 10) < 5, "T").otherwise("C")
 
 
 @register(
     "agg_did_uplift",
     oracle=f"""
     WITH p AS (
-        SELECT CASE WHEN (('0x' || substr(md5('did|' || CAST(user_id AS VARCHAR)),
-                           1, 4))::BIGINT % 10) < 5
-                    THEN 'T' ELSE 'C' END AS arm,
+        SELECT {_DID_ARM_DUCK} AS arm,
                CASE WHEN epoch_ns(ts) // 1000 < {_DID_CUT_US}
                     THEN 'pre' ELSE 'post' END AS period,
                CAST(round(value * 100) AS BIGINT) AS cents
@@ -2949,20 +2923,7 @@ def agg_did_uplift(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
-    arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("did|"), F.col("user_id").cast("string"))),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 10
-        < 5,
-        "T",
-    ).otherwise("C")
+    arm = _did_arm()
     period = F.when(F.col("ts_us") < _DID_CUT_US, "pre").otherwise("post")
     cents = F.round(F.col("value") * 100).cast("decimal(38,0)")
     p = e.select(arm.alias("arm"), period.alias("period"), cents.alias("cents"))
@@ -3019,9 +2980,7 @@ def agg_did_uplift(spark, sf_dir):
     oracle=f"""
     WITH p AS (
         SELECT user_id,
-               CASE WHEN (('0x' || substr(md5('did|' || CAST(user_id AS VARCHAR)),
-                           1, 4))::BIGINT % 10) < 5
-                    THEN 'T' ELSE 'C' END AS arm,
+               {_DID_ARM_DUCK} AS arm,
                CAST(sum(CASE WHEN epoch_ns(ts) // 1000 < {_DID_CUT_US}
                              THEN CAST(round(value * 100) AS BIGINT)
                              ELSE 0 END) AS HUGEINT) AS x,
@@ -3092,20 +3051,7 @@ def agg_cuped_adjusted(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
-    arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("did|"), F.col("user_id").cast("string"))),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 10
-        < 5,
-        "T",
-    ).otherwise("C")
+    arm = _did_arm()
     cents = F.round(F.col("value") * 100).cast("decimal(38,0)")
     p = e.groupBy("user_id", arm.alias("arm")).agg(
         F.sum(F.when(F.col("ts_us") < _DID_CUT_US, cents).otherwise(F.lit(0)))
@@ -3276,12 +3222,10 @@ def agg_price_volume_mix(spark, sf_dir):
 
 @register(
     "agg_quantile_treatment_effect",
-    oracle="""
+    oracle=f"""
     WITH p AS (
         SELECT event_id,
-               CASE WHEN (('0x' || substr(md5('did|' || CAST(user_id AS VARCHAR)),
-                           1, 4))::BIGINT % 10) < 5
-                    THEN 'T' ELSE 'C' END AS arm,
+               {_DID_ARM_DUCK} AS arm,
                CAST(round(value * 100) AS BIGINT) AS cents
         FROM events WHERE event_type = 'purchase'
     ), ranked AS (
@@ -3320,20 +3264,7 @@ def agg_quantile_treatment_effect(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
-    arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("did|"), F.col("user_id").cast("string"))),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 10
-        < 5,
-        "T",
-    ).otherwise("C")
+    arm = _did_arm()
     p = e.select(
         "event_id",
         arm.alias("arm"),
@@ -3704,11 +3635,11 @@ def agg_acf_lags(spark, sf_dir):
 
 @register(
     "agg_srm_check",
-    oracle="""
+    oracle=f"""
     WITH pairs AS (
         SELECT DISTINCT user_id, event_type,
-               CASE WHEN (('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4))::BIGINT
-                          % 10) < 5 THEN 'A' ELSE 'B' END AS arm
+               CASE WHEN {md5_bucket_duck("user_id", 10)} < 5
+                    THEN 'A' ELSE 'B' END AS arm
         FROM events
     ), cells AS (
         SELECT event_type,
@@ -3754,11 +3685,7 @@ def agg_srm_check(spark, sf_dir):
     (n_a−n_b)² product rides decimal(38,0)/HUGEINT: at 10⁹ users per arm a
     20% drop makes the squared diff ×10⁶ overflow int64."""
     e = load_table(spark, sf_dir, "events")
-    arm = F.when(
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 10 < 5,
-        "A",
-    ).otherwise("B")
+    arm = F.when(md5_bucket("user_id", 10) < 5, "A").otherwise("B")
     pairs = e.select("user_id", "event_type", arm.alias("arm")).distinct()
     cells = pairs.groupBy("event_type").agg(
         F.count(F.when(F.col("arm") == "A", True)).cast("long").alias("n_a_obs"),
@@ -4865,8 +4792,7 @@ _SPRT_A = 2_944_439  # round(1e6 * ln((1-beta)/alpha)), accept-H1 bound
         SELECT CAST(ts AS DATE) AS day,
                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS x
         FROM events
-        WHERE (('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 4))::BIGINT
-               % 10) >= 5
+        WHERE {md5_bucket_duck("event_id", 10)} >= 5
     ), d AS (
         SELECT day, CAST(count(*) AS BIGINT) AS n_events,
                CAST(sum(x) AS BIGINT) AS n_purchases
@@ -4913,12 +4839,7 @@ def agg_sprt_sequential(spark, sf_dir):
     CALENDAR-BOUNDED day table (~hundreds of rows at any SF — the
     win_moving_avg bounded-axis contract), never over events."""
     e = load_table(spark, sf_dir, "events")
-    b = e.filter(
-        F.expr(
-            "conv(substr(md5(CAST(event_id AS STRING)), 1, 4), 16, 10)"
-            " % 10 >= 5"
-        )
-    ).select(
+    b = e.filter(md5_bucket("event_id", 10) >= 5).select(
         F.to_date("ts").alias("day"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("x"),
     )
@@ -5238,8 +5159,8 @@ _TOST_Z_CRIT_MICRO = 1_644_854
     oracle=f"""
     WITH x AS (
         SELECT o_orderpriority,
-               CASE WHEN (('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 4))::BIGINT
-                          % 10) < 5 THEN 'A' ELSE 'B' END AS grp,
+               CASE WHEN {md5_bucket_duck("o_orderkey", 10)} < 5
+                    THEN 'A' ELSE 'B' END AS grp,
                CAST(round(o_totalprice * 100) AS BIGINT) AS cents
         FROM orders
     ), s AS (
@@ -5299,13 +5220,7 @@ def agg_tost_equivalence(spark, sf_dir):
     algebra; nothing else moves."""
     o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    grp = F.when(
-        F.expr(
-            "conv(substr(md5(CAST(o_orderkey AS STRING)), 1, 4), 16, 10)"
-            " % 10 < 5"
-        ),
-        "A",
-    ).otherwise("B")
+    grp = F.when(md5_bucket("o_orderkey", 10) < 5, "A").otherwise("B")
     s = o.groupBy("o_orderpriority", grp.alias("grp")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(cents.cast("decimal(38,0)")).alias("s1"),
@@ -5376,7 +5291,7 @@ _QSKG_LADDER = (16, 32, 64, 128, 256, 512)
     WITH c AS (
         SELECT o_orderpriority AS pri, o_orderkey AS k,
                CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-               ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 12))::BIGINT
+               {md5_int_duck("o_orderkey", 12)}
                    AS skey
         FROM orders
     ), ranked AS (
@@ -5450,10 +5365,7 @@ def plan_quantile_sketch_geometry(spark, sf_dir):
         )
         .withColumn(
             "skey",
-            F.expr(
-                "CAST(conv(substr(md5(CAST(k AS STRING)), 1, 12), 16, 10)"
-                " AS BIGINT)"
-            ),
+            md5_int("k", 12),
         )
     )
     wpri = Window.partitionBy("pri").orderBy("skey", "k")

@@ -2060,7 +2060,7 @@ _LNS_MICRO = 182_321
 
 @register(
     "events_burst_kleinberg",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE daily AS (
         SELECT event_type, CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT)
                    AS day,
@@ -2087,7 +2087,7 @@ _LNS_MICRO = 182_321
         SELECT r.event_type, r.n, r.days, r.r0,
                least(r.d0, r.d1 + r.r0 // 100) AS d0,
                least(r.d1, r.d0 + r.r0 // 100)
-                 + (r.r0 // 5 - r.rest[1] * 182321) AS d1,
+                 + (r.r0 // 5 - r.rest[1] * {_LNS_MICRO}) AS d1,
                CASE WHEN r.d0 <= r.d1 + r.r0 // 100 THEN r.m0 ELSE r.m1 END AS m0,
                (CASE WHEN r.d1 <= r.d0 + r.r0 // 100 THEN r.m1 ELSE r.m0 END)
                  + (CAST(1 AS BIGINT) << CAST(r.t AS INT)) AS m1,
@@ -2163,7 +2163,7 @@ def events_burst_kleinberg(spark, sf_dir):
         "cs",
     )
     fold = F.expr(
-        """
+        f"""
         aggregate(
             cs,
             named_struct('d0', CAST(0 AS BIGINT), 'd1', r0 DIV 100,
@@ -2171,7 +2171,7 @@ def events_burst_kleinberg(spark, sf_dir):
                          't', CAST(0 AS BIGINT)),
             (a, c) -> named_struct(
                 'd0', least(a.d0, a.d1 + r0 DIV 100),
-                'd1', least(a.d1, a.d0 + r0 DIV 100) + (r0 DIV 5 - c * 182321),
+                'd1', least(a.d1, a.d0 + r0 DIV 100) + (r0 DIV 5 - c * {_LNS_MICRO}),
                 'm0', IF(a.d0 <= a.d1 + r0 DIV 100, a.m0, a.m1),
                 'm1', IF(a.d1 <= a.d0 + r0 DIV 100, a.m1, a.m0)
                       + shiftleft(CAST(1 AS BIGINT), CAST(a.t AS INT)),

@@ -26,6 +26,16 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import (
+    md5_bucket,
+    md5_bucket_duck,
+    md5_hex,
+    md5_hex_duck,
+    md5_order,
+    md5_order_duck,
+    milli,
+    milli_duck,
+)
 from ..io import load_table
 from ..registry_util import new_registry
 from .pipeline import _VOCAB_DUCK
@@ -241,7 +251,7 @@ def text_domain_mix(spark, sf_dir):
 
 @register(
     "sample_mix_rebalance",
-    oracle="""
+    oracle=f"""
     WITH r AS (
         SELECT doc_id, source, lang,
                CAST(200 + 150 * (CAST(substr(source, 4) AS INTEGER) % 5)
@@ -251,7 +261,7 @@ def text_domain_mix(spark, sf_dir):
     SELECT doc_id, source, lang, rate_permille,
            CAST(1000000 // rate_permille AS BIGINT) AS weight_x1000
     FROM r
-    WHERE (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 1000)
+    WHERE {md5_bucket_duck("doc_id", 1000)}
           < rate_permille
     """,
 )
@@ -271,10 +281,7 @@ def sample_mix_rebalance(spark, sf_dir):
         F.lit(200)
         + F.lit(150) * (F.substring("source", 4, 10).cast("int") % 5)
     ).cast("long")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 1000
-    )
+    bucket = md5_bucket("doc_id", 1000)
     return (
         d.select("doc_id", "source", "lang", rate.alias("rate_permille"))
         .filter(bucket < F.col("rate_permille"))
@@ -371,18 +378,13 @@ def dedup_containment_bigram(spark, sf_dir):
 # Embedding operators
 # ---------------------------------------------------------------------------
 
-#: quantization used by both embedding ops: exact in both engines because
-#: float→double widening and double·1000 are exact IEEE operations and
-#: floor(x + 0.5) is deterministic (no round-half-mode ambiguity).
-_QUANT_SPARK = "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
-
 
 @register(
     "sim_nearest_centroid",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT vec_id, label,
-               CAST(floor(1000 * unnest(embedding)::DOUBLE + 0.5) AS BIGINT) AS qv,
+               unnest({milli_duck()}) AS qv,
                unnest(range(len(embedding))) AS pos
         FROM embeddings
     ), cent AS (
@@ -417,7 +419,7 @@ def sim_nearest_centroid(spark, sf_dir):
     the canonical distributed k-means step shape."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
-        "vec_id", "label", F.expr(_QUANT_SPARK).alias("qarr")
+        "vec_id", "label", milli().alias("qarr")
     )
     # generator child INLINE, not via the qarr alias: exploding an aliased
     # array makes InferFiltersFromGenerate add `size(qarr) > 0` below the
@@ -425,7 +427,7 @@ def sim_nearest_centroid(spark, sf_dir):
     # transform re-evaluated twice per row inside an always-true filter at
     # the scan (an inline child skips the inference; semantics identical).
     exploded = e.select(
-        "label", F.posexplode(F.expr(_QUANT_SPARK)).alias("pos", "qv")
+        "label", F.posexplode(milli()).alias("pos", "qv")
     )
     cent = (
         exploded.groupBy(F.col("label").alias("clabel"), "pos")
@@ -456,11 +458,10 @@ def sim_nearest_centroid(spark, sf_dir):
 
 @register(
     "sim_embedding_hygiene",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT vec_id, label,
-               list_transform(embedding,
-                   v -> CAST(floor(1000 * v::DOUBLE + 0.5) AS BIGINT)) AS qarr
+               {milli_duck()} AS qarr
         FROM embeddings
     ), m AS (
         SELECT vec_id, label,
@@ -488,7 +489,7 @@ def sim_embedding_hygiene(spark, sf_dir):
     scan speed and short-circuits broken upstream encoders before an
     expensive ANN build."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.select("vec_id", "label", F.expr(_QUANT_SPARK).alias("qarr"))
+    q = e.select("vec_id", "label", milli().alias("qarr"))
     qnorm2 = F.aggregate(
         F.transform("qarr", lambda x: x * x),
         F.lit(0).cast("long"),
@@ -707,10 +708,10 @@ def etl_forward_fill(spark, sf_dir):
 
 @register(
     "etl_pii_mask",
-    oracle="""
+    oracle=f"""
     WITH g AS (
         SELECT c.c_custkey,
-               substr(md5(c.c_name), 1, 16)                       AS name_hash,
+               substr({md5_hex_duck('c.c_name')}, 1, 16)           AS name_hash,
                CAST(floor(c.c_acctbal / 500) * 500 AS BIGINT)     AS acctbal_band,
                c.c_mktsegment,
                r.r_name                                           AS region
@@ -750,7 +751,7 @@ def etl_pii_mask(spark, sf_dir):
         .join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
         .select(
             "c_custkey",
-            F.substring(F.md5("c_name"), 1, 16).alias("name_hash"),
+            F.substring(md5_hex("c_name"), 1, 16).alias("name_hash"),
             (F.floor(F.col("c_acctbal") / 500) * 500).cast("long").alias(
                 "acctbal_band"
             ),
@@ -1123,12 +1124,10 @@ def text_pii_scrub(spark, sf_dir):
 
 @register(
     "dedup_semdedup",
-    oracle="""
+    oracle=f"""
     WITH q0 AS (
         SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(floor(1000 * CAST(x AS DOUBLE) + 0.5) AS BIGINT))
-                   AS qv
+               {milli_duck()} AS qv
         FROM embeddings
     ), meta AS (
         SELECT count(*) AS n,
@@ -1213,7 +1212,7 @@ def dedup_semdedup(spark, sf_dir):
     from .similarity import adaptive_n_blocks, with_block_pair
 
     e = load_table(spark, sf_dir, "embeddings")
-    q0 = e.select("vec_id", F.expr(_QUANT_SPARK).alias("qv"))
+    q0 = e.select("vec_id", milli().alias("qv"))
     probe = q0.agg(
         F.count("*").alias("n"),
         F.min(F.col("qv")[0]).alias("lo"),
@@ -1380,7 +1379,7 @@ def text_ccnet_buckets(spark, sf_dir):
 
 @register(
     "pipeline_corpus_curate",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT doc_id, lang, text,
                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
@@ -1411,8 +1410,7 @@ def text_ccnet_buckets(spark, sf_dir):
                CASE WHEN b < 80 THEN 'train'
                     WHEN b < 90 THEN 'valid' ELSE 'test' END AS split
         FROM (SELECT lang,
-                     ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-                     % 100 AS b
+                     {md5_bucket_duck("doc_id", 100)} AS b
               FROM uniq)
     ), audit AS (
         SELECT d.lang,
@@ -1470,10 +1468,7 @@ def pipeline_corpus_curate(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .select("doc_id", "lang")
     )
-    b = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 100
-    )
+    b = md5_bucket("doc_id", 100)
     splits = uniq.select(
         "lang",
         F.when(b < 80, "train").when(b < 90, "valid").otherwise("test").alias(
@@ -1595,10 +1590,10 @@ def text_lm_backoff_score(spark, sf_dir):
 
 @register(
     "sim_cluster_purity",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT vec_id, label,
-               CAST(floor(1000 * unnest(embedding)::DOUBLE + 0.5) AS BIGINT) AS qv,
+               unnest({milli_duck()}) AS qv,
                unnest(range(len(embedding))) AS pos
         FROM embeddings
     ), cent AS (
@@ -1855,8 +1850,8 @@ def _lloyd_centroids(q, iters: int = 3):
     # seeds: the 8 smallest (md5(vec_id), vec_id) rows, WITH their vectors —
     # one TakeOrdered job (the blessed bounded-probe pattern; 8·dim ints)
     seed_rows = (
-        q.select("vec_id", F.md5(F.col("vec_id").cast("string")).alias("h"), "qarr")
-        .orderBy("h", "vec_id")
+        q.select("vec_id", "qarr")
+        .orderBy(*md5_order("vec_id"))
         .limit(8)
         .collect()
     )
@@ -1959,21 +1954,20 @@ def _lloyd_centroids(q, iters: int = 3):
 def _kmeans_oracle() -> str:
     """Unrolled 3-iteration Lloyd in DuckDB CTEs (same fixed-point rules)."""
     parts = [
-        """
+        f"""
     WITH q AS (
         SELECT vec_id,
-               CAST(floor(1000 * unnest(embedding)::DOUBLE + 0.5) AS BIGINT)
-                   AS qv,
+               unnest({milli_duck()}) AS qv,
                unnest(range(len(embedding))) AS pos
         FROM embeddings
     ), labels AS (SELECT vec_id, label FROM embeddings),
     seeds AS (
         SELECT vec_id,
                row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
+                   ORDER BY {md5_order_duck('vec_id')}) - 1
                    AS cluster
         FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
+        ORDER BY {md5_order_duck('vec_id')} LIMIT 8
     ),
     c0 AS (
         SELECT s.cluster, q.pos, q.qv AS c FROM seeds s JOIN q USING (vec_id)
@@ -2037,13 +2031,11 @@ def _ann_append_oracle() -> str:
     _kmeans_oracle, seeds from the base only), then assign the ~10% NEW
     batch to the frozen final centroids and report per-list occupancy,
     growth, appended inertia, and the imbalance flag."""
-    head = """
+    head = f"""
     WITH allq AS (
         SELECT vec_id,
-               (('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 4))::BIGINT
-                   % 10) AS m,
-               CAST(floor(1000 * unnest(embedding)::DOUBLE + 0.5) AS BIGINT)
-                   AS qv,
+               {md5_bucket_duck("vec_id", 10)} AS m,
+               unnest({milli_duck()}) AS qv,
                unnest(range(len(embedding))) AS pos
         FROM embeddings
     ), q AS (
@@ -2053,10 +2045,10 @@ def _ann_append_oracle() -> str:
     ), seeds AS (
         SELECT vec_id,
                row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
+                   ORDER BY {md5_order_duck('vec_id')}) - 1
                    AS cluster
         FROM (SELECT DISTINCT vec_id FROM q)
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
+        ORDER BY {md5_order_duck('vec_id')} LIMIT 8
     ),
     c0 AS (
         SELECT s.cluster, q.pos, q.qv AS c FROM seeds s JOIN q USING (vec_id)
@@ -2132,14 +2124,9 @@ def sim_ann_append(spark, sf_dir):
     Oracle unrolls the same trajectory (base-only seeds/training, frozen
     assignment) in CTEs."""
     e = load_table(spark, sf_dir, "embeddings")
-    m = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4), 16, 10
-        ).cast("long")
-        % 10
-    )
+    m = md5_bucket("vec_id", 10)
     allq = e.select(
-        "vec_id", "label", F.expr(_QUANT_SPARK).alias("qarr"), m.alias("m")
+        "vec_id", "label", milli().alias("qarr"), m.alias("m")
     )
     base = allq.filter(F.col("m") != 0).drop("m").localCheckpoint(eager=False)
     newb = allq.filter(F.col("m") == 0).drop("m")
@@ -2206,19 +2193,18 @@ def _coarse_lloyd_cte() -> str:
     generator ``_lloyd_unroll_ctes("k")`` (round-13 review finding: a
     hand-copied chain could silently drift from the trainer every other
     oracle replays)."""
-    head = """kq AS (
+    head = f"""kq AS (
         SELECT vec_id,
-               CAST(floor(1000 * unnest(embedding)::DOUBLE + 0.5) AS BIGINT)
-                   AS qv,
+               unnest({milli_duck()}) AS qv,
                unnest(range(len(embedding))) AS pos
         FROM embeddings
     ), kseeds AS (
         SELECT vec_id,
                row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
+                   ORDER BY {md5_order_duck('vec_id')}) - 1
                    AS cluster
         FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
+        ORDER BY {md5_order_duck('vec_id')} LIMIT 8
     ),
     kc0 AS (
         SELECT s.cluster, q.pos, q.qv AS c FROM kseeds s JOIN kq q USING (vec_id)
@@ -2294,7 +2280,7 @@ def sim_ann_ivfadc(spark, sf_dir):
     codes themselves are 8 ints/vector, never the raw embeddings."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
-        "vec_id", "label", F.expr(_QUANT_SPARK).alias("qarr")
+        "vec_id", "label", milli().alias("qarr")
     ).localCheckpoint(eager=False)
     carr, assign = _lloyd_centroids(q, iters=3)
     lists = assign().select("vec_id", "cluster")
@@ -2352,7 +2338,7 @@ def sim_kmeans_lloyd(spark, sf_dir):
     over the quantized embeddings — the iterative-ML capstone of the
     similarity family, and every step is EXACT so the whole trajectory is
     hash-oracleable: vectors quantize to integer milli-units
-    (_QUANT_SPARK), centroids are integer floor-division means
+    (``encode.milli``), centroids are integer floor-division means
     (quantized-Lloyd semantics — documented, deterministic, the
     sim_nearest_centroid rule), distances are integer squared-L2, and
     every argmin tie breaks (d2, cluster). Seeds are the 8 vectors with
@@ -2385,7 +2371,7 @@ def sim_kmeans_lloyd(spark, sf_dir):
     is no engine/partitioning/order sensitivity to amplify."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
-        "vec_id", "label", F.expr(_QUANT_SPARK).alias("qarr")
+        "vec_id", "label", milli().alias("qarr")
     ).localCheckpoint(eager=False)
 
     # training extracted to _lloyd_centroids in round 11 (shared with
@@ -2424,20 +2410,19 @@ def _ivf_geometry_oracle() -> str:
     Lloyd as _kmeans_oracle (full-corpus training), then the nprobe
     sweep — centroid ranks per sampled query, exact top-10 truth, and
     the cumulative scanned-rows / recall readout per probe count."""
-    head = """
+    head = f"""
     WITH q AS (
         SELECT vec_id,
-               CAST(floor(1000 * unnest(embedding)::DOUBLE + 0.5) AS BIGINT)
-                   AS qv,
+               unnest({milli_duck()}) AS qv,
                unnest(range(len(embedding))) AS pos
         FROM embeddings
     ), seeds AS (
         SELECT vec_id,
                row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
+                   ORDER BY {md5_order_duck('vec_id')}) - 1
                    AS cluster
         FROM embeddings
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
+        ORDER BY {md5_order_duck('vec_id')} LIMIT 8
     ),
     c0 AS (
         SELECT s.cluster, q.pos, q.qv AS c FROM seeds s JOIN q USING (vec_id)
@@ -2552,7 +2537,7 @@ def plan_ivf_probe_geometry(spark, sf_dir):
     scale; scanned_rows comes from list-size metadata, not a rescan."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
-        "vec_id", "label", F.expr(_QUANT_SPARK).alias("qarr")
+        "vec_id", "label", milli().alias("qarr")
     ).localCheckpoint(eager=False)
     carr, _assign = _lloyd_centroids(q, iters=3)
 

@@ -19,8 +19,20 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import (
+    hex_int_duck,
+    hex_int_sql,
+    md5_bucket,
+    md5_bucket_duck,
+    md5_hex,
+    md5_hex_duck,
+    md5_int_duck,
+    md5_int_py,
+    md5_int_sql,
+)
 from ..io import load_table, stage_dir, stage_once
 from ..registry_util import new_registry
+from ..sources.connectors import _TT_FP_DUCK, _TT_ROW_EXPR
 
 QUERIES, ORACLES, register = new_registry()
 
@@ -684,20 +696,20 @@ def etl_surrogate_keys(spark, sf_dir):
 
 @register(
     "etl_table_fingerprint",
-    oracle="""
+    oracle=f"""
     WITH c AS (
-        SELECT bit_xor(('0x' || substr(md5(
-                   CAST(c_custkey AS VARCHAR) || '|' || c_name || '|'
-                   || c_mktsegment || '|' || CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS VARCHAR)
-               ), 1, 15))::BIGINT) AS fp,
+        SELECT bit_xor({md5_int_duck(
+                   "CAST(c_custkey AS VARCHAR) || '|' || c_name || '|' || c_mktsegment "
+                   "|| '|' || CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS VARCHAR)",
+                   15)}) AS fp,
                CAST(count(*) AS BIGINT) AS n
         FROM customer
     ), o AS (
-        SELECT bit_xor(('0x' || substr(md5(
-                   CAST(o_orderkey AS VARCHAR) || '|'
-                   || CAST(o_custkey AS VARCHAR) || '|' || o_orderstatus || '|'
-                   || CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR)
-               ), 1, 15))::BIGINT) AS fp,
+        SELECT bit_xor({md5_int_duck(
+                   "CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR) "
+                   "|| '|' || o_orderstatus || '|' "
+                   "|| CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR)",
+                   15)}) AS fp,
                CAST(count(*) AS BIGINT) AS n
         FROM orders
     )
@@ -727,11 +739,7 @@ def etl_table_fingerprint(spark, sf_dir):
 
     def fp(df, cols_expr, name):
         return df.agg(
-            F.expr(
-                "bit_xor(CAST(conv(substring(md5("
-                + cols_expr
-                + "), 1, 15), 16, 10) AS BIGINT))"
-            ).alias("fingerprint"),
+            F.expr(f"bit_xor({md5_int_sql(cols_expr, 15)})").alias("fingerprint"),
             F.count("*").cast("long").alias("n_rows"),
         ).select(F.lit(name).alias("table_name"), "fingerprint", "n_rows")
 
@@ -796,37 +804,37 @@ def etl_unpivot_melt(spark, sf_dir):
 
 @register(
     "etl_data_vault",
-    oracle="""
+    oracle=f"""
     WITH hub_customer AS (
-        SELECT md5(CAST(c_custkey AS VARCHAR)) AS hk FROM customer
+        SELECT {md5_hex_duck('c_custkey')} AS hk FROM customer
     ), hub_supplier AS (
-        SELECT md5(CAST(s_suppkey AS VARCHAR)) AS hk FROM supplier
+        SELECT {md5_hex_duck('s_suppkey')} AS hk FROM supplier
     ), link_trade AS (
-        SELECT md5(CAST(o_custkey AS VARCHAR) || '|'
-                   || CAST(l_suppkey AS VARCHAR)) AS hk
+        SELECT {md5_hex_duck(
+                   "CAST(o_custkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR)")} AS hk
         FROM (SELECT DISTINCT o.o_custkey, l.l_suppkey
               FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)
     ), sat_customer AS (
-        SELECT md5(CAST(c_custkey AS VARCHAR) || '|' || c_name || '|'
-                   || c_mktsegment || '|'
-                   || CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS VARCHAR))
+        SELECT {md5_hex_duck(
+                   "CAST(c_custkey AS VARCHAR) || '|' || c_name || '|' || c_mktsegment "
+                   "|| '|' || CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS VARCHAR)")}
             AS hk
         FROM customer
     )
     SELECT 'hub_customer' AS vault_table, CAST(count(*) AS BIGINT) AS n_rows,
-           bit_xor(('0x' || substr(hk, 1, 15))::BIGINT) AS fingerprint
+           bit_xor({hex_int_duck('hk', 15)}) AS fingerprint
     FROM hub_customer
     UNION ALL
     SELECT 'hub_supplier', CAST(count(*) AS BIGINT),
-           bit_xor(('0x' || substr(hk, 1, 15))::BIGINT)
+           bit_xor({hex_int_duck('hk', 15)})
     FROM hub_supplier
     UNION ALL
     SELECT 'link_trade', CAST(count(*) AS BIGINT),
-           bit_xor(('0x' || substr(hk, 1, 15))::BIGINT)
+           bit_xor({hex_int_duck('hk', 15)})
     FROM link_trade
     UNION ALL
     SELECT 'sat_customer', CAST(count(*) AS BIGINT),
-           bit_xor(('0x' || substr(hk, 1, 15))::BIGINT)
+           bit_xor({hex_int_duck('hk', 15)})
     FROM sat_customer
     """,
 )
@@ -853,19 +861,17 @@ def etl_data_vault(spark, sf_dir):
     def fp(df, name):
         return df.agg(
             F.count("*").cast("long").alias("n_rows"),
-            F.expr(
-                "bit_xor(CAST(conv(substring(hk, 1, 15), 16, 10) AS BIGINT))"
-            ).alias("fingerprint"),
+            F.expr(f"bit_xor({hex_int_sql('hk', 15)})").alias("fingerprint"),
         ).select(F.lit(name).alias("vault_table"), "n_rows", "fingerprint")
 
-    hub_c = c.select(F.md5(F.col("c_custkey").cast("string")).alias("hk"))
-    hub_s = s.select(F.md5(F.col("s_suppkey").cast("string")).alias("hk"))
+    hub_c = c.select(md5_hex("c_custkey").alias("hk"))
+    hub_s = s.select(md5_hex("s_suppkey").alias("hk"))
     link = (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select("o_custkey", "l_suppkey")
         .distinct()
         .select(
-            F.md5(
+            md5_hex(
                 F.concat(
                     F.col("o_custkey").cast("string"),
                     F.lit("|"),
@@ -875,7 +881,7 @@ def etl_data_vault(spark, sf_dir):
         )
     )
     sat = c.select(
-        F.md5(
+        md5_hex(
             F.concat(
                 F.col("c_custkey").cast("string"),
                 F.lit("|"),
@@ -897,7 +903,7 @@ def etl_data_vault(spark, sf_dir):
 
 @register(
     "etl_reconcile_buckets",
-    oracle="""
+    oracle=f"""
     WITH v1 AS (
         SELECT o_orderkey, o_custkey, o_orderstatus,
                CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
@@ -910,18 +916,12 @@ def etl_data_vault(spark, sf_dir):
     ), f1 AS (
         SELECT o_orderkey % 16 AS bucket,
                CAST(count(*) AS BIGINT) AS n_v1,
-               bit_xor(('0x' || substr(md5(
-                   CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR)
-                   || '|' || o_orderstatus || '|' || CAST(price_cents AS VARCHAR)
-               ), 1, 15))::BIGINT) AS fp_v1
+               bit_xor({_TT_FP_DUCK}) AS fp_v1
         FROM v1 GROUP BY o_orderkey % 16
     ), f2 AS (
         SELECT o_orderkey % 16 AS bucket,
                CAST(count(*) AS BIGINT) AS n_v2,
-               bit_xor(('0x' || substr(md5(
-                   CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR)
-                   || '|' || o_orderstatus || '|' || CAST(price_cents AS VARCHAR)
-               ), 1, 15))::BIGINT) AS fp_v2
+               bit_xor({_TT_FP_DUCK}) AS fp_v2
         FROM v2 GROUP BY o_orderkey % 16
     )
     SELECT f1.bucket, f1.n_v1, f2.n_v2, f1.fp_v1, f2.fp_v2,
@@ -955,18 +955,11 @@ def etl_reconcile_buckets(spark, sf_dir):
         F.col("price_cents")
         + F.when(F.col("o_orderkey") % 11 == 0, 100).otherwise(0),
     )
-    row = (
-        "concat(CAST(o_orderkey AS STRING), '|', CAST(o_custkey AS STRING), "
-        "'|', o_orderstatus, '|', CAST(price_cents AS STRING))"
-    )
 
     def bucketed(df, n_col, fp_col):
         return df.groupBy((F.col("o_orderkey") % 16).alias("bucket")).agg(
             F.count("*").cast("long").alias(n_col),
-            F.expr(
-                "bit_xor(CAST(conv(substring(md5(" + row + "), 1, 15), 16, 10)"
-                " AS BIGINT))"
-            ).alias(fp_col),
+            F.expr(f"bit_xor({md5_int_sql(_TT_ROW_EXPR, 15)})").alias(fp_col),
         )
 
     f1 = bucketed(v1, "n_v1", "fp_v1")
@@ -985,12 +978,11 @@ def etl_reconcile_buckets(spark, sf_dir):
 
 @register(
     "etl_late_dim_unknown",
-    oracle="""
+    oracle=f"""
     WITH dim AS (
         SELECT c.c_custkey, n.n_name
         FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-        WHERE (('0x' || substr(md5('late|' || CAST(c.c_custkey AS VARCHAR)),
-                1, 4))::BIGINT % 10) != 0
+        WHERE {md5_bucket_duck("'late|' || CAST(c.c_custkey AS VARCHAR)", 10)} != 0
     )
     SELECT coalesce(d.n_name, 'UNKNOWN') AS nation,
            CAST(count(*) AS BIGINT) AS n_orders,
@@ -1023,18 +1015,7 @@ def etl_late_dim_unknown(spark, sf_dir):
     dim = (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .filter(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("late|"), F.col("c_custkey").cast("string"))
-                    ),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 10
+            md5_bucket(F.concat(F.lit("late|"), F.col("c_custkey").cast("string")), 10)
             != 0
         )
         .select("c_custkey", "n_name")
@@ -1152,11 +1133,10 @@ def _dp_noise(seg: str) -> int:
     oracle-verifiable in this exercise — a production boundary draws u
     from a CSPRNG instead; mechanism shape, clipping, and sensitivity
     accounting are unchanged."""
-    import hashlib
     import math
 
     b = _DP_CAP / (_DP_EPS_MILLI / 1000.0)
-    u = (int(hashlib.md5(f"dp|{seg}".encode()).hexdigest()[:12], 16) + 0.5) / 16**12
+    u = (md5_int_py(f"dp|{seg}", 12) + 0.5) / 16**12
     # standard Laplace inverse CDF around 0.5
     noise = -b * math.copysign(1.0, u - 0.5) * math.log(1.0 - 2.0 * abs(u - 0.5))
     return int(math.floor(noise + 0.5))
@@ -1332,18 +1312,18 @@ def etl_k_anonymity(spark, sf_dir):
 def _rendezvous_expr(n_shards: int) -> str:
     """argmax over shards of the 48-bit md5 weight h(doc, s) — the HRW
     (highest-random-weight) pick, as one codegen'd struct-max projection."""
+    h = md5_int_sql("concat(CAST(doc_id AS STRING), ':', CAST(s AS STRING))", 12)
     return (
         f"array_max(transform(sequence(0, {n_shards - 1}), s -> "
-        "struct(CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), ':', "
-        "CAST(s AS STRING))), 1, 12), 16, 10) AS BIGINT) AS h, s))).s"
+        f"struct({h} AS h, s))).s"
     )
 
 
 def _rendezvous_duck(n_shards: int) -> str:
+    h = md5_int_duck("doc_id::VARCHAR || ':' || s::VARCHAR", 12)
     return (
         f"list_max(list_transform(generate_series(0, {n_shards - 1}), s -> "
-        "{'h': ('0x' || substr(md5(doc_id::VARCHAR || ':' || s::VARCHAR),"
-        " 1, 12))::BIGINT, 's': s})).s"
+        f"{{'h': {h}, 's': s}})).s"
     )
 
 

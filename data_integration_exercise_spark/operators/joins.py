@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import hex_int, md5_hex
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -509,11 +510,8 @@ _BLOOM_BITS = 1024  # 16 x 64-bit words; 3 probes
 
 def _bloom_positions(key_col: str):
     """Three independent 10-bit positions from one md5 of the key."""
-    h = F.md5(F.col(key_col).cast("string"))
-    return [
-        F.conv(F.substring(h, 1 + 4 * i, 4), 16, 10).cast("long") % _BLOOM_BITS
-        for i in range(3)
-    ]
+    h = md5_hex(key_col)
+    return [hex_int(h, 4, 4 * i) % _BLOOM_BITS for i in range(3)]
 
 
 @register(

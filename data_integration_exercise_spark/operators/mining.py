@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import md5_bucket, md5_bucket_duck
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -400,17 +401,13 @@ _RADIUS2 = 300 * 300
     oracle=f"""
     WITH c AS (
         SELECT c_custkey,
-               ('0x' || substr(md5('cx|' || CAST(c_custkey AS VARCHAR)), 1, 4))::BIGINT
-                   % {_GRID_MOD} AS x,
-               ('0x' || substr(md5('cy|' || CAST(c_custkey AS VARCHAR)), 1, 4))::BIGINT
-                   % {_GRID_MOD} AS y
+               {md5_bucket_duck("'cx|' || CAST(c_custkey AS VARCHAR)", _GRID_MOD)} AS x,
+               {md5_bucket_duck("'cy|' || CAST(c_custkey AS VARCHAR)", _GRID_MOD)} AS y
         FROM customer
     ), s AS (
         SELECT s_suppkey,
-               ('0x' || substr(md5('sx|' || CAST(s_suppkey AS VARCHAR)), 1, 4))::BIGINT
-                   % {_GRID_MOD} AS sx,
-               ('0x' || substr(md5('sy|' || CAST(s_suppkey AS VARCHAR)), 1, 4))::BIGINT
-                   % {_GRID_MOD} AS sy
+               {md5_bucket_duck("'sx|' || CAST(s_suppkey AS VARCHAR)", _GRID_MOD)} AS sx,
+               {md5_bucket_duck("'sy|' || CAST(s_suppkey AS VARCHAR)", _GRID_MOD)} AS sy
         FROM supplier
     ), s9 AS (
         SELECT s.*, s.sx // {_CELL} + dx.dx AS cell_x, s.sy // {_CELL} + dy.dy AS cell_y
@@ -455,18 +452,8 @@ def join_spatial_grid(spark, sf_dir):
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey")
 
     def coord(salt, key):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{salt}|"), F.col(key).cast("string"))),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % _GRID_MOD
-        )
+        salted = F.concat(F.lit(f"{salt}|"), F.col(key).cast("string"))
+        return md5_bucket(salted, _GRID_MOD)
 
     c = c.select(
         "c_custkey", coord("cx", "c_custkey").alias("x"), coord("cy", "c_custkey").alias("y")
@@ -701,12 +688,12 @@ ORACLES["sim_hybrid_rrf"] = _hybrid_rrf_oracle()
 @register(
     "mine_frequent_triples",
     oracle="""
-    WITH items AS (
+    WITH items AS MATERIALIZED (
         SELECT DISTINCT l.l_orderkey, p.p_brand
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     ), n AS (
         SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders FROM items
-    ), pairs AS (
+    ), pairs AS MATERIALIZED (
         SELECT a.p_brand AS ba, b.p_brand AS bb,
                CAST(count(*) AS BIGINT) AS s
         FROM items a JOIN items b

@@ -22,6 +22,19 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import (
+    hex_int_duck,
+    md5_bucket,
+    md5_bucket_duck,
+    md5_hex,
+    md5_hex_duck,
+    md5_int,
+    md5_int_duck,
+    md5_int_py,
+    md5_int_sql,
+    milli,
+    milli_duck,
+)
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -452,8 +465,8 @@ def dedup_minhash_keepers(spark, sf_dir):
 
 
 #: open-vocabulary MinHash modulus — the Mersenne prime 2^31 - 1. Token keys
-#: are 48-bit md5-derived content hashes (the repo's one cross-engine hash:
-#: Spark conv(substr(md5(t),1,12),16,10) ≡ DuckDB ('0x'||…)::BIGINT), so
+#: are 48-bit md5-derived content hashes (the repo's one cross-engine hash,
+#: ``encode.md5_int_sql`` ≡ ``encode.md5_int_duck`` at 12 digits), so
 #: a*h+b stays < 2^52 and band sigs mh0*M + mh1 < 2^62 — all BIGINT-exact.
 _OV_M = 2_147_483_647
 
@@ -467,7 +480,7 @@ _OPENVOCAB_ORACLE = f"""
         FROM documents
     ), hashed AS (
         SELECT doc_id,
-               ('0x' || substr(md5(token), 1, 12))::BIGINT AS h
+               {md5_int_duck("token", 12)} AS h
         FROM tok
     ), perms(p, a, b) AS (VALUES {_OV_PERMS_DUCK}),
     mh AS (
@@ -537,7 +550,7 @@ def _openvocab_band_rows(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     hashes = (
         "transform(array_distinct(split(text, ' ')), "
-        "t -> CAST(conv(substr(md5(t), 1, 12), 16, 10) AS BIGINT))"
+        f"t -> {md5_int_sql('t', 12)})"
     )
     band_sigs = []
     for band in range(N_BANDS):
@@ -690,7 +703,7 @@ def _openvocab_scored_pairs(spark, sf_dir, size_bound=True):
     # signature/candidate stage already stands on.
     hashes = (
         "transform(array_distinct(split(text, ' ')), "
-        "t -> CAST(conv(substr(md5(t), 1, 12), 16, 10) AS BIGINT))"
+        f"t -> {md5_int_sql('t', 12)})"
     )
     sets = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.expr(hashes).alias("s")
@@ -1065,12 +1078,12 @@ def text_fingerprint(spark, sf_dir):
 
 @register(
     "multimodal_decode",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            16                                                      AS n_bytes,
-           ('0x' || substr(md5(text), 1, 2))::INTEGER              AS width,
-           ('0x' || substr(md5(text), 3, 2))::INTEGER              AS height,
-           CASE (('0x' || substr(md5(text), 5, 2))::INTEGER) % 3
+           CAST({md5_int_duck("text", 2)} AS INTEGER)               AS width,
+           CAST({md5_int_duck("text", 2, 2)} AS INTEGER)            AS height,
+           CASE {md5_int_duck("text", 2, 4)} % 3
                 WHEN 0 THEN 'RGB' WHEN 1 THEN 'L' ELSE 'RGBA' END  AS mode
     FROM documents
     """,
@@ -1085,7 +1098,7 @@ def multimodal_decode(spark, sf_dir):
     pipeline is production-shaped. Hash-verified because the fake decode is
     pure md5 byte math the oracle reproduces."""
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.unhex(F.md5("text")).alias("img")
+        "doc_id", F.unhex(md5_hex("text")).alias("img")
     )
 
     def decode_batches(batches):
@@ -1264,10 +1277,11 @@ def sim_ann_ivf(spark, sf_dir):
 
 @register(
     "multimodal_framesample",
-    oracle="""
+    oracle=f"""
     WITH frames AS (
         SELECT doc_id, i AS frame_idx,
-               ('0x' || substr(md5(text) || md5(text), i * 8 + 1, 2))::INTEGER
+               CAST({hex_int_duck(f"{md5_hex_duck('text')} || {md5_hex_duck('text')}",
+                                  2, "i * 8")} AS INTEGER)
                    AS frame_lum
         FROM documents, unnest([0, 2, 4, 6]) AS t(i)
     )
@@ -1284,7 +1298,7 @@ def multimodal_framesample(spark, sf_dir):
     libav frame sampler plugs into; the fake stays byte-deterministic so
     the oracle can recompute it from md5 hex."""
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.unhex(F.concat(F.md5("text"), F.md5("text"))).alias("video")
+        "doc_id", F.unhex(F.concat(md5_hex("text"), md5_hex("text"))).alias("video")
     )
 
     FRAME_BYTES, STRIDE = 4, 2
@@ -1608,10 +1622,10 @@ def propagate_min_labels(labels, edges, max_iters=50, stats=None):
 @register(
     "dedup_connected_components",
     oracle="""
-    WITH RECURSIVE sets AS (
+    WITH RECURSIVE sets AS MATERIALIZED (
         SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS s
         FROM documents
-    ), edges AS (
+    ), edges AS MATERIALIZED (
         SELECT a.doc_id AS src, b.doc_id AS dst
         FROM sets a JOIN sets b
           ON a.lang = b.lang AND a.doc_id <> b.doc_id
@@ -1670,15 +1684,16 @@ def dedup_connected_components(spark, sf_dir):
 
 @register(
     "multimodal_audio_energy",
-    oracle="""
+    oracle=f"""
     WITH h AS (
-        SELECT doc_id, md5(text) || md5(reverse(text)) AS hx FROM documents
+        SELECT doc_id, {md5_hex_duck('text')} || {md5_hex_duck('reverse(text)')} AS hx
+        FROM documents
     ), w AS (
         SELECT doc_id, hx, unnest([0, 1, 2, 3]) AS win_idx FROM h
     )
     SELECT doc_id, win_idx,
            CAST(list_sum(list_transform(range(8),
-                i -> ('0x' || substr(hx, (win_idx * 8 + i) * 2 + 1, 2))::INT))
+                i -> {hex_int_duck('hx', 2, '(win_idx * 8 + i) * 2')}))
                 AS BIGINT) AS energy
     FROM w
     """,
@@ -1694,7 +1709,7 @@ def multimodal_audio_energy(spark, sf_dir):
     the codec import is the stubbed seam per the driver contract."""
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.unhex(F.concat(F.md5("text"), F.md5(F.reverse("text")))).alias("audio"),
+        F.unhex(F.concat(md5_hex("text"), md5_hex(F.reverse("text")))).alias("audio"),
     )
 
     WIN, N_WIN = 8, 4
@@ -1720,7 +1735,7 @@ def multimodal_audio_energy(spark, sf_dir):
 
 def _resize_oracle() -> str:
     def b(k: int) -> str:  # 0-based byte k of the md5 digest, as 0..255
-        return f"('0x' || substr(md5(text), {2 * k + 1}, 2))::INTEGER"
+        return md5_int_duck("text", 2, 2 * k)
 
     def pool(i: int, j: int) -> str:  # 2x2 average-pool block (i, j), floor
         ks = [4 * (2 * i) + 2 * j, 4 * (2 * i) + 2 * j + 1,
@@ -1749,7 +1764,7 @@ def multimodal_resize(spark, sf_dir):
     buffer parse for PIL's Image.resize and nothing else changes. Byte
     math is exact, so the DuckDB hex-substr oracle hash-matches."""
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.unhex(F.md5("text")).alias("img")
+        "doc_id", F.unhex(md5_hex("text")).alias("img")
     )
 
     def resize_batches(batches):
@@ -1948,13 +1963,13 @@ def dedup_contamination_ngram(spark, sf_dir):
 
 @register(
     "dedup_incremental",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT doc_id, lang,
                array_to_string(list_sort(list_distinct(string_split(text, ' '))), ',')
                    AS fp,
                list_distinct(string_split(text, ' ')) AS s,
-               (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 10)
+               {md5_bucket_duck("doc_id", 10)}
                    AS bkt
         FROM documents
     ), incr AS (SELECT * FROM d WHERE bkt = 0),
@@ -2026,10 +2041,7 @@ def _incremental_report(spark, sf_dir, banded=True):
     losslessness equality test (the size_bound=False pattern)."""
     d = load_table(spark, sf_dir, "documents")
     fp = F.array_join(F.sort_array(F.array_distinct(F.split("text", " "))), ",")
-    bkt = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 10
-    )
+    bkt = md5_bucket("doc_id", 10)
     masks = _doc_masks(spark, sf_dir)
     # localCheckpoint: incr feeds the exact join, the near stage, and the
     # final report spine; base feeds the exact join and the near stage —
@@ -2176,16 +2188,16 @@ _PHASH_JITTER = (1 << 3) | (1 << 20) | (1 << 40)
     oracle=f"""
     WITH img AS (
         SELECT doc_id AS img_id,
-               ('0x' || substr(md5(text), 1, 15))::BIGINT AS ph
+               {md5_int_duck("text", 15)} AS ph
         FROM documents
         UNION ALL
         SELECT doc_id + 1000000,
-               xor(('0x' || substr(md5(text), 1, 15))::BIGINT,
+               xor({md5_int_duck("text", 15)},
                    {_PHASH_JITTER})
         FROM documents WHERE doc_id % 50 = 0
         UNION ALL
         SELECT doc_id + 2000000,
-               ('0x' || substr(md5(text), 1, 15))::BIGINT
+               {md5_int_duck("text", 15)}
         FROM documents WHERE doc_id % 100 = 0
     ), b AS (
         SELECT img_id, ph, i AS band, (ph // p2) % 32768 AS val
@@ -2226,7 +2238,7 @@ def multimodal_phash_dedup(spark, sf_dir):
     first-matching-band rule (SURVEY §9 lesson 2 — no distinct shuffle on
     Spark's side; the oracle uses DISTINCT as the plain-SQL reference)."""
     d = load_table(spark, sf_dir, "documents")
-    ph = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long")
+    ph = md5_int("text", 15)
     base = d.select(F.col("doc_id").alias("img_id"), ph.alias("ph"))
     variants = d.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + 1000000).alias("img_id"),
@@ -2574,7 +2586,6 @@ def dedup_threshold_sweep(spark, sf_dir):
 # row here).
 # ---------------------------------------------------------------------------
 
-import hashlib as _hashlib
 import math as _math
 
 _GEOM_DIM = 64  # embeddings.parquet vector dimensionality (FIXTURES.md)
@@ -2590,10 +2601,10 @@ _GEOM_P_PERMILLE = _math.floor(1000 * (1 - _math.acos(0.4) / _math.pi))
 def _geom_hyperplanes() -> list[list[int]]:
     """±1 hyperplane pool, md5-derived (deterministic like all repo
     randomness), shared verbatim by the Spark expression and the oracle."""
+    # the parity of the whole digest is the parity of its last hex digit
     return [
         [
-            1 if int(_hashlib.md5(f"lshgeom:{j}:{i}".encode()).hexdigest(), 16) % 2 == 0
-            else -1
+            1 if md5_int_py(f"lshgeom:{j}:{i}", 1, 31) % 2 == 0 else -1
             for i in range(_GEOM_DIM)
         ]
         for j in range(_GEOM_POOL)
@@ -2641,9 +2652,7 @@ def _geom_oracle() -> str:
     keys_sql = " UNION ALL ".join(branches)
     return f"""
     WITH q AS (
-        SELECT list_transform(embedding,
-                   v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT))
-               AS qarr
+        SELECT {milli_duck()} AS qarr
         FROM embeddings
     ), s AS (
         SELECT [{sign_entries}] AS signs FROM q
@@ -2678,7 +2687,7 @@ def plan_lsh_band_geometry(spark, sf_dir):
     row of this grid).
 
     Everything is exact integer arithmetic: vectors quantize to
-    milli-units (the _QUANT_SPARK rule — ±1-hyperplane dot products are
+    milli-units (the ``encode.milli`` rule — ±1-hyperplane dot products are
     then exact integers, no float-summation-order hazard at the sign
     boundary), hyperplanes are md5-derived ±1 literals shared verbatim
     with the oracle, and the recall estimate is stepwise-floored permille
@@ -2691,8 +2700,6 @@ def plan_lsh_band_geometry(spark, sf_dir):
     runs on a deterministic hash-sample (sample_hash_mod) — candidate
     counts scale as the sample-rate square per bucket, which the read-out
     divides back; the structure is unchanged."""
-    from .curation import _QUANT_SPARK
-
     H = _geom_hyperplanes()
     h_lit = "array(" + ", ".join(
         "array(" + ", ".join(f"{v}L" for v in row) + ")" for row in H
@@ -2712,7 +2719,7 @@ def plan_lsh_band_geometry(spark, sf_dir):
     keys_expr = "flatten(array(" + ", ".join(branches) + "))"
 
     e = load_table(spark, sf_dir, "embeddings")
-    signs = e.select(F.expr(_QUANT_SPARK).alias("qarr")).select(
+    signs = e.select(milli().alias("qarr")).select(
         F.expr(signs_expr).alias("signs")
     )
     kx = signs.select(F.explode(F.expr(keys_expr)).alias("ck")).select(

@@ -19,20 +19,22 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import (
+    md5_bucket,
+    md5_bucket_duck,
+    md5_hex,
+    md5_int,
+    md5_int_duck,
+    md5_int_sql,
+    md5_order,
+    md5_order_duck,
+    milli,
+    milli_duck,
+)
 from ..io import load_table
 from ..registry_util import new_registry
 
 QUERIES, ORACLES, register = new_registry()
-
-
-def _bucket_spark(col, mod: int):
-    """(first 4 md5 hex digits of the key's string form) mod ``mod``."""
-    h = F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 4), 16, 10)
-    return h.cast("long") % mod
-
-
-def _bucket_duck(col: str, mod: int) -> str:
-    return f"(('0x' || substr(md5(CAST({col} AS VARCHAR)), 1, 4))::BIGINT % {mod})"
 
 
 @register(
@@ -40,7 +42,7 @@ def _bucket_duck(col: str, mod: int) -> str:
     oracle=f"""
     SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
     FROM orders
-    WHERE {_bucket_duck('o_orderkey', 10)} = 0
+    WHERE {md5_bucket_duck('o_orderkey', 10)} = 0
     """,
 )
 def sample_hash_mod(spark, sf_dir):
@@ -48,7 +50,7 @@ def sample_hash_mod(spark, sf_dir):
     in bucket 0 of 10. Pure scan+filter (codegen'd md5), no shuffle; the
     same rows are selected regardless of partitioning or cluster size."""
     o = load_table(spark, sf_dir, "orders")
-    return o.filter(_bucket_spark("o_orderkey", 10) == 0).select(
+    return o.filter(md5_bucket("o_orderkey", 10) == 0).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
 
@@ -58,7 +60,7 @@ def sample_hash_mod(spark, sf_dir):
     oracle=f"""
     SELECT c_custkey, c_mktsegment, c_acctbal
     FROM customer
-    WHERE {_bucket_duck('c_custkey', 20)}
+    WHERE {md5_bucket_duck('c_custkey', 20)}
           < CASE WHEN c_mktsegment = 'BUILDING' THEN 4 ELSE 1 END
     """,
 )
@@ -69,19 +71,19 @@ def sample_stratified(spark, sf_dir):
     sampled rows stay sampled — nested/consistent samples for free."""
     c = load_table(spark, sf_dir, "customer")
     rate_buckets = F.when(F.col("c_mktsegment") == "BUILDING", 4).otherwise(1)
-    return c.filter(_bucket_spark("c_custkey", 20) < rate_buckets).select(
+    return c.filter(md5_bucket("c_custkey", 20) < rate_buckets).select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
 
 
 @register(
     "sample_k_per_stratum",
-    oracle="""
+    oracle=f"""
     SELECT c_mktsegment, c_custkey, c_acctbal
     FROM customer
     QUALIFY row_number() OVER (
         PARTITION BY c_mktsegment
-        ORDER BY md5(CAST(c_custkey AS VARCHAR)), c_custkey
+        ORDER BY {md5_order_duck('c_custkey')}
     ) <= 5
     """,
 )
@@ -93,9 +95,7 @@ def sample_k_per_stratum(spark, sf_dir):
     shuffle on the stratum key, k rows kept per group map-side via
     partial top-k."""
     c = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.md5(F.col("c_custkey").cast("string")), F.col("c_custkey")
-    )
+    w = Window.partitionBy("c_mktsegment").orderBy(*md5_order("c_custkey"))
     return (
         c.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
@@ -108,7 +108,7 @@ def sample_k_per_stratum(spark, sf_dir):
     oracle=f"""
     WITH b AS (
         SELECT doc_id, lang, n_chars,
-               {_bucket_duck('doc_id', 100)} AS bucket
+               {md5_bucket_duck('doc_id', 100)} AS bucket
         FROM documents
     )
     SELECT doc_id, lang, n_chars,
@@ -126,7 +126,7 @@ def sample_train_valid_test(spark, sf_dir):
     existing doc between splits (no leakage from re-splitting). Pure
     projection over a scan: embarrassingly parallel at any scale."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = _bucket_spark("doc_id", 100)
+    bucket = md5_bucket("doc_id", 100)
     return d.select(
         "doc_id",
         "lang",
@@ -140,12 +140,11 @@ def sample_train_valid_test(spark, sf_dir):
 
 @register(
     "sample_priority_topk",
-    oracle="""
+    oracle=f"""
     WITH pri AS (
         SELECT o_orderkey, o_totalprice,
                CAST(CAST(round(o_totalprice * 100) AS BIGINT) * 65537 AS DOUBLE)
-               / (('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 4))::BIGINT
-                  + 1) AS priority
+               / ({md5_int_duck('o_orderkey', 4)} + 1) AS priority
         FROM orders
     )
     SELECT o_orderkey, o_totalprice,
@@ -175,10 +174,7 @@ def sample_priority_topk(spark, sf_dir):
     TakeOrderedAndProject keeps k rows per partition map-side and merges
     k·P on the driver; the scan is the only full pass."""
     o = load_table(spark, sf_dir, "orders")
-    h = (
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-    )
+    h = md5_int("o_orderkey", 4)
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     priority = (cents * 65537).cast("double") / (h + 1)
     return (
@@ -199,7 +195,7 @@ def sample_priority_topk(spark, sf_dir):
 
 @register(
     "sample_balanced_classes",
-    oracle="""
+    oracle=f"""
     WITH k AS (
         SELECT min(cnt) AS k FROM (
             SELECT count(*) AS cnt FROM documents GROUP BY lang
@@ -209,7 +205,7 @@ def sample_priority_topk(spark, sf_dir):
     FROM documents, k
     QUALIFY row_number() OVER (
         PARTITION BY lang
-        ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+        ORDER BY {md5_order_duck('doc_id')}
     ) <= k.k
     """,
 )
@@ -229,9 +225,7 @@ def sample_balanced_classes(spark, sf_dir):
     sample_mix_rebalance; this is the strict no-repetition variant."""
     d = load_table(spark, sf_dir, "documents")
     k = d.groupBy("lang").count().agg(F.min("count").alias("k"))
-    w = Window.partitionBy("lang").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
+    w = Window.partitionBy("lang").orderBy(*md5_order("doc_id"))
     return (
         d.crossJoin(F.broadcast(k))
         .withColumn("rn", F.row_number().over(w))
@@ -259,7 +253,7 @@ _TEMP_K = 300  # total docs in the temperature-balanced mix
     FROM documents d JOIN k ON k.lang = d.lang
     QUALIFY row_number() OVER (
         PARTITION BY d.lang
-        ORDER BY md5(CAST(d.doc_id AS VARCHAR)), d.doc_id
+        ORDER BY {md5_order_duck('d.doc_id')}
     ) <= k.kl
     """,
 )
@@ -288,9 +282,7 @@ def sample_temperature_mix(spark, sf_dir):
     k = w.crossJoin(F.broadcast(tot)).select(
         "lang", F.expr(f"({_TEMP_K} * sl) div s").alias("kl")
     )
-    win = Window.partitionBy("lang").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
+    win = Window.partitionBy("lang").orderBy(*md5_order("doc_id"))
     return (
         d.join(F.broadcast(k), "lang")
         .withColumn("rn", F.row_number().over(win))
@@ -383,7 +375,7 @@ def sample_token_budget_mix(spark, sf_dir):
     oracle=f"""
     WITH s AS (
         SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-               {_bucket_duck('o_orderkey', 10)} = 0 AS in_sample
+               {md5_bucket_duck('o_orderkey', 10)} = 0 AS in_sample
         FROM orders
     ), agg AS (
         SELECT CAST(count(*) AS BIGINT) AS n_total,
@@ -419,7 +411,7 @@ def sample_importance_estimate(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     s = o.select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        (_bucket_spark("o_orderkey", 10) == 0).alias("in_sample"),
+        (md5_bucket("o_orderkey", 10) == 0).alias("in_sample"),
     )
     agg = s.agg(
         F.count("*").cast("long").alias("n_total"),
@@ -468,9 +460,9 @@ _NEG_K = 2
             SELECT o_custkey, p_brand,
                    row_number() OVER (
                        PARTITION BY o_custkey
-                       ORDER BY ('0x' || substr(md5('neg|' ||
-                           CAST(o_custkey AS VARCHAR) || '|' || p_brand),
-                           1, 15))::BIGINT, p_brand) AS rn
+                       ORDER BY {md5_int_duck(
+                           "'neg|' || CAST(o_custkey AS VARCHAR) || '|' || p_brand",
+                           15)}, p_brand) AS rn
             FROM cand)
         WHERE rn <= {_NEG_K}
     )
@@ -511,22 +503,15 @@ def sample_negatives(spark, sf_dir):
         .crossJoin(F.broadcast(brands))
         .join(pos, ["o_custkey", "p_brand"], "left_anti")
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("neg|"),
-                    F.col("o_custkey").cast("string"),
-                    F.lit("|"),
-                    F.col("p_brand"),
-                )
-            ),
-            1,
-            15,
+    h = md5_int(
+        F.concat(
+            F.lit("neg|"),
+            F.col("o_custkey").cast("string"),
+            F.lit("|"),
+            F.col("p_brand"),
         ),
-        16,
-        10,
-    ).cast("long")
+        15,
+    )
     w = Window.partitionBy("o_custkey").orderBy(h.asc(), F.col("p_brand").asc())
     neg = (
         cand.withColumn("rn", F.row_number().over(w))
@@ -620,7 +605,7 @@ def sample_neyman_allocation(spark, sf_dir):
     "sample_kfold_assignments",
     oracle=f"""
     WITH f AS (
-        SELECT {_bucket_duck('o_orderkey', 5)} AS fold, o_orderstatus
+        SELECT {md5_bucket_duck('o_orderkey', 5)} AS fold, o_orderstatus
         FROM orders
     ), t AS (
         SELECT CAST(count(*) AS BIGINT) AS big_n FROM f
@@ -653,7 +638,7 @@ def sample_kfold_assignments(spark, sf_dir):
     rollup; the grand total broadcasts as a 1-row BNLJ."""
     o = load_table(spark, sf_dir, "orders")
     f = o.select(
-        _bucket_spark("o_orderkey", 5).alias("fold"), "o_orderstatus"
+        md5_bucket("o_orderkey", 5).alias("fold"), "o_orderstatus"
     )
     t = f.agg(F.count(F.lit(1)).cast("long").alias("big_n"))
     return (
@@ -683,7 +668,7 @@ def sample_kfold_assignments(spark, sf_dir):
     WITH ordered AS (
         SELECT o_orderkey, o_custkey, o_orderpriority, o_totalprice,
                row_number() OVER (
-                   ORDER BY md5(CAST(o_orderkey AS VARCHAR)), o_orderkey
+                   ORDER BY {md5_order_duck('o_orderkey')}
                ) AS rn
         FROM orders
     )
@@ -717,7 +702,7 @@ def sample_systematic(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"
     )
-    keyed = o.withColumn("h", F.md5(F.col("o_orderkey").cast("string")))
+    keyed = o.withColumn("h", md5_hex("o_orderkey"))
     parts = keyed.repartitionByRange(8, "h", "o_orderkey").withColumn(
         "pid", F.spark_partition_id()
     )
@@ -746,21 +731,16 @@ def sample_systematic(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _KCENTER_K = 8
-#: same milli-unit quantization as the kmeans/semdedup family
-_KC_QUANT = "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
 
 
 def _kcenter_oracle() -> str:
     parts = [f"""
     WITH q AS MATERIALIZED (
-        SELECT vec_id, label,
-               list_transform(embedding,
-                   v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT))
-               AS qv
+        SELECT vec_id, label, {milli_duck()} AS qv
         FROM embeddings
     ), c1 AS MATERIALIZED (
         SELECT 1 AS rank, vec_id, label, qv FROM q
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 1
+        ORDER BY {md5_order_duck('vec_id')} LIMIT 1
     )"""]
     prev = "c1"
     for i in range(2, _KCENTER_K + 1):
@@ -821,7 +801,7 @@ def sample_coreset_kcenter(spark, sf_dir):
     (the semdedup blocking), structure unchanged."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
-        "vec_id", "label", F.expr(_KC_QUANT).alias("qv")
+        "vec_id", "label", milli().alias("qv")
     ).localCheckpoint(eager=False)
 
     # Round-15 shape: the chosen set is BOUNDED (k = 8 at any corpus
@@ -847,8 +827,7 @@ def sample_coreset_kcenter(spark, sf_dir):
         )
 
     seed_rows = (
-        q.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
+        q.orderBy(*md5_order("vec_id"))
         .limit(1)
         .select("vec_id", "label", "qv")
         .collect()
@@ -898,7 +877,7 @@ _PPS_N = 100  # fixed sample budget (picks)
         SELECT o_orderkey, o_custkey, o_orderpriority,
                CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
                sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER (
-                   ORDER BY md5(CAST(o_orderkey AS VARCHAR)), o_orderkey
+                   ORDER BY {md5_order_duck('o_orderkey')}
                    ROWS UNBOUNDED PRECEDING) AS cum
         FROM orders
     ), tot AS (
@@ -952,7 +931,7 @@ def sample_pps_systematic(spark, sf_dir):
         "o_orderpriority",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    keyed = o.withColumn("h", F.md5(F.col("o_orderkey").cast("string")))
+    keyed = o.withColumn("h", md5_hex("o_orderkey"))
     parts = keyed.repartitionByRange(8, "h", "o_orderkey").withColumn(
         "pid", F.spark_partition_id()
     )
@@ -1002,7 +981,7 @@ def sample_pps_systematic(spark, sf_dir):
         SELECT o_orderpriority,
                CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
                sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER (
-                   ORDER BY md5(CAST(o_orderkey AS VARCHAR)), o_orderkey
+                   ORDER BY {md5_order_duck('o_orderkey')}
                    ROWS UNBOUNDED PRECEDING) AS cum
         FROM orders
     ), tot AS (
@@ -1064,7 +1043,7 @@ def sample_ht_estimate(spark, sf_dir):
         "o_orderpriority",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    keyed = o.withColumn("h", F.md5(F.col("o_orderkey").cast("string")))
+    keyed = o.withColumn("h", md5_hex("o_orderkey"))
     parts = keyed.repartitionByRange(8, "h", "o_orderkey").withColumn(
         "pid", F.spark_partition_id()
     )
@@ -1144,9 +1123,8 @@ _WRES_K = 32
     ), keyed AS (
         SELECT flag, ok, ln, w,
                list_max(list_transform(generate_series(1, w), j ->
-                   ('0x' || substr(md5(ok::VARCHAR || '-' || ln::VARCHAR
-                                       || '-' || w::VARCHAR
-                                       || '-' || j::VARCHAR), 1, 12))::BIGINT
+                   {md5_int_duck("ok::VARCHAR || '-' || ln::VARCHAR || '-' "
+                                 "|| w::VARCHAR || '-' || j::VARCHAR", 12)}
                )) AS skey
         FROM c
     ), ranked AS (
@@ -1222,10 +1200,12 @@ def sample_weighted_reservoir(spark, sf_dir):
         "skey",
         F.expr(
             "array_max(transform(sequence(1L, w), j -> "
-            "CAST(conv(substr(md5(concat(CAST(ok AS STRING), '-', "
-            "CAST(ln AS STRING), '-', CAST(w AS STRING), '-', "
-            "CAST(j AS STRING))), 1, 12), 16, 10)"
-            " AS BIGINT)))"
+            + md5_int_sql(
+                "concat(CAST(ok AS STRING), '-', CAST(ln AS STRING), '-', "
+                "CAST(w AS STRING), '-', CAST(j AS STRING))",
+                12,
+            )
+            + "))"
         ),
     )
     wrank = Window.partitionBy("flag").orderBy(
@@ -1259,8 +1239,7 @@ _EPOCH_SHARDS = 8
         SELECT doc_id, unnest(range({_EPOCH_N})) AS epoch FROM documents
     ), keyed AS (
         SELECT epoch, doc_id,
-               ('0x' || substr(md5('e' || epoch::VARCHAR || ':'
-                                   || doc_id::VARCHAR), 1, 12))::BIGINT
+               {md5_int_duck("'e' || epoch::VARCHAR || ':' || doc_id::VARCHAR", 12)}
                    AS okey
         FROM e
     ), placed AS (
@@ -1298,8 +1277,9 @@ def sample_epoch_shuffle(spark, sf_dir):
         F.col("epoch").cast("long").alias("epoch"),
         "doc_id",
         F.expr(
-            "CAST(conv(substr(md5(concat('e', CAST(epoch AS STRING), ':', "
-            "CAST(doc_id AS STRING))), 1, 12), 16, 10) AS BIGINT)"
+            md5_int_sql(
+                "concat('e', CAST(epoch AS STRING), ':', CAST(doc_id AS STRING))", 12
+            )
         ).alias("okey"),
     )
     keyed = keyed.withColumn(
@@ -1323,8 +1303,7 @@ _TSB_BUDGET = 1024
     oracle=f"""
     WITH keyed AS (
         SELECT doc_id, n_chars // 4 + 1 AS tokens,
-               ('0x' || substr(md5('e0:' || doc_id::VARCHAR), 1, 12))::BIGINT
-                   AS okey
+               {md5_int_duck("'e0:' || doc_id::VARCHAR", 12)} AS okey
         FROM documents
     ), placed AS (
         SELECT doc_id, tokens, okey,
@@ -1386,10 +1365,9 @@ def sample_token_stream_batches(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         (F.floor(F.col("n_chars") / 4) + 1).cast("long").alias("tokens"),
-        F.expr(
-            "CAST(conv(substr(md5(concat('e0:', CAST(doc_id AS STRING))), "
-            "1, 12), 16, 10) AS BIGINT)"
-        ).alias("okey"),
+        F.expr(md5_int_sql("concat('e0:', CAST(doc_id AS STRING))", 12)).alias(
+            "okey"
+        ),
     ).withColumn(
         "shard", F.pmod(F.col("okey"), F.lit(_EPOCH_SHARDS)).cast("long")
     )

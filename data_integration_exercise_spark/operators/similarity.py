@@ -20,6 +20,14 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import (
+    md5_bucket,
+    md5_bucket_duck,
+    md5_int_py,
+    milli,
+    milli_duck,
+    milli_py,
+)
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -102,12 +110,9 @@ def _lsh_plane(p: int) -> list[int]:
     rand(), integer dots stay exact)."""
     if p < N_PLANES:
         return HYPERPLANES[p]
-    import hashlib
-
+    # the parity of the whole digest is the parity of its last hex digit
     return [
-        1 if int(hashlib.md5(f"annpool:{p}:{i}".encode()).hexdigest(), 16) % 2 == 0
-        else -1
-        for i in range(DIM)
+        1 if md5_int_py(f"annpool:{p}:{i}", 1, 31) % 2 == 0 else -1 for i in range(DIM)
     ]
 
 
@@ -132,6 +137,13 @@ _LSH_POOL = N_PLANES + _lsh_geometry(10**18)[0] * _LSH_MAX_BITS
 
 def _sql_list(xs) -> str:
     return "[" + ", ".join(str(x) for x in xs) + "]"
+
+
+def _array_sql(items, elem: str = "bigint") -> str:
+    """Spark SQL array literal of the rendered ``items``. An empty one is
+    typed ``array<elem>``: an untyped ``array()`` is VOID, which zip_with
+    rejects when a driver-collected codebook came back empty."""
+    return f"array({', '.join(items)})" if items else f"CAST(array() AS array<{elem}>)"
 
 
 #: block count for exact pairwise ops — bounds any one task to a
@@ -571,9 +583,6 @@ _MMR_PROBES = HYPERPLANES[:5]
 _MMR_PN2 = [sum(x * x for x in p) for p in _MMR_PROBES]
 _MMR_CAND = 16  # relevance short-list per probe
 _MMR_K = 8  # diversified picks per probe
-_QUANT_MMR = (
-    "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
-)
 
 
 def _mmr_oracle() -> str:
@@ -584,7 +593,7 @@ def _mmr_oracle() -> str:
     steps = []
     for k in range(2, _MMR_K + 1):
         steps.append(f"""
-    s{k} AS (
+    s{k} AS MATERIALIZED (
         SELECT u.pid, list_append(u.chosen, u.vec_id) AS chosen,
                u.vec_id AS picked, {k} AS step, u.score AS mmr_score
         FROM (
@@ -609,9 +618,7 @@ def _mmr_oracle() -> str:
     return f"""
     WITH q AS (
         SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(floor(1000 * CAST(x AS DOUBLE) + 0.5) AS BIGINT))
-                   AS qv
+               {milli_duck()} AS qv
         FROM embeddings
     ), qn AS (
         SELECT vec_id, qv,
@@ -626,13 +633,13 @@ def _mmr_oracle() -> str:
                         * CAST(list_dot_product(e.qv, p.pv) AS BIGINT)
                   // (e.n2 * p.pn2)) AS rel
         FROM qn e CROSS JOIN probes p
-    ), cand AS (
+    ), cand AS MATERIALIZED (
         SELECT pid, vec_id, qv, n2, rel FROM (
             SELECT *, row_number() OVER (PARTITION BY pid
                           ORDER BY rel DESC, vec_id) AS rn
             FROM scored
         ) WHERE rn <= {_MMR_CAND}
-    ), psim AS (
+    ), psim AS MATERIALIZED (
         SELECT a.pid, a.vec_id AS va, b.vec_id AS vb,
                CASE WHEN CAST(list_dot_product(a.qv, b.qv) AS BIGINT) < 0
                     THEN -1 ELSE 1 END
@@ -641,7 +648,7 @@ def _mmr_oracle() -> str:
                   // (a.n2 * b.n2)) AS sim
         FROM cand a JOIN cand b
           ON a.pid = b.pid AND a.vec_id <> b.vec_id
-    ), s1 AS (
+    ), s1 AS MATERIALIZED (
         SELECT pid, [vec_id] AS chosen, vec_id AS picked, 1 AS step,
                7 * rel AS mmr_score
         FROM (SELECT pid, vec_id, rel,
@@ -681,7 +688,7 @@ def sim_mmr_diversify(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
         "vec_id",
-        F.expr(_QUANT_MMR).alias("qv"),
+        milli().alias("qv"),
     ).withColumn(
         "n2",
         F.aggregate(
@@ -762,7 +769,7 @@ def sim_mmr_diversify(spark, sf_dir):
 
 _RECALL_K = 100
 #: integer probe for the reference ranking: the 1e3-quantized QUERY_VEC
-_QVEC_I = [math.floor(x * 1000 + 0.5) for x in QUERY_VEC]
+_QVEC_I = [milli_py(x) for x in QUERY_VEC]
 _QVEC_I_N2 = sum(x * x for x in _QVEC_I)
 
 
@@ -771,9 +778,7 @@ _QVEC_I_N2 = sum(x * x for x in _QVEC_I)
     oracle=f"""
     WITH q AS (
         SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(floor(1000 * CAST(x AS DOUBLE) + 0.5) AS BIGINT))
-                   AS qv
+               {milli_duck()} AS qv
         FROM embeddings
     ), ref AS (
         SELECT vec_id FROM (
@@ -829,10 +834,7 @@ def sim_recall_eval(spark, sf_dir):
     100 TB: two scan-speed scoring passes + two TakeOrdered(k) partial
     top-ks + a k-row join."""
     e = load_table(spark, sf_dir, "embeddings")
-    qv = F.expr(
-        "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5)"
-        " AS BIGINT))"
-    )
+    qv = milli()
     probe = F.array(*[F.lit(int(x)).cast("long") for x in _QVEC_I])
     idot = lambda a, b: F.aggregate(  # noqa: E731
         F.zip_with(a, b, lambda x, y: x * y),
@@ -980,14 +982,15 @@ def _pq_parts(spark, sf_dir):
     def _cb_sql(table) -> str:
         """Nested literal: array over m of array over c of centroid arrays
         (ordered by c within each m, so the argmin index IS c)."""
-        outer = []
-        for m in range(8):
-            inner = ", ".join(
-                "array(" + ", ".join(f"{int(v)}L" for v in cent) + ")"
-                for _, cent in table[m]
-            )
-            outer.append(f"array({inner})")
-        return "array(" + ", ".join(outer) + ")"
+        return _array_sql(
+            [
+                _array_sql(
+                    [_array_sql([f"{int(v)}L" for v in cent]) for _, cent in table[m]],
+                    "array<bigint>",
+                )
+                for m in range(8)
+            ]
+        )
 
     def _assign_sql(table) -> str:
         """(d2, c) argmin of sv against its m's centroid list — one
@@ -1017,7 +1020,7 @@ def _pq_parts(spark, sf_dir):
     # identity 0..15 on this corpus, explicit for generality). Index order
     # is c-ascending, so argmin-by-(d2, index) == argmin-by-(d2, c).
     seed_ids = [c for c, _ in seed_table[0]]
-    seed_ids_lit = "array(" + ", ".join(f"{int(c)}L" for c in seed_ids) + ")"
+    seed_ids_lit = _array_sql([f"{int(c)}L" for c in seed_ids])
     asg1 = sub.select(
         "vec_id",
         "m",
@@ -1054,13 +1057,8 @@ def _pq_parts(spark, sf_dir):
     def _c_of(m_expr: str) -> str:
         """Map argmin INDEX back to centroid id via the per-m survivor
         list (identity when all 16 survive)."""
-        cs_lit = (
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(f"{int(c)}L" for c in cs_by_m[m]) + ")"
-                for m in range(8)
-            )
-            + ")"
+        cs_lit = _array_sql(
+            [_array_sql([f"{int(c)}L" for c in cs_by_m[m]]) for m in range(8)]
         )
         return f"element_at(element_at({cs_lit}, CAST(m AS INT) + 1), CAST({m_expr} AS INT) + 1)"
 
@@ -1473,9 +1471,7 @@ def _ann_graph_oracle() -> str:
     return f"""
     WITH q AS (
         SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(floor(1000 * CAST(x AS DOUBLE) + 0.5) AS BIGINT))
-                   AS qv
+               {milli_duck()} AS qv
         FROM embeddings
     ), geom AS (
         SELECT bits, {N_BANDS - BAND_BITS} + bits AS bands
@@ -1592,10 +1588,7 @@ def sim_ann_graph(spark, sf_dir):
     beyond one hop would repeat the expand join; one hop is the
     measured-sufficient depth here (recall pinned in tests)."""
     e = load_table(spark, sf_dir, "embeddings")
-    qv = F.expr(
-        "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5)"
-        " AS BIGINT))"
-    )
+    qv = milli()
     idot = lambda a, b: F.aggregate(  # noqa: E731
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0).cast("long"),
@@ -1767,10 +1760,10 @@ def sim_ann_graph(spark, sf_dir):
 
 @register(
     "sim_centroid_classify",
-    oracle="""
+    oracle=f"""
     WITH e0 AS (
         SELECT vec_id, label,
-               (('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 4))::BIGINT % 5)
+               {md5_bucket_duck("vec_id", 5)}
                    AS b,
                list_transform(embedding,
                    x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qa
@@ -1848,12 +1841,7 @@ def sim_centroid_classify(spark, sf_dir):
         .select(
             "vec_id",
             "label",
-            (
-                F.conv(
-                    F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4), 16, 10
-                ).cast("long")
-                % 5
-            ).alias("b"),
+            md5_bucket("vec_id", 5).alias("b"),
             F.expr(
                 "transform(embedding,"
                 " x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"

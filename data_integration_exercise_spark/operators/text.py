@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import md5_bucket, md5_bucket_duck, md5_int_duck, md5_int_sql
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -895,9 +896,9 @@ _WINNOW_MIN_SHARED = 5
         WHERE len(string_split(text, ' ')) >= {_WINNOW_K + _WINNOW_W - 1}
     ), kg AS (
         SELECT doc_id, n - {_WINNOW_K - 1} AS m, CAST(u.i AS BIGINT) AS p,
-               ('0x' || substr(md5('win|' ||
-                   array_to_string(toks[u.i:u.i + {_WINNOW_K - 1}], ' ')),
-                   1, 15))::BIGINT AS h
+               {md5_int_duck(
+                   f"'win|' || array_to_string(toks[u.i:u.i + {_WINNOW_K - 1}], ' ')",
+                   15)} AS h
         FROM t, unnest(range(1, n - {_WINNOW_K - 2})) AS u(i)
     ), win AS (
         SELECT doc_id, p - o.off AS j, h, p
@@ -941,9 +942,8 @@ def dedup_winnowing(spark, sf_dir):
     harr = F.expr(
         f"""
         transform(sequence(1, size(toks) - {_WINNOW_K - 1}), i ->
-            CAST(conv(substring(md5(concat('win|',
-                concat_ws(' ', slice(toks, i, {_WINNOW_K})))), 1, 15),
-                16, 10) AS BIGINT))
+            {md5_int_sql(
+                f"concat('win|', concat_ws(' ', slice(toks, i, {_WINNOW_K})))", 15)})
         """
     )
     kg = d.select(
@@ -1751,11 +1751,10 @@ def text_burstiness(spark, sf_dir):
 
 @register(
     "text_heaps_curve",
-    oracle="""
+    oracle=f"""
     WITH ranked AS (
         SELECT doc_id, text,
-               (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
-                % 10) + 1 AS decile
+               {md5_bucket_duck("doc_id", 10)} + 1 AS decile
         FROM documents
     ), tok AS (
         SELECT decile, unnest(string_split(text, ' ')) AS token FROM ranked
@@ -1807,12 +1806,7 @@ def text_heaps_curve(spark, sf_dir):
     ranked = d.select(
         "doc_id",
         "text",
-        (
-            F.expr(
-                "conv(substr(md5(CAST(doc_id AS STRING)), 1, 4), 16, 10) % 10"
-            )
-            + 1
-        )
+        (md5_bucket("doc_id", 10) + 1)
         .cast("long")
         .alias("decile"),
     )

@@ -27,6 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.encode import md5_int_duck, md5_int_sql
 from ..io import load_table, scope_tag, stage_dir, stage_once
 from ..registry_util import new_registry
 from ..schemas import CUSTOMER, TABLES
@@ -552,13 +553,12 @@ def sink_clustered(spark, sf_dir):
 
 @register(
     "sink_jsonl_shards",
-    oracle="""
+    oracle=f"""
     SELECT lang,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS total_chars,
-           bit_xor(('0x' || substr(md5(
-               CAST(doc_id AS VARCHAR) || '|' || text || '|' || source
-           ), 1, 15))::BIGINT) AS content_fp
+           bit_xor({md5_int_duck(
+               "CAST(doc_id AS VARCHAR) || '|' || text || '|' || source", 15)}) AS content_fp
     FROM documents
     GROUP BY lang
     """,
@@ -592,9 +592,9 @@ def sink_jsonl_shards(spark, sf_dir):
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),
         F.expr(
-            "bit_xor(CAST(conv(substring(md5("
-            "concat(CAST(doc_id AS STRING), '|', text, '|', source)"
-            "), 1, 15), 16, 10) AS BIGINT))"
+            "bit_xor("
+            + md5_int_sql("concat(CAST(doc_id AS STRING), '|', text, '|', source)", 15)
+            + ")"
         ).alias("content_fp"),
     )
 
@@ -1175,16 +1175,22 @@ def sink_idempotent_overwrite(spark, sf_dir):
 
 
 #: canonical row hash for the versioned-orders snapshots (the
-#: etl_table_fingerprint construction: 60-bit md5 prefix, integer cents)
+#: etl_table_fingerprint construction: 60-bit md5 prefix, integer cents),
+#: read by scan_time_travel and etl_reconcile_buckets
 _TT_ROW_EXPR = (
     "concat(CAST(o_orderkey AS STRING), '|', CAST(o_custkey AS STRING), "
     "'|', o_orderstatus, '|', CAST(price_cents AS STRING))"
+)
+_TT_FP_DUCK = md5_int_duck(
+    "CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR) "
+    "|| '|' || o_orderstatus || '|' || CAST(price_cents AS VARCHAR)",
+    15,
 )
 
 
 @register(
     "scan_time_travel",
-    oracle="""
+    oracle=f"""
     WITH v1 AS (
         SELECT o_orderkey, o_custkey, o_orderstatus,
                CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
@@ -1197,18 +1203,12 @@ _TT_ROW_EXPR = (
     ), s1 AS (
         SELECT CAST(1 AS BIGINT) AS version, CAST(count(*) AS BIGINT) AS n_rows,
                CAST(sum(price_cents) AS BIGINT) AS revenue_cents,
-               bit_xor(('0x' || substr(md5(
-                   CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR)
-                   || '|' || o_orderstatus || '|' || CAST(price_cents AS VARCHAR)
-               ), 1, 15))::BIGINT) AS fingerprint
+               bit_xor({_TT_FP_DUCK}) AS fingerprint
         FROM v1
     ), s2 AS (
         SELECT CAST(2 AS BIGINT), CAST(count(*) AS BIGINT),
                CAST(sum(price_cents) AS BIGINT),
-               bit_xor(('0x' || substr(md5(
-                   CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR)
-                   || '|' || o_orderstatus || '|' || CAST(price_cents AS VARCHAR)
-               ), 1, 15))::BIGINT)
+               bit_xor({_TT_FP_DUCK})
         FROM v2
     )
     SELECT * FROM s1 UNION ALL SELECT * FROM s2
@@ -1271,11 +1271,7 @@ def scan_time_travel(spark, sf_dir):
         summ = snap.agg(
             F.count("*").cast("long").alias("n_rows"),
             F.sum("price_cents").cast("long").alias("revenue_cents"),
-            F.expr(
-                "bit_xor(CAST(conv(substring(md5("
-                + _TT_ROW_EXPR
-                + "), 1, 15), 16, 10) AS BIGINT))"
-            ).alias("fingerprint"),
+            F.expr(f"bit_xor({md5_int_sql(_TT_ROW_EXPR, 15)})").alias("fingerprint"),
         ).select(
             F.lit(ver).cast("long").alias("version"),
             "n_rows",

@@ -35,6 +35,15 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.encode import (
+    md5_bucket,
+    md5_bucket_duck,
+    md5_int,
+    md5_int_duck,
+    md5_order_duck,
+    milli,
+    milli_duck,
+)
 from ..io import (
     canonicalize,
     load_table,
@@ -862,13 +871,11 @@ def _ann_ingest_oracle() -> str:
     """stream_ann_ingest's oracle: the base-split Lloyd training of
     sim_ann_append (same unrolled CTEs), then frozen-centroid assignment
     of EVERY vector and the per-list ingest dashboard."""
-    head = """
+    head = f"""
     WITH allq AS (
         SELECT vec_id,
-               (('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 4))::BIGINT
-                   % 10) AS m,
-               CAST(floor(1000 * unnest(embedding)::DOUBLE + 0.5) AS BIGINT)
-                   AS qv,
+               {md5_bucket_duck("vec_id", 10)} AS m,
+               unnest({milli_duck()}) AS qv,
                unnest(range(len(embedding))) AS pos
         FROM embeddings
     ), q AS (
@@ -876,10 +883,10 @@ def _ann_ingest_oracle() -> str:
     ), seeds AS (
         SELECT vec_id,
                row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1
+                   ORDER BY {md5_order_duck('vec_id')}) - 1
                    AS cluster
         FROM (SELECT DISTINCT vec_id FROM q)
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
+        ORDER BY {md5_order_duck('vec_id')} LIMIT 8
     ),
     c0 AS (
         SELECT s.cluster, q.pos, q.qv AS c FROM seeds s JOIN q USING (vec_id)
@@ -936,17 +943,13 @@ def stream_ann_ingest(spark, sf_dir):
     (list_id, vec) to the posting-list sink. Per-row cost is k·dim
     integer multiply-adds; state is zero; throughput scales with
     executors, not with index size."""
-    from ..operators.curation import _QUANT_SPARK, _lloyd_centroids
+    from ..operators.curation import _lloyd_centroids
+    from ..operators.similarity import _array_sql
 
     e = load_table(spark, sf_dir, "embeddings")
-    m = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4), 16, 10
-        ).cast("long")
-        % 10
-    )
+    m = md5_bucket("vec_id", 10)
     base = (
-        e.select("vec_id", "label", F.expr(_QUANT_SPARK).alias("qarr"), m.alias("m"))
+        e.select("vec_id", "label", milli().alias("qarr"), m.alias("m"))
         .filter(F.col("m") != 0)
         .drop("m")
         .localCheckpoint(eager=False)
@@ -958,16 +961,15 @@ def stream_ann_ingest(spark, sf_dir):
         ((r["cluster"], list(r["carr"])) for r in carr.collect()),
         key=lambda t: t[0],
     )
-    cents_sql = "array(" + ", ".join(
-        "array(" + ", ".join(f"{int(v)}L" for v in arr) + ")"
-        for _, arr in model
-    ) + ")"
-    clist_sql = "array(" + ", ".join(f"{int(c)}L" for c, _ in model) + ")"
+    cents_sql = _array_sql(
+        [_array_sql([f"{int(v)}L" for v in arr]) for _, arr in model], "array<bigint>"
+    )
+    clist_sql = _array_sql([f"{int(c)}L" for c, _ in model])
     k = len(model)
 
     s = _table_stream(spark, sf_dir, "embeddings")
     scored = s.select(
-        "vec_id", F.expr(_QUANT_SPARK).alias("_q")
+        "vec_id", milli().alias("_q")
     ).select(
         "vec_id",
         F.expr(
@@ -1017,7 +1019,7 @@ _QSK_STREAM_ORACLE = f"""
     WITH c AS (
         SELECT o_orderpriority AS pri, o_orderkey AS k,
                CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-               ('0x' || substr(md5(o_orderkey::VARCHAR), 1, 12))::BIGINT
+               {md5_int_duck("o_orderkey", 12)}
                    AS skey
         FROM orders
     ), samp AS (
@@ -1112,10 +1114,7 @@ def stream_quantile_ingest(spark, sf_dir):
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         ).withColumn(
             "skey",
-            F.expr(
-                "CAST(conv(substr(md5(CAST(k AS STRING)), 1, 12), 16, 10)"
-                " AS BIGINT)"
-            ),
+            md5_int("k", 12),
         )
         bs = batch_df.sparkSession
         prev = _latest_version(below=batch_id)

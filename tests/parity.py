@@ -10,42 +10,12 @@ from __future__ import annotations
 
 import datetime
 import decimal
-import os
 
 import numpy as np
 import pandas as pd
 
-import duckdb
-
 from data_integration_exercise_spark.registry import oracle_sql, queries
-from data_integration_exercise_spark.schemas import TABLES
-
-
-def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    # enable out-of-core spilling (in-memory DuckDB disables it by
-    # default) — the emulate_driver.py sweep lesson applies here too.
-    # Per-CONNECTION path under a PID-keyed parent (ADVICE r12 item 4):
-    # DuckDB spill filenames are not unique across instances, so both
-    # concurrent PROCESSES (parallel pytest, a sweep alongside tests) and
-    # concurrent connections within one process sharing a directory could
-    # corrupt each other's spill files; mkdtemp keys each connection to its
-    # own dir. The atexit sweep removes this process's whole parent even
-    # after an OOM-killed oracle stranded multi-GB spill files in it.
-    import atexit
-    import shutil
-    import tempfile
-
-    parent = f"/tmp/duck_spill/p{os.getpid()}"
-    os.makedirs(parent, exist_ok=True)
-    spill = tempfile.mkdtemp(dir=parent)
-    con.execute(f"SET temp_directory = '{spill}'")
-    atexit.register(shutil.rmtree, parent, ignore_errors=True)
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
+from tools.emulate_driver import duck_con
 
 
 def canon(pdf: pd.DataFrame) -> pd.DataFrame:

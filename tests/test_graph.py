@@ -427,13 +427,19 @@ def test_ppr_mass_bound_and_seed_dominance(spark):
         "agg_kmv_set_ops",
         "dedup_lsh_pr_eval",
         "events_window_funnel",
+        "sim_pq_quantize",
+        "sim_adc_search",
+        "sim_ndcg_eval",
+        "sim_ann_ivfadc",
+        "stream_ann_ingest",
     ],
 )
 def test_empty_input_matches_oracle(spark, tmp_path, key):
     """Degenerate input: on zero-row copies of every table every graph
     key (so every shared graph helper) meets empty edge sets, the
-    node-count and seed probes see no nodes, the watermark probe sees no max and the
-    IVF planner sees no queries; each key must return its oracle's answer
+    node-count and seed probes see no nodes, the watermark probe sees no max,
+    the IVF planner sees no queries and the PQ/IVF codebook probes collect no
+    centroids; each key must return its oracle's answer
     (empty, or NULL ratios) instead of failing on a driver-side probe or
     dividing by zero in an ANSI `div`. Staged copies of empty
     tables may hold no data file at all, so read-backs must not infer

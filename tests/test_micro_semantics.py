@@ -153,10 +153,10 @@ def test_hash_mod_sample_is_partitioning_invariant(spark):
     """The content-hash sample selects the same keys regardless of how the
     input is partitioned — the reproducibility property engine-native
     seeded sample() does NOT have across different partitionings."""
-    from data_integration_exercise_spark.operators.sampling import _bucket_spark
+    from data_integration_exercise_spark.functions.encode import md5_bucket
 
     df = spark.range(0, 1000).withColumnRenamed("id", "k")
     pick = lambda d: sorted(  # noqa: E731
-        r.k for r in d.filter(_bucket_spark("k", 10) == 0).collect()
+        r.k for r in d.filter(md5_bucket("k", 10) == 0).collect()
     )
     assert pick(df.repartition(1)) == pick(df.repartition(17, "k"))

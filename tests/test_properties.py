@@ -380,33 +380,47 @@ def test_poisson_thresholds_are_a_valid_cdf():
         assert abs(t - c * 65536) <= 1.0
 
 
-def test_openvocab_content_hash_cross_engine_hypothesis():
-    """dedup_minhash_openvocab's shingle key — the first 12 md5 hex digits
-    parsed as a 48-bit integer — must agree between Python's hashlib (the
-    ground truth both engines' md5 implements) and DuckDB's SQL form for
-    ANY token string, and stay inside [0, 2^48) so a*h+b < 2^52 is
-    BIGINT-exact in both engines. (The Spark side uses the same md5 RFC
-    and is covered end-to-end by the operator's hash-verified parity; this
-    pins the parsing convention itself under fuzzing.)"""
-    import hashlib
-
+def test_openvocab_content_hash_cross_engine_hypothesis(spark):
+    """The md5 integer (``functions/encode.py``) — hex digits
+    [start, start + n) of md5(text) — must agree between Python's hashlib
+    (the ground truth both engines' md5 implements), DuckDB's SQL form and
+    both Spark forms (Column and SQL text) for ANY string, at every width
+    and offset the engine reads: 2-digit bytes of the fake image digests,
+    4-digit buckets and Bloom positions, 12-digit (48-bit) shingle and
+    order keys, 15-digit (60-bit) fingerprints. Each value stays inside
+    [0, 16^n), so n <= 15 is BIGINT-exact in both engines. The Spark side
+    runs once over every generated string."""
     import duckdb
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
+    from data_integration_exercise_spark.functions.encode import (
+        md5_int,
+        md5_int_duck,
+        md5_int_py,
+        md5_int_sql,
+    )
+
+    widths = [(2, 0), (2, 2), (2, 4), (4, 0), (4, 4), (4, 8), (12, 0), (15, 0)]
     con = duckdb.connect()
+    duck_sql = "SELECT " + ", ".join(md5_int_duck("?", n, st_) for n, st_ in widths)
+    seen = {}
 
     @settings(max_examples=200, deadline=None)
     @given(st.text(min_size=0, max_size=40))
     def check(tok):
-        py = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:12], 16)
-        duck = con.execute(
-            "SELECT ('0x' || substr(md5(?), 1, 12))::BIGINT", [tok]
-        ).fetchone()[0]
-        assert py == duck
-        assert 0 <= py < 1 << 48
+        py = [md5_int_py(tok, n, st_) for n, st_ in widths]
+        assert list(con.execute(duck_sql, [tok] * len(widths)).fetchone()) == py
+        for (n, _), v in zip(widths, py):
+            assert 0 <= v < 16**n
+        seen[tok] = py
 
     check()
+    df = spark.createDataFrame([(t,) for t in seen], "t string")
+    cols = [md5_int("t", n, st_) for n, st_ in widths]
+    cols += [F.expr(md5_int_sql("t", n, st_)) for n, st_ in widths]
+    for row in df.select("t", *cols).collect():
+        assert list(row[1:]) == seen[row[0]] * 2, row[0]
 
 
 def test_bottomk_merge_algebra_hypothesis():

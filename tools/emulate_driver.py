@@ -31,11 +31,45 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
+
+from data_integration_exercise_spark.schemas import TABLES  # noqa: E402
+
 SF = os.environ.get("EMULATE_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+
+
+def duck_con(sf_dir: str):
+    """A DuckDB connection with one view per table of ``sf_dir``.
+
+    In-memory DuckDB disables out-of-core spilling by default (no temp
+    directory), so a heavy oracle late in a 384-key sweep can hit a hard
+    OutOfMemoryException that the same key in isolation never sees
+    (observed: graph_clustering_coefficient at sf0.1, green alone at
+    163 s, OOM in the full sweep). Each connection gets its own spill
+    directory under a PID-keyed parent: spill filenames are not unique
+    across DuckDB instances, so neither concurrent processes (parallel
+    pytest, a sweep alongside tests) nor concurrent connections in one
+    process may share one. The atexit sweep removes this process's parent
+    even after an OOM-killed oracle stranded multi-GB spill files in it.
+    """
+    import atexit
+    import shutil
+    import tempfile
+
+    import duckdb
+
+    con = duckdb.connect()
+    parent = f"/tmp/duck_spill/p{os.getpid()}"
+    os.makedirs(parent, exist_ok=True)
+    spill = tempfile.mkdtemp(dir=parent)
+    con.execute(f"SET temp_directory = '{spill}'")
+    atexit.register(shutil.rmtree, parent, ignore_errors=True)
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
 
 
 def _canon(df):
@@ -102,33 +136,7 @@ def main() -> int:
     ).getOrCreate()
     print("entry rows:", len(mod.entry(spark).collect()), flush=True)
 
-    import duckdb
-
-    con = duckdb.connect()
-    # In-memory DuckDB disables out-of-core spilling by default (no temp
-    # directory), so a heavy oracle late in a 384-key sweep can hit a hard
-    # OutOfMemoryException that the same key in isolation never sees
-    # (observed: graph_clustering_coefficient at sf0.1, green alone at
-    # 163 s, OOM in the full sweep). Give the sweep a spill directory so
-    # memory-heavy oracles degrade to disk instead of failing.
-    # Per-connection mkdtemp under a PID-keyed parent (ADVICE r12 item 4):
-    # spill filenames are not unique across DuckDB instances, so neither
-    # concurrent processes nor concurrent in-process connections may share
-    # a directory. The atexit sweep removes this process's parent even
-    # after an OOM-killed oracle stranded multi-GB spill files in it.
-    import atexit
-    import shutil
-    import tempfile
-
-    parent = f"/tmp/duck_spill/p{os.getpid()}"
-    os.makedirs(parent, exist_ok=True)
-    spill = tempfile.mkdtemp(dir=parent)
-    con.execute(f"SET temp_directory = '{spill}'")
-    atexit.register(shutil.rmtree, parent, ignore_errors=True)
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
+    con = duck_con(SF)
     qs, osql = mod.queries(), mod.oracle_sql()
     keys = sys.argv[1:] or list(qs)
     unknown = [k for k in keys if k not in qs]
