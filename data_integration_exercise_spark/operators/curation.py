@@ -31,10 +31,16 @@ from ..functions.encode import (
     md5_bucket_duck,
     md5_hex,
     md5_hex_duck,
-    md5_order,
-    md5_order_duck,
     milli,
     milli_duck,
+)
+from ..functions.vectors import (
+    centroid_ranks_duck,
+    lloyd_centroids,
+    lloyd_duck,
+    lloyd_trained_duck,
+    milli_rows_duck,
+    sq_l2,
 )
 from ..io import load_table
 from ..registry_util import new_registry
@@ -439,13 +445,8 @@ def sim_nearest_centroid(spark, sf_dir):
             F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
         ).alias("carr")
     )
-    dist = F.aggregate(
-        F.zip_with("qarr", "carr", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     scored = q.crossJoin(F.broadcast(carr)).select(
-        "vec_id", "label", "clabel", dist.alias("d2")
+        "vec_id", "label", "clabel", sq_l2("qarr", "carr").alias("d2")
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "clabel")
     return (
@@ -1235,11 +1236,7 @@ def dedup_semdedup(spark, sf_dir):
             F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
         ).alias("carr")
     )
-    d2 = F.aggregate(
-        F.zip_with("qv", "carr", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    d2 = sq_l2("qv", "carr")
     idot = F.aggregate(
         F.zip_with("qv", "qv", lambda a, b: a * b),
         F.lit(0).cast("long"),
@@ -1763,251 +1760,15 @@ def text_kl_source_drift(spark, sf_dir):
     )
 
 
-def _lloyd_unroll_ctes(prefix: str = "") -> str:
-    """The shared unrolled 3-iteration Lloyd CTE chain (d{i}/a{i}/c{i}
-    for i in 1..3), to be appended after a WITH-head that defines
-    `q` (vec_id, qv, pos) and the seed centroid table `c0`. This is the
-    ONE text every oracle that replays the trainer concatenates —
-    _kmeans_oracle, _ann_append_oracle, _ivf_geometry_oracle, streaming's
-    _ann_ingest_oracle, and (prefixed) _IVFADC_ORACLE — so the
-    cross-engine trajectory (md5 seed order, (d2, cluster) tie-break,
-    truncating-div centroid mean) can never fork between copies.
-
-    ``prefix`` renames every CTE (kq/kc0/kd1/…) so the chain can share a
-    WITH clause with other CTE families whose unprefixed q/a1 names would
-    collide (sim_ann_ivfadc next to _PQ_CODES_CTE); the prefixed base
-    table is re-aliased to `q` inside each CTE so the body text — and
-    therefore the replayed arithmetic — is the same string either way."""
-    p = prefix
-    qref = f"{p}q q" if p else "q"
-    parts = []
-    prev = f"{p}c0"
-    for i in (1, 2, 3):
-        parts.append(f"""
-    , {p}d{i} AS (
-        SELECT q.vec_id, {prev}.cluster,
-               CAST(sum((q.qv - {prev}.c) * (q.qv - {prev}.c)) AS BIGINT) AS d2
-        FROM {qref} JOIN {prev} ON q.pos = {prev}.pos
-        GROUP BY 1, 2
-    ), {p}a{i} AS (
-        SELECT vec_id, cluster FROM (
-            SELECT vec_id, cluster,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY d2, cluster) AS rn
-            FROM {p}d{i}) WHERE rn = 1
-    ), {p}c{i} AS (
-        SELECT {p}a{i}.cluster, q.pos,
-               CAST(sum(q.qv) // count(*) AS BIGINT) AS c
-        FROM {qref} JOIN {p}a{i} USING (vec_id) GROUP BY 1, 2
-    )""")
-        prev = f"{p}c{i}"
-    return "".join(parts)
-
-
-def _lloyd_centroids(q, iters: int = 3):
-    """Fixed-iteration quantized-Lloyd training (k=8) over a
-    (vec_id, label, qarr) frame — the shared trainer behind
-    sim_kmeans_lloyd and sim_ann_append. Seeds are the 8 smallest
-    md5(vec_id) rows of THIS frame; every step is integer-exact with
-    (d2, cluster) argmin tie-breaks, so the trajectory is identical
-    across engines and partitionings. Returns ((cluster, carr) frame,
-    assign) where the zero-argument closure assign() labels q's vectors
-    with their nearest trained centroid and exact integer d2; its
-    ``n_total`` attribute is |q| from the last training rollup (absent
-    when ``iters == 0``).
-
-    Round-14 shape: the k·dim centroid table lives ON THE DRIVER between
-    iterations (k = 8 fixed — O(1) state at any corpus size, the standard
-    distributed-k-means layout, cf. Spark MLlib KMeans), embedded into
-    each pass as literal arrays. Per iteration that is ONE job — a
-    map-only literal-argmin assign + one (cluster, pos) partial-agg
-    rollup collected as 512 rows — where the frame-resident trainer paid
-    a broadcast build, a vec_id window argmin (shuffle + sort), a q⋈assign
-    join and an eager 8-row checkpoint per iteration (measured: the four
-    consumer keys dropped 3.3/2.8/1.9/1.5 s → see OPTIMIZATION_r14.md).
-    Every rule is unchanged and integer-exact: argmin tie-breaks to the
-    lowest cluster via array_position-of-min (first index), means are
-    truncating floor-div, so the trajectory is bit-identical to the
-    unrolled-CTE oracles. The literal expressions are built as ONE SQL
-    string per pass, not k·dim F.lit() Columns (the sim_ann_graph py4j
-    chatter lesson)."""
-    spark = q.sparkSession
-
-    def _arr_sql(vals) -> str:
-        return "array(" + ", ".join(f"{int(v)}L" for v in vals) + ")"
-
-    def _d2s_sql(cents) -> str:
-        """array of integer squared-L2 distances to each centroid, cluster
-        order — argmin = array_position of the min (first index wins ties,
-        i.e. the lowest cluster id, the pinned tie-break)."""
-        terms = ", ".join(
-            f"aggregate(zip_with(qarr, {_arr_sql(c)}, (a, b) -> (a - b) * (a - b)),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            for c in cents
-        )
-        return f"array({terms})"
-
-    # seeds: the 8 smallest (md5(vec_id), vec_id) rows, WITH their vectors —
-    # one TakeOrdered job (the blessed bounded-probe pattern; 8·dim ints)
-    seed_rows = (
-        q.select("vec_id", "qarr")
-        .orderBy(*md5_order("vec_id"))
-        .limit(8)
-        .collect()
-    )
-    cents = [list(r["qarr"]) for r in seed_rows]
-    # Original cluster ids, carried through every iteration: if a cluster
-    # loses all vectors the SURVIVORS keep their ids (the oracle's unrolled
-    # CTEs simply have no c{i} rows for the empty cluster, so later argmins
-    # tie-break against ORIGINAL ids) — renumbering survivors by list index
-    # would silently fork labels and the whole trajectory (the _pq_parts
-    # cs_by_m discipline; ADVICE r14 item 1).
-    cent_ids = list(range(len(cents)))
-
-    def assign_with(cents, cent_ids):
-        if not cents:  # empty input frame → empty assignment, like the
-            return q.select(  # old crossJoin-with-empty-centroids shape
-                "vec_id", "label", "qarr",
-                F.lit(None).cast("long").alias("cluster"),
-                F.lit(None).cast("long").alias("d2"),
-            ).filter(F.lit(False))
-        # (d2, cluster) argmin in ONE pass over the literal table: array_min
-        # over (d2, id) structs — struct order is lexicographic, so ties go
-        # to the lowest cluster ID (the pinned tie-break; cent_ids is
-        # ascending, so index order = id order and the ORIGINAL id rides the
-        # struct directly — survivors keep their ids when a cluster empties).
-        # The d2s array is evaluated once inside the transform; only the
-        # 2-field best struct is referenced twice (HOFs are interpreted, so a
-        # multi-referenced heavy fold would re-run per reference — the
-        # sim_ann_lsh lesson).
-        ids_sql = "array(" + ", ".join(f"{int(c)}L" for c in cent_ids) + ")"
-        best = (
-            f"array_min(transform({_d2s_sql(cents)}, "
-            f"(x, i) -> struct(x AS d, element_at({ids_sql}, i + 1) AS c)))"
-        )
-        # cluster is coalesce-pinned NON-NULLABLE (value-identical: the
-        # argmin over a non-empty literal table is never null on real
-        # rows): downstream equi-joins on `cluster` otherwise make
-        # InferFiltersFromConstraints add isnotnull(cluster), and filter
-        # pushdown inlines the alias — the ENTIRE literal argmin
-        # re-evaluates per row inside that inferred filter (measured in
-        # sim_ann_ivfadc's plan as a 4.4k-char Filter condition).
-        return q.select(
-            "vec_id", "label", "qarr", F.expr(best).alias("_best")
-        ).select(
-            "vec_id",
-            "label",
-            "qarr",
-            F.coalesce(F.col("_best.c"), F.lit(-1)).alias("cluster"),
-            F.col("_best.d").alias("d2"),
-        )
-
-    dim = len(cents[0]) if cents else 0
-    for _ in range(iters):
-        cent_rows = (
-            assign_with(cents, cent_ids)
-            # posexplode_OUTER + pos-notnull ≡ inner posexplode exactly,
-            # minus the inferred size filter that re-inlines qarr's
-            # defining quantization per row (pipeline._band_signatures)
-            .select(
-                "cluster", F.posexplode_outer(F.col("qarr")).alias("pos", "qv")
-            )
-            .filter(F.col("pos").isNotNull())
-            .groupBy("cluster", "pos")
-            .agg(
-                F.expr("sum(qv) div count(*)").alias("c"),
-                F.count("*").alias("n"),
-            )
-            .collect()
-        )
-        by_cluster = {}
-        for r in cent_rows:
-            by_cluster.setdefault(int(r["cluster"]), {})[int(r["pos"])] = int(r["c"])
-        # every vector contributes one pos-0 row per iteration, so the
-        # pos-0 counts sum to the corpus cardinality — consumers that need
-        # |q| (plan_ivf_probe_geometry's block sizing) read it from here
-        # instead of paying a separate count() job (VERDICT r14 item 8)
-        n_total = sum(int(r["n"]) for r in cent_rows if int(r["pos"]) == 0)
-        cent_ids = sorted(by_cluster)  # survivors keep their ORIGINAL ids
-        cents = [[by_cluster[k][p] for p in range(dim)] for k in cent_ids]
-
-    carr = spark.createDataFrame(
-        list(zip(cent_ids, cents)), "cluster long, carr array<long>"
-    )
-
-    def assign():
-        # no parameter: the trained driver-side literals drive the
-        # computation; the former `assign(centroids)` silently ignored its
-        # argument, which was a wrong-results trap for any caller passing a
-        # different centroid frame (ADVICE r14 item 2)
-        return assign_with(cents, cent_ids)
-
-    # corpus cardinality, free from the last training rollup; left unset
-    # when iters == 0 never ran one, so reading it fails loudly instead of
-    # passing a silent 0 on
-    if iters:
-        assign.n_total = n_total
-
-    return carr, assign
-
-
 def _kmeans_oracle() -> str:
-    """Unrolled 3-iteration Lloyd in DuckDB CTEs (same fixed-point rules)."""
-    parts = [
-        f"""
-    WITH q AS (
-        SELECT vec_id,
-               unnest({milli_duck()}) AS qv,
-               unnest(range(len(embedding))) AS pos
-        FROM embeddings
-    ), labels AS (SELECT vec_id, label FROM embeddings),
-    seeds AS (
-        SELECT vec_id,
-               row_number() OVER (
-                   ORDER BY {md5_order_duck('vec_id')}) - 1
-                   AS cluster
-        FROM embeddings
-        ORDER BY {md5_order_duck('vec_id')} LIMIT 8
-    ),
-    c0 AS (
-        SELECT s.cluster, q.pos, q.qv AS c FROM seeds s JOIN q USING (vec_id)
-    )"""
-    ]
-    prev = "c0"
-    for i in (1, 2, 3):
-        parts.append(f"""
-    , d{i} AS (
-        SELECT q.vec_id, {prev}.cluster,
-               CAST(sum((q.qv - {prev}.c) * (q.qv - {prev}.c)) AS BIGINT) AS d2
-        FROM q JOIN {prev} ON q.pos = {prev}.pos
-        GROUP BY 1, 2
-    ), a{i} AS (
-        SELECT vec_id, cluster FROM (
-            SELECT vec_id, cluster,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY d2, cluster) AS rn
-            FROM d{i}) WHERE rn = 1
-    ), c{i} AS (
-        SELECT a{i}.cluster, q.pos,
-               CAST(sum(q.qv) // count(*) AS BIGINT) AS c
-        FROM q JOIN a{i} USING (vec_id) GROUP BY 1, 2
-    )""")
-        prev = f"c{i}"
-    parts.append("""
-    , dF AS (
-        SELECT q.vec_id, c3.cluster,
-               CAST(sum((q.qv - c3.c) * (q.qv - c3.c)) AS BIGINT) AS d2
-        FROM q JOIN c3 ON q.pos = c3.pos
-        GROUP BY 1, 2
-    ), aF AS (
-        SELECT vec_id, cluster, d2 FROM (
-            SELECT vec_id, cluster, d2,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY d2, cluster) AS rn
-            FROM dF) WHERE rn = 1
-    ), lab AS (
-        SELECT a.cluster, l.label, CAST(count(*) AS BIGINT) AS n
-        FROM aF a JOIN labels l USING (vec_id) GROUP BY 1, 2
+    """sim_kmeans_lloyd's oracle: the unrolled Lloyd over every vector, its
+    final E-step and the per-cluster readout."""
+    return f"""
+    WITH {lloyd_duck()}
+    , {centroid_ranks_duck("rF")}
+    , lab AS (
+        SELECT r.cluster, e.label, CAST(count(*) AS BIGINT) AS n
+        FROM rF r JOIN embeddings e USING (vec_id) WHERE r.rn = 1 GROUP BY 1, 2
     ), maj AS (
         SELECT cluster, label AS majority_label, n AS n_majority FROM (
             SELECT cluster, label, n,
@@ -2020,68 +1781,33 @@ def _kmeans_oracle() -> str:
            CAST(sum(a.d2) AS BIGINT) AS inertia_q,
            any_value(m.majority_label) AS majority_label,
            round(any_value(m.n_majority) * 1.0 / count(*), 4) AS purity
-    FROM aF a JOIN maj m ON a.cluster = m.cluster
-    GROUP BY 1""")
-    return "".join(parts)
+    FROM rF a JOIN maj m ON a.cluster = m.cluster
+    WHERE a.rn = 1
+    GROUP BY 1"""
 
 
 def _ann_append_oracle() -> str:
-    """sim_ann_append's oracle: train the 8-centroid index on the ~90%
-    hash-split BASE (the same unrolled 3-iteration Lloyd as
-    _kmeans_oracle, seeds from the base only), then assign the ~10% NEW
-    batch to the frozen final centroids and report per-list occupancy,
-    growth, appended inertia, and the imbalance flag."""
-    head = f"""
-    WITH allq AS (
-        SELECT vec_id,
-               {md5_bucket_duck("vec_id", 10)} AS m,
-               unnest({milli_duck()}) AS qv,
-               unnest(range(len(embedding))) AS pos
-        FROM embeddings
-    ), q AS (
-        SELECT vec_id, qv, pos FROM allq WHERE m <> 0
-    ), newq AS (
-        SELECT vec_id, qv, pos FROM allq WHERE m = 0
-    ), seeds AS (
-        SELECT vec_id,
-               row_number() OVER (
-                   ORDER BY {md5_order_duck('vec_id')}) - 1
-                   AS cluster
-        FROM (SELECT DISTINCT vec_id FROM q)
-        ORDER BY {md5_order_duck('vec_id')} LIMIT 8
-    ),
-    c0 AS (
-        SELECT s.cluster, q.pos, q.qv AS c FROM seeds s JOIN q USING (vec_id)
-    )"""
-    parts = [head, _lloyd_unroll_ctes()]
-    parts.append("""
-    , dB AS (
-        SELECT q.vec_id, c3.cluster,
-               CAST(sum((q.qv - c3.c) * (q.qv - c3.c)) AS BIGINT) AS d2
-        FROM q JOIN c3 ON q.pos = c3.pos GROUP BY 1, 2
-    ), base_occ AS (
-        SELECT cluster, CAST(count(*) AS BIGINT) AS n_base FROM (
-            SELECT vec_id, cluster,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY d2, cluster) AS rn
-            FROM dB) WHERE rn = 1 GROUP BY cluster
-    ), dN AS (
-        SELECT n.vec_id, c3.cluster,
-               CAST(sum((n.qv - c3.c) * (n.qv - c3.c)) AS BIGINT) AS d2
-        FROM newq n JOIN c3 ON n.pos = c3.pos GROUP BY 1, 2
-    ), new_assign AS (
-        SELECT vec_id, cluster, d2 FROM (
-            SELECT vec_id, cluster, d2,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY d2, cluster) AS rn
-            FROM dN) WHERE rn = 1
-    ), new_occ AS (
+    """sim_ann_append's oracle: train the index on the ~90% hash-split BASE
+    (seeds from the base only), then assign the ~10% NEW batch to the
+    frozen trained centroids and report per-list occupancy, growth,
+    appended inertia, and the imbalance flag."""
+    m = md5_bucket_duck("vec_id", 10)
+    return f"""
+    WITH {lloyd_duck(split=f"{m} <> 0")}
+    , newq AS (
+        {milli_rows_duck(f"{m} = 0")}
+    ), {centroid_ranks_duck("rB")}
+    , base_occ AS (
+        SELECT cluster, CAST(count(*) AS BIGINT) AS n_base
+        FROM rB WHERE rn = 1 GROUP BY cluster
+    ), {centroid_ranks_duck("rN", "newq")}
+    , new_occ AS (
         SELECT cluster, CAST(count(*) AS BIGINT) AS n_new,
                CAST(sum(d2) AS BIGINT) AS new_inertia_q
-        FROM new_assign GROUP BY cluster
+        FROM rN WHERE rn = 1 GROUP BY cluster
     ), tot AS (
         SELECT CAST((SELECT sum(n_base) FROM base_occ) AS BIGINT) AS tb,
-               CAST((SELECT count(*) FROM new_assign) AS BIGINT) AS tn
+               CAST((SELECT count(*) FROM rN WHERE rn = 1) AS BIGINT) AS tn
     )
     SELECT b.cluster AS cluster_id,
            b.n_base,
@@ -2093,8 +1819,7 @@ def _ann_append_oracle() -> str:
                           > 2 * (t.tb + t.tn)
                      THEN 1 ELSE 0 END AS BIGINT) AS needs_split
     FROM base_occ b LEFT JOIN new_occ n ON b.cluster = n.cluster
-    CROSS JOIN tot t""")
-    return "".join(parts)
+    CROSS JOIN tot t"""
 
 
 @register("sim_ann_append", oracle=_ann_append_oracle())
@@ -2102,7 +1827,7 @@ def sim_ann_append(spark, sf_dir):
     """Incremental ANN index maintenance — the production 'append to a
     trained IVF index without reclustering' path the batch family
     (sim_ann_ivf / sim_kmeans_lloyd) points to. The 8-centroid index is
-    trained by the fixed 3-iteration quantized Lloyd (_lloyd_centroids)
+    trained by the fixed 3-iteration quantized Lloyd (vectors.lloyd_centroids)
     on the ~90% BASE hash split only (split = md5(vec_id) mod 10, the
     sampling.py discipline — deterministic, reproducible, no rand()); the
     ~10% NEW batch is then assigned to the FROZEN final centroids. The
@@ -2131,21 +1856,16 @@ def sim_ann_append(spark, sf_dir):
     base = allq.filter(F.col("m") != 0).drop("m").localCheckpoint(eager=False)
     newb = allq.filter(F.col("m") == 0).drop("m")
 
-    carr, assign_base = _lloyd_centroids(base, iters=3)
+    model = lloyd_centroids(base)
     base_occ = (
-        assign_base()
+        model.assign()
         .groupBy("cluster")
         .agg(F.count("*").cast("long").alias("n_base"))
     )
 
     # The append path proper: frozen centroids, narrow pass over the batch.
-    d2 = F.aggregate(
-        F.zip_with("qarr", "carr", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = newb.crossJoin(F.broadcast(carr)).select(
-        "vec_id", "cluster", d2.alias("d2")
+    scored = newb.crossJoin(F.broadcast(model.frame())).select(
+        "vec_id", "cluster", sq_l2("qarr", "carr").alias("d2")
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "cluster")
     new_assign = (
@@ -2184,64 +1904,16 @@ def sim_ann_append(spark, sf_dir):
     )
 
 
-def _coarse_lloyd_cte() -> str:
-    """The _kmeans_oracle CTE chain with k-prefixed names (kq, kseeds,
-    kc0..kc3, kd1..kd3, ka1..ka3, kdF, kaF), so it can share one WITH
-    clause with _PQ_CODES_CTE (whose unprefixed q/seed/a1 names would
-    collide). Head (quantization + md5-ranked seeds) and final-E-step
-    tail here; the 3 unrolled Lloyd iterations come from the ONE shared
-    generator ``_lloyd_unroll_ctes("k")`` (round-13 review finding: a
-    hand-copied chain could silently drift from the trainer every other
-    oracle replays)."""
-    head = f"""kq AS (
-        SELECT vec_id,
-               unnest({milli_duck()}) AS qv,
-               unnest(range(len(embedding))) AS pos
-        FROM embeddings
-    ), kseeds AS (
-        SELECT vec_id,
-               row_number() OVER (
-                   ORDER BY {md5_order_duck('vec_id')}) - 1
-                   AS cluster
-        FROM embeddings
-        ORDER BY {md5_order_duck('vec_id')} LIMIT 8
-    ),
-    kc0 AS (
-        SELECT s.cluster, q.pos, q.qv AS c FROM kseeds s JOIN kq q USING (vec_id)
-    )"""
-    tail = """
-    , kdF AS (
-        SELECT q.vec_id, kc3.cluster,
-               CAST(sum((q.qv - kc3.c) * (q.qv - kc3.c)) AS BIGINT) AS d2
-        FROM kq q JOIN kc3 ON q.pos = kc3.pos
-        GROUP BY 1, 2
-    ), kaF AS (
-        SELECT vec_id, cluster FROM (
-            SELECT vec_id, cluster,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY d2, cluster) AS rn
-            FROM kdF) WHERE rn = 1
-    )"""
-    return head + _lloyd_unroll_ctes("k") + tail
-
-
+#: the trainer's CTEs carry a "k" prefix: _PQ_CODES_CTE already names q
 _IVFADC_ORACLE = f"""
-    WITH {_PQ_CODES_CTE}, {_coarse_lloyd_cte()}, kdP AS (
-        SELECT q.vec_id, kc3.cluster,
-               CAST(sum((q.qv - kc3.c) * (q.qv - kc3.c)) AS BIGINT) AS d2
-        FROM kq q JOIN kc3 ON q.pos = kc3.pos
-        WHERE q.vec_id < 5
-        GROUP BY 1, 2
-    ), kprobe AS (
-        SELECT vec_id AS probe_id, cluster FROM (
-            SELECT vec_id, cluster,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY d2, cluster) AS rn
-            FROM kdP) WHERE rn <= 3
+    WITH {_PQ_CODES_CTE}, {lloyd_duck(prefix="k")}
+    , {centroid_ranks_duck("krF", "kq", lloyd_trained_duck("k"))}
+    , kprobe AS (
+        SELECT vec_id AS probe_id, cluster FROM krF WHERE vec_id < 5 AND rn <= 3
     ), cand AS (
         SELECT p.probe_id, a.vec_id
-        FROM kprobe p JOIN kaF a USING (cluster)
-        WHERE a.vec_id != p.probe_id
+        FROM kprobe p JOIN krF a USING (cluster)
+        WHERE a.rn = 1 AND a.vec_id != p.probe_id
     ), {_PQ_ADC_CTE}, adc AS (
         SELECT c.probe_id, c.vec_id, CAST(sum(t.d2) AS BIGINT) AS adc_d2
         FROM cand c
@@ -2261,7 +1933,7 @@ _IVFADC_ORACLE = f"""
 def sim_ann_ivfadc(spark, sf_dir):
     """IVF + PQ/ADC composed — the FAISS IVFADC architecture, THE layout
     a billion-vector production index actually ships: a coarse quantizer
-    (the 8-centroid fixed-3-iteration integer Lloyd, _lloyd_centroids —
+    (the 8-centroid fixed-3-iteration integer Lloyd, vectors.lloyd_centroids —
     shared with sim_kmeans_lloyd / sim_ann_append so trainer and index
     cannot drift) partitions the corpus into inverted lists; each of the
     5 probes ranks the coarse centroids and scans only its nprobe=3
@@ -2282,18 +1954,17 @@ def sim_ann_ivfadc(spark, sf_dir):
     q = e.select(
         "vec_id", "label", milli().alias("qarr")
     ).localCheckpoint(eager=False)
-    carr, assign = _lloyd_centroids(q, iters=3)
-    lists = assign().select("vec_id", "cluster")
-    d2 = F.aggregate(
-        F.zip_with("qarr", "carr", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    model = lloyd_centroids(q)
+    lists = model.assign().select("vec_id", "cluster")
     wp = Window.partitionBy("probe_id").orderBy("d2", "cluster")
     probe_lists = (
         q.filter(F.col("vec_id") < 5)
-        .crossJoin(F.broadcast(carr))
-        .select(F.col("vec_id").alias("probe_id"), "cluster", d2.alias("d2"))
+        .crossJoin(F.broadcast(model.frame()))
+        .select(
+            F.col("vec_id").alias("probe_id"),
+            "cluster",
+            sq_l2("qarr", "carr").alias("d2"),
+        )
         .withColumn("rn", F.row_number().over(wp))
         .filter(F.col("rn") <= 3)
         .select("probe_id", "cluster")
@@ -2313,10 +1984,7 @@ def sim_ann_ivfadc(spark, sf_dir):
         "probe_id",
         "m",
         "c",
-        F.expr(
-            """aggregate(zip_with(pv, centroid, (a, b) -> (a - b) * (a - b)),
-                         0L, (acc, x) -> acc + x)"""
-        ).alias("td2"),
+        sq_l2("pv", "centroid").alias("td2"),
     )
     adc = (
         cand.join(best.drop("d2"), "vec_id")
@@ -2374,11 +2042,7 @@ def sim_kmeans_lloyd(spark, sf_dir):
         "vec_id", "label", milli().alias("qarr")
     ).localCheckpoint(eager=False)
 
-    # training extracted to _lloyd_centroids in round 11 (shared with
-    # sim_ann_append) — the computation is token-identical to the inlined
-    # round-10 body; emulator hash equality re-confirmed at 3 scales.
-    carr, assign = _lloyd_centroids(q, iters=3)
-    final = assign()
+    final = lloyd_centroids(q).assign()
     lab = final.groupBy("cluster", "label").agg(F.count("*").alias("n"))
     w_maj = Window.partitionBy("cluster").orderBy(F.col("n").desc(), F.col("label").asc())
     maj = (
@@ -2406,48 +2070,19 @@ def sim_kmeans_lloyd(spark, sf_dir):
 
 
 def _ivf_geometry_oracle() -> str:
-    """plan_ivf_probe_geometry's oracle: the same unrolled 3-iteration
-    Lloyd as _kmeans_oracle (full-corpus training), then the nprobe
-    sweep — centroid ranks per sampled query, exact top-10 truth, and
-    the cumulative scanned-rows / recall readout per probe count."""
-    head = f"""
-    WITH q AS (
-        SELECT vec_id,
-               unnest({milli_duck()}) AS qv,
-               unnest(range(len(embedding))) AS pos
-        FROM embeddings
-    ), seeds AS (
-        SELECT vec_id,
-               row_number() OVER (
-                   ORDER BY {md5_order_duck('vec_id')}) - 1
-                   AS cluster
-        FROM embeddings
-        ORDER BY {md5_order_duck('vec_id')} LIMIT 8
-    ),
-    c0 AS (
-        SELECT s.cluster, q.pos, q.qv AS c FROM seeds s JOIN q USING (vec_id)
-    )"""
-    parts = [head, _lloyd_unroll_ctes()]
-    parts.append("""
-    , dF AS (
-        SELECT q.vec_id, c3.cluster,
-               CAST(sum((q.qv - c3.c) * (q.qv - c3.c)) AS BIGINT) AS d2
-        FROM q JOIN c3 ON q.pos = c3.pos GROUP BY 1, 2
-    ), aF AS (
-        SELECT vec_id, cluster FROM (
-            SELECT vec_id, cluster,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY d2, cluster) AS rn
-            FROM dF) WHERE rn = 1
-    ), lists AS (
+    """plan_ivf_probe_geometry's oracle: the unrolled Lloyd over every
+    vector, then the nprobe sweep — centroid ranks per sampled query, exact
+    top-10 truth, and the cumulative scanned-rows / recall readout per
+    probe count."""
+    return f"""
+    WITH {lloyd_duck()}
+    , {centroid_ranks_duck("rF")}
+    , lists AS (
         SELECT cluster, CAST(count(*) AS BIGINT) AS list_n
-        FROM aF GROUP BY cluster
+        FROM rF WHERE rn = 1 GROUP BY cluster
     ), crank AS (
-        SELECT vec_id AS qid, cluster,
-               CAST(row_number() OVER (PARTITION BY vec_id
-                                       ORDER BY d2, cluster) AS BIGINT)
-                   AS crank
-        FROM dF WHERE vec_id % 7 = 0
+        SELECT vec_id AS qid, cluster, CAST(rn AS BIGINT) AS crank
+        FROM rF WHERE vec_id % 7 = 0
     ), tdist AS (
         SELECT s.vec_id AS qid, t.vec_id AS nb,
                CAST(sum((t.qv - s.qv) * (t.qv - s.qv)) AS BIGINT) AS d2
@@ -2463,7 +2098,7 @@ def _ivf_geometry_oracle() -> str:
     ), tr AS (
         SELECT t.qid, c.crank
         FROM truth t
-        JOIN aF a ON t.nb = a.vec_id
+        JOIN rF a ON t.nb = a.vec_id AND a.rn = 1
         JOIN crank c ON c.qid = t.qid AND c.cluster = a.cluster
     ), nq AS (
         SELECT CAST(count(DISTINCT vec_id) AS BIGINT) AS n_queries
@@ -2499,8 +2134,7 @@ def _ivf_geometry_oracle() -> str:
     FROM probes p
     LEFT JOIN sc ON sc.nprobe = p.nprobe
     LEFT JOIN ht ON ht.nprobe = p.nprobe
-    CROSS JOIN nq CROSS JOIN nn""")
-    return "".join(parts)
+    CROSS JOIN nq CROSS JOIN nn"""
 
 
 @register("plan_ivf_probe_geometry", oracle=_ivf_geometry_oracle())
@@ -2508,7 +2142,7 @@ def plan_ivf_probe_geometry(spark, sf_dir):
     """IVF probe-count planner (Jegou/Douze/Schmid, TPAMI 2011 — the
     inverted-file coarse quantizer every IVF/IVFADC deployment tunes):
     for each nprobe in 1..8 over the 8-list index trained by the shared
-    fixed-3-iteration quantized Lloyd (_lloyd_centroids — the exact
+    fixed-3-iteration quantized Lloyd (vectors.lloyd_centroids — the exact
     trajectory sim_kmeans_lloyd and sim_ann_append hash-verify), report
     the two numbers the knob trades off: the fraction of the corpus an
     nprobe-list search scans, and recall@10 against the exact
@@ -2539,18 +2173,13 @@ def plan_ivf_probe_geometry(spark, sf_dir):
     q = e.select(
         "vec_id", "label", milli().alias("qarr")
     ).localCheckpoint(eager=False)
-    carr, _assign = _lloyd_centroids(q, iters=3)
+    model = lloyd_centroids(q)
 
-    d2 = F.aggregate(
-        F.zip_with("qarr", "carr", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    # dF: every vector x all 8 centroids — feeds both the final
+    # every vector x all 8 centroids — feeds both the final
     # assignment (argmin) and the query-side centroid ranking
     scored = (
-        q.crossJoin(F.broadcast(carr))
-        .select("vec_id", "cluster", d2.alias("d2"))
+        q.crossJoin(F.broadcast(model.frame()))
+        .select("vec_id", "cluster", sq_l2("qarr", "carr").alias("d2"))
         .localCheckpoint(eager=False)
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "cluster")
@@ -2582,10 +2211,9 @@ def plan_ivf_probe_geometry(spark, sf_dir):
     qs = q.filter(F.col("vec_id") % 7 == 0).select(
         F.col("vec_id").alias("qid"), F.col("qarr").alias("arr")
     )
-    # corpus cardinality read from the trainer's last rollup (every vector
-    # contributes one pos-0 row per Lloyd iteration) — one fewer sequential
-    # driver job than the former q.count() probe (VERDICT r14 item 8)
-    n_corpus_rows = _assign.n_total
+    # corpus cardinality read from the trainer's last rollup: one fewer
+    # sequential driver job than a q.count() probe
+    n_corpus_rows = model.n_total
     n_blocks = max(1, -(-n_corpus_rows // ROWS_PER_BLOCK_TASK))
     corp = q.select(
         F.col("vec_id").alias("qid"),

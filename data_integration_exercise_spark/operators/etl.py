@@ -32,7 +32,12 @@ from ..functions.encode import (
 )
 from ..io import load_table, stage_dir, stage_once
 from ..registry_util import new_registry
-from ..sources.connectors import _TT_FP_DUCK, _TT_ROW_EXPR
+from ..sources.connectors import (
+    _TT_FP_DUCK,
+    _TT_ROW_EXPR,
+    _TT_VERSIONS_DUCK,
+    _tt_versions,
+)
 
 QUERIES, ORACLES, register = new_registry()
 
@@ -904,16 +909,7 @@ def etl_data_vault(spark, sf_dir):
 @register(
     "etl_reconcile_buckets",
     oracle=f"""
-    WITH v1 AS (
-        SELECT o_orderkey, o_custkey, o_orderstatus,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
-        FROM orders
-    ), v2 AS (
-        SELECT o_orderkey, o_custkey, o_orderstatus,
-               price_cents + CASE WHEN o_orderkey % 11 = 0 THEN 100 ELSE 0 END
-                   AS price_cents
-        FROM v1 WHERE o_orderkey % 13 != 0
-    ), f1 AS (
+    WITH {_TT_VERSIONS_DUCK}, f1 AS (
         SELECT o_orderkey % 16 AS bucket,
                CAST(count(*) AS BIGINT) AS n_v1,
                bit_xor({_TT_FP_DUCK}) AS fp_v1
@@ -943,18 +939,7 @@ def etl_reconcile_buckets(spark, sf_dir):
     16-row exchange — log₁₆(keyspace) levels pinpoint a single damaged
     row without ever shipping data, the binary-search-by-checksum
     pattern every cross-region copy validator uses."""
-    o = load_table(spark, sf_dir, "orders")
-    v1 = o.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
-    )
-    v2 = v1.filter(F.col("o_orderkey") % 13 != 0).withColumn(
-        "price_cents",
-        F.col("price_cents")
-        + F.when(F.col("o_orderkey") % 11 == 0, 100).otherwise(0),
-    )
+    v1, v2 = _tt_versions(load_table(spark, sf_dir, "orders"))
 
     def bucketed(df, n_col, fp_col):
         return df.groupBy((F.col("o_orderkey") % 16).alias("bucket")).agg(

@@ -31,6 +31,7 @@ from ..functions.encode import (
     milli,
     milli_duck,
 )
+from ..functions.vectors import array_sql, sq_l2_sql
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -806,22 +807,19 @@ def sample_coreset_kcenter(spark, sf_dir):
 
     # Round-15 shape: the chosen set is BOUNDED (k = 8 at any corpus
     # size), so it lives on the driver between rounds and embeds into each
-    # pass as literal arrays — the _lloyd_centroids driver-side-trainer
-    # pattern. Each round is ONE map-only TakeOrdered(1) job (min-d2 as a
-    # least() over k literal d2 folds); the former frame-resident loop
-    # paid a broadcast build, an n×|C| crossJoin expansion, a vec_id
-    # groupBy SHUFFLE and an eager checkpoint per round. Trajectory
+    # pass as literal arrays — the vectors.lloyd_centroids driver-side
+    # trainer pattern. Each round is ONE map-only TakeOrdered(1) job
+    # (min-d2 as a least() over k literal d2 folds); the former
+    # frame-resident loop paid a broadcast build, an n×|C| crossJoin
+    # expansion, a vec_id groupBy SHUFFLE and an eager checkpoint per
+    # round. Trajectory
     # identical: same integer d2, least() = the old per-group min, same
     # (min_d2 DESC, vec_id ASC) pick order.
-    def _d2_lit(vec) -> str:
-        arr = "array(" + ", ".join(f"{int(v)}L" for v in vec) + ")"
-        return (
-            f"aggregate(zip_with(qv, {arr}, (a, b) -> (a - b) * (a - b)),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        )
-
     def _min_d2(centers):
-        terms = [_d2_lit(c[3]) for c in centers]
+        terms = [
+            sq_l2_sql("qv", array_sql([f"{int(v)}L" for v in c[3]]))
+            for c in centers
+        ]
         return F.expr(
             terms[0] if len(terms) == 1 else f"least({', '.join(terms)})"
         )

@@ -28,6 +28,7 @@ from ..functions.encode import (
     milli_duck,
     milli_py,
 )
+from ..functions.vectors import array_sql, nearest_sql, sq_l2, sq_l2_sql
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -137,13 +138,6 @@ _LSH_POOL = N_PLANES + _lsh_geometry(10**18)[0] * _LSH_MAX_BITS
 
 def _sql_list(xs) -> str:
     return "[" + ", ".join(str(x) for x in xs) + "]"
-
-
-def _array_sql(items, elem: str = "bigint") -> str:
-    """Spark SQL array literal of the rendered ``items``. An empty one is
-    typed ``array<elem>``: an untyped ``array()`` is VOID, which zip_with
-    rejects when a driver-collected codebook came back empty."""
-    return f"array({', '.join(items)})" if items else f"CAST(array() AS array<{elem}>)"
 
 
 #: block count for exact pairwise ops — bounds any one task to a
@@ -952,10 +946,11 @@ def _pq_parts(spark, sf_dir):
     bounded collect) and the one-Lloyd-step refined codebook (one 128-row
     partial-agg rollup + collect) live on the driver and embed into the
     assignment passes as ONE nested literal array indexed by m — the
-    _lloyd_centroids discipline. That turns the former seed-broadcast join
-    + (vec_id, m) window argmin (shuffle + sort over n·8 rows) + sub⋈asg1
-    join + second window into two map-only argmin projections; the only
-    remaining exchange is the codebook rollup itself. Rules unchanged and
+    vectors.lloyd_centroids discipline. That turns the former
+    seed-broadcast join + (vec_id, m) window argmin (shuffle + sort over
+    n·8 rows) + sub⋈asg1 join + second window into two map-only argmin
+    projections; the only remaining exchange is the codebook rollup
+    itself. Rules unchanged and
     integer-exact: argmin ties to the lowest centroid id via
     array_min-over-(d2, c) structs; means are truncating floor-div; the
     centroid literal arrays are ordered by c so index = c."""
@@ -982,10 +977,10 @@ def _pq_parts(spark, sf_dir):
     def _cb_sql(table) -> str:
         """Nested literal: array over m of array over c of centroid arrays
         (ordered by c within each m, so the argmin index IS c)."""
-        return _array_sql(
+        return array_sql(
             [
-                _array_sql(
-                    [_array_sql([f"{int(v)}L" for v in cent]) for _, cent in table[m]],
+                array_sql(
+                    [array_sql([f"{int(v)}L" for v in cent]) for _, cent in table[m]],
                     "array<bigint>",
                 )
                 for m in range(8)
@@ -993,17 +988,11 @@ def _pq_parts(spark, sf_dir):
         )
 
     def _assign_sql(table) -> str:
-        """(d2, c) argmin of sv against its m's centroid list — one
-        interpreted pass over the literal table per row (struct order
-        breaks ties to the lowest c; cs[i] maps index back to the centroid
-        id, identity here but kept explicit)."""
-        cb_lit = _cb_sql(table)
-        return (
-            f"array_min(transform(element_at({cb_lit}, CAST(m AS INT) + 1), "
-            "(cent, i) -> struct("
-            "aggregate(zip_with(sv, cent, (a, b) -> (a - b) * (a - b)), "
-            "CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d, "
-            "CAST(i AS BIGINT) AS c)))"
+        """(d2, c) argmin of sv against its m's centroid list, c the
+        index (cs[i] maps it back to the centroid id, identity here but
+        kept explicit)."""
+        return nearest_sql(
+            "sv", f"element_at({_cb_sql(table)}, CAST(m AS INT) + 1)"
         )
 
     seed_rows = (
@@ -1020,7 +1009,7 @@ def _pq_parts(spark, sf_dir):
     # identity 0..15 on this corpus, explicit for generality). Index order
     # is c-ascending, so argmin-by-(d2, index) == argmin-by-(d2, c).
     seed_ids = [c for c, _ in seed_table[0]]
-    seed_ids_lit = _array_sql([f"{int(c)}L" for c in seed_ids])
+    seed_ids_lit = array_sql([f"{int(c)}L" for c in seed_ids])
     asg1 = sub.select(
         "vec_id",
         "m",
@@ -1057,8 +1046,8 @@ def _pq_parts(spark, sf_dir):
     def _c_of(m_expr: str) -> str:
         """Map argmin INDEX back to centroid id via the per-m survivor
         list (identity when all 16 survive)."""
-        cs_lit = _array_sql(
-            [_array_sql([f"{int(c)}L" for c in cs_by_m[m]]) for m in range(8)]
+        cs_lit = array_sql(
+            [array_sql([f"{int(c)}L" for c in cs_by_m[m]]) for m in range(8)]
         )
         return f"element_at(element_at({cs_lit}, CAST(m AS INT) + 1), CAST({m_expr} AS INT) + 1)"
 
@@ -1066,8 +1055,7 @@ def _pq_parts(spark, sf_dir):
     # non-empty literal codebook is never null on real rows): downstream
     # equi-joins on c otherwise make InferFiltersFromConstraints add
     # isnotnull(c) and filter pushdown inlines the whole argmin + survivor
-    # lookup into that inferred filter (the _lloyd_centroids assign_with
-    # rationale).
+    # lookup into that inferred filter (as in vectors.lloyd_centroids).
     best = sub.select(
         "vec_id",
         "m",
@@ -1181,10 +1169,7 @@ def sim_adc_search(spark, sf_dir):
         "probe_id",
         "m",
         "c",
-        F.expr(
-            """aggregate(zip_with(pv, centroid, (a, b) -> (a - b) * (a - b)),
-                         0L, (acc, x) -> acc + x)"""
-        ).alias("td2"),
+        sq_l2("pv", "centroid").alias("td2"),
     )
     adc = (
         best.drop("d2")
@@ -1272,15 +1257,10 @@ def sim_truncated_dims_eval(spark, sf_dir):
         .select(
             "probe_id",
             "vec_id",
-            F.expr(
-                """aggregate(zip_with(pv, qv, (a, b) -> (a - b) * (a - b)),
-                             0L, (acc, x) -> acc + x)"""
-            ).alias("d_full"),
-            F.expr(
-                """aggregate(zip_with(slice(pv, 1, 16), slice(qv, 1, 16),
-                                      (a, b) -> (a - b) * (a - b)),
-                             0L, (acc, x) -> acc + x)"""
-            ).alias("d_trunc"),
+            sq_l2("pv", "qv").alias("d_full"),
+            F.expr(sq_l2_sql("slice(pv, 1, 16)", "slice(qv, 1, 16)")).alias(
+                "d_trunc"
+            ),
         )
     )
     from pyspark.sql import Window
@@ -1412,11 +1392,7 @@ def sim_ndcg_eval(spark, sf_dir):
         .select(
             "probe_id",
             "vec_id",
-            F.aggregate(
-                F.zip_with("qp", "qv", lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
+            sq_l2("qp", "qv").alias("d2"),
         )
     )
     wg = Window.partitionBy("probe_id").orderBy("d2", "vec_id")

@@ -1174,9 +1174,39 @@ def sink_idempotent_overwrite(spark, sf_dir):
     )
 
 
+#: the two versions of the orders table read by scan_time_travel and
+#: etl_reconcile_buckets: v2 deletes the rows with o_orderkey % 13 = 0 and
+#: adds 100 cents to those with o_orderkey % 11 = 0
+_TT_VERSIONS_DUCK = """v1 AS (
+        SELECT o_orderkey, o_custkey, o_orderstatus,
+               CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
+        FROM orders
+    ), v2 AS (
+        SELECT o_orderkey, o_custkey, o_orderstatus,
+               price_cents + CASE WHEN o_orderkey % 11 = 0 THEN 100 ELSE 0 END
+                   AS price_cents
+        FROM v1 WHERE o_orderkey % 13 != 0
+    )"""
+
+
+def _tt_versions(o):
+    """``(v1, v2)`` of the ``orders`` frame ``o``, as _TT_VERSIONS_DUCK."""
+    v1 = o.select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
+    )
+    v2 = v1.filter(F.col("o_orderkey") % 13 != 0).withColumn(
+        "price_cents",
+        F.col("price_cents")
+        + F.when(F.col("o_orderkey") % 11 == 0, 100).otherwise(0),
+    )
+    return v1, v2
+
+
 #: canonical row hash for the versioned-orders snapshots (the
-#: etl_table_fingerprint construction: 60-bit md5 prefix, integer cents),
-#: read by scan_time_travel and etl_reconcile_buckets
+#: etl_table_fingerprint construction: 60-bit md5 prefix, integer cents)
 _TT_ROW_EXPR = (
     "concat(CAST(o_orderkey AS STRING), '|', CAST(o_custkey AS STRING), "
     "'|', o_orderstatus, '|', CAST(price_cents AS STRING))"
@@ -1191,16 +1221,7 @@ _TT_FP_DUCK = md5_int_duck(
 @register(
     "scan_time_travel",
     oracle=f"""
-    WITH v1 AS (
-        SELECT o_orderkey, o_custkey, o_orderstatus,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
-        FROM orders
-    ), v2 AS (
-        SELECT o_orderkey, o_custkey, o_orderstatus,
-               price_cents + CASE WHEN o_orderkey % 11 = 0 THEN 100 ELSE 0 END
-                   AS price_cents
-        FROM v1 WHERE o_orderkey % 13 != 0
-    ), s1 AS (
+    WITH {_TT_VERSIONS_DUCK}, s1 AS (
         SELECT CAST(1 AS BIGINT) AS version, CAST(count(*) AS BIGINT) AS n_rows,
                CAST(sum(price_cents) AS BIGINT) AS revenue_cents,
                bit_xor({_TT_FP_DUCK}) AS fingerprint
@@ -1235,18 +1256,7 @@ def scan_time_travel(spark, sf_dir):
     metadata, not data)."""
     base = stage_dir(sf_dir, "scan_time_travel")
     data, manifest = base + "/data", base + "/manifest"
-    o = load_table(spark, sf_dir, "orders")
-    v1 = o.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
-    )
-    v2 = v1.filter(F.col("o_orderkey") % 13 != 0).withColumn(
-        "price_cents",
-        F.col("price_cents")
-        + F.when(F.col("o_orderkey") % 11 == 0, 100).otherwise(0),
-    )
+    v1, v2 = _tt_versions(load_table(spark, sf_dir, "orders"))
 
     def write():
         v1.write.mode("overwrite").parquet(data + "/v1")

@@ -40,9 +40,13 @@ from ..functions.encode import (
     md5_bucket_duck,
     md5_int,
     md5_int_duck,
-    md5_order_duck,
     milli,
-    milli_duck,
+)
+from ..functions.vectors import (
+    centroid_ranks_duck,
+    lloyd_centroids,
+    lloyd_duck,
+    milli_rows_duck,
 )
 from ..io import (
     canonicalize,
@@ -869,51 +873,22 @@ def stream_dedup_minhash(spark, sf_dir):
 
 def _ann_ingest_oracle() -> str:
     """stream_ann_ingest's oracle: the base-split Lloyd training of
-    sim_ann_append (same unrolled CTEs), then frozen-centroid assignment
-    of EVERY vector and the per-list ingest dashboard."""
-    head = f"""
-    WITH allq AS (
-        SELECT vec_id,
-               {md5_bucket_duck("vec_id", 10)} AS m,
-               unnest({milli_duck()}) AS qv,
-               unnest(range(len(embedding))) AS pos
-        FROM embeddings
-    ), q AS (
-        SELECT vec_id, qv, pos FROM allq WHERE m <> 0
-    ), seeds AS (
-        SELECT vec_id,
-               row_number() OVER (
-                   ORDER BY {md5_order_duck('vec_id')}) - 1
-                   AS cluster
-        FROM (SELECT DISTINCT vec_id FROM q)
-        ORDER BY {md5_order_duck('vec_id')} LIMIT 8
-    ),
-    c0 AS (
-        SELECT s.cluster, q.pos, q.qv AS c FROM seeds s JOIN q USING (vec_id)
-    )"""
-    from ..operators.curation import _lloyd_unroll_ctes
-
-    parts = [head, _lloyd_unroll_ctes()]
-    parts.append("""
-    , dALL AS (
-        SELECT a.vec_id, c3.cluster,
-               CAST(sum((a.qv - c3.c) * (a.qv - c3.c)) AS BIGINT) AS d2
-        FROM allq a JOIN c3 ON a.pos = c3.pos GROUP BY 1, 2
-    ), assign AS (
-        SELECT vec_id, cluster, d2 FROM (
-            SELECT vec_id, cluster, d2,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY d2, cluster) AS rn
-            FROM dALL) WHERE rn = 1
-    ), tot AS (
-        SELECT CAST(count(*) AS BIGINT) AS n FROM assign
+    sim_ann_append, then frozen-centroid assignment of EVERY vector and
+    the per-list ingest dashboard."""
+    m = md5_bucket_duck("vec_id", 10)
+    return f"""
+    WITH {lloyd_duck(split=f"{m} <> 0")}
+    , allq AS (
+        {milli_rows_duck()}
+    ), {centroid_ranks_duck("rA", "allq")}
+    , tot AS (
+        SELECT CAST(count(*) AS BIGINT) AS n FROM rA WHERE rn = 1
     )
     SELECT cluster AS cluster_id,
            CAST(count(*) AS BIGINT) AS n_assigned,
            CAST(sum(d2) AS BIGINT) AS inertia_q,
            CAST(1000 * count(*) // t.n AS BIGINT) AS share_permille
-    FROM assign CROSS JOIN tot t GROUP BY cluster, t.n""")
-    return "".join(parts)
+    FROM rA CROSS JOIN tot t WHERE rn = 1 GROUP BY cluster, t.n"""
 
 
 @register("stream_ann_ingest", oracle=_ann_ingest_oracle())
@@ -926,10 +901,10 @@ def stream_ann_ingest(spark, sf_dir):
     the FROZEN centroids inside the stream itself: the 8x64 integer
     model is baked into the streaming projection as literals (the
     model-distribution path — 8 rows of trained centroids move to the
-    plan, data never moves to the driver), each row computes its 8
-    quantized squared-L2 distances with one transform/zip_with fold and
-    takes the strict-< argmin (lowest cluster wins ties — the (d2,
-    cluster) rule everywhere else). STATELESS streaming inference: no
+    plan, data never moves to the driver), and each row takes the
+    (d2, cluster) argmin of its 8 quantized squared-L2 distances in one
+    transform/zip_with fold (vectors.nearest_sql, the assignment rule of
+    the trainer itself). STATELESS streaming inference: no
     watermark, no state store, nothing to recover beyond the sink
     offsets. The verified readout is the ingest dashboard over the
     assignment sink: per-list arrivals, quantized inertia, and integer
@@ -943,9 +918,6 @@ def stream_ann_ingest(spark, sf_dir):
     (list_id, vec) to the posting-list sink. Per-row cost is k·dim
     integer multiply-adds; state is zero; throughput scales with
     executors, not with index size."""
-    from ..operators.curation import _lloyd_centroids
-    from ..operators.similarity import _array_sql
-
     e = load_table(spark, sf_dir, "embeddings")
     m = md5_bucket("vec_id", 10)
     base = (
@@ -954,44 +926,17 @@ def stream_ann_ingest(spark, sf_dir):
         .drop("m")
         .localCheckpoint(eager=False)
     )
-    carr, _assign = _lloyd_centroids(base, iters=3)
-    # model distribution: the trained 8x64 centroid table becomes plan
-    # literals (8 rows — the one collect here moves the MODEL, not data)
-    model = sorted(
-        ((r["cluster"], list(r["carr"])) for r in carr.collect()),
-        key=lambda t: t[0],
-    )
-    cents_sql = _array_sql(
-        [_array_sql([f"{int(v)}L" for v in arr]) for _, arr in model], "array<bigint>"
-    )
-    clist_sql = _array_sql([f"{int(c)}L" for c, _ in model])
-    k = len(model)
-
+    # model distribution: the trained 8x64 table becomes plan literals
+    model = lloyd_centroids(base)
     s = _table_stream(spark, sf_dir, "embeddings")
-    scored = s.select(
-        "vec_id", milli().alias("_q")
-    ).select(
-        "vec_id",
-        F.expr(
-            f"transform({cents_sql}, c -> aggregate(zip_with(_q, c,"
-            f" (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x))"
-        ).alias("_d"),
-    )
-    # strict-< fold keeps the LOWEST index on ties — the (d2, cluster)
-    # rule; guard k == 1 (Spark's sequence(1, 0) descends, not empties)
-    argmin = (
-        "1"
-        if k == 1
-        else (
-            f"aggregate(sequence(1, {k - 1}), 1,"
-            f" (acc, i) -> IF(element_at(_d, i + 1) <"
-            f" element_at(_d, acc), i + 1, acc))"
+    assigned = (
+        s.select("vec_id", milli().alias("_q"))
+        .select("vec_id", F.expr(model.argmin_sql("_q")).alias("_best"))
+        .select(
+            "vec_id",
+            F.col("_best.c").alias("cluster"),
+            F.col("_best.d").alias("d2"),
         )
-    )
-    assigned = scored.select(
-        "vec_id",
-        F.expr(f"element_at({clist_sql}, {argmin})").alias("cluster"),
-        F.expr("array_min(_d)").alias("d2"),
     )
     sink = _parquet_result(spark, assigned, "stream_ann_ingest", "append", sf_dir)
     tot = sink.agg(F.count(F.lit(1)).cast("long").alias("n"))

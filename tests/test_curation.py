@@ -439,16 +439,14 @@ def test_lloyd_centroids_keep_original_ids_when_a_cluster_empties(spark):
     seeds: the higher-id twin's cluster empties at the first argmin, which
     ties to the lowest cluster id), the SURVIVORS must keep their original
     cluster ids — renumbering by list index silently forks every later
-    label and tie-break from the unrolled-CTE oracle (ADVICE r14 item 1).
+    label and tie-break from the unrolled-CTE oracle.
     Replays the full trajectory in numpy with original-id bookkeeping and
     asserts the trained table and the assignment both match."""
     import hashlib
 
     import numpy as np
 
-    from data_integration_exercise_spark.operators.curation import (
-        _lloyd_centroids,
-    )
+    from data_integration_exercise_spark.functions.vectors import lloyd_centroids
 
     # 8 vectors => all 8 seed; ids 3 and 5 share a vector, so the md5-later
     # twin's seed cluster provably empties after the first assignment.
@@ -466,7 +464,7 @@ def test_lloyd_centroids_keep_original_ids_when_a_cluster_empties(spark):
     q = spark.createDataFrame(
         rows, "vec_id long, label string, qarr array<long>"
     )
-    carr, assign = _lloyd_centroids(q, iters=3)
+    model = lloyd_centroids(q)
 
     ids = np.array(sorted(vecs))
     mat = np.stack([vecs[i] for i in ids]).astype("int64")
@@ -495,31 +493,25 @@ def test_lloyd_centroids_keep_original_ids_when_a_cluster_empties(spark):
     assert len(cents) < 8, "construction must actually empty a cluster"
 
     expect_table = {c: [int(x) for x in v] for c, v in cents.items()}
-    got_table = {r.cluster: list(r.carr) for r in carr.collect()}
+    got_table = {r.cluster: list(r.carr) for r in model.frame().collect()}
     assert got_table == expect_table
 
     a, d = np_assign(cents)
     expect_assign = {int(i): (int(c), int(dd)) for i, c, dd in zip(ids, a, d)}
     got_assign = {
-        r.vec_id: (r.cluster, r.d2) for r in assign().collect()
+        r.vec_id: (r.cluster, r.d2) for r in model.assign().collect()
     }
     assert got_assign == expect_assign
 
 
-def test_lloyd_n_total_unset_without_training(spark):
-    """|q| rides the training rollups: after ``iters=0`` there was none, so
-    reading ``n_total`` must raise instead of handing block sizing a
-    silent 0. One trained pass sets it to the corpus size."""
-    from data_integration_exercise_spark.operators.curation import (
-        _lloyd_centroids,
-    )
+def test_lloyd_n_total_counts_the_training_frame(spark):
+    """|q| rides the training rollups, so block sizing reads the corpus
+    size without a count() job; with 5 vectors and 8 seeds every vector
+    seeds its own cluster."""
+    from data_integration_exercise_spark.functions.vectors import lloyd_centroids
 
     q = spark.createDataFrame(
         [(i, "x", [i, 0]) for i in range(5)],
         "vec_id long, label string, qarr array<long>",
     )
-    _, untrained = _lloyd_centroids(q, iters=0)
-    with pytest.raises(AttributeError):
-        untrained.n_total
-    _, trained = _lloyd_centroids(q, iters=1)
-    assert trained.n_total == 5
+    assert lloyd_centroids(q).n_total == 5

@@ -4,7 +4,7 @@ Every registered key's implementation fingerprint (transitive source
 closure + oracle SQL, tools/freshness.py) must match the checked-in
 ledger entry recorded at its last green emulator verification. Editing
 any code a key's query function reaches — the function itself, a shared
-helper like _lloyd_centroids, a geometry constant, the oracle — flips
+helper like lloyd_centroids, a geometry constant, the oracle — flips
 the fingerprint and fails this test until
 
     python tools/update_fingerprints.py

@@ -432,15 +432,18 @@ def test_ppr_mass_bound_and_seed_dominance(spark):
         "sim_ndcg_eval",
         "sim_ann_ivfadc",
         "stream_ann_ingest",
+        "sim_kmeans_lloyd",
+        "sim_ann_append",
     ],
 )
 def test_empty_input_matches_oracle(spark, tmp_path, key):
     """Degenerate input: on zero-row copies of every table every graph
     key (so every shared graph helper) meets empty edge sets, the
     node-count and seed probes see no nodes, the watermark probe sees no max,
-    the IVF planner sees no queries and the PQ/IVF codebook probes collect no
-    centroids; each key must return its oracle's answer
-    (empty, or NULL ratios) instead of failing on a driver-side probe or
+    the IVF planner sees no queries, the PQ/IVF codebook probes collect no
+    centroids and the Lloyd trainer collects no seeds; each key must
+    return its oracle's answer (empty, or NULL ratios) instead of failing
+    on a driver-side probe or
     dividing by zero in an ANSI `div`. Staged copies of empty
     tables may hold no data file at all, so read-backs must not infer
     their schema from one."""

@@ -190,7 +190,7 @@ EXPECTED_EXCHANGES = {
     #   exchange and one explode are behind the checkpoint scan); the
     #   count side broadcasts back onto the stream
     "sample_coreset_kcenter": (0, 0),  # round-15 driver-side chosen set
-    #   (the _lloyd_centroids bounded-probe pattern): the declared frame is
+    #   (the lloyd_centroids bounded-probe pattern): the declared frame is
     #   a LocalRelation of the 8 picks + literal radius; each selection
     #   round ran as a map-only TakeOrdered(1) job at build time (the old
     #   frame-resident loop paid a crossJoin+groupBy shuffle and an eager

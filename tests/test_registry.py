@@ -186,3 +186,33 @@ def test_every_registered_key_documented_in_survey():
         "registered keys missing a SURVEY.md row/mention (add a §8-style "
         f"table row in the same commit that registers them): {undocumented}"
     )
+
+
+def test_vector_geometry_is_spelled_only_in_vectors_module():
+    """The squared-L2 fold and the Lloyd seed head are written once, in
+    functions/vectors.py: a second spelling could drift from the trainer
+    the oracles replay (a different seed order or tie-break forks every
+    later centroid)."""
+    import data_integration_exercise_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    home = os.path.join(root, "functions", "vectors.py")
+    spellings = {
+        "squared-L2 lambda": re.compile(re.escape("(a - b) * (a - b)")),
+        "md5-ordered LIMIT 8 seed head": re.compile(
+            r"ORDER BY \{md5_order_duck\([^)]*\)\}\s+LIMIT 8\b"
+        ),
+    }
+    found = []
+    for d, _, names in os.walk(root):
+        for n in names:
+            path = os.path.join(d, n)
+            if not n.endswith(".py") or path == home:
+                continue
+            src = open(path).read()
+            found += [
+                f"{os.path.relpath(path, root)}: {what}"
+                for what, pat in spellings.items()
+                if pat.search(src)
+            ]
+    assert not found, found

@@ -28,7 +28,7 @@ Known blind spot, accepted: code reached through dynamic dispatch
 (getattr, exec, per-row lambdas serialized by Spark) is invisible to the
 closure walk; the repo's operators are module-level defs calling
 module-level helpers, which the walk covers — including the
-_lloyd_centroids-style helper refactor that motivated the invariant.
+lloyd_centroids-style helper refactor that motivated the invariant.
 """
 
 from __future__ import annotations
