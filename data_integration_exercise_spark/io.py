@@ -25,11 +25,13 @@ import os
 import re
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
-from .schemas import TABLES
+from .schemas import EVENTS_RAW, EVENTS_RAW_US, SCHEMAS, TABLES
 from .session import RUNTIME_CONFS
 
 
@@ -113,30 +115,51 @@ def prepare(spark: SparkSession) -> SparkSession:
     return spark
 
 
+class EventsLayoutError(ValueError):
+    """``events.ts`` has a parquet type no pinned raw schema describes."""
+
+
+def _events_schema(path: str) -> StructType:
+    """Pinned raw schema for the ``events`` table at ``path`` (one parquet
+    file or a Spark-written directory), chosen by the ``ts`` type in its
+    footer: timestamp[ns] → EVENTS_RAW (a nanosAsLong bigint),
+    timestamp[us] without a time zone → EVENTS_RAW_US (TIMESTAMP_NTZ).
+    Anything else raises :class:`EventsLayoutError`. INT96 is coerced to
+    ms here so a legacy Spark timestamp lands in that error instead of
+    passing for ns."""
+    fmt = ds.ParquetFileFormat(coerce_int96_timestamp_unit="ms")
+    ts = ds.dataset(path, format=fmt).schema.field("ts").type
+    if pa.types.is_timestamp(ts) and ts.unit == "ns":
+        return EVENTS_RAW
+    if pa.types.is_timestamp(ts) and ts.unit == "us" and ts.tz is None:
+        return EVENTS_RAW_US
+    raise EventsLayoutError(
+        f"{path}: events.ts is {ts}; expected timestamp[ns] or "
+        "timestamp[us] without a time zone"
+    )
+
+
 def read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Batch read of ``{sf_dir}/{name}.parquet`` in its physical layout.
 
-    Every table but ``events`` is read with the PINNED schema (schemas.py,
-    measured from the driver parquet): skipping per-read footer schema
-    inference is ~7× less driver latency per call (measured 73 ms → 10 ms
-    at sf0.1 — round-14; multi-table queries paid it per table per run),
-    and a production 100 TB reader pins schemas anyway so file-set sampling
-    never runs. Parquet reconciles by name and errors loudly on a type
-    change; the full-registry emulator sweep (all three scales) plus
-    tests/parity guard against silent drift.
+    Every table is read with a PINNED schema (schemas.py, measured from the
+    driver parquet): an unpinned ``spark.read.parquet`` runs a Spark job
+    to read the footer schema (~40-50 ms warm at sf0.1, against ~7 ms
+    pinned), and a production 100 TB reader pins schemas anyway so
+    file-set sampling never runs. Parquet reconciles by name and errors
+    loudly on a type change; the full-registry emulator sweep (all three
+    scales) plus tests/parity guard against silent drift.
 
     ``events``' physical layout varies by driver round (ns-bigint vs µs
-    TIMESTAMP_NTZ), so it is detected from one footer read per call
-    (driver-side milliseconds; NOT cached, every invocation re-reads the
-    input). Its ``schema`` is what a stream over the same file reads with.
+    TIMESTAMP_NTZ), so its schema is picked per call from the ``ts`` type
+    in the footer, read with pyarrow on the driver (~0.1 ms, no Spark job;
+    NOT cached, every invocation re-reads the input). Its ``schema`` is
+    what a stream over the same file reads with.
     """
     prepare(spark)
     path = f"{sf_dir}/{name}.parquet"
-    if name != "events":
-        from .schemas import SCHEMAS
-
-        return spark.read.schema(SCHEMAS[name]).parquet(path)
-    return spark.read.parquet(path)
+    schema = _events_schema(path) if name == "events" else SCHEMAS[name]
+    return spark.read.schema(schema).parquet(path)
 
 
 def canonicalize(df: DataFrame, name: str) -> DataFrame:

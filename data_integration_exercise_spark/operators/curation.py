@@ -2017,15 +2017,14 @@ def sim_kmeans_lloyd(spark, sf_dir):
     this synthetic corpus, so purity ~1/|labels| is the pinned honest
     reading).
 
-    100 TB: the canonical distributed Lloyd shape — per iteration ONE
-    broadcast of the k·dim centroid table, one narrow zip_with/aggregate
-    distance pass (no UDF, no shuffle), one vec_id-keyed assignment
-    window, and one (cluster,pos) rollup (map-side combined, 512-row
-    output). Each iteration's centroid table localCheckpoints (8 rows)
-    so lineage stays flat — the graph-loop discipline. The seed ranking
-    window rides an 8-row LIMIT frame; it sits inside the eagerly
-    checkpointed centroid subtree, so the plan audit never sees it
-    (the agg_ks_drift_bh pattern — documented here, not whitelisted).
+    100 TB: the canonical distributed Lloyd shape (vectors.lloyd_centroids)
+    — the k·dim centroid table stays on the driver and enters each pass
+    as literal arrays, so an iteration is ONE job: a narrow map-side
+    argmin over integer squared-L2 (no UDF, no shuffle) and one
+    (cluster,pos) rollup (map-side combined, k·dim rows collected). The
+    seeds are one TakeOrdered collect of the 8 smallest md5(vec_id); no
+    ranking window, broadcast or checkpointed centroid table exists, and
+    the final E-step is the same map-side argmin.
 
     Convergence contract (the graph_pagerank precedent for iterative
     ops): the plan unrolls a FIXED 3 Lloyd iterations + one final

@@ -4,16 +4,21 @@ The reference infers schemas at read time with pandas (SURVEY.md §1.1); this
 engine pins them explicitly so ingestion drift is loud. Schemas measured from
 the driver-generated parquet on 2026-08-13 (FIXTURES.md).
 
-Two views of ``events``:
-  EVENTS_RAW   — the rounds-1-3 physical layout: timestamp[ns] parquet read
-                 under spark.sql.legacy.parquet.nanosAsLong (ts is a *bigint
-                 of epoch nanoseconds*). Since round 4 the driver generates
-                 timestamp[us] parquet instead (ts arrives as TIMESTAMP_NTZ);
-                 io.load_table() detects which layout it got.
-  EVENTS       — the canonical engine-facing shape after io.load_table():
-                 ts as TimestampNTZ (µs) plus ts_us bigint (epoch
-                 microseconds) for exact integer time arithmetic that must
-                 hash-match the DuckDB oracle.
+Three views of ``events``:
+  EVENTS_RAW    — the rounds-1-3 physical layout: timestamp[ns] parquet read
+                  under spark.sql.legacy.parquet.nanosAsLong (ts is a *bigint
+                  of epoch nanoseconds*).
+  EVENTS_RAW_US — its twin for the layout the driver generates since round 4
+                  (and Spark writes for a TimestampNTZ column): timestamp[us]
+                  parquet without a time zone, so ts arrives as
+                  TIMESTAMP_NTZ.
+                  io.read_raw() picks one of the two from the ``ts`` type in
+                  the parquet footer, read with pyarrow (no Spark job), and
+                  refuses any other ``ts`` type.
+  EVENTS        — the canonical engine-facing shape after io.load_table():
+                  ts as TimestampNTZ (µs) plus ts_us bigint (epoch
+                  microseconds) for exact integer time arithmetic that must
+                  hash-match the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -97,6 +102,13 @@ EVENTS_RAW = _st(
     ("event_type", StringType()),
     ("value", DoubleType()),
     ("props", StringType()),  # JSON: {"k": <int 0..99>}
+)
+
+EVENTS_RAW_US = _st(
+    *(
+        (f.name, TimestampNTZType() if f.name == "ts" else f.dataType)
+        for f in EVENTS_RAW.fields
+    )
 )
 
 EVENTS = _st(

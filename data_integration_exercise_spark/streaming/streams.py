@@ -22,6 +22,13 @@ with data volume land in an executor-written parquet sink
 segments) use the driver-resident memory sink. State stores run one task
 wave (_state_partitions).
 
+Checkpoints: every engine stream runs inside _stream_partitions, which
+also pins the FileSystem-based checkpoint manager. Spark's default
+FileContext-based manager forks a ``readlink`` process for each link-status
+call when Hadoop runs without its native library, several per checkpoint
+rename; the engine's checkpoints are local files, where both managers
+rename alike.
+
 Determinism: event time is the µs-truncated ``ts`` (io.canonicalize, the
 same projection batch reads get), so window boundaries hash-match oracles
 computing on epoch_ns(ts)//1000.
@@ -118,15 +125,43 @@ def _state_partitions(spark) -> str:
     return str(min(8, spark.sparkContext.defaultParallelism))
 
 
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 @contextmanager
 def _stream_partitions(spark):
-    """Run a streaming query with _state_partitions shuffle partitions."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _state_partitions(spark))
+    """Run a streaming query with _state_partitions shuffle partitions and
+    the FileSystem-based checkpoint manager. Both confs are restored on
+    exit, or unset if they had no value, so queries outside the engine
+    (e.g. on HDFS) keep Spark's defaults.
+
+    Why the manager is pinned: Spark's default,
+    FileContextBasedCheckpointFileManager, calls getFileLinkStatus several
+    times per atomic rename, and when Hadoop runs without libhadoop each
+    call forks ``readlink`` (FileUtil.readLink through Shell.runCommand).
+    The offset log, the commit log, the state-store deltas and the
+    checksum files all commit through such renames. On ``file:`` both
+    managers rename alike (check that the destination is free, then
+    rename), and the engine's checkpoints are always local (io.sink_dir,
+    or Spark's temporary checkpoint), so no guarantee is lost."""
+    confs = {
+        "spark.sql.shuffle.partitions": _state_partitions(spark),
+        "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER,
+    }
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _run_to_memory(stream_df, name: str, mode: str) -> None:

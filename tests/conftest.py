@@ -38,3 +38,32 @@ def registry_built(spark):
         plan = None if key.startswith("stream_") else simple_plan(df)
         built[key] = (df.schema, plan)
     return built
+
+
+def events_copy(spark, tmp_path, layout: str) -> str:
+    """An sf dir whose ``events.parquet`` has ``layout``: a testdata scale
+    as it lies, or a copy of sf0.001 in tmp_path — Spark-written
+    directory (µs NTZ), Spark-written LTZ (INT96), or one pyarrow file
+    with ``ts`` cast to timestamp[ns] or timestamp[us, UTC]."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    if layout.startswith("sf"):
+        return os.path.join(os.path.dirname(SF_SMOKE), layout)
+    src = f"{SF_SMOKE}/events.parquet"
+    out = tmp_path / layout / "events.parquet"
+    if layout in ("spark_dir", "spark_int96"):
+        df = spark.read.parquet(src)
+        if layout == "spark_int96":
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df.write.parquet(str(out))
+    else:
+        ts_type = {"ns_file": pa.timestamp("ns"), "us_utc_file": pa.timestamp("us", "UTC")}
+        tbl = pq.read_table(src)
+        i = tbl.schema.get_field_index("ts")
+        tbl = tbl.set_column(i, "ts", tbl.column(i).cast(ts_type[layout]))
+        out.parent.mkdir()
+        pq.write_table(tbl, out)
+    return str(out.parent)
+

@@ -301,10 +301,9 @@ UNPARTITIONED_WINDOW_OK = {
     "sample_ht_estimate",  # same offsets decomposition inside the pick CTE
     # |partitions|-row offset table + 10-row decile cumulative axis
     "agg_lorenz_deciles",
-    # sim_kmeans_lloyd's 8-row seed-ranking window is real but invisible
-    # here: the seed ids feed the eagerly-checkpointed centroid table, so
-    # the audited plan ends at checkpoint scans (the agg_ks_drift_bh
-    # precedent). Documented in its docstring instead of whitelisted.
+    # sim_kmeans_lloyd needs no entry: its 8 seeds are one TakeOrdered
+    # collect on the driver, not a ranking window, and the trained
+    # centroids enter its audited plan as literal arrays.
     "events_cumulative_reach",
     "events_rfm_segments",
     "events_tier_migration",  # count-domain distribution axis (rfm precedent)

@@ -9,6 +9,7 @@ from data_integration_exercise_spark.operators import joins
 from data_integration_exercise_spark.plans import inspect
 from data_integration_exercise_spark.sources import connectors
 
+from .conftest import events_copy
 from .parity import assert_parity
 
 SF = "/root/testdata/sf0.01"
@@ -432,3 +433,46 @@ def test_partition_evolution_prunes_each_layout(spark):
     assert "ym" in plan and "wk" in plan
     for m in re.finditer(r"PartitionFilters: \[([^\]]*)\]", plan):
         assert m.group(1).strip(), "scan with empty partition filters"
+
+
+def _new_jobs(spark, call) -> set[int]:
+    """Ids of the Spark jobs ``call()`` launched, from statusTracker once
+    the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    call()
+    bus.waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup()) - before
+
+
+@pytest.mark.parametrize(
+    "layout", ["sf0.001", "sf0.01", "sf0.1", "spark_dir", "ns_file"]
+)
+def test_events_read_pins_inferred_schema_without_a_job(spark, tmp_path, layout):
+    """read_raw's events schema is the one Spark infers from the footer,
+    but picked without the Spark job that inference runs."""
+    from data_integration_exercise_spark.io import read_raw
+
+    sf_dir = events_copy(spark, tmp_path, layout)
+    frames = []
+    assert _new_jobs(spark, lambda: frames.append(read_raw(spark, sf_dir, "events"))) == set()
+    assert _new_jobs(
+        spark, lambda: frames.append(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ), "schema inference ran no job: the no-job check above shows nothing"
+    pinned, inferred = frames
+    assert pinned.schema == inferred.schema
+    assert pinned.count() == inferred.count() > 0
+
+
+@pytest.mark.parametrize("layout", ["us_utc_file", "spark_int96"])
+def test_events_read_refuses_unsupported_ts(spark, tmp_path, layout):
+    """A ``ts`` type no pinned raw schema describes (UTC-adjusted µs,
+    Spark's INT96) raises the named error instead of reading with a wrong
+    schema."""
+    from data_integration_exercise_spark.io import EventsLayoutError, read_raw
+
+    sf_dir = events_copy(spark, tmp_path, layout)
+    with pytest.raises(EventsLayoutError, match="events.ts"):
+        read_raw(spark, sf_dir, "events")

@@ -7,7 +7,7 @@ import pytest
 from data_integration_exercise_spark.io import sink_dir, sink_scope, stage_dir
 from data_integration_exercise_spark.streaming import streams
 
-from .conftest import SF_SMOKE as SMOKE
+from .conftest import SF_SMOKE as SMOKE, events_copy
 from .parity import assert_parity, run_rows_only
 
 SF = "/root/testdata/sf0.01"
@@ -322,25 +322,12 @@ def test_in_place_source_layouts(spark, tmp_path, layout):
     timestamp[ns] single file (the rounds-1-3 driver layout, canonicalized
     on the stream by the same projection as batch reads). Neither writes a
     staged copy."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from data_integration_exercise_spark.io import read_raw
-
-    copy = tmp_path / "sf0.001"
-    if layout == "spark_dir":
-        read_raw(spark, SMOKE, "events").write.parquet(str(copy / "events.parquet"))
-    else:
-        tbl = pq.read_table(f"{SMOKE}/events.parquet")
-        i = tbl.schema.get_field_index("ts")
-        tbl = tbl.set_column(i, "ts", tbl.column(i).cast(pa.timestamp("ns")))
-        copy.mkdir()
-        pq.write_table(tbl, copy / "events.parquet")
+    copy = events_copy(spark, tmp_path, layout)
     fn = streams.QUERIES["stream_tumbling"]
     want = sorted(fn(spark, SMOKE).collect())
-    got = sorted(fn(spark, str(copy)).collect())
+    got = sorted(fn(spark, copy).collect())
     assert want and got == want
-    assert _staged_streams(str(copy)) == []
+    assert _staged_streams(copy) == []
 
 
 def test_single_batch_keys_stage_nothing(spark, tmp_path):
@@ -372,3 +359,45 @@ def test_output_independent_of_state_partitions(spark, monkeypatch, key):
         results[n] = sorted(streams.QUERIES[key](spark, SF).collect())
         assert calls, "the derived partition count was never consulted"
     assert results["1"] and results["1"] == results["8"]
+
+
+_PARTS = "spark.sql.shuffle.partitions"
+_CKPT = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_stream_context_scopes_its_confs(spark):
+    """_stream_partitions sets the state-partition count and the checkpoint
+    manager only while the stream runs: on exit, normal or by an
+    exception, the partition count is back and the manager conf is unset
+    again (or back to a value set before)."""
+    parts = spark.conf.get(_PARTS)
+    assert spark.conf.get(_CKPT, None) is None
+    with streams._stream_partitions(spark):
+        assert spark.conf.get(_PARTS) == streams._state_partitions(spark)
+        assert spark.conf.get(_CKPT) == streams._CHECKPOINT_FILE_MANAGER
+    assert (spark.conf.get(_PARTS), spark.conf.get(_CKPT, None)) == (parts, None)
+
+    with pytest.raises(RuntimeError, match="body"):
+        with streams._stream_partitions(spark):
+            raise RuntimeError("body")
+    assert (spark.conf.get(_PARTS), spark.conf.get(_CKPT, None)) == (parts, None)
+
+    default = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    spark.conf.set(_CKPT, default)
+    try:
+        with streams._stream_partitions(spark):
+            assert spark.conf.get(_CKPT) == streams._CHECKPOINT_FILE_MANAGER
+        assert spark.conf.get(_CKPT) == default
+    finally:
+        spark.conf.unset(_CKPT)
+
+
+def test_stream_key_matches_oracle_under_pinned_checkpoint_manager(spark):
+    """A stream key whose offset log, commit log and state store commit
+    through the pinned manager still returns its oracle's rows, and leaves
+    the manager conf unset."""
+    assert_parity(spark, "stream_tumbling", SMOKE)
+    assert spark.conf.get(_CKPT, None) is None
