@@ -72,17 +72,25 @@ def sq_l2_sql(a: str, b: str) -> str:
 # --- the nearest centroid ----------------------------------------------------------
 
 
+def _dist_structs_sql(vec: str, cents: str, ids: str | None) -> str:
+    c = f"element_at({ids}, i + 1)" if ids else "CAST(i AS BIGINT)"
+    return f"transform({cents}, (cent, i) -> struct({sq_l2_sql(vec, 'cent')} AS d, {c} AS c))"
+
+
 def nearest_sql(vec: str, cents: str, ids: str | None = None) -> str:
     """The ``(d2, c)`` argmin of ``vec`` over ``cents``, an array of centroid
     arrays: one struct ``(d, c)``, ``d`` the squared L2 and ``c`` the
     centroid's id, ``ids[i]`` (ascending) or, without ``ids``, its index.
     Refer to the struct's fields through an alias: HOFs are interpreted, so
     each inlined reference would fold every distance again."""
-    c = f"element_at({ids}, i + 1)" if ids else "CAST(i AS BIGINT)"
-    return (
-        f"array_min(transform({cents}, "
-        f"(cent, i) -> struct({sq_l2_sql(vec, 'cent')} AS d, {c} AS c)))"
-    )
+    return f"array_min({_dist_structs_sql(vec, cents, ids)})"
+
+
+def ranked_sql(vec: str, cents: str, ids: str | None = None) -> str:
+    """Every centroid of ``cents`` as a ``(d, c)`` struct (see
+    :func:`nearest_sql`), sorted by ``(d, c)``: element ``r`` is the
+    ``r``-th nearest, so element 0 is the argmin."""
+    return f"array_sort({_dist_structs_sql(vec, cents, ids)})"
 
 
 # --- the quantized Lloyd, Spark ----------------------------------------------------
@@ -99,29 +107,28 @@ class LloydModel:
     cents: list
     n_total: int
 
+    def _table_sql(self) -> tuple:
+        cents = array_sql([_longs_sql(c) for c in self.cents], "array<bigint>")
+        return cents, _longs_sql(self.ids)
+
     def argmin_sql(self, vec: str) -> str:
         """:func:`nearest_sql` of ``vec`` over the table, as literals."""
-        return nearest_sql(
-            vec,
-            array_sql([_longs_sql(c) for c in self.cents], "array<bigint>"),
-            _longs_sql(self.ids),
-        )
+        return nearest_sql(vec, *self._table_sql())
 
-    def frame(self) -> DataFrame:
-        """The table as a ``(cluster, carr)`` frame."""
-        return self.q.sparkSession.createDataFrame(
-            list(zip(self.ids, self.cents)), "cluster long, carr array<long>"
-        )
+    def ranked_sql(self, vec: str) -> str:
+        """:func:`ranked_sql` of ``vec`` over the table, as literals."""
+        return ranked_sql(vec, *self._table_sql())
 
-    def assign(self) -> DataFrame:
-        """q with each vector's nearest ``cluster`` and its ``d2``."""
+    def assign(self, q: DataFrame | None = None) -> DataFrame:
+        """``q`` (by default the training frame) with each vector's nearest
+        ``cluster`` and its ``d2``."""
         # cluster is coalesce-pinned NON-NULLABLE (value-identical: the
         # argmin over a non-empty table is never null): downstream
         # equi-joins on `cluster` otherwise make InferFiltersFromConstraints
         # add isnotnull(cluster), and filter pushdown inlines the alias, so
         # the whole literal argmin re-runs per row inside that inferred
         # filter (measured in sim_ann_ivfadc's plan as a 4.4k-char Filter)
-        return self.q.select(
+        return (self.q if q is None else q).select(
             "vec_id", "label", "qarr", F.expr(self.argmin_sql("qarr")).alias("_best")
         ).select(
             "vec_id",

@@ -34,6 +34,14 @@ from ..functions.encode import (
     milli,
     milli_duck,
 )
+from ..functions.sets import (
+    bigram_inter,
+    bigram_mask_cols,
+    inter_duck,
+    salted_lang_pairs,
+    vocab_idx_duck,
+    vocab_idx_sql,
+)
 from ..functions.vectors import (
     centroid_ranks_duck,
     lloyd_centroids,
@@ -44,7 +52,6 @@ from ..functions.vectors import (
 )
 from ..io import load_table
 from ..registry_util import new_registry
-from .pipeline import _VOCAB_DUCK
 from .similarity import _PQ_ADC_CTE, _PQ_CODES_CTE, ROWS_PER_BLOCK_TASK
 
 QUERIES, ORACLES, register = new_registry()
@@ -307,7 +314,7 @@ def sample_mix_rebalance(spark, sf_dir):
 
 @register(
     "dedup_containment_bigram",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT doc_id, lang,
                list_distinct(list_transform(
@@ -316,13 +323,13 @@ def sample_mix_rebalance(spark, sf_dir):
         FROM documents
     )
     SELECT d1.doc_id AS doc1, d2.doc_id AS doc2, d1.lang AS lang,
-           CAST(1000 * len(list_intersect(d1.sh, d2.sh))
+           CAST(1000 * {inter_duck("d1.sh", "d2.sh")}
                 // least(len(d1.sh), len(d2.sh)) AS BIGINT)
                AS containment_permille,
            CASE WHEN len(d1.sh) <= len(d2.sh) THEN d1.doc_id
                 ELSE d2.doc_id END AS subsumed_doc
     FROM d d1 JOIN d d2 ON d1.lang = d2.lang AND d1.doc_id < d2.doc_id
-    WHERE 1000 * len(list_intersect(d1.sh, d2.sh))
+    WHERE 1000 * {inter_duck("d1.sh", "d2.sh")}
           // least(len(d1.sh), len(d2.sh)) >= 800
     """,
 )
@@ -345,13 +352,8 @@ def dedup_containment_bigram(spark, sf_dir):
     containment as the re-rank. Open-vocabulary corpora (no exact bitset):
     swap the re-rank seam for array_intersect-on-candidates or the
     MinHash-estimate score — SURVEY §14 "Open-vocabulary fallback"."""
-    from .pipeline import bigram_mask_cols, salted_lang_pairs
-
     d = load_table(spark, sf_dir, "documents")
     docs = bigram_mask_cols(d)
-    inter = sum(
-        F.bit_count(F.col(f"a_m{j}").bitwiseAND(F.col(f"b_m{j}"))) for j in range(16)
-    ).cast("long")
     pairs = (
         salted_lang_pairs(docs)
         .select(
@@ -360,7 +362,7 @@ def dedup_containment_bigram(spark, sf_dir):
             "lang",
             F.col("a_nsh").alias("n1"),
             F.col("b_nsh").alias("n2"),
-            inter.alias("inter"),
+            bigram_inter().alias("inter"),
         )
         .filter(
             F.expr("1000 * CAST(inter AS BIGINT) div CAST(least(n1, n2) AS BIGINT)")
@@ -873,7 +875,7 @@ def win_zscore_outliers(spark, sf_dir):
         SELECT doc_id,
                list_filter(
                    list_transform(string_split(text, ' '),
-                       t -> list_position({_VOCAB_DUCK}, t) - 1),
+                       t -> {vocab_idx_duck('t')} - 1),
                    i -> i IS NOT NULL) AS idxs
         FROM documents
     )
@@ -902,12 +904,10 @@ def text_hashing_vectorizer(spark, sf_dir):
 
     100 TB: narrow map-only HOFs, no shuffle, no state — runs at scan
     speed and emits a constant-width feature column ready for ML."""
-    from .pipeline import _VOCAB_SPARK
-
     d = load_table(spark, sf_dir, "documents")
     idxs = F.expr(
         f"filter(transform(split(text, ' '),"
-        f" t -> array_position({_VOCAB_SPARK}, t) - 1), i -> i >= 0)"
+        f" t -> {vocab_idx_sql('t')} - 1), i -> i >= 0)"
     )
     m = d.select("doc_id", idxs.alias("idxs"))
     vec = F.expr(
@@ -1840,9 +1840,9 @@ def sim_ann_append(spark, sf_dir):
     deployments (e.g. Faiss add + periodic re-train) act on.
 
     100 TB: training is the offline/amortized arm; the APPEND arm — the
-    thing that runs per ingest batch — is one 8-row centroid broadcast,
-    one narrow zip_with/aggregate distance pass over the new batch, a
-    vec_id argmin window, and an 8-row rollup: no shuffle of the base
+    thing that runs per ingest batch — is one narrow pass over the new
+    batch taking the argmin over the 8 centroids embedded as literals,
+    and an 8-row rollup: no shuffle of the base
     corpus, no recluster, cost linear in the batch. The base-occupancy
     arm here re-derives n_base from the final E-step for hash
     verifiability; a deployed index reads it from posting-list metadata.
@@ -1863,16 +1863,9 @@ def sim_ann_append(spark, sf_dir):
         .agg(F.count("*").cast("long").alias("n_base"))
     )
 
-    # The append path proper: frozen centroids, narrow pass over the batch.
-    scored = newb.crossJoin(F.broadcast(model.frame())).select(
-        "vec_id", "cluster", sq_l2("qarr", "carr").alias("d2")
-    )
-    w = Window.partitionBy("vec_id").orderBy("d2", "cluster")
-    new_assign = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    # The append path proper: frozen centroids, one map-side literal
+    # argmin over the batch.
+    new_assign = model.assign(newb)
     new_occ = new_assign.groupBy("cluster").agg(
         F.count("*").cast("long").alias("n_new"),
         F.sum("d2").cast("long").alias("new_inertia_q"),
@@ -1956,19 +1949,14 @@ def sim_ann_ivfadc(spark, sf_dir):
     ).localCheckpoint(eager=False)
     model = lloyd_centroids(q)
     lists = model.assign().select("vec_id", "cluster")
-    wp = Window.partitionBy("probe_id").orderBy("d2", "cluster")
-    probe_lists = (
-        q.filter(F.col("vec_id") < 5)
-        .crossJoin(F.broadcast(model.frame()))
-        .select(
+    # each probe's 3 nearest lists, read map-side off its ranked centroids
+    probe_lists = _centroid_ranks(
+        q.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("probe_id"),
-            "cluster",
-            sq_l2("qarr", "carr").alias("d2"),
-        )
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= 3)
-        .select("probe_id", "cluster")
-    )
+            F.slice(F.expr(model.ranked_sql("qarr")), 1, 3).alias("ranked"),
+        ),
+        "probe_id",
+    ).select("probe_id", "cluster")
     cand = (
         probe_lists.join(lists, "cluster")
         .filter(F.col("vec_id") != F.col("probe_id"))
@@ -1997,6 +1985,22 @@ def sim_ann_ivfadc(spark, sf_dir):
         adc.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= 5)
         .select("probe_id", "vec_id", "adc_d2", "rnk")
+    )
+
+
+def _centroid_ranks(df, key: str):
+    """(key, cluster, crank): one row per element of ``df``'s ``ranked``
+    array of ``(d, c)`` structs, ``crank`` its 1-based position."""
+    # posexplode_OUTER + pos-notnull is the inner posexplode exactly, minus
+    # the inferred size filter that re-folds the ranked array's distances
+    return (
+        df.select(key, F.posexplode_outer("ranked").alias("pos", "r"))
+        .filter(F.col("pos").isNotNull())
+        .select(
+            key,
+            F.col("r.c").alias("cluster"),
+            (F.col("pos") + 1).cast("long").alias("crank"),
+        )
     )
 
 
@@ -2174,26 +2178,18 @@ def plan_ivf_probe_geometry(spark, sf_dir):
     ).localCheckpoint(eager=False)
     model = lloyd_centroids(q)
 
-    # every vector x all 8 centroids — feeds both the final
-    # assignment (argmin) and the query-side centroid ranking
-    scored = (
-        q.crossJoin(F.broadcast(model.frame()))
-        .select("vec_id", "cluster", sq_l2("qarr", "carr").alias("d2"))
-        .localCheckpoint(eager=False)
-    )
-    w = Window.partitionBy("vec_id").orderBy("d2", "cluster")
-    member = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cluster")
-        .localCheckpoint(eager=False)
-    )
+    # every vector's 8 centroids ranked map-side by (d2, cluster) — feeds
+    # both the final assignment (rank 1) and the query-side centroid ranks;
+    # checkpointed so neither re-folds the distances
+    ranked = q.select(
+        "vec_id", F.expr(model.ranked_sql("qarr")).alias("ranked")
+    ).localCheckpoint(eager=False)
+    member = ranked.select("vec_id", F.col("ranked")[0]["c"].alias("cluster"))
     lists = member.groupBy("cluster").agg(
         F.count("*").cast("long").alias("list_n")
     )
     crank_f = (
-        scored.filter(F.col("vec_id") % 7 == 0)
-        .withColumn("crank", F.row_number().over(w).cast("long"))
+        _centroid_ranks(ranked.filter(F.col("vec_id") % 7 == 0), "vec_id")
         .select(F.col("vec_id").alias("qid"), "cluster", "crank")
         .localCheckpoint(eager=False)
     )

@@ -7,10 +7,12 @@ and an embedding similarity threshold join.
 
 Design rule that makes almost all of these HASH-verifiable (not just
 rows-only): every hash/signature is **deterministic integer arithmetic over
-the token's index in the measured 31-word vocabulary** — Spark
-``array_position`` and DuckDB ``list_position`` are both 1-based with 0/NULL
-for misses, so both engines compute bit-identical signatures. No engine
-hash functions (xxhash/city) whose implementations could differ.
+the token's index in the measured 31-word vocabulary** (or, on the
+open-vocabulary path, its 48-bit md5 content hash). No engine hash
+functions (xxhash/city) whose implementations could differ. The token-set
+encodings, the exact Jaccard, the size bound and the MinHash signature,
+band packing and band join are written once per dialect in
+``functions/sets.py``; this module composes them into operators.
 
 Scale notes per operator in docstrings; the shared shape is: explode →
 keyed integer aggregation → equi-join on (band, signature) — no O(n²)
@@ -31,149 +33,88 @@ from ..functions.encode import (
     md5_int,
     md5_int_duck,
     md5_int_py,
-    md5_int_sql,
     milli,
     milli_duck,
+)
+from ..functions.sets import (
+    MINHASH_PERMS,
+    MINHASH_PERMS_WIDE,
+    N_BANDS,
+    OV_M,
+    ROWS_PER_BAND,
+    V,
+    WIDE_ROWS_PER_BAND,
+    band_pairs,
+    band_pairs_duck,
+    band_sigs_sql,
+    bigram_inter,
+    bigram_mask_cols,
+    doc_masks,
+    inter_duck,
+    jaccard_duck,
+    jaccard_size_bound,
+    mask_idxs_sql,
+    mask_inter_sql,
+    mask_jaccard,
+    mask_union_sql,
+    minhash_bands_duck,
+    salted_lang_pairs,
+    tok_idx,
+    token_hashes_sql,
+    token_set_duck,
+    union_duck,
+    vocab_idx_duck,
+    vocab_idx_sql,
 )
 from ..io import load_table
 from ..registry_util import new_registry
 
 QUERIES, ORACLES, register = new_registry()
 
-#: measured 31-word corpus vocabulary (sorted; see SURVEY §1.2 / FIXTURES.md)
-VOCAB = [
-    "a", "agg", "batch", "big", "column", "customer", "data", "dup", "fast",
-    "filter", "group", "hash", "join", "key", "line", "merge", "order", "part",
-    "query", "row", "scan", "slow", "small", "sort", "spark", "stream",
-    "table", "the", "value", "vector", "window",
-]
-_V = len(VOCAB)  # 31 (prime, convenient modulus)
-
-_VOCAB_SPARK = "array(" + ", ".join(f"'{w}'" for w in VOCAB) + ")"
-_VOCAB_DUCK = "[" + ", ".join(f"'{w}'" for w in VOCAB) + "]"
-
-#: MinHash permutations h_p(i) = (a·i + b) mod 31 — fixed literals, no rand()
-MINHASH_PERMS = [(3, 1), (5, 7), (7, 2), (11, 5), (2, 9), (9, 4), (13, 8), (6, 11)]
-N_BANDS = 4  # 2 rows per band (OR of 4 ANDs-of-2)
-
-#: wider permutation bank for the high-recall candidate config (8 bands of 4
-#: rows) used by dedup_connected_components: per-pair recall at J≥0.8 is
-#: 1-(1-s⁴)⁸ ≈ 0.998, and measured component equality vs the exact edge set
-#: holds at sf0.001/0.01/0.1 (the 4×2 config above loses a component at
-#: sf0.1). Fixed literals, all `a` invertible mod 31.
-MINHASH_PERMS_WIDE = [
-    (3, 24), (5, 8), (7, 23), (11, 21), (2, 21), (9, 9), (13, 7), (6, 21),
-    (17, 6), (19, 21), (23, 19), (29, 0), (4, 12), (8, 10), (12, 8), (14, 23),
-    (15, 0), (16, 8), (18, 23), (20, 7), (21, 15), (22, 23), (24, 7), (25, 15),
-    (26, 23), (27, 0), (28, 8), (30, 23), (10, 8), (1, 8), (3, 23), (5, 7),
-]
-WIDE_ROWS_PER_BAND = 4
-
 _SIMHASH_MULT = 2654435761  # Knuth multiplicative constant
 _SIMHASH_BITS = 16
 _FP_MOD = 1_000_003
 
 
-def _tok_idx(spark, sf_dir, distinct: bool):
-    """(doc_id, lang, idx): one row per (doc, token), idx ∈ 1..31."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = F.array_distinct(F.split("text", " ")) if distinct else F.split("text", " ")
-    return d.select(
-        "doc_id", "lang", F.explode(toks).alias("token")
-    ).withColumn("idx", F.expr(f"array_position({_VOCAB_SPARK}, token)"))
-
-
-_MINHASH_ORACLE = f"""
-    WITH tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
-        FROM documents
-    ), idx AS (
-        SELECT doc_id, list_position({_VOCAB_DUCK}, token) AS idx FROM tok
-    ), perms(p, a, b) AS (VALUES {", ".join(f"({p}, {a}, {b})" for p, (a, b) in enumerate(MINHASH_PERMS))}),
-    mh AS (
-        SELECT doc_id, p, p // 2 AS band,
-               min((a * idx + b) % {_V}) AS mh
-        FROM idx CROSS JOIN perms
-        GROUP BY doc_id, p
-    ), bands AS (
-        SELECT doc_id, band,
-               CAST(sum(mh * (CASE WHEN p % 2 = 0 THEN {_V} ELSE 1 END)) AS BIGINT) AS sig
-        FROM mh GROUP BY doc_id, band
-    ), cand AS (
-        SELECT DISTINCT b1.doc_id AS doc1, b2.doc_id AS doc2
-        FROM bands b1 JOIN bands b2
-          ON b1.band = b2.band AND b1.sig = b2.sig AND b1.doc_id < b2.doc_id
-    ), sets AS (
-        SELECT doc_id, list_distinct(string_split(text, ' ')) AS s FROM documents
+def _minhash_pairs_oracle(key: str, m: int) -> str:
+    """Oracle of the verified MinHash pair stream ``(doc1, doc2, jaccard)``
+    over token keys ``key`` mod ``m``: banded candidates re-ranked at exact
+    Jaccard >= 0.8."""
+    return f"""
+    WITH {minhash_bands_duck(key, MINHASH_PERMS, m, ROWS_PER_BAND)},
+    {band_pairs_duck()}, sets AS (
+        SELECT doc_id, {token_set_duck()} AS s FROM documents
     )
-    SELECT doc1, doc2,
-           round(CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-                 / (len(s1.s) + len(s2.s) - len(list_intersect(s1.s, s2.s))), 4)
-               AS jaccard
+    SELECT doc1, doc2, round({jaccard_duck("s1.s", "s2.s")}, 4) AS jaccard
     FROM cand
     JOIN sets s1 ON s1.doc_id = doc1
     JOIN sets s2 ON s2.doc_id = doc2
-    WHERE CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-          / (len(s1.s) + len(s2.s) - len(list_intersect(s1.s, s2.s))) >= 0.8
+    WHERE {jaccard_duck("s1.s", "s2.s")} >= 0.8
 """
 
 
-def first_match_band(n_bands: int, c1: str = "sigs1", c2: str = "sigs2"):
-    """Column: index of the FIRST band where the two carried signature
-    arrays agree — the pair-dedup predicate `first_match_band(...) == band`
-    keeps each colliding pair in exactly one band without a distinct
-    shuffle. Expressed as a flat CASE chain instead of
-    ``array_position(zip_with(sigs1, sigs2, (x,y) -> x = y), true) - 1``:
-    the zip_with form ALLOCATES an n_bands boolean array per candidate row
-    (tens of millions of rows through the bucket join in this dup-dense
-    corpus), while the CASE chain is branch-per-band codegen with
-    short-circuit evaluation — measured 8.0 s → 3.1 s for the sf0.1
-    closed-vocab candidate stream from this swap alone (guide §1.2 step 2:
-    per-task work). Semantically identical: the join already guarantees a
-    match at the join band, so the ELSE arm (no earlier band matched) can
-    only be reached when the first match IS the last band."""
-    if n_bands == 1:  # zero WHEN branches would render unparseable SQL
-        return F.lit(0)
-    branches = " ".join(
-        f"WHEN {c1}[{i}] = {c2}[{i}] THEN {i}" for i in range(n_bands - 1)
-    )
-    return F.expr(f"CASE {branches} ELSE {n_bands - 1} END")
+_MINHASH_ORACLE = _minhash_pairs_oracle(vocab_idx_duck("token"), V)
 
 
 def _band_signatures(spark, sf_dir, perms, rows_per_band):
-    """(doc_id, lang, mask, band, sig): one row per (doc, LSH band).
+    """(doc_id, lang, mask, sigs, band, sig): one row per (doc, LSH band).
 
     All len(perms) minhashes and the banded signatures are computed from
-    the 31-bit token-set mask (_doc_masks) in ONE codegen'd projection:
-    mh_p = min over set bits i of (a_p*i + b_p) mod 31, and for band B,
-    sig = sum_{p in B} mh_p * 31^(p mod rows_per_band) (a bijection of the
-    per-band minhash tuple, so the candidate SET is weighting-independent).
-    This replaces the former token-by-perm crossJoin pipeline — |tokens|*|P|
-    exploded rows through two shuffled groupBys (32M rows at sf0.1 for the
-    wide bank) — with zero additional shuffle beyond the mask build: per
-    doc it is |P| array-min scans of a <=31-element array, then inline() to
-    n_bands rows. At 100 TB the signature stage is embarrassingly parallel
-    and shuffle-free; only the (band, sig) bucket join moves data."""
-    n_bands = len(perms) // rows_per_band
-    set_idx = "filter(sequence(1, 31), i -> (shiftright(mask, i - 1) & 1) = 1)"
-    band_sigs = []
-    for band in range(n_bands):
-        terms = []
-        for r in range(rows_per_band):
-            a, b = perms[band * rows_per_band + r]
-            mh = f"array_min(transform(_idxs, i -> ({a} * i + {b}) % {_V}))"
-            terms.append(f"CAST({mh} AS BIGINT) * {_V ** r}")
-        band_sigs.append(" + ".join(terms))
-    # Explicit doc_id fan-out between the mask rollup and the band explosion
-    # — the _openvocab_band_rows / salted_lang_pairs discipline: the (band,
-    # sig) bucket join downstream broadcasts its build side at bench scales,
-    # so the multi-million-row candidate expansion runs at THIS frame's
-    # partition count, and AQE partition coalescing sees only a few hundred
-    # KB of mask rows here and merges the probe side down to ONE task (the
-    # expansion's cost is invisible to its heuristic — measured 8.0 s → 1.4 s
-    # for the sf0.1 candidate stream from this exchange alone). On a real
-    # multi-file 100 TB input the scan is already parallel and this shuffle
-    # moves ~16 bytes/doc.
+    the 31-bit token-set mask (sets.doc_masks) in ONE codegen'd projection
+    (sets.band_sigs_sql: mh_p = min over set bits i of (a_p*i + b_p) mod
+    31, packed per band). This replaces the former token-by-perm crossJoin
+    pipeline — |tokens|*|P| exploded rows through two shuffled groupBys
+    (32M rows at sf0.1 for the wide bank) — with zero additional shuffle
+    beyond the mask build: per doc it is |P| array-min scans of a
+    <=31-element array, then inline() to n_bands rows. At 100 TB the
+    signature stage is embarrassingly parallel and shuffle-free; only the
+    (band, sig) bucket join moves data."""
+    band_sigs = band_sigs_sql("_idxs", perms, V, rows_per_band)
+    # Explicit doc_id fan-out before the band explosion (the
+    # salted_lang_pairs discipline): the bucket join broadcasts its build
+    # side, so the candidate expansion runs at THIS frame's partition count,
+    # which AQE coalescing would merge to ONE task (measured 8.0 s → 1.4 s
+    # for the sf0.1 candidate stream from this exchange alone).
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # posexplode_OUTER, not posexplode (round 15): exploding an ALIASED
     # array makes InferFiltersFromGenerate add `size(sigs) > 0 AND
@@ -183,9 +124,9 @@ def _band_signatures(spark, sf_dir, perms, rows_per_band):
     # never null, never empty, so outer ≡ inner row-for-row and the
     # inferred filter simply isn't generated for outer explodes).
     return (
-        _doc_masks(spark, sf_dir)
+        doc_masks(spark, sf_dir)
         .repartition(n_part, F.col("doc_id"))
-        .withColumn("_idxs", F.expr(set_idx))
+        .withColumn("_idxs", F.expr(mask_idxs_sql("mask")))
         .withColumn("sigs", F.expr(f"array({', '.join(band_sigs)})"))
         .select(
             "doc_id",
@@ -198,64 +139,39 @@ def _band_signatures(spark, sf_dir, perms, rows_per_band):
 
 
 def _lsh_candidate_pairs(
-    spark, sf_dir, perms=MINHASH_PERMS, rows_per_band=2, same_lang=False,
-    dedup_pairs=True,
+    spark, sf_dir, perms=MINHASH_PERMS, rows_per_band=ROWS_PER_BAND,
+    same_lang=False, dedup_pairs=True,
 ):
     """(doc1 < doc2, lang, jac) pairs sharing any MinHash band signature,
     BEFORE the >=0.8 re-rank filter — the ONE bucketed candidate generator
     behind dedup_minhash_lsh, dedup_minhash_keepers,
     dedup_connected_components and dedup_lsh_pr_eval. One equi-join on
-    (band, sig) enumerates bucket-mates; never an all-pairs product. The
-    8-byte token masks ride the band rows into the join, so the exact
-    Jaccard is computed INSIDE the join stage (two bit_count ops), before
-    any further shuffle.
+    (band, sig) (sets.band_pairs) enumerates bucket-mates; never an
+    all-pairs product. The 8-byte token masks ride the band rows into the
+    join, so the exact Jaccard is computed INSIDE the join stage (two
+    bit_count ops), before any further shuffle.
 
     dedup_pairs=True (the default) emits each pair exactly once despite
-    multi-band collisions (the common case in this dup-dense corpus: ~20M
-    raw vs 7.9M distinct candidates at sf0.1 for the wide bank) WITHOUT a
-    distinct shuffle: each side carries its full per-band signature array,
-    and the join keeps a pair only in the FIRST band where the arrays
-    agree (array_position over zip_with equality) — the old shape
-    (distinct over all candidates, then two mask joins) cost 24.6s
-    candidates + 16.9s re-rank at sf0.1; see BENCH_r04.
-
-    dedup_pairs=False skips the sigs-array carry and the first-match test
-    and emits one row per colliding band: correct-and-faster for consumers
-    whose aggregation is idempotent under duplicates (min/max per key —
-    dedup_minhash_keepers measured 6.4s → 2.8s at sf0.1 from this)."""
+    multi-band collisions (~20M raw vs 7.9M distinct candidates at sf0.1
+    for the wide bank) without a distinct shuffle; dedup_pairs=False emits
+    one row per colliding band, for consumers whose aggregation is
+    idempotent under duplicates (min/max per key — dedup_minhash_keepers
+    measured 6.4s → 2.8s at sf0.1 from this)."""
     sig = _band_signatures(spark, sf_dir, perms, rows_per_band)
-    carry1 = [F.col("sigs").alias("sigs1")] if dedup_pairs else []
-    carry2 = [F.col("sigs").alias("sigs2")] if dedup_pairs else []
-    b1 = sig.select(
-        F.col("doc_id").alias("doc1"),
-        "lang",
-        F.col("mask").alias("m1"),
-        *carry1,
-        "band",
-        "sig",
-    )
-    b2 = sig.select(
-        F.col("doc_id").alias("doc2"),
-        F.col("lang").alias("lang2"),
-        F.col("mask").alias("m2"),
-        *carry2,
-        F.col("band").alias("band2"),
-        F.col("sig").alias("sig2"),
-    )
-    cond = (b1.band == b2.band2) & (b1.sig == b2.sig2) & (b1.doc1 < b2.doc2)
-    if same_lang:
-        cond = cond & (b1.lang == b2.lang2)
-    if dedup_pairs:
-        cond = cond & (first_match_band(len(perms) // rows_per_band) == b1.band)
-    inter = F.bit_count(F.col("m1").bitwiseAND(F.col("m2"))).cast("double")
-    union = F.bit_count(F.col("m1").bitwiseOR(F.col("m2")))
-    return b1.join(b2, cond).select(
-        "doc1", "doc2", "lang", (inter / union).alias("jac")
+    return band_pairs(
+        sig,
+        len(perms) // rows_per_band,
+        carry=("lang", "mask"),
+        dedup_pairs=dedup_pairs,
+        same="lang" if same_lang else None,
+    ).select(
+        "doc1", "doc2", F.col("lang1").alias("lang"),
+        mask_jaccard("mask1", "mask2").alias("jac"),
     )
 
 
 def _lsh_scored_pairs(
-    spark, sf_dir, perms=MINHASH_PERMS, rows_per_band=2, same_lang=False
+    spark, sf_dir, perms=MINHASH_PERMS, rows_per_band=ROWS_PER_BAND, same_lang=False
 ):
     """_lsh_candidate_pairs re-ranked at exact Jaccard >= 0.8 — the
     production near-dup pair stream (candidate generation + verification)."""
@@ -265,121 +181,11 @@ def _lsh_scored_pairs(
     )
 
 
-def _doc_masks(spark, sf_dir):
-    """(doc_id, lang, mask): the token set as a 31-bit integer bitmask.
-
-    The corpus vocabulary is exactly the 31 VOCAB words (idx ∈ 1..31), so a
-    token SET is losslessly one long, and exact Jaccard between two docs is
-    bit_count(m1 & m2) / bit_count(m1 | m2) — two codegen'd integer ops per
-    pair instead of array_intersect over token arrays. This is what makes
-    re-ranking millions of LSH candidates cheap: the candidate join carries
-    8-byte masks, not string arrays.
-
-    Open-vocabulary corpora (no lossless bitset): swap the re-rank seam
-    for array_intersect-on-candidates or the MinHash-estimate score —
-    SURVEY §14 "Open-vocabulary fallback"."""
-    idx = _tok_idx(spark, sf_dir, distinct=True)
-    return idx.groupBy("doc_id", "lang").agg(
-        F.expr(
-            "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(idx - 1 AS INT)))"
-        ).alias("mask")
-    )
-
-
-def bigram_mask_cols(d):
-    """(doc_id, lang, m0..m15, nsh): the distinct-bigram set of ``text`` as
-    an exact 961-bit bitset in 16 BIGINT columns, plus its cardinality.
-
-    Both tokens of every bigram are in the 31-word vocabulary, so a bigram
-    has an exact index (i-1)·31 + (j-1) ∈ [0, 961) from the 1-based
-    ``array_position`` token indexes — no collisions, so
-    ``Σ bit_count(aᵢ AND bᵢ)`` is the EXACT shingle-set intersection (the
-    bigram analogue of _doc_masks). Built via explode + bit_or GROUP BY:
-    whole-stage codegen'd, map-side combined, a filter-pushdown barrier
-    (a per-row HOF bitset gets its defining aggregate re-inlined into every
-    pushed reference — SURVEY §9 lesson 1), and the output is evenly
-    hash-partitioned for a following pair join. The exploded index list is
-    already distinct, so count(*) IS the set size.
-
-    Open-vocabulary corpora (no exact 961-bit bitset): swap the re-rank
-    seam for array_intersect-on-candidates or the MinHash-estimate score —
-    SURVEY §14 "Open-vocabulary fallback"."""
-    # One array_position per TOKEN over a materialized index column, then
-    # zip_with over two slices — never `split(text)[i + 1]` (or a second
-    # array_position) inside the lambda: a lambda body re-evaluates outer
-    # non-attribute subexpressions per element, so the old form re-split
-    # the text AND re-scanned the vocabulary per bigram (O(n²)
-    # tokenization per doc; measured 1.75 s → 0.4 s for the sf0.1 mask
-    # build from this rewrite alone).
-    ids = F.expr(
-        f"transform(split(text, ' '), t -> array_position({_VOCAB_SPARK}, t))"
-    )
-    bigram_idx = F.expr(
-        """
-        array_distinct(zip_with(
-            slice(ids, 1, size(ids) - 1), slice(ids, 2, size(ids) - 1),
-            (a, b) -> (a - 1) * 31 + (b - 1)))
-        """
-    )
-    bg = d.select("doc_id", "lang", ids.alias("ids")).select(
-        "doc_id", "lang", F.explode(bigram_idx).alias("b")
-    )
-    return bg.groupBy("doc_id", "lang").agg(
-        *[
-            F.expr(
-                f"bit_or(IF(b div 64 = {j}, shiftleft(CAST(1 AS BIGINT),"
-                f" CAST(b % 64 AS INT)), CAST(0 AS BIGINT)))"
-            ).alias(f"m{j}")
-            for j in range(16)
-        ],
-        F.count("*").cast("long").alias("nsh"),
-    )
-
-
-def salted_lang_pairs(docs, n_buckets: int = 8):
-    """All same-lang (doc1 < doc2) pairs from a (doc_id, lang, …) frame,
-    with the self-join salted by doc_id % n_buckets: lang alone gives only
-    |langs| join blocks (5 here), capping parallelism at 5 tasks regardless
-    of cluster size; bucketing the right side and replicating the left
-    across all buckets yields |langs|·B independent blocks, each pair met
-    exactly once — the join_skew_salted treatment applied to a self-join.
-    Columns besides doc_id/lang are carried through with a_/b_ renames.
-
-    The replicated side broadcasts (BuildLeft at these sizes), so the pair
-    stage's parallelism equals the PROBE side's partition count — which for
-    a raw single-file scan is 1 task doing the whole quadratic pair stream
-    (measured: 17 s single-task levenshtein at sf0.1). The explicit
-    repartition below guarantees an evenly hash-partitioned probe side
-    regardless of the input's physical layout; it's a no-op-sized shuffle
-    (id + carried columns) and folds into the exchange an SMJ would need
-    anyway when the build side outgrows the broadcast threshold. The
-    partition count is passed EXPLICITLY: a count-less repartition is fair
-    game for AQE partition coalescing, which sees a few MB of shuffled text
-    and merges the probe side back to ONE partition — serializing the
-    multi-million-row pair expansion that happens downstream of it (the
-    expansion's cost is invisible to the coalescing heuristic)."""
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    carried = [c for c in docs.columns if c not in ("doc_id", "lang")]
-    d1 = docs.select(
-        F.col("doc_id").alias("doc1"),
-        "lang",
-        *[F.col(c).alias(f"a_{c}") for c in carried],
-        F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))).alias("bkt"),
-    )
-    d2 = docs.repartition(n_part, F.col("doc_id")).select(
-        F.col("doc_id").alias("doc2"),
-        F.col("lang").alias("lang2"),
-        *[F.col(c).alias(f"b_{c}") for c in carried],
-        (F.col("doc_id") % n_buckets).cast("int").alias("bkt2"),
-    )
-    return d1.join(
-        d2,
-        (d1.lang == d2.lang2) & (d1.bkt == d2.bkt2) & (d1.doc1 < d2.doc2),
-    )
-
-
-_MINHASH_BOUNDED_ORACLE = f"""
-    WITH pairs AS ({_MINHASH_ORACLE}), ranked AS (
+def _top3_pairs_oracle(pairs: str) -> str:
+    """Per doc1 the top-3 pairs of the pair stream ``pairs`` by jaccard
+    (doc2-ascending tiebreak), plus the uncapped ``n_pairs``."""
+    return f"""
+    WITH pairs AS ({pairs}), ranked AS (
         SELECT doc1, doc2, jaccard,
                CAST(row_number() OVER (PARTITION BY doc1
                                        ORDER BY jaccard DESC, doc2)
@@ -392,7 +198,7 @@ _MINHASH_BOUNDED_ORACLE = f"""
 """
 
 
-@register("dedup_minhash_lsh", oracle=_MINHASH_BOUNDED_ORACLE)
+@register("dedup_minhash_lsh", oracle=_top3_pairs_oracle(_MINHASH_ORACLE))
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash + LSH banding near-dup detection — the 100 TB path that
     dedup_near_jaccard's exact self-join points to. 8 permutations over
@@ -414,7 +220,12 @@ def dedup_minhash_lsh(spark, sf_dir):
     (_lsh_scored_pairs) for dedup_connected_components /
     dedup_minhash_keepers / dedup_lsh_pr_eval; the cap costs one extra
     doc1-keyed shuffle of the pair stream into the ranking window."""
-    pairs = _lsh_scored_pairs(spark, sf_dir)
+    return _top3_pairs(_lsh_scored_pairs(spark, sf_dir))
+
+
+def _top3_pairs(pairs):
+    """Per doc1 the top-3 pairs of ``pairs`` by jaccard (doc2-ascending
+    tiebreak), plus the uncapped ``n_pairs``."""
     part = Window.partitionBy("doc1")
     ranked = part.orderBy(F.desc("jaccard"), F.asc("doc2"))
     return (
@@ -464,102 +275,25 @@ def dedup_minhash_keepers(spark, sf_dir):
     )
 
 
-#: open-vocabulary MinHash modulus — the Mersenne prime 2^31 - 1. Token keys
-#: are 48-bit md5-derived content hashes (the repo's one cross-engine hash,
-#: ``encode.md5_int_sql`` ≡ ``encode.md5_int_duck`` at 12 digits), so
-#: a*h+b stays < 2^52 and band sigs mh0*M + mh1 < 2^62 — all BIGINT-exact.
-_OV_M = 2_147_483_647
-
-_OV_PERMS_DUCK = ", ".join(
-    f"({p}, {a}, {b})" for p, (a, b) in enumerate(MINHASH_PERMS)
-)
-
-_OPENVOCAB_ORACLE = f"""
-    WITH tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
-        FROM documents
-    ), hashed AS (
-        SELECT doc_id,
-               {md5_int_duck("token", 12)} AS h
-        FROM tok
-    ), perms(p, a, b) AS (VALUES {_OV_PERMS_DUCK}),
-    mh AS (
-        SELECT doc_id, p, p // 2 AS band,
-               min((a * h + b) % {_OV_M}) AS mh
-        FROM hashed CROSS JOIN perms
-        GROUP BY doc_id, p
-    ), bands AS (
-        SELECT doc_id, band,
-               CAST(sum(mh * (CASE WHEN p % 2 = 0
-                                   THEN {_OV_M} ELSE 1 END)) AS BIGINT) AS sig
-        FROM mh GROUP BY doc_id, band
-    ), cand AS (
-        SELECT DISTINCT b1.doc_id AS doc1, b2.doc_id AS doc2
-        FROM bands b1 JOIN bands b2
-          ON b1.band = b2.band AND b1.sig = b2.sig AND b1.doc_id < b2.doc_id
-    ), sets AS (
-        SELECT doc_id, list_distinct(string_split(text, ' ')) AS s FROM documents
-    ), pairs AS (
-        SELECT doc1, doc2,
-               round(CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-                     / (len(s1.s) + len(s2.s) - len(list_intersect(s1.s, s2.s))),
-                     4) AS jaccard
-        FROM cand
-        JOIN sets s1 ON s1.doc_id = doc1
-        JOIN sets s2 ON s2.doc_id = doc2
-        WHERE CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-              / (len(s1.s) + len(s2.s) - len(list_intersect(s1.s, s2.s))) >= 0.8
-    ), ranked AS (
-        SELECT doc1, doc2, jaccard,
-               CAST(row_number() OVER (PARTITION BY doc1
-                                       ORDER BY jaccard DESC, doc2)
-                    AS BIGINT) AS pair_rank,
-               CAST(count(*) OVER (PARTITION BY doc1) AS BIGINT) AS n_pairs
-        FROM pairs
-    )
-    SELECT doc1, doc2, jaccard, pair_rank, n_pairs
-    FROM ranked WHERE pair_rank <= 3
-"""
-
-
 def _openvocab_band_rows(spark, sf_dir):
     """(doc_id, sigs, band, sig): banded MinHash rows with NO vocabulary
     assumption — the general corpus path SURVEY §14 documented in prose,
     now executable. Token keys are 48-bit md5-derived content hashes, so
     the signature stage needs no dictionary, no fit pass, and no closed
     31-word bitset: mh_p = min over the doc's distinct-token hashes of
-    (a_p·h + b_p) mod (2^31−1), band sig = mh_{2B}·M + mh_{2B+1} (a
-    bijection of the per-band tuple). Everything happens inside ONE
+    (a_p·h + b_p) mod (2^31−1), packed per band (sets.band_sigs_sql).
+    Everything happens inside ONE
     codegen'd projection on the scan — transform/array_min over the
     split-token array — so at 100 TB the signature stage is shuffle-free
     and embarrassingly parallel; only the (band, sig) bucket join moves
     data. Contrast _band_signatures, which buys its integer re-rank masks
     with the corpus-specific closed vocabulary.
 
-    The explicit doc_id repartition between the signature projection and
-    the band explosion is the salted_lang_pairs discipline: the band join's
-    build side broadcasts at bench scales, so the pair stage's parallelism
-    equals THIS frame's partition count — a raw single-file scan is 1 task
-    doing the entire multi-million-row candidate expansion (measured 117 s
-    → single-digit s at sf0.1). On a real multi-file 100 TB input the scan
-    is already parallel; the count is passed explicitly because the
-    shuffled bytes are small enough that AQE coalescing would otherwise
-    merge the probe side back to one partition (the expansion downstream
-    is invisible to its heuristic)."""
+    The explicit doc_id repartition before the band explosion is the
+    _band_signatures fan-out (measured 117 s → single-digit s at sf0.1)."""
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = load_table(spark, sf_dir, "documents")
-    hashes = (
-        "transform(array_distinct(split(text, ' ')), "
-        f"t -> {md5_int_sql('t', 12)})"
-    )
-    band_sigs = []
-    for band in range(N_BANDS):
-        terms = []
-        for r in range(2):
-            a, b = MINHASH_PERMS[band * 2 + r]
-            mh = f"array_min(transform(_hs, h -> ({a} * h + {b}) % {_OV_M}))"
-            terms.append(f"{mh} * CAST({_OV_M ** (1 - r)} AS BIGINT)")
-        band_sigs.append(" + ".join(terms))
+    band_sigs = band_sigs_sql("_hs", MINHASH_PERMS, OV_M, ROWS_PER_BAND)
     # posexplode_OUTER (the _band_signatures rationale): the inner explode's
     # inferred `size(sigs) > 0` filter inlined the ENTIRE signature build —
     # including the md5 token hashing, 16 evaluations per doc — into an
@@ -579,7 +313,7 @@ def _openvocab_band_rows(spark, sf_dir):
         "acc | shiftleft(CAST(1 AS BIGINT), CAST(pmod(h, 64) AS INT)))"
     )
     return (
-        d.select("doc_id", F.expr(hashes).alias("_hs"))
+        d.select("doc_id", F.expr(token_hashes_sql()).alias("_hs"))
         .withColumn("sigs", F.expr(f"array({', '.join(band_sigs)})"))
         .withColumn("n_tok", F.size("_hs").cast("long"))
         .withColumn("mk", F.expr(mask))
@@ -591,7 +325,10 @@ def _openvocab_band_rows(spark, sf_dir):
     )
 
 
-@register("dedup_minhash_openvocab", oracle=_OPENVOCAB_ORACLE)
+@register(
+    "dedup_minhash_openvocab",
+    oracle=_top3_pairs_oracle(_minhash_pairs_oracle(md5_int_duck("token", 12), OV_M)),
+)
 def dedup_minhash_openvocab(spark, sf_dir):
     """dedup_minhash_lsh for corpora WITHOUT a closed vocabulary — the
     100 TB-general MinHash path (VERDICT r10 item 6, SURVEY §14
@@ -623,15 +360,7 @@ def dedup_minhash_openvocab(spark, sf_dir):
     vs the bitset path's 0.989; the two geometries miss different ~0.5%
     slivers, so set EQUALITY does not hold (nor should it between two
     honest LSH configs)."""
-    pairs = _openvocab_scored_pairs(spark, sf_dir)
-    part = Window.partitionBy("doc1")
-    ranked = part.orderBy(F.desc("jaccard"), F.asc("doc2"))
-    return (
-        pairs.withColumn("pair_rank", F.row_number().over(ranked).cast("long"))
-        .withColumn("n_pairs", F.count(F.lit(1)).over(part).cast("long"))
-        .filter(F.col("pair_rank") <= 3)
-        .select("doc1", "doc2", "jaccard", "pair_rank", "n_pairs")
-    )
+    return _top3_pairs(_openvocab_scored_pairs(spark, sf_dir))
 
 
 def _openvocab_scored_pairs(spark, sf_dir, size_bound=True):
@@ -651,33 +380,9 @@ def _openvocab_scored_pairs(spark, sf_dir, size_bound=True):
     against size_bound=False); what changes is that their token-set arrays
     never move through the two re-rank joins. ``size_bound=False`` exists
     only for that equivalence test."""
-    sig = _openvocab_band_rows(spark, sf_dir)
-    b1 = sig.select(
-        F.col("doc_id").alias("doc1"),
-        F.col("sigs").alias("sigs1"),
-        F.col("n_tok").alias("n1"),
-        F.col("mk").alias("mk1"),
-        "band",
-        "sig",
-    )
-    b2 = sig.select(
-        F.col("doc_id").alias("doc2"),
-        F.col("sigs").alias("sigs2"),
-        F.col("n_tok").alias("n2"),
-        F.col("mk").alias("mk2"),
-        F.col("band").alias("band2"),
-        F.col("sig").alias("sig2"),
-    )
-    cond = (
-        (b1.band == b2.band2)
-        & (b1.sig == b2.sig2)
-        & (b1.doc1 < b2.doc2)
-        & (first_match_band(N_BANDS) == b1.band)
-    )
+    on = None
     if size_bound:
-        cond = cond & (
-            F.lit(5) * F.least(b1.n1, b2.n2) >= F.lit(4) * F.greatest(b1.n1, b2.n2)
-        )
+        n1, n2 = F.col("n_tok1"), F.col("n_tok2")
         # residue-mask prune (round 15, lossless — see _openvocab_band_rows):
         # J ≥ 0.8 ⇔ 9·|∩| ≥ 4·(n1+n2), and |∩| ≤ min(n1 − miss₁, n2 − miss₂)
         # where missᵢ counts residues of side i absent from the other side's
@@ -687,11 +392,13 @@ def _openvocab_scored_pairs(spark, sf_dir, size_bound=True):
         # candidates gone; the verified stream is 2.96M pairs and provably
         # unchanged — the size_bound=False equality test covers this path).
         inter_ub = F.least(
-            b1.n1 - F.expr("bit_count(mk1 & ~mk2)"),
-            b2.n2 - F.expr("bit_count(mk2 & ~mk1)"),
+            n1 - F.expr("bit_count(mk1 & ~mk2)"),
+            n2 - F.expr("bit_count(mk2 & ~mk1)"),
         )
-        cond = cond & (F.lit(9) * inter_ub >= F.lit(4) * (b1.n1 + b2.n2))
-    cand = b1.join(b2, cond).select("doc1", "doc2")
+        on = jaccard_size_bound(n1, n2) & (9 * inter_ub >= 4 * (n1 + n2))
+    cand = band_pairs(
+        _openvocab_band_rows(spark, sf_dir), N_BANDS, carry=("n_tok", "mk"), on=on
+    ).select("doc1", "doc2")
     # Re-rank on the 48-bit CONTENT-HASH token sets, not the string sets:
     # array_intersect over ~40-element string arrays was the operator's
     # single largest cost (measured 5.5 s → 3.1 s for the scored stream at
@@ -701,12 +408,8 @@ def _openvocab_scored_pairs(spark, sf_dir, size_bound=True):
     # tests/test_pipeline.py pins output equality against the string-set
     # re-rank at driver scales, and the hashes are the SAME token keys the
     # signature/candidate stage already stands on.
-    hashes = (
-        "transform(array_distinct(split(text, ' ')), "
-        f"t -> {md5_int_sql('t', 12)})"
-    )
     sets = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(hashes).alias("s")
+        "doc_id", F.expr(token_hashes_sql()).alias("s")
     )
     inter = F.size(F.array_intersect("s1", "s2"))
     denom = F.size("s1") + F.size("s2") - inter
@@ -721,34 +424,12 @@ def _openvocab_scored_pairs(spark, sf_dir, size_bound=True):
 
 
 _LSH_PR_ORACLE = f"""
-    WITH tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
-        FROM documents
-    ), idx AS (
-        SELECT doc_id, list_position({_VOCAB_DUCK}, token) AS idx FROM tok
-    ), perms(p, a, b) AS (VALUES {", ".join(f"({p}, {a}, {b})" for p, (a, b) in enumerate(MINHASH_PERMS))}),
-    mh AS (
-        SELECT doc_id, p, p // 2 AS band,
-               min((a * idx + b) % {{v}}) AS mh
-        FROM idx CROSS JOIN perms
-        GROUP BY doc_id, p
-    ), bands AS (
-        SELECT doc_id, band,
-               CAST(sum(mh * (CASE WHEN p % 2 = 0 THEN {{v}} ELSE 1 END)) AS BIGINT) AS sig
-        FROM mh GROUP BY doc_id, band
-    ), docs AS (
-        SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS s
-        FROM documents
-    ), cand AS (
-        SELECT DISTINCT b1.doc_id AS doc1, b2.doc_id AS doc2
-        FROM bands b1
-        JOIN bands b2 ON b1.band = b2.band AND b1.sig = b2.sig
-                     AND b1.doc_id < b2.doc_id
-        JOIN docs d1 ON d1.doc_id = b1.doc_id
-        JOIN docs d2 ON d2.doc_id = b2.doc_id AND d2.lang = d1.lang
+    WITH {minhash_bands_duck(vocab_idx_duck("token"), MINHASH_PERMS, V, ROWS_PER_BAND,
+                             by="doc_id, lang")},
+    {band_pairs_duck(same_lang=True)}, docs AS (
+        SELECT doc_id, lang, {token_set_duck()} AS s FROM documents
     ), scored AS (
-        SELECT CAST(len(list_intersect(s1.s, s2.s)) AS DOUBLE)
-               / (len(s1.s) + len(s2.s) - len(list_intersect(s1.s, s2.s))) AS jac
+        SELECT {jaccard_duck("s1.s", "s2.s")} AS jac
         FROM cand
         JOIN docs s1 ON s1.doc_id = doc1
         JOIN docs s2 ON s2.doc_id = doc2
@@ -759,14 +440,13 @@ _LSH_PR_ORACLE = f"""
     ), eagg AS (
         SELECT CAST(count(*) AS BIGINT) AS n_exact
         FROM docs d1 JOIN docs d2 ON d1.lang = d2.lang AND d1.doc_id < d2.doc_id
-        WHERE CAST(len(list_intersect(d1.s, d2.s)) AS DOUBLE)
-              / (len(d1.s) + len(d2.s) - len(list_intersect(d1.s, d2.s))) >= 0.8
+        WHERE {jaccard_duck("d1.s", "d2.s")} >= 0.8
     )
     SELECT n_candidates, n_found, n_exact,
            (1000 * n_found) // n_exact      AS recall_permille,
            (1000 * n_found) // n_candidates AS cand_precision_permille
     FROM cagg, eagg
-""".replace("{v}", str(_V))
+"""
 
 
 @register("dedup_lsh_pr_eval", oracle=_LSH_PR_ORACLE)
@@ -795,13 +475,9 @@ def dedup_lsh_pr_eval(spark, sf_dir):
     # sides of the salted self-join (d1/d2), so without it the token
     # explode + bit_or subtree executes twice in the same action (SURVEY
     # §10 lesson 4 — checkpoint re-referenced subtrees; VERDICT r6 item 7).
-    docs = _doc_masks(spark, sf_dir).localCheckpoint(eager=False)
+    docs = doc_masks(spark, sf_dir).localCheckpoint(eager=False)
     pairs = salted_lang_pairs(docs)
-    exact_jac = (
-        F.bit_count(F.col("a_mask").bitwiseAND(F.col("b_mask"))).cast("double")
-        / F.bit_count(F.col("a_mask").bitwiseOR(F.col("b_mask")))
-    )
-    eagg = pairs.filter(exact_jac >= 0.8).agg(
+    eagg = pairs.filter(mask_jaccard("a_mask", "b_mask") >= 0.8).agg(
         F.count(F.lit(1)).cast("long").alias("n_exact")
     )
     return (
@@ -822,7 +498,7 @@ _SIMHASH_ORACLE = f"""
         FROM documents
     ), idx AS (
         SELECT doc_id,
-               (CAST(list_position({_VOCAB_DUCK}, token) AS BIGINT) * {_SIMHASH_MULT})
+               (CAST({vocab_idx_duck('token')} AS BIGINT) * {_SIMHASH_MULT})
                    % 65536 AS g
         FROM tok
     ), bits(bit, pow2) AS (VALUES {", ".join(f"({j}, {2**j})" for j in range(_SIMHASH_BITS))}),
@@ -849,7 +525,7 @@ def dedup_simhash(spark, sf_dir):
     doc). Pure integer math, single shuffle per aggregation level; at scale
     the hamming-≤k expansion joins each signature against its k-bit-flip
     neighborhood (multi-probe), still equi-joins."""
-    idx = _tok_idx(spark, sf_dir, distinct=True).select(
+    idx = tok_idx(spark, sf_dir, distinct=True).select(
         "doc_id", (F.col("idx").cast("long") * _SIMHASH_MULT % 65536).alias("g")
     )
     bits = F.broadcast(
@@ -887,7 +563,7 @@ _LANG_ID_ORACLE = f"""
     ), scored AS (
         SELECT t.doc_id, t.lang, totals.cand_lang,
                round(sum(ln((coalesce(profile.cnt, 0) + 1.0)
-                            / (totals.tot + {_V}))), 6) AS score
+                            / (totals.tot + {V}))), 6) AS score
         FROM tok t
         CROSS JOIN totals
         LEFT JOIN profile ON profile.cand_lang = totals.cand_lang
@@ -910,7 +586,7 @@ def text_lang_id(spark, sf_dir):
     the driver asks for, with the profile learned relationally — a groupBy,
     not a model file; scales as two keyed aggregations + a broadcast of the
     155-row profile."""
-    tok = _tok_idx(spark, sf_dir, distinct=False).select("doc_id", "lang", "token")
+    tok = tok_idx(spark, sf_dir, distinct=False).select("doc_id", "lang", "token")
     profile = tok.groupBy(F.col("lang").alias("cand_lang"), "token").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -930,7 +606,7 @@ def text_lang_id(spark, sf_dir):
                 F.sum(
                     F.log(
                         (F.coalesce(F.col("cnt"), F.lit(0)) + 1.0)
-                        / (F.col("tot") + _V)
+                        / (F.col("tot") + V)
                     )
                 ),
                 6,
@@ -1050,7 +726,7 @@ def text_token_count(spark, sf_dir):
     WITH d AS (
         SELECT doc_id,
                list_transform(string_split(text, ' '),
-                              t -> CAST(list_position({_VOCAB_DUCK}, t) AS BIGINT))
+                              t -> CAST({vocab_idx_duck('t')} AS BIGINT))
                    AS idxs
         FROM documents
     )
@@ -1068,7 +744,7 @@ def text_fingerprint(spark, sf_dir):
     any scale."""
     d = load_table(spark, sf_dir, "documents")
     idxs = F.expr(
-        f"transform(split(text, ' '), t -> CAST(array_position({_VOCAB_SPARK}, t) AS BIGINT))"
+        f"transform(split(text, ' '), t -> CAST({vocab_idx_sql('t')} AS BIGINT))"
     )
     fp = F.aggregate(
         idxs, F.lit(0).cast("long"), lambda h, i: (h * 33 + i) % _FP_MOD
@@ -1132,7 +808,7 @@ def multimodal_decode(spark, sf_dir):
 
 @register(
     "dedup_ngram_jaccard",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT doc_id, lang,
                list_distinct(list_transform(
@@ -1141,12 +817,9 @@ def multimodal_decode(spark, sf_dir):
         FROM documents
     )
     SELECT d1.doc_id AS doc1, d2.doc_id AS doc2, d1.lang AS lang,
-           round(CAST(len(list_intersect(d1.sh, d2.sh)) AS DOUBLE)
-                 / (len(d1.sh) + len(d2.sh) - len(list_intersect(d1.sh, d2.sh))), 4)
-               AS shingle_jaccard
+           round({jaccard_duck("d1.sh", "d2.sh")}, 4) AS shingle_jaccard
     FROM d d1 JOIN d d2 ON d1.lang = d2.lang AND d1.doc_id < d2.doc_id
-    WHERE CAST(len(list_intersect(d1.sh, d2.sh)) AS DOUBLE)
-          / (len(d1.sh) + len(d2.sh) - len(list_intersect(d1.sh, d2.sh))) >= 0.5
+    WHERE {jaccard_duck("d1.sh", "d2.sh")} >= 0.5
     """,
 )
 def dedup_ngram_jaccard(spark, sf_dir):
@@ -1164,15 +837,12 @@ def dedup_ngram_jaccard(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     docs = bigram_mask_cols(d)
     pairs = salted_lang_pairs(docs)
-    inter = sum(
-        F.bit_count(F.col(f"a_m{j}").bitwiseAND(F.col(f"b_m{j}"))) for j in range(16)
-    ).cast("long")
     scored = pairs.select(
         "doc1",
         "doc2",
         "lang",
         (F.col("a_nsh") + F.col("b_nsh")).alias("nsum"),
-        inter.alias("inter"),
+        bigram_inter().alias("inter"),
     )
     jac = F.col("inter").cast("double") / (F.col("nsum") - F.col("inter"))
     return (
@@ -1385,25 +1055,11 @@ def _lsh_threshold_pairs(e_raw, threshold: float):
     banded = e_raw.withColumn("sigs", F.array(*band_sigs)).select(
         "vec_id", "label", "sigs", F.posexplode_outer("sigs").alias("band", "sig")
     )
-    s1 = banded.select(
-        F.col("vec_id").alias("id1"), "label", F.col("sigs").alias("sigs1"), "band", "sig"
+    cand = band_pairs(
+        banded, N_BANDS, carry=("label",), same="label", key="vec_id"
+    ).select(
+        F.col("doc1").alias("id1"), F.col("doc2").alias("id2"), F.col("label1").alias("label")
     )
-    s2 = banded.select(
-        F.col("vec_id").alias("id2"),
-        F.col("label").alias("label2"),
-        F.col("sigs").alias("sigs2"),
-        F.col("band").alias("band2"),
-        F.col("sig").alias("sig2"),
-    )
-    first_match = first_match_band(N_BANDS) == s1.band
-    cand = s1.join(
-        s2,
-        (s1.band == s2.band2)
-        & (s1.sig == s2.sig2)
-        & (s1.label == s2.label2)
-        & (s1.id1 < s2.id2)
-        & first_match,
-    ).select("id1", "id2", "label")
     e_norm = _normalized(e_raw)
     v1 = e_norm.select(F.col("vec_id").alias("id1"), F.col("v").alias("v1"))
     v2 = e_norm.select(F.col("vec_id").alias("id2"), F.col("v").alias("v2"))
@@ -1621,7 +1277,7 @@ def propagate_min_labels(labels, edges, max_iters=50, stats=None):
 
 @register(
     "dedup_connected_components",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE sets AS MATERIALIZED (
         SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS s
         FROM documents
@@ -1629,8 +1285,7 @@ def propagate_min_labels(labels, edges, max_iters=50, stats=None):
         SELECT a.doc_id AS src, b.doc_id AS dst
         FROM sets a JOIN sets b
           ON a.lang = b.lang AND a.doc_id <> b.doc_id
-        WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.8
+        WHERE {jaccard_duck("a.s", "b.s")} >= 0.8
     ), reach AS (
         SELECT doc_id, doc_id AS comp FROM sets
         UNION
@@ -1666,7 +1321,7 @@ def dedup_connected_components(spark, sf_dir):
         rows_per_band=WIDE_ROWS_PER_BAND,
         same_lang=True,
     ).select("doc1", "doc2")
-    masks = _doc_masks(spark, sf_dir)
+    masks = doc_masks(spark, sf_dir)
     # No checkpoint here: propagate_min_labels repartitions the edge list on
     # src and checkpoints it once — materializing twice would double the
     # candidate-join cost.
@@ -1980,17 +1635,12 @@ def dedup_contamination_ngram(spark, sf_dir):
         GROUP BY i.doc_id
     ), near AS (
         SELECT i.doc_id, b.doc_id AS near_dup_of,
-               round(CAST(len(list_intersect(i.s, b.s)) AS DOUBLE)
-                     / (len(i.s) + len(b.s) - len(list_intersect(i.s, b.s))), 4)
-                   AS near_jaccard,
+               round({jaccard_duck("i.s", "b.s")}, 4) AS near_jaccard,
                row_number() OVER (
                    PARTITION BY i.doc_id
-                   ORDER BY CAST(len(list_intersect(i.s, b.s)) AS DOUBLE)
-                            / (len(i.s) + len(b.s) - len(list_intersect(i.s, b.s)))
-                            DESC, b.doc_id ASC) AS rn
+                   ORDER BY {jaccard_duck("i.s", "b.s")} DESC, b.doc_id ASC) AS rn
         FROM incr i JOIN base b ON i.lang = b.lang
-        WHERE CAST(len(list_intersect(i.s, b.s)) AS DOUBLE)
-              / (len(i.s) + len(b.s) - len(list_intersect(i.s, b.s))) >= 0.8
+        WHERE {jaccard_duck("i.s", "b.s")} >= 0.8
     )
     SELECT i.doc_id, i.lang,
            e.exact_dup_of,
@@ -2042,7 +1692,7 @@ def _incremental_report(spark, sf_dir, banded=True):
     d = load_table(spark, sf_dir, "documents")
     fp = F.array_join(F.sort_array(F.array_distinct(F.split("text", " "))), ",")
     bkt = md5_bucket("doc_id", 10)
-    masks = _doc_masks(spark, sf_dir)
+    masks = doc_masks(spark, sf_dir)
     # localCheckpoint: incr feeds the exact join, the near stage, and the
     # final report spine; base feeds the exact join and the near stage —
     # without the cut the fp/mask build subtree re-executes per reference
@@ -2118,16 +1768,14 @@ def _incremental_near_banded(incr, base):
     bb = _mask_band_rows(b_m, "b_mask", ["lang", "b_mask", "min_doc"])
     ic = F.bit_count("i_mask").cast("long")
     bc = F.bit_count("b_mask").cast("long")
-    inter = F.bit_count(F.col("i_mask").bitwiseAND(F.col("b_mask"))).cast("long")
-    union = F.bit_count(F.col("i_mask").bitwiseOR(F.col("b_mask"))).cast("long")
-    jac = inter.cast("double") / union
+    jac = mask_jaccard("i_mask", "b_mask")
     w = Window.partitionBy("lang", "i_mask").orderBy(
         F.col("jac").desc(), F.col("min_doc").asc()
     )
     best = (
         F.broadcast(ib)
         .join(bb, ["lang", "band", "val"])
-        .filter(5 * F.least(ic, bc) >= 4 * F.greatest(ic, bc))
+        .filter(jaccard_size_bound(ic, bc))
         .select("lang", "i_mask", "b_mask", "min_doc")
         .distinct()
         .select("lang", "i_mask", "min_doc", jac.alias("jac"))
@@ -2158,9 +1806,7 @@ def _incremental_near_allpairs(incr, base):
         F.col("lang").alias("b_lang"),
         F.col("mask").alias("b_mask"),
     )
-    inter = F.bit_count(F.col("i_mask").bitwiseAND(F.col("b_mask"))).cast("long")
-    union = F.bit_count(F.col("i_mask").bitwiseOR(F.col("b_mask"))).cast("long")
-    jac = inter.cast("double") / union
+    jac = mask_jaccard("i_mask", "b_mask")
     w = Window.partitionBy("doc_id").orderBy(F.col("jac").desc(), F.col("near_doc").asc())
     return (
         F.broadcast(i_m)
@@ -2253,48 +1899,30 @@ def multimodal_phash_dedup(spark, sf_dir):
     band_vals = F.array(
         *[F.expr(f"(ph div {2 ** (15 * i)}) % 32768") for i in range(4)]
     )
-    sig = imgs.select("img_id", "ph", band_vals.alias("bands"))
     # posexplode_OUTER (the _band_signatures rationale): the inner form's
     # inferred size filter re-inlines the md5 phash build per band
-    # reference; bands is a constructed 4-element array, outer ≡ inner.
-    a = sig.select(
-        F.col("img_id").alias("img1"),
-        F.col("ph").alias("ph1"),
-        F.col("bands").alias("bands1"),
-        F.posexplode_outer("bands").alias("band", "val"),
+    # reference; sigs is a constructed 4-element array, outer ≡ inner.
+    sig = imgs.select("img_id", "ph", band_vals.alias("sigs")).select(
+        "img_id", "ph", "sigs", F.posexplode_outer("sigs").alias("band", "sig")
     )
-    bside = sig.select(
-        F.col("img_id").alias("img2"),
-        F.col("ph").alias("ph2"),
-        F.col("bands").alias("bands2"),
-        F.posexplode_outer("bands").alias("band2", "val2"),
-    )
-    pairs = a.join(
-        bside,
-        (F.col("band") == F.col("band2"))
-        & (F.col("val") == F.col("val2"))
-        & (F.col("img1") < F.col("img2")),
-    )
-    first_band = first_match_band(4, "bands1", "bands2") == F.col("band")
     hamming = F.bit_count(F.col("ph1").bitwiseXOR(F.col("ph2"))).cast("long")
     return (
-        pairs.filter(first_band)
-        .select("img1", "img2", hamming.alias("hamming"))
+        band_pairs(sig, 4, carry=("ph",), key="img_id")
+        .select(F.col("doc1").alias("img1"), F.col("doc2").alias("img2"), hamming.alias("hamming"))
         .filter(F.col("hamming") <= 8)
     )
 
 
 @register(
     "dedup_soft_weights",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS s
         FROM documents
     ), pairs AS (
         SELECT d1.doc_id AS a, d2.doc_id AS b
         FROM d d1 JOIN d d2 ON d1.lang = d2.lang AND d1.doc_id < d2.doc_id
-        WHERE 5 * len(list_intersect(d1.s, d2.s))
-              >= 4 * (len(d1.s) + len(d2.s) - len(list_intersect(d1.s, d2.s)))
+        WHERE 5 * {inter_duck("d1.s", "d2.s")} >= 4 * {union_duck("d1.s", "d2.s")}
     ), deg AS (
         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_near_dups
         FROM (SELECT a AS doc_id FROM pairs
@@ -2339,7 +1967,7 @@ def dedup_soft_weights(spark, sf_dir):
     # localCheckpoint: the mask rollup feeds BOTH the distinct-mask pair
     # stage and the final doc re-attach — without it the token explode +
     # bit_or subtree executes twice per action (SURVEY §10 lesson 4).
-    masks = _doc_masks(spark, sf_dir).localCheckpoint(eager=False)
+    masks = doc_masks(spark, sf_dir).localCheckpoint(eager=False)
     mg = masks.groupBy("lang", "mask").agg(F.count("*").cast("long").alias("cnt"))
     a = _mask_band_rows(
         mg.select("lang", F.col("mask").alias("a_mask")), "a_mask",
@@ -2354,15 +1982,20 @@ def dedup_soft_weights(spark, sf_dir):
     bc = F.bit_count("b_mask").cast("long")
     deg_mask = (
         a.join(b, ["lang", "band", "val"])
-        .filter(5 * F.least(ac, bc) >= 4 * F.greatest(ac, bc))
+        .filter(jaccard_size_bound(ac, bc))
         .select("lang", "a_mask", "b_mask", "b_cnt")
         .distinct()
-        .filter(F.expr("5 * bit_count(a_mask & b_mask) >= 4 * bit_count(a_mask | b_mask)"))
+        .filter(
+            F.expr(
+                f"5 * {mask_inter_sql('a_mask', 'b_mask')}"
+                f" >= 4 * {mask_union_sql('a_mask', 'b_mask')}"
+            )
+        )
         .groupBy("lang", F.col("a_mask").alias("mask"))
         .agg((F.sum("b_cnt") - 1).cast("long").alias("deg"))
     )
     # Spine = the documents table, NOT the mask frame: a doc whose text
-    # explodes to zero token rows (NULL text) has no _doc_masks row but
+    # explodes to zero token rows (NULL text) has no doc_masks row but
     # must still appear with weight 1000, exactly as the oracle's LEFT
     # JOIN from documents keeps it (round-14 review finding 1).
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
@@ -2501,13 +2134,12 @@ def text_langid_confusion(spark, sf_dir):
 
 @register(
     "dedup_threshold_sweep",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS s
         FROM documents
     ), scored AS (
-        SELECT (1000 * len(list_intersect(d1.s, d2.s)))
-               // (len(d1.s) + len(d2.s) - len(list_intersect(d1.s, d2.s)))
+        SELECT (1000 * {inter_duck("d1.s", "d2.s")}) // {union_duck("d1.s", "d2.s")}
                    AS permille
         FROM d d1 JOIN d d2 ON d1.lang = d2.lang AND d1.doc_id < d2.doc_id
     ), bucketed AS (
@@ -2546,11 +2178,11 @@ def dedup_threshold_sweep(spark, sf_dir):
     blocked-exact range, same downstream histogram). Everything after the
     pair stream is a ≤11-row threshold axis: the cumulative window is
     bounded by construction."""
-    masks = _doc_masks(spark, sf_dir)
+    masks = doc_masks(spark, sf_dir)
     pairs = salted_lang_pairs(masks)
     permille = F.expr(
-        "(1000 * bit_count(a_mask & b_mask))"
-        " div bit_count(a_mask | b_mask)"
+        f"(1000 * {mask_inter_sql('a_mask', 'b_mask')})"
+        f" div {mask_union_sql('a_mask', 'b_mask')}"
     )
     bucketed = (
         pairs.select(permille.alias("permille"))

@@ -28,6 +28,7 @@ from ..functions.encode import (
     milli_duck,
     milli_py,
 )
+from ..functions.sets import band_pairs, first_match_band
 from ..functions.vectors import array_sql, nearest_sql, sq_l2, sq_l2_sql
 from ..io import load_table
 from ..registry_util import new_registry
@@ -345,8 +346,6 @@ def sim_ann_lsh(spark, sf_dir):
     # predicate (each pair emits exactly once — no dropDuplicates shuffle of
     # vector-width rows), and vectors join back AFTER dedup for the re-rank
     # (node-sized side, broadcast-able).
-    from .pipeline import first_match_band
-
     # Explicit vec_id fan-out before the signature projection and band
     # explosion — the _openvocab_band_rows discipline: the bucket join's
     # build side broadcasts at these sizes, so both the bands×bits dot
@@ -368,29 +367,11 @@ def sim_ann_lsh(spark, sf_dir):
             F.posexplode_outer("sigs").alias("band", "sig"),
         )
     )
-    s1 = banded.select(
-        F.col("vec_id").alias("id1"),
-        "label",
-        F.col("sigs").alias("sigs1"),
-        "band",
-        "sig",
+    cand = band_pairs(
+        banded, bands, carry=("label",), same="label", key="vec_id"
+    ).select(
+        F.col("doc1").alias("id1"), F.col("doc2").alias("id2"), F.col("label1").alias("label")
     )
-    s2 = banded.select(
-        F.col("vec_id").alias("id2"),
-        F.col("label").alias("label2"),
-        F.col("sigs").alias("sigs2"),
-        F.col("band").alias("band2"),
-        F.col("sig").alias("sig2"),
-    )
-    first_match = first_match_band(bands) == s1.band
-    cand = s1.join(
-        s2,
-        (s1.band == s2.band2)
-        & (s1.sig == s2.sig2)
-        & (s1.label == s2.label2)
-        & (s1.id1 < s2.id2)
-        & first_match,
-    ).select("id1", "id2", "label")
     v1 = e.select(F.col("vec_id").alias("id1"), F.col("v").alias("v1"))
     v2 = e.select(F.col("vec_id").alias("id2"), F.col("v").alias("v2"))
     sim = F.round(_cosine(F.col("v1"), F.col("v2")), 4)
@@ -1605,8 +1586,6 @@ def sim_ann_graph(spark, sf_dir):
         )
         for b in range(bands)
     )
-    from .pipeline import first_match_band
-
     # posexplode_OUTER (pipeline._band_signatures rationale): the inner
     # form's inferred size filter re-inlines the bands×bits dot-product
     # build into an always-true predicate that the checkpoint then

@@ -19,6 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.encode import md5_bucket, md5_bucket_duck, md5_int_duck, md5_int_sql
+from ..functions.sets import doc_masks, jaccard_duck, mask_jaccard, salted_lang_pairs
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -246,7 +247,7 @@ def dedup_exact_text(spark, sf_dir):
 
 @register(
     "dedup_near_jaccard",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS s
         FROM documents
@@ -254,12 +255,9 @@ def dedup_exact_text(spark, sf_dir):
     SELECT d1.doc_id AS doc1,
            d2.doc_id AS doc2,
            d1.lang   AS lang,
-           round(CAST(len(list_intersect(d1.s, d2.s)) AS DOUBLE)
-                 / (len(d1.s) + len(d2.s) - len(list_intersect(d1.s, d2.s))), 4)
-               AS jaccard
+           round({jaccard_duck("d1.s", "d2.s")}, 4) AS jaccard
     FROM d d1 JOIN d d2 ON d1.lang = d2.lang AND d1.doc_id < d2.doc_id
-    WHERE CAST(len(list_intersect(d1.s, d2.s)) AS DOUBLE)
-          / (len(d1.s) + len(d2.s) - len(list_intersect(d1.s, d2.s))) >= 0.8
+    WHERE {jaccard_duck("d1.s", "d2.s")} >= 0.8
     """,
 )
 def dedup_near_jaccard(spark, sf_dir):
@@ -268,27 +266,19 @@ def dedup_near_jaccard(spark, sf_dir):
     compare count is O(n² per lang) by definition; the LSH-banded variant
     (pipeline.dedup_minhash_lsh) is the sublinear 100 TB path.
 
-    Spark path runs on 31-bit token-set masks (pipeline._doc_masks — the
+    Spark path runs on 31-bit token-set masks (sets.doc_masks — the
     vocabulary is exactly 31 words, so a token SET is losslessly one long):
     pair Jaccard is bit_count(m1 & m2) / bit_count(m1 | m2), two codegen'd
     integer ops instead of array_intersect over string arrays (measured
     44 s → ~4 s at sf0.1), and the self-join is salted by doc_id % 8 so
     parallelism isn't capped at the language count
-    (pipeline.salted_lang_pairs). Jaccard stays a ratio of the same exact
+    (sets.salted_lang_pairs). Jaccard stays a ratio of the same exact
     integers, so both engines produce bit-identical doubles."""
-    from .pipeline import _doc_masks, salted_lang_pairs
-
-    docs = _doc_masks(spark, sf_dir)
-    pairs = salted_lang_pairs(docs)
-    inter = F.bit_count(F.col("a_mask").bitwiseAND(F.col("b_mask"))).cast("long")
-    union = F.bit_count(F.col("a_mask").bitwiseOR(F.col("b_mask"))).cast("long")
-    scored = pairs.select(
-        "doc1", "doc2", "lang", inter.alias("inter"), union.alias("uni")
-    )
-    jac = F.col("inter").cast("double") / F.col("uni")
+    pairs = salted_lang_pairs(doc_masks(spark, sf_dir))
     return (
-        scored.filter(jac >= 0.8)
-        .select("doc1", "doc2", "lang", F.round(jac, 4).alias("jaccard"))
+        pairs.select("doc1", "doc2", "lang", mask_jaccard("a_mask", "b_mask").alias("jac"))
+        .filter(F.col("jac") >= 0.8)
+        .select("doc1", "doc2", "lang", F.round("jac", 4).alias("jaccard"))
     )
 
 
@@ -432,7 +422,7 @@ def dedup_fuzzy_levenshtein(spark, sf_dir):
     Jaccard treats as unrelated vocabulary changes and vice versa (a token
     reorder is Jaccard-1.0 but large edit distance; measured: the corpus's
     lev distribution is bimodal, ≤5 or ≫10, so the threshold is stable).
-    The self-join is salted by doc_id % 8 (pipeline.salted_lang_pairs) so
+    The self-join is salted by doc_id % 8 (sets.salted_lang_pairs) so
     the exact O(n² per lang) compare count spreads over |langs|·8 tasks
     instead of capping at the language count (measured 16.2 s → ~3 s at
     sf0.1). The length prefilter rides the join condition: lev ≤ 10 implies
@@ -441,8 +431,6 @@ def dedup_fuzzy_levenshtein(spark, sf_dir):
     59.6→~3 s at sf0.01; the identical implied predicate is in the oracle so
     DuckDB prunes too). Both engines implement classic Wagner-Fischer, so
     the distances are identical integers."""
-    from .pipeline import salted_lang_pairs
-
     d = load_table(spark, sf_dir, "documents")
     texts = d.select("doc_id", "lang", "text")
     # threshold form = banded Wagner-Fischer, O(len·10) not O(len²); returns
@@ -496,7 +484,7 @@ def text_ngram_novelty(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     # zip_with over two slices of a materialized token column — the old
     # lambda re-split the text per bigram (O(n²) tokenization per doc;
-    # see pipeline.bigram_mask_cols)
+    # see sets.bigram_mask_cols)
     bg = d.select("doc_id", F.split("text", " ").alias("toks")).select(
         "doc_id",
         F.explode(

@@ -49,6 +49,14 @@ from ..functions.encode import (
     md5_int_duck,
     milli,
 )
+from ..functions.sets import (
+    MINHASH_PERMS,
+    V,
+    band_sigs_sql,
+    minhash_bands_duck,
+    vocab_idx_duck,
+    vocab_idx_sql,
+)
 from ..functions.vectors import (
     centroid_ranks_duck,
     lloyd_centroids,
@@ -533,20 +541,20 @@ def stream_foreachbatch(spark, sf_dir):
     upserts, MERGE targets)."""
     out = stage_dir(sf_dir, "foreachbatch_out")
 
+    def counts(df: DataFrame) -> DataFrame:
+        return df.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(f"{out}/batch_{batch_id}")
-        )
+        counts(batch_df).write.mode("overwrite").parquet(f"{out}/batch_{batch_id}")
 
     s = _table_stream(spark, sf_dir, "events")
     with _stream_partitions(spark):
         q = s.writeStream.foreachBatch(upsert).trigger(availableNow=True).start()
         q.awaitTermination()
+    # read back with the writer's schema: inferring is a job per read
     return (
-        spark.read.parquet(f"{out}/*")
+        spark.read.schema(counts(s).schema)
+        .parquet(f"{out}/*")
         .groupBy("event_type")
         .agg(F.sum("n").alias("n"))
     )
@@ -717,21 +725,28 @@ def stream_cdc_upsert(spark, sf_dir):
         F.desc("t"), F.desc("event_id")
     )
 
-    def merge(batch_df, _id):
-        b = batch_df.select(
+    def changes(df):
+        return df.select(
             "user_id",
             "event_type",
             F.round(F.col("value") * 100).cast("long").alias("cents"),
             F.unix_micros("ts").alias("t"),
             "event_id",
         )
+
+    # read back with the writer's schema: inferring it is a job per read
+    snap_schema = changes(src).schema
+
+    def merge(batch_df, _id):
+        b = changes(batch_df)
         latest_b = b.withColumn("rn", F.row_number().over(w)).filter(
             F.col("rn") == 1
         ).drop("rn")
         bspark = batch_df.sparkSession
         if os.path.isdir(snap):
             merged = (
-                bspark.read.parquet(snap)
+                bspark.read.schema(snap_schema)
+                .parquet(snap)
                 .unionByName(latest_b)
                 .withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") == 1)
@@ -752,7 +767,8 @@ def stream_cdc_upsert(spark, sf_dir):
         )
         q.awaitTermination()
     return (
-        spark.read.parquet(snap)
+        spark.read.schema(snap_schema)
+        .parquet(snap)
         .filter(F.col("event_type") != "error")
         .select(
             "user_id",
@@ -818,22 +834,10 @@ def stream_topk_per_window(spark, sf_dir):
     )
 
 
-def _minhash_sig_oracle() -> str:
-    from ..operators.pipeline import MINHASH_PERMS, _V, _VOCAB_DUCK
-
-    terms = " + ".join(
-        f"CAST(list_min(list_transform(idxs, i -> ({a} * i + {b}) % {_V}))"
-        f" AS BIGINT) * {_V ** p}"
-        for p, (a, b) in enumerate(MINHASH_PERMS)
-    )
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, lang,
-               list_distinct(list_transform(string_split(text, ' '),
-                             t -> list_position({_VOCAB_DUCK}, t))) AS idxs
-        FROM documents
-    ), sig AS (
-        SELECT doc_id, lang, CAST({terms} AS BIGINT) AS sig FROM toks
+_MINHASH_SIG_ORACLE = f"""
+    WITH {minhash_bands_duck(vocab_idx_duck("token"), MINHASH_PERMS, V, len(MINHASH_PERMS))}
+    , sig AS (
+        SELECT d.lang, b.sig FROM documents d LEFT JOIN bands b USING (doc_id)
     )
     SELECT lang,
            CAST(count(*) AS BIGINT)                         AS n_docs,
@@ -842,10 +846,10 @@ def _minhash_sig_oracle() -> str:
            CAST(1000 * count(DISTINCT sig) // count(*) AS BIGINT)
                AS kept_permille
     FROM sig GROUP BY lang
-    """
+"""
 
 
-@register("stream_dedup_minhash", oracle=_minhash_sig_oracle())
+@register("stream_dedup_minhash", oracle=_MINHASH_SIG_ORACLE)
 def stream_dedup_minhash(spark, sf_dir):
     """Streaming near-dup dedup AT INGEST: every arriving document gets its
     full 8-permutation MinHash signature (the same deterministic
@@ -866,21 +870,12 @@ def stream_dedup_minhash(spark, sf_dir):
     unbounded operation the key set is bounded with
     dropDuplicatesWithinWatermark on ingest time (trade: re-admits a
     class after the horizon); this bounded demo keeps exact state."""
-    from ..operators.pipeline import MINHASH_PERMS, _V, _VOCAB_SPARK
-
-    idxs = (
-        f"array_distinct(transform(split(text, ' '), "
-        f"t -> array_position({_VOCAB_SPARK}, t)))"
-    )
-    terms = " + ".join(
-        f"array_min(transform(_idxs, i -> CAST(({a} * i + {b}) % {_V} AS BIGINT)))"
-        f" * {_V ** p}L"
-        for p, (a, b) in enumerate(MINHASH_PERMS)
-    )
+    idxs = f"array_distinct(transform(split(text, ' '), t -> {vocab_idx_sql('t')}))"
+    (sig,) = band_sigs_sql("_idxs", MINHASH_PERMS, V, len(MINHASH_PERMS))
     s = _table_stream(spark, sf_dir, "documents")
     kept = (
         s.withColumn("_idxs", F.expr(idxs))
-        .select("doc_id", "lang", F.expr(f"CAST({terms} AS BIGINT)").alias("sig"))
+        .select("doc_id", "lang", F.expr(sig).alias("sig"))
         .dropDuplicates(["lang", "sig"])
     )
     sink = _parquet_result(spark, kept, "stream_dedup_minhash", "append", sf_dir)
@@ -1085,10 +1080,8 @@ def stream_quantile_ingest(spark, sf_dir):
             vs = [v for v in vs if v < below]
         return max(vs, default=-1)
 
-    def _merge(batch_df, batch_id: int) -> None:
-        from pyspark.sql import Window as W
-
-        b = batch_df.select(
+    def keyed(df):
+        return df.select(
             F.col("o_orderpriority").alias("pri"),
             F.col("o_orderkey").alias("k"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -1096,14 +1089,22 @@ def stream_quantile_ingest(spark, sf_dir):
             "skey",
             md5_int("k", 12),
         )
+
+    # read back with the writers' schemas: inferring is a job per read
+    sample_schema, counts_schema = keyed(stream).schema, "pri string, n long"
+
+    def _merge(batch_df, batch_id: int) -> None:
+        from pyspark.sql import Window as W
+
+        b = keyed(batch_df)
         bs = batch_df.sparkSession
         prev = _latest_version(below=batch_id)
         if prev >= 0:
-            prev_s = bs.read.parquet(f"{base}_v{prev}/sample")
-            prev_c = bs.read.parquet(f"{base}_v{prev}/counts")
+            prev_s = bs.read.schema(sample_schema).parquet(f"{base}_v{prev}/sample")
+            prev_c = bs.read.schema(counts_schema).parquet(f"{base}_v{prev}/counts")
         else:
             prev_s = b.limit(0)
-            prev_c = bs.createDataFrame([], "pri string, n long")
+            prev_c = bs.createDataFrame([], counts_schema)
         rn = F.row_number().over(
             W.partitionBy("pri").orderBy("skey", "k")
         )
@@ -1145,8 +1146,8 @@ def stream_quantile_ingest(spark, sf_dir):
         q.awaitTermination()
 
     final = _latest_version()
-    sample = spark.read.parquet(f"{base}_v{final}/sample")
-    counts = spark.read.parquet(f"{base}_v{final}/counts")
+    sample = spark.read.schema(sample_schema).parquet(f"{base}_v{final}/sample")
+    counts = spark.read.schema(counts_schema).parquet(f"{base}_v{final}/counts")
     from ..operators.aggregates import _nearest_rank_quantiles
 
     est = _nearest_rank_quantiles(

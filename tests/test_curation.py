@@ -493,7 +493,7 @@ def test_lloyd_centroids_keep_original_ids_when_a_cluster_empties(spark):
     assert len(cents) < 8, "construction must actually empty a cluster"
 
     expect_table = {c: [int(x) for x in v] for c, v in cents.items()}
-    got_table = {r.cluster: list(r.carr) for r in model.frame().collect()}
+    got_table = {c: list(v) for c, v in zip(model.ids, model.cents)}
     assert got_table == expect_table
 
     a, d = np_assign(cents)

@@ -434,6 +434,17 @@ def test_ppr_mass_bound_and_seed_dominance(spark):
         "stream_ann_ingest",
         "sim_kmeans_lloyd",
         "sim_ann_append",
+        "dedup_minhash_lsh",
+        "dedup_minhash_keepers",
+        "dedup_minhash_openvocab",
+        "dedup_near_jaccard",
+        "dedup_ngram_jaccard",
+        "dedup_containment_bigram",
+        "dedup_incremental",
+        "dedup_soft_weights",
+        "dedup_threshold_sweep",
+        "dedup_connected_components",
+        "stream_dedup_minhash",
     ],
 )
 def test_empty_input_matches_oracle(spark, tmp_path, key):

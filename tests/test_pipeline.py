@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from data_integration_exercise_spark.functions.sets import N_BANDS, doc_masks, first_match_band
 from data_integration_exercise_spark.operators import pipeline, similarity, text
 
 from .parity import assert_parity
@@ -49,7 +50,7 @@ def test_openvocab_path_vs_bitset_path_and_exact_truth(spark):
     100 TB role)."""
     from pyspark.sql import functions as F
 
-    masks = pipeline._doc_masks(spark, SF).select("doc_id", "mask")
+    masks = doc_masks(spark, SF).select("doc_id", "mask")
     m1 = masks.select(F.col("doc_id").alias("doc1"), F.col("mask").alias("m1"))
     m2 = masks.select(F.col("doc_id").alias("doc2"), F.col("mask").alias("m2"))
     inter = F.bit_count(F.col("m1").bitwiseAND(F.col("m2"))).cast("double")
@@ -133,7 +134,7 @@ def test_openvocab_hash_rerank_equals_string_rerank(spark):
     )
     cond = (
         (b1.band == b2.band2) & (b1.sig == b2.sig2) & (b1.doc1 < b2.doc2)
-        & (pipeline.first_match_band(pipeline.N_BANDS) == b1.band)
+        & (first_match_band(N_BANDS) == b1.band)
         & (F.lit(5) * F.least(b1.n1, b2.n2) >= F.lit(4) * F.greatest(b1.n1, b2.n2))
     )
     cand = b1.join(b2, cond).select("doc1", "doc2")
@@ -511,9 +512,7 @@ def test_salted_lang_pairs_enumerates_each_pair_exactly_once(spark):
     a_/b_. Checked against itertools.combinations ground truth."""
     from itertools import combinations
 
-    from data_integration_exercise_spark.operators.pipeline import (
-        salted_lang_pairs,
-    )
+    from data_integration_exercise_spark.functions.sets import salted_lang_pairs
 
     cases = [
         # (doc_id, lang) layouts: skew, singletons, one-lang, gaps

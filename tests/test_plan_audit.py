@@ -231,11 +231,10 @@ EXPECTED_EXCHANGES = {
     "agg_tost_equivalence": (2, 1),  # one (priority,arm) moments rollup +
     #   the 5-row A⋈B cell join (broadcast)
     # Round-11 additions (pinned at birth):
-    "sim_ann_append": (7, 4),  # round-14 driver-side trainer: both the
-    #   base final E-step and the new-batch assign are map-only literal
-    #   argmins (two windows + two centroid broadcasts gone); remaining:
-    #   occupancy/growth rollups + the two 1-row total aggs riding a
-    #   broadcast BNLJ back
+    "sim_ann_append": (5, 3),  # driver-side trainer: both the base final
+    #   E-step and the new-batch assign are map-only literal argmins (no
+    #   vec_id window, no centroid broadcast); remaining: occupancy/growth
+    #   rollups + the two 1-row total aggs riding a broadcast BNLJ back
     #   onto the 8-row list table (the agg_calibration_ece pattern)
     "plan_ivf_probe_geometry": (9, 6),  # post-checkpoint arms only
     #   (training + the scored/member/crank frames are checkpoint-backed):

@@ -188,21 +188,13 @@ def test_every_registered_key_documented_in_survey():
     )
 
 
-def test_vector_geometry_is_spelled_only_in_vectors_module():
-    """The squared-L2 fold and the Lloyd seed head are written once, in
-    functions/vectors.py: a second spelling could drift from the trainer
-    the oracles replay (a different seed order or tie-break forks every
-    later centroid)."""
+def _spelled_outside(home: str, spellings: dict) -> list:
+    """``module: what`` for every package module but functions/``home``
+    whose source matches a pattern of ``spellings``."""
     import data_integration_exercise_spark as pkg
 
     root = os.path.dirname(pkg.__file__)
-    home = os.path.join(root, "functions", "vectors.py")
-    spellings = {
-        "squared-L2 lambda": re.compile(re.escape("(a - b) * (a - b)")),
-        "md5-ordered LIMIT 8 seed head": re.compile(
-            r"ORDER BY \{md5_order_duck\([^)]*\)\}\s+LIMIT 8\b"
-        ),
-    }
+    home = os.path.join(root, "functions", home)
     found = []
     for d, _, names in os.walk(root):
         for n in names:
@@ -215,4 +207,36 @@ def test_vector_geometry_is_spelled_only_in_vectors_module():
                 for what, pat in spellings.items()
                 if pat.search(src)
             ]
+    return found
+
+
+def test_vector_geometry_is_spelled_only_in_vectors_module():
+    """The squared-L2 fold and the Lloyd seed head are written once, in
+    functions/vectors.py: a second spelling could drift from the trainer
+    the oracles replay (a different seed order or tie-break forks every
+    later centroid)."""
+    spellings = {
+        "squared-L2 lambda": re.compile(re.escape("(a - b) * (a - b)")),
+        "md5-ordered LIMIT 8 seed head": re.compile(
+            r"ORDER BY \{md5_order_duck\([^)]*\)\}\s+LIMIT 8\b"
+        ),
+    }
+    found = _spelled_outside("vectors.py", spellings)
+    assert not found, found
+
+
+def test_set_similarity_is_spelled_only_in_sets_module():
+    """The DuckDB set intersection, the token-mask AND and the MinHash
+    permutation term are written once, in functions/sets.py: a second
+    spelling could drift from the encoding or the packing the oracles
+    replay, and a size-bound or prefix filter added to the one Jaccard
+    would miss the copy."""
+    spellings = {
+        "DuckDB list_intersect": re.compile(re.escape("list_intersect(")),
+        "Column bitwiseAND": re.compile(re.escape("bitwiseAND(")),
+        "MinHash (a*x + b) % M term": re.compile(
+            r"\(\{?a\}? \* \{?\w+\}? \+ \{?b\}?\) ?%"
+        ),
+    }
+    found = _spelled_outside("sets.py", spellings)
     assert not found, found

@@ -215,17 +215,17 @@ def test_stream_topk_per_window_matches_batch_rank(spark):
 
 def test_stream_dedup_minhash_agrees_with_batch_signatures(spark):
     """The streaming kept-class count must equal a batch count of distinct
-    full MinHash signatures computed through the BATCH mask machinery
-    (pipeline._band_signatures packs per-band; here we re-derive the full
-    8-perm signature from the same mask bits) — ties the streaming ingest
-    path to the batch dedup family, and pins n_kept <= n_docs with exact
-    complement accounting."""
+    full MinHash signatures computed through the BATCH mask machinery (the
+    batch keys pack per band with sets.band_sigs_sql; here the full 8-perm
+    signature is re-derived independently from the sets.doc_masks bits) —
+    ties the streaming ingest path to the batch dedup family, and pins
+    n_kept <= n_docs with exact complement accounting."""
     from pyspark.sql import functions as F
 
-    from data_integration_exercise_spark.operators.pipeline import (
+    from data_integration_exercise_spark.functions.sets import (
         MINHASH_PERMS,
-        _V,
-        _doc_masks,
+        V,
+        doc_masks,
     )
 
     got = {
@@ -234,12 +234,12 @@ def test_stream_dedup_minhash_agrees_with_batch_signatures(spark):
     }
     set_idx = "filter(sequence(1, 31), i -> (shiftright(mask, i - 1) & 1) = 1)"
     terms = " + ".join(
-        f"array_min(transform(_idxs, i -> CAST(({a} * i + {b}) % {_V} AS BIGINT)))"
-        f" * {_V ** p}L"
+        f"array_min(transform(_idxs, i -> CAST(({a} * i + {b}) % {V} AS BIGINT)))"
+        f" * {V ** p}L"
         for p, (a, b) in enumerate(MINHASH_PERMS)
     )
     batch = (
-        _doc_masks(spark, SF)
+        doc_masks(spark, SF)
         .withColumn("_idxs", F.expr(set_idx))
         .select("lang", F.expr(f"CAST({terms} AS BIGINT)").alias("sig"))
         .groupBy("lang")
