@@ -1,4 +1,4 @@
-"""The engine's two cross-engine encodings, each written once per dialect.
+"""The engine's three cross-engine encodings, each written once per dialect.
 
 Spark and the DuckDB oracles agree bit for bit only if they hash and
 quantize identically, so every use goes through this module:
@@ -14,11 +14,22 @@ quantize identically, so every use goes through this module:
   quantized vectors make dot products and k-means steps integer-exact.
   ``floor`` of the same IEEE double is the same in both engines, where
   ``round`` is not (Spark and DuckDB break decimal ties differently).
+- **Integer cents.** A money value times 100, rounded to an integer and
+  cast to ``BIGINT``, ``CAST(round(x * 100) AS BIGINT)``; every money sum,
+  window and hash runs on these integers. ``round`` at scale 0 is safe
+  under the README's round rule, which warns only of decimal ties that are
+  inexact in binary (``0.72125``): a tie ``k + 0.5`` is exact in binary, so
+  Spark's shortest-decimal HALF_UP and DuckDB's binary rounding see the
+  same half and both round it away from zero. Cents is not the milli
+  ``floor`` form: ``floor`` rounds a negative tie up (``-0.5 -> 0``) where
+  ``round`` goes to ``-1``, so the two rules differ and neither may
+  replace the other.
 
 Dialects: Spark ``Column`` (plain names), Spark SQL text (``*_sql``),
-DuckDB SQL text (``*_duck``) and Python (``*_py``). ``text`` is a column
-name (or ``Column``) for the Spark forms and an SQL expression for the
-text forms; it is cast to a string before hashing. ``start`` may be an SQL
+DuckDB SQL text (``*_duck``) and Python (``*_py``). The cents text is the
+same in Spark SQL and DuckDB, so ``cents_sql`` serves both. ``text`` is a
+column name (or ``Column``) for the Spark forms and an SQL expression for
+the text forms; it is cast to a string before hashing. ``start`` may be an SQL
 expression in the text forms, for a digit position that varies per row.
 The ``hex_int*`` forms read digits of a digest that is already computed.
 """
@@ -137,3 +148,16 @@ def milli_duck() -> str:
         "list_transform(embedding, "
         "v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
     )
+
+
+# --- integer cents ------------------------------------------------------------
+
+
+def cents(x):
+    """The money column ``x`` in integer cents."""
+    return F.round(_col(x) * 100).cast("long")
+
+
+def cents_sql(x: str) -> str:
+    """The money expression ``x`` in integer cents, in Spark SQL and DuckDB."""
+    return f"CAST(round({x} * 100) AS BIGINT)"

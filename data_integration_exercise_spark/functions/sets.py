@@ -7,8 +7,9 @@ sets, score overlap and hash signatures identically:
   ``VOCAB`` (0 or NULL for a miss), so a set is losslessly a 31-bit mask
   and a bigram set a 961-bit bitset; without a closed vocabulary it is
   its 48-bit md5 content hash.
-- **Exact overlap.** Jaccard is a ratio of exact integer set sizes, so the
-  double is the same in both engines. ``J >= 0.8`` implies the size bound
+- **Exact overlap.** Jaccard is a ratio of exact integer set sizes (of
+  token masks, of key arrays or of DuckDB lists), so the double is the
+  same in both engines. ``J >= 0.8`` implies the size bound
   ``5·min(|A|, |B|) >= 4·max(|A|, |B|)``, a lossless prune.
 - **MinHash.** Permutation ``p`` of a key ``x`` is ``(a_p·x + b_p) mod M``
   with fixed literals, minimized over a document's distinct keys. A band
@@ -178,6 +179,12 @@ def mask_union_sql(a: str, b: str) -> str:
 def mask_jaccard(a: str, b: str):
     """Column: the exact Jaccard of two token-mask columns, a double."""
     return F.expr(f"CAST({mask_inter_sql(a, b)} AS DOUBLE) / {mask_union_sql(a, b)}")
+
+
+def array_jaccard(a: str, b: str):
+    """Column: the exact Jaccard of two distinct-key array columns, a double."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter.cast("double") / (F.size(a) + F.size(b) - inter)
 
 
 def bigram_inter(a: str = "a_m", b: str = "b_m"):

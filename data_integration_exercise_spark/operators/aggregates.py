@@ -17,6 +17,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.encode import (
+    cents,
+    cents_sql,
     hex_int_duck,
     hex_int_sql,
     md5_bucket,
@@ -779,10 +781,10 @@ def agg_weighted_median(spark, sf_dir):
 
 @register(
     "agg_gini_segments",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT c_mktsegment,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS cents,
+               {cents_sql('c_acctbal')} AS cents,
                row_number() OVER (
                    PARTITION BY c_mktsegment
                    ORDER BY c_acctbal, c_custkey) AS rk
@@ -812,7 +814,7 @@ def agg_gini_segments(spark, sf_dir):
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     ranked = c.select(
         "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
+        cents("c_acctbal").alias("cents"),
         F.row_number().over(w).alias("rk"),
     )
     n = F.count("*")
@@ -834,7 +836,7 @@ def agg_gini_segments(spark, sf_dir):
         SELECT o_orderpriority,
                CASE WHEN {md5_bucket_duck("o_orderkey", 10)} < 5
                     THEN 'A' ELSE 'B' END AS grp,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql('o_totalprice')} AS cents
         FROM orders
     ), s AS (
         SELECT o_orderpriority, grp,
@@ -880,9 +882,12 @@ def agg_ab_ttest(spark, sf_dir):
 
     o = load_table(spark, sf_dir, "orders")
     grp = F.when(md5_bucket("o_orderkey", 10) < 5, "A").otherwise("B")
-    cents = F.round(F.col("o_totalprice") * 100).cast("decimal(18,0)")
     s = (
-        o.select("o_orderpriority", grp.alias("grp"), cents.alias("cents"))
+        o.select(
+            "o_orderpriority",
+            grp.alias("grp"),
+            cents("o_totalprice").cast("decimal(18,0)").alias("cents"),
+        )
         .groupBy("o_orderpriority", "grp")
         .agg(
             F.count("*").cast("long").alias("n"),
@@ -956,7 +961,7 @@ _KS_UNION = "\n        UNION ALL\n".join(
     "agg_ks_test",
     oracle=f"""
     WITH c AS (
-        SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+        SELECT {cents_sql('o_totalprice')} AS cents,
                o_orderpriority AS pri
         FROM orders
     ), d AS (
@@ -1006,8 +1011,9 @@ def agg_ks_test(spark, sf_dir):
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    base = o.select(cents.alias("cents"), F.col("o_orderpriority").alias("pri"))
+    base = o.select(
+        cents("o_totalprice").alias("cents"), F.col("o_orderpriority").alias("pri")
+    )
     d = base.groupBy("cents").agg(
         *[
             F.sum(F.when(F.col("pri") == p, 1).otherwise(0))
@@ -1208,7 +1214,7 @@ def agg_chi_square(spark, sf_dir):
         SELECT o_orderpriority AS pri,
                CASE WHEN {md5_bucket_duck("o_orderkey", 10)} < 5
                     THEN 1 ELSE 0 END AS is_a,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql('o_totalprice')} AS cents
         FROM orders
     ), g AS (
         SELECT pri, cents,
@@ -1273,12 +1279,11 @@ def agg_mann_whitney(spark, sf_dir):
 
     o = load_table(spark, sf_dir, "orders")
     is_a = F.when(md5_bucket("o_orderkey", 10) < 5, 1).otherwise(0)
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
     g = (
         o.select(
             F.col("o_orderpriority").alias("pri"),
             is_a.alias("is_a"),
-            cents.alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
         .groupBy("pri", "cents")
         .agg(
@@ -1410,7 +1415,7 @@ def _pois_case(h: str) -> str:
     oracle=f"""
     WITH base AS (
         SELECT o_orderpriority AS pri, o_orderkey,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql('o_totalprice')} AS cents
         FROM orders
     ), hashed AS (
         SELECT pri, cents,
@@ -1469,7 +1474,7 @@ def agg_bootstrap_ci(spark, sf_dir):
     base = o.select(
         F.col("o_orderpriority").alias("pri"),
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     # Explicit fan-out before the 8-md5 projection and the ×B explode (the
     # dedup_minhash_openvocab repartition discipline): a raw single-file
@@ -1550,7 +1555,7 @@ _BENFORD_CASE = "CASE d " + " ".join(
     "agg_benford_deviation",
     oracle=f"""
     WITH digits AS (
-        SELECT substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
+        SELECT substr(CAST({cents_sql('o_totalprice')}
                            AS VARCHAR), 1, 1) AS d
         FROM orders
     ), tot AS (
@@ -1585,7 +1590,7 @@ def agg_benford_deviation(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     digits = o.select(
         F.substring(
-            F.round(F.col("o_totalprice") * 100).cast("long").cast("string"), 1, 1
+            cents("o_totalprice").cast("string"), 1, 1
         ).alias("d")
     )
     tot = digits.agg(F.count("*").cast("long").alias("n"))
@@ -1602,10 +1607,10 @@ def agg_benford_deviation(spark, sf_dir):
 
 @register(
     "agg_hhi_concentration",
-    oracle="""
+    oracle=f"""
     WITH s AS (
         SELECT c.c_mktsegment AS seg, o.o_custkey,
-               CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
+               CAST(sum({cents_sql('o.o_totalprice')})
                     AS BIGINT) AS cust_cents
         FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
         GROUP BY c.c_mktsegment, o.o_custkey
@@ -1637,12 +1642,11 @@ def agg_hhi_concentration(spark, sf_dir):
     segment moments) — shuffle volume is |customers| then |segments|."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
     s = (
         o.join(F.broadcast(c.select("c_custkey", "c_mktsegment")),
                o.o_custkey == F.col("c_custkey"))
         .groupBy(F.col("c_mktsegment").alias("seg"), "o_custkey")
-        .agg(F.sum(cents).cast("long").alias("cust_cents"))
+        .agg(F.sum(cents("o_totalprice")).cast("long").alias("cust_cents"))
     )
     t = s.groupBy("seg").agg(
         F.sum("cust_cents").cast("decimal(38,0)").alias("tot"),
@@ -1666,10 +1670,10 @@ def agg_hhi_concentration(spark, sf_dir):
 
 @register(
     "agg_winsorized_mean",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT o_orderpriority AS pri,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql('o_totalprice')} AS cents
         FROM orders
     ), ranked AS (
         SELECT pri, cents,
@@ -1712,8 +1716,9 @@ def agg_winsorized_mean(spark, sf_dir):
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    c = o.select(F.col("o_orderpriority").alias("pri"), cents.alias("cents"))
+    c = o.select(
+        F.col("o_orderpriority").alias("pri"), cents("o_totalprice").alias("cents")
+    )
     w = Window.partitionBy("pri").orderBy("cents")
     wn = Window.partitionBy("pri")
     ranked = c.withColumn("rn", F.row_number().over(w)).withColumn(
@@ -1751,10 +1756,10 @@ def agg_winsorized_mean(spark, sf_dir):
 
 @register(
     "agg_pareto_crossover",
-    oracle="""
+    oracle=f"""
     WITH s AS (
         SELECT c.c_mktsegment AS seg, o.o_custkey,
-               CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
+               CAST(sum({cents_sql('o.o_totalprice')})
                     AS BIGINT) AS cust_cents
         FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
         GROUP BY c.c_mktsegment, o.o_custkey
@@ -1797,12 +1802,11 @@ def agg_pareto_crossover(spark, sf_dir):
 
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
     s = (
         o.join(F.broadcast(c.select("c_custkey", "c_mktsegment")),
                o.o_custkey == F.col("c_custkey"))
         .groupBy(F.col("c_mktsegment").alias("seg"), "o_custkey")
-        .agg(F.sum(cents).cast("long").alias("cust_cents"))
+        .agg(F.sum(cents("o_totalprice")).cast("long").alias("cust_cents"))
     )
     w = Window.partitionBy("seg").orderBy(F.desc("cust_cents"), "o_custkey")
     wp = Window.partitionBy("seg")
@@ -1831,12 +1835,12 @@ def agg_pareto_crossover(spark, sf_dir):
 
 @register(
     "agg_linear_trend",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT o_orderpriority AS pri,
                CAST(date_diff('day', TIMESTAMP '1995-01-01 00:00:00',
                               o_orderdate) AS BIGINT) AS x,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+               CAST(sum({cents_sql('o_totalprice')})
                     AS BIGINT) AS y
         FROM orders GROUP BY 1, 2
     ), m AS (
@@ -1880,7 +1884,7 @@ def agg_linear_trend(spark, sf_dir):
             )
             .cast("long")
             .alias("x"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
         .groupBy("pri", "x")
         .agg(F.sum("cents").alias("y"))
@@ -1989,10 +1993,10 @@ def agg_count_min_sketch(spark, sf_dir):
 
 @register(
     "agg_quantile_sketch",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT o_orderpriority AS pri,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql('o_totalprice')} AS cents
         FROM orders
     ), binned AS (
         SELECT pri, length(bin(cents)) AS b, CAST(count(*) AS BIGINT) AS c
@@ -2040,7 +2044,7 @@ def agg_quantile_sketch(spark, sf_dir):
     binned = (
         o.select(
             F.col("o_orderpriority").alias("pri"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
         .select("pri", F.length(F.conv(F.col("cents").cast("string"), 10, 2)).alias("b"))
         .groupBy("pri", "b")
@@ -2120,7 +2124,7 @@ def _nearest_rank_quantiles(frame, group_cols, total_alias, out50, out90):
     oracle=f"""
     WITH c AS (
         SELECT o_orderpriority AS pri, o_orderkey AS k,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+               {cents_sql('o_totalprice')} AS cents,
                CAST(o_orderkey % 16 AS BIGINT) AS shard,
                {md5_int_duck("o_orderkey", 12)}
                    AS skey
@@ -2203,7 +2207,7 @@ def agg_quantile_sketch_merge(spark, sf_dir):
         .select(
             F.col("o_orderpriority").alias("pri"),
             F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
         .withColumn("shard", F.pmod(F.col("k"), F.lit(16)))
         .withColumn(
@@ -2255,11 +2259,11 @@ def agg_quantile_sketch_merge(spark, sf_dir):
 
 @register(
     "agg_seasonality_dow",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT o_orderpriority AS pri,
                CAST(date_part('isodow', o_orderdate) AS BIGINT) AS dow,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql('o_totalprice')} AS cents
         FROM orders
     ), per AS (
         SELECT pri, dow, CAST(count(*) AS BIGINT) AS n_orders,
@@ -2290,7 +2294,7 @@ def agg_seasonality_dow(spark, sf_dir):
         o.select(
             F.col("o_orderpriority").alias("pri"),
             (F.weekday("o_orderdate") + 1).cast("long").alias("dow"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
         .groupBy("pri", "dow")
         .agg(
@@ -2323,7 +2327,7 @@ def agg_seasonality_dow(spark, sf_dir):
                    AS arm,
                CAST(count(*) AS BIGINT) AS y,
                CAST(sum(CASE WHEN event_type = 'purchase'
-                             THEN CAST(round(value * 100) AS BIGINT)
+                             THEN {cents_sql('value')}
                              ELSE 0 END) AS BIGINT) AS x
         FROM events GROUP BY user_id
     ), m AS (
@@ -2382,7 +2386,7 @@ def agg_ratio_delta_method(spark, sf_dir):
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).cast("long"),
+                cents("value"),
             ).otherwise(0)
         ).alias("x"),
     )
@@ -2440,7 +2444,7 @@ def agg_ratio_delta_method(spark, sf_dir):
                {md5_bucket_duck("user_id", 2)}
                    AS arm,
                CAST(sum(CASE WHEN event_type = 'purchase'
-                             THEN CAST(round(value * 100) AS BIGINT)
+                             THEN {cents_sql('value')}
                              ELSE 0 END) AS BIGINT) AS x
         FROM events GROUP BY user_id
     ), m AS (
@@ -2493,7 +2497,7 @@ def agg_ab_power_mde(spark, sf_dir):
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).cast("long"),
+                cents("value"),
             ).otherwise(0)
         ).alias("x"),
     )
@@ -2547,15 +2551,15 @@ def agg_ab_power_mde(spark, sf_dir):
 
 @register(
     "agg_rollforward_balance",
-    oracle="""
+    oracle=f"""
     WITH inflow AS (
         SELECT strftime(o_orderdate, '%Y-%m') AS ym,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS inflow_cents
         FROM orders GROUP BY 1
     ), outflow AS (
         SELECT strftime(l_shipdate, '%Y-%m') AS ym,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('l_extendedprice')}) AS BIGINT)
                    AS outflow_cents
         FROM lineitem WHERE l_returnflag = 'R' GROUP BY 1
     ), months AS (
@@ -2591,17 +2595,13 @@ def agg_rollforward_balance(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     inflow = o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("ym")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-            "inflow_cents"
-        )
+        F.sum(cents("o_totalprice")).alias("inflow_cents")
     )
     outflow = (
         li.filter(F.col("l_returnflag") == "R")
         .groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("ym"))
         .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
-                "outflow_cents"
-            )
+            F.sum(cents("l_extendedprice")).alias("outflow_cents")
         )
     )
     months = (
@@ -2631,10 +2631,10 @@ def agg_rollforward_balance(spark, sf_dir):
 
 @register(
     "agg_yoy_growth",
-    oracle="""
+    oracle=f"""
     WITH monthly AS (
         SELECT strftime(o_orderdate, '%Y-%m') AS ym,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS revenue_cents
         FROM orders GROUP BY 1
     )
@@ -2659,9 +2659,7 @@ def agg_yoy_growth(spark, sf_dir):
 
     o = load_table(spark, sf_dir, "orders")
     monthly = o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("ym")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-            "revenue_cents"
-        )
+        F.sum(cents("o_totalprice")).alias("revenue_cents")
     )
     w = Window.orderBy("ym")
     prior = F.lag("revenue_cents", 12).over(w)
@@ -2865,7 +2863,7 @@ def _did_arm():
         SELECT {_DID_ARM_DUCK} AS arm,
                CASE WHEN epoch_ns(ts) // 1000 < {_DID_CUT_US}
                     THEN 'pre' ELSE 'post' END AS period,
-               CAST(round(value * 100) AS BIGINT) AS cents
+               {cents_sql('value')} AS cents
         FROM events WHERE event_type = 'purchase'
     ), s AS (
         SELECT CAST(count(*) FILTER (arm = 'T' AND period = 'pre') AS BIGINT)
@@ -2925,8 +2923,11 @@ def agg_did_uplift(spark, sf_dir):
     )
     arm = _did_arm()
     period = F.when(F.col("ts_us") < _DID_CUT_US, "pre").otherwise("post")
-    cents = F.round(F.col("value") * 100).cast("decimal(38,0)")
-    p = e.select(arm.alias("arm"), period.alias("period"), cents.alias("cents"))
+    p = e.select(
+        arm.alias("arm"),
+        period.alias("period"),
+        cents("value").cast("decimal(38,0)").alias("cents"),
+    )
 
     def cell(a, per, agg, name):
         cond = (F.col("arm") == a) & (F.col("period") == per)
@@ -2982,10 +2983,10 @@ def agg_did_uplift(spark, sf_dir):
         SELECT user_id,
                {_DID_ARM_DUCK} AS arm,
                CAST(sum(CASE WHEN epoch_ns(ts) // 1000 < {_DID_CUT_US}
-                             THEN CAST(round(value * 100) AS BIGINT)
+                             THEN {cents_sql('value')}
                              ELSE 0 END) AS HUGEINT) AS x,
                CAST(sum(CASE WHEN epoch_ns(ts) // 1000 >= {_DID_CUT_US}
-                             THEN CAST(round(value * 100) AS BIGINT)
+                             THEN {cents_sql('value')}
                              ELSE 0 END) AS HUGEINT) AS y
         FROM events WHERE event_type = 'purchase'
         GROUP BY 1, 2
@@ -3052,12 +3053,12 @@ def agg_cuped_adjusted(spark, sf_dir):
         F.col("event_type") == "purchase"
     )
     arm = _did_arm()
-    cents = F.round(F.col("value") * 100).cast("decimal(38,0)")
+    value_cents = cents("value").cast("decimal(38,0)")
     p = e.groupBy("user_id", arm.alias("arm")).agg(
-        F.sum(F.when(F.col("ts_us") < _DID_CUT_US, cents).otherwise(F.lit(0)))
+        F.sum(F.when(F.col("ts_us") < _DID_CUT_US, value_cents).otherwise(F.lit(0)))
         .cast("decimal(38,0)")
         .alias("x"),
-        F.sum(F.when(F.col("ts_us") >= _DID_CUT_US, cents).otherwise(F.lit(0)))
+        F.sum(F.when(F.col("ts_us") >= _DID_CUT_US, value_cents).otherwise(F.lit(0)))
         .cast("decimal(38,0)")
         .alias("y"),
     )
@@ -3117,12 +3118,12 @@ def agg_cuped_adjusted(spark, sf_dir):
 
 @register(
     "agg_price_volume_mix",
-    oracle="""
+    oracle=f"""
     WITH yearly AS (
         SELECT p.p_brand,
                CAST(strftime(l.l_shipdate, '%Y') AS INTEGER) AS yr,
                CAST(sum(CAST(round(l.l_quantity) AS BIGINT)) AS BIGINT) AS q,
-               CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
+               CAST(sum({cents_sql('l.l_extendedprice')})
                     AS BIGINT) AS rev_cents
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         WHERE l.l_shipdate >= TIMESTAMP '1999-01-01'
@@ -3172,9 +3173,7 @@ def agg_price_volume_mix(spark, sf_dir):
         .groupBy("p_brand", F.year("l_shipdate").alias("yr"))
         .agg(
             F.sum(F.round("l_quantity").cast("long")).alias("q"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
-                "rev_cents"
-            ),
+            F.sum(cents("l_extendedprice")).alias("rev_cents"),
         )
     )
     a = yearly.filter(F.col("yr") == 1999).select(
@@ -3226,7 +3225,7 @@ def agg_price_volume_mix(spark, sf_dir):
     WITH p AS (
         SELECT event_id,
                {_DID_ARM_DUCK} AS arm,
-               CAST(round(value * 100) AS BIGINT) AS cents
+               {cents_sql('value')} AS cents
         FROM events WHERE event_type = 'purchase'
     ), ranked AS (
         SELECT arm, cents,
@@ -3268,7 +3267,7 @@ def agg_quantile_treatment_effect(spark, sf_dir):
     p = e.select(
         "event_id",
         arm.alias("arm"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     from pyspark.sql import Window
 
@@ -3402,11 +3401,11 @@ def agg_ipf_raking(spark, sf_dir):
 
 @register(
     "agg_mann_kendall",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT o_orderpriority AS pri,
                CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS cents
         FROM orders WHERE o_orderdate >= TIMESTAMP '2001-06-01'
         GROUP BY 1, 2
@@ -3462,9 +3461,7 @@ def agg_mann_kendall(spark, sf_dir):
             .alias("d"),
         )
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "cents"
-            )
+            F.sum(cents("o_totalprice")).alias("cents")
         )
         .localCheckpoint()
     )
@@ -3518,10 +3515,10 @@ def agg_mann_kendall(spark, sf_dir):
 
 @register(
     "agg_acf_lags",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS cents
         FROM orders GROUP BY 1
     ), tot AS (
@@ -3572,7 +3569,7 @@ def agg_acf_lags(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")).cast("long").alias("d")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
+    ).agg(F.sum(cents("o_totalprice")).alias("cents"))
     tot = daily.agg(
         F.count("*").cast("long").alias("n"), F.sum("cents").cast("long").alias("s")
     )
@@ -4122,10 +4119,10 @@ def agg_ks_drift_bh(spark, sf_dir):
 
 @register(
     "agg_tukey_fences",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT o_orderpriority AS pri,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql('o_totalprice')} AS cents
         FROM orders
     ), r AS (
         SELECT pri, cents,
@@ -4166,7 +4163,7 @@ def agg_tukey_fences(spark, sf_dir):
     twice and shuffled once."""
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     ).localCheckpoint(eager=False)  # consumers: rank pass + fence count
     wp = Window.partitionBy("pri")
     r = o.withColumn("rn", F.row_number().over(wp.orderBy("cents"))).withColumn(
@@ -4502,13 +4499,13 @@ def agg_js_drift(spark, sf_dir):
 
 @register(
     "agg_kendall_tau",
-    oracle="""
+    oracle=f"""
     WITH monthly AS (
         SELECT o_orderpriority AS pri,
                CAST(date_diff('month', DATE '1970-01-01',
                               CAST(o_orderdate AS DATE)) AS BIGINT) AS m,
                CAST(count(*) AS BIGINT) AS x,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    // 100 AS y
         FROM orders GROUP BY 1, 2
     ), pairs AS (
@@ -4557,7 +4554,7 @@ def agg_kendall_tau(spark, sf_dir):
     ).agg(
         F.count(F.lit(1)).alias("x"),
         F.expr(
-            "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) DIV 100"
+            f"CAST(sum({cents_sql('o_totalprice')}) AS BIGINT) DIV 100"
         ).alias("y"),
     )
     a = monthly.alias("a")
@@ -4598,10 +4595,10 @@ def agg_kendall_tau(spark, sf_dir):
 
 @register(
     "agg_lorenz_deciles",
-    oracle="""
+    oracle=f"""
     WITH spend AS (
         SELECT o_custkey,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+               CAST(sum({cents_sql('o_totalprice')})
                     AS BIGINT) AS cents
         FROM orders GROUP BY 1
     ), ranked AS (
@@ -4647,7 +4644,7 @@ def agg_lorenz_deciles(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         F.expr(
-            "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
+            f"CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)"
         ).alias("cents")
     )
     parts = spend.repartitionByRange(8, "cents", "o_custkey").withColumn(
@@ -4929,14 +4926,14 @@ def agg_bitmap_distinct(spark, sf_dir):
 
 @register(
     "agg_anova_f",
-    oracle="""
+    oracle=f"""
     WITH g AS (
         SELECT o_orderpriority,
                CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
+               CAST(sum(CAST({cents_sql('o_totalprice')}
                     AS HUGEINT)) AS HUGEINT) AS s1,
-               CAST(sum(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
-                    AS HUGEINT) * CAST(round(o_totalprice * 100) AS BIGINT))
+               CAST(sum(CAST({cents_sql('o_totalprice')}
+                    AS HUGEINT) * {cents_sql('o_totalprice')})
                     AS HUGEINT) AS s2
         FROM orders GROUP BY 1
     ), tot AS (
@@ -4989,11 +4986,11 @@ def agg_anova_f(spark, sf_dir):
     — then driver-free scalar algebra on the 5-row frame with a 1-row
     broadcast total. Nothing else moves."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    price_cents = cents("o_totalprice")
     g = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(cents.cast("decimal(38,0)")).alias("s1"),
-        F.sum((cents.cast("decimal(38,0)") * cents)).alias("s2"),
+        F.sum(price_cents.cast("decimal(38,0)")).alias("s1"),
+        F.sum((price_cents.cast("decimal(38,0)") * price_cents)).alias("s2"),
     )
     tot = g.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
@@ -5161,7 +5158,7 @@ _TOST_Z_CRIT_MICRO = 1_644_854
         SELECT o_orderpriority,
                CASE WHEN {md5_bucket_duck("o_orderkey", 10)} < 5
                     THEN 'A' ELSE 'B' END AS grp,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql('o_totalprice')} AS cents
         FROM orders
     ), s AS (
         SELECT o_orderpriority, grp,
@@ -5219,12 +5216,12 @@ def agg_tost_equivalence(spark, sf_dir):
     100 TB: one (priority, arm) moments rollup — ten cells — then scalar
     algebra; nothing else moves."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    price_cents = cents("o_totalprice")
     grp = F.when(md5_bucket("o_orderkey", 10) < 5, "A").otherwise("B")
     s = o.groupBy("o_orderpriority", grp.alias("grp")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(cents.cast("decimal(38,0)")).alias("s1"),
-        F.sum(cents.cast("decimal(38,0)") * cents).alias("s2"),
+        F.sum(price_cents.cast("decimal(38,0)")).alias("s1"),
+        F.sum(price_cents.cast("decimal(38,0)") * price_cents).alias("s2"),
     )
     a = s.filter(F.col("grp") == "A").select(
         "o_orderpriority",
@@ -5290,7 +5287,7 @@ _QSKG_LADDER = (16, 32, 64, 128, 256, 512)
     oracle=f"""
     WITH c AS (
         SELECT o_orderpriority AS pri, o_orderkey AS k,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+               {cents_sql('o_totalprice')} AS cents,
                {md5_int_duck("o_orderkey", 12)}
                    AS skey
         FROM orders
@@ -5361,7 +5358,7 @@ def plan_quantile_sketch_geometry(spark, sf_dir):
         .select(
             F.col("o_orderpriority").alias("pri"),
             F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
         .withColumn(
             "skey",

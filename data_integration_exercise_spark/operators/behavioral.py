@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import cents, cents_sql
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -312,7 +313,7 @@ _LOOKBACK_US = 24 * 3_600 * 1_000_000  # attribution lookback window
     WITH e AS (
         SELECT user_id, event_id, event_type,
                epoch_ns(ts) // 1000 AS t,
-               CAST(round(value * 100) AS BIGINT) AS cents
+               {cents_sql('value')} AS cents
         FROM events
     ), tagged AS (
         SELECT event_type, t, cents,
@@ -356,7 +357,7 @@ def events_attribution(spark, sf_dir):
     tagged = e.select(
         "event_type",
         "ts_us",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
         F.last(F.when(is_touch, F.col("event_type")), ignorenulls=True)
         .over(w)
         .alias("touch_type"),
@@ -645,7 +646,7 @@ _DAY_US = 86_400 * 1_000_000
     WITH pur AS (
         SELECT user_id,
                epoch_ns(ts) // 1000 // {_DAY_US} AS day,
-               CAST(round(value * 100) AS BIGINT) AS cents
+               {cents_sql('value')} AS cents
         FROM events WHERE event_type = 'purchase'
     ), u AS (
         SELECT user_id,
@@ -706,7 +707,7 @@ def events_rfm_segments(spark, sf_dir):
     u = e.select(
         "user_id",
         F.expr(f"ts_us div {_DAY_US}").alias("day"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     ).groupBy("user_id").agg(
         F.max("day").alias("last_day"),
         F.count("*").cast("long").alias("frequency"),
@@ -803,7 +804,7 @@ def events_path_trigrams(spark, sf_dir):
     WITH pur AS (
         SELECT user_id,
                epoch_ns(ts) // 1000 // {_WEEK_US} AS week,
-               CAST(round(value * 100) AS BIGINT) AS cents
+               {cents_sql('value')} AS cents
         FROM events WHERE event_type = 'purchase'
     ), firstw AS (
         SELECT user_id, min(week) AS cohort_week FROM pur GROUP BY user_id
@@ -843,7 +844,7 @@ def events_cohort_ltv(spark, sf_dir):
     pur = e.select(
         "user_id",
         F.expr(f"ts_us div {_WEEK_US}").alias("week"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     firstw = pur.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
     csize = firstw.groupBy("cohort_week").agg(
@@ -1099,7 +1100,7 @@ _7D_US = 7 * 86_400 * 1_000_000
     WITH e AS (
         SELECT user_id, event_id, event_type,
                epoch_ns(ts) // 1000 AS t,
-               CAST(round(value * 100) AS BIGINT) AS cents
+               {cents_sql('value')} AS cents
         FROM events
     ), feat AS (
         SELECT user_id, event_id, event_type, t,
@@ -1146,7 +1147,7 @@ def events_feature_pit(spark, sf_dir):
         "event_id",
         "event_type",
         F.col("ts_us").alias("t"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -1539,10 +1540,10 @@ def events_survival_km(spark, sf_dir):
 
 @register(
     "events_forecast_backtest",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT event_type, epoch_ns(ts) // 1000 // 86400000000 AS day,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+               CAST(sum({cents_sql('value')}) AS BIGINT) AS cents
         FROM events GROUP BY 1, 2
     ), scored AS (
         SELECT a.event_type, a.day, a.cents AS actual_cents,
@@ -1577,7 +1578,7 @@ def events_forecast_backtest(spark, sf_dir):
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.expr("ts_us div 86400000000").alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
+    ).agg(F.sum(cents("value")).alias("cents"))
     a = daily.select(
         "event_type", "day", F.col("cents").alias("actual_cents")
     )
@@ -2396,7 +2397,7 @@ def events_markov_eval(spark, sf_dir):
     WITH e AS (
         SELECT user_id, event_id, event_type,
                epoch_ns(ts) // 1000 AS t,
-               CAST(round(value * 100) AS BIGINT) AS cents
+               {cents_sql('value')} AS cents
         FROM events
     ), conv AS (
         SELECT user_id, event_id, t, cents FROM e WHERE event_type = 'purchase'
@@ -2450,7 +2451,7 @@ def events_shapley_attribution(spark, sf_dir):
         "event_id",
         "event_type",
         F.col("ts_us").alias("t"),
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     conv = e.filter(F.col("event_type") == "purchase").select(
         "user_id", "event_id", "t", "cents"

@@ -27,6 +27,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.encode import (
+    cents,
+    cents_sql,
     md5_bucket,
     md5_bucket_duck,
     md5_hex,
@@ -39,6 +41,7 @@ from ..functions.sets import (
     bigram_mask_cols,
     inter_duck,
     salted_lang_pairs,
+    token_set_duck,
     vocab_idx_duck,
     vocab_idx_sql,
 )
@@ -63,15 +66,15 @@ QUERIES, ORACLES, register = new_registry()
 
 @register(
     "text_gopher_quality",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT doc_id, source, lang,
                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
                CAST((n_chars - len(string_split(text, ' ')) + 1) * 100
                     // len(string_split(text, ' ')) AS BIGINT) AS mean_tok_len_x100,
-               CAST(1000 * len(list_distinct(string_split(text, ' ')))
+               CAST(1000 * len({token_set_duck()})
                     // len(string_split(text, ' ')) AS BIGINT) AS ttr_permille,
-               CAST(len(list_filter(list_distinct(string_split(text, ' ')),
+               CAST(len(list_filter({token_set_duck()},
                                     t -> t IN ('a', 'the'))) AS BIGINT) AS n_stop_types
         FROM documents
     )
@@ -782,10 +785,10 @@ def etl_pii_mask(spark, sf_dir):
 
 @register(
     "win_zscore_outliers",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT o_orderkey, o_orderpriority, o_totalprice,
-               CAST(round(o_totalprice * 100) AS HUGEINT) AS cents
+               CAST({cents_sql('o_totalprice')} AS HUGEINT) AS cents
         FROM orders
     ), m AS (
         SELECT o_orderkey, o_orderpriority, o_totalprice, cents,
@@ -834,12 +837,11 @@ def win_zscore_outliers(spark, sf_dir):
     regardless of executor count or merge order."""
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority")
-    cents = F.round(F.col("o_totalprice") * 100).cast("decimal(18,0)")
     m = o.select(
         "o_orderkey",
         "o_orderpriority",
         "o_totalprice",
-        cents.alias("cents"),
+        cents("o_totalprice").cast("decimal(18,0)").alias("cents"),
     ).select(
         "o_orderkey",
         "o_orderpriority",
@@ -1382,9 +1384,9 @@ def text_ccnet_buckets(spark, sf_dir):
                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
                CAST((n_chars - len(string_split(text, ' ')) + 1) * 100
                     // len(string_split(text, ' ')) AS BIGINT) AS mtl,
-               CAST(1000 * len(list_distinct(string_split(text, ' ')))
+               CAST(1000 * len({token_set_duck()})
                     // len(string_split(text, ' ')) AS BIGINT) AS ttr,
-               CAST(len(list_filter(list_distinct(string_split(text, ' ')),
+               CAST(len(list_filter({token_set_duck()},
                                     t -> t IN ('a', 'the'))) AS BIGINT) AS nst
         FROM documents
     ), kept AS (
@@ -1393,7 +1395,7 @@ def text_ccnet_buckets(spark, sf_dir):
           AND ttr >= 300 AND nst >= 1
     ), fp AS (
         SELECT doc_id, lang,
-               array_to_string(list_sort(list_distinct(string_split(text, ' '))), ',')
+               array_to_string(list_sort({token_set_duck()}), ',')
                    AS fingerprint
         FROM kept
     ), uniq AS (

@@ -20,6 +20,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.encode import (
+    cents,
+    cents_sql,
     hex_int_duck,
     hex_int_sql,
     md5_bucket,
@@ -587,12 +589,12 @@ _MV_CUTOFF = "1998-06-01 00:00:00"  # the already-materialized history boundary
 
 @register(
     "etl_incremental_agg_refresh",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                AS revenue_cents,
-           CAST(max(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(max({cents_sql('o_totalprice')}) AS BIGINT)
                AS max_cents
     FROM orders
     GROUP BY o_orderpriority
@@ -616,14 +618,14 @@ def etl_incremental_agg_refresh(spark, sf_dir):
     minutes-long incremental one. The cutoff split stands in for the
     partition boundary a production MV tracks."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    price_cents = cents("o_totalprice")
     cutoff = F.lit(_MV_CUTOFF).cast("timestamp_ntz")
 
     def partial_state(df):
         return df.groupBy("o_orderpriority").agg(
             F.count("*").cast("long").alias("n_orders"),
-            F.sum(cents).cast("long").alias("revenue_cents"),
-            F.max(cents).cast("long").alias("max_cents"),
+            F.sum(price_cents).cast("long").alias("revenue_cents"),
+            F.max(price_cents).cast("long").alias("max_cents"),
         )
 
     history = partial_state(o.filter(F.col("o_orderdate") < cutoff))
@@ -705,7 +707,7 @@ def etl_surrogate_keys(spark, sf_dir):
     WITH c AS (
         SELECT bit_xor({md5_int_duck(
                    "CAST(c_custkey AS VARCHAR) || '|' || c_name || '|' || c_mktsegment "
-                   "|| '|' || CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS VARCHAR)",
+                   f"|| '|' || CAST({cents_sql('c_acctbal')} AS VARCHAR)",
                    15)}) AS fp,
                CAST(count(*) AS BIGINT) AS n
         FROM customer
@@ -713,7 +715,7 @@ def etl_surrogate_keys(spark, sf_dir):
         SELECT bit_xor({md5_int_duck(
                    "CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR) "
                    "|| '|' || o_orderstatus || '|' "
-                   "|| CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR)",
+                   f"|| CAST({cents_sql('o_totalprice')} AS VARCHAR)",
                    15)}) AS fp,
                CAST(count(*) AS BIGINT) AS n
         FROM orders
@@ -750,23 +752,23 @@ def etl_table_fingerprint(spark, sf_dir):
 
     c_expr = (
         "concat(CAST(c_custkey AS STRING), '|', c_name, '|', c_mktsegment, "
-        "'|', CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS STRING))"
+        f"'|', CAST({cents_sql('c_acctbal')} AS STRING))"
     )
     o_expr = (
         "concat(CAST(o_orderkey AS STRING), '|', CAST(o_custkey AS STRING), "
         "'|', o_orderstatus, '|', "
-        "CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS STRING))"
+        f"CAST({cents_sql('o_totalprice')} AS STRING))"
     )
     return fp(c, c_expr, "customer").unionByName(fp(o, o_expr, "orders"))
 
 
 @register(
     "etl_unpivot_melt",
-    oracle="""
+    oracle=f"""
     WITH wide AS (
         SELECT strftime(o_orderdate, '%Y-%m') AS ym,
                CAST(count(*) AS BIGINT) AS n_orders,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+               CAST(sum({cents_sql('o_totalprice')})
                     AS BIGINT) AS revenue_cents,
                CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_customers
         FROM orders GROUP BY 1
@@ -794,9 +796,7 @@ def etl_unpivot_melt(spark, sf_dir):
         F.date_format("o_orderdate", "yyyy-MM").alias("ym")
     ).agg(
         F.count("*").cast("long").alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-            "revenue_cents"
-        ),
+        F.sum(cents("o_totalprice")).alias("revenue_cents"),
         F.count_distinct("o_custkey").cast("long").alias("n_customers"),
     )
     return wide.unpivot(
@@ -822,7 +822,7 @@ def etl_unpivot_melt(spark, sf_dir):
     ), sat_customer AS (
         SELECT {md5_hex_duck(
                    "CAST(c_custkey AS VARCHAR) || '|' || c_name || '|' || c_mktsegment "
-                   "|| '|' || CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS VARCHAR)")}
+                   f"|| '|' || CAST({cents_sql('c_acctbal')} AS VARCHAR)")}
             AS hk
         FROM customer
     )
@@ -894,7 +894,7 @@ def etl_data_vault(spark, sf_dir):
                 F.lit("|"),
                 F.col("c_mktsegment"),
                 F.lit("|"),
-                F.round(F.col("c_acctbal") * 100).cast("long").cast("string"),
+                cents("c_acctbal").cast("string"),
             )
         ).alias("hk")
     )
@@ -971,7 +971,7 @@ def etl_reconcile_buckets(spark, sf_dir):
     )
     SELECT coalesce(d.n_name, 'UNKNOWN') AS nation,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql('o.o_totalprice')}) AS BIGINT)
                AS revenue_cents,
            CAST(count(DISTINCT CASE WHEN d.c_custkey IS NULL
                                     THEN o.o_custkey END) AS BIGINT)
@@ -1010,9 +1010,7 @@ def etl_late_dim_unknown(spark, sf_dir):
         .groupBy(F.coalesce(F.col("n_name"), F.lit("UNKNOWN")).alias("nation"))
         .agg(
             F.count("*").cast("long").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "revenue_cents"
-            ),
+            F.sum(cents("o_totalprice")).alias("revenue_cents"),
             F.count_distinct(
                 F.when(F.col("c_custkey").isNull(), F.col("o_custkey"))
             )
@@ -1213,15 +1211,15 @@ def etl_dp_release(spark, sf_dir):
 
 @register(
     "etl_k_anonymity",
-    oracle="""
+    oracle=f"""
     WITH spend AS (
         SELECT o_custkey,
-               CAST(CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                     // 1000000 AS BIGINT) AS spend_band
         FROM orders GROUP BY o_custkey
     ), recs AS (
         SELECT c.c_nationkey, c.c_mktsegment,
-               CAST(CAST(round(c.c_acctbal * 100) AS BIGINT) // 100000
+               CAST({cents_sql('c.c_acctbal')} // 100000
                     AS BIGINT) AS bal_band,
                coalesce(s.spend_band, CAST(-1 AS BIGINT)) AS sens
         FROM customer c LEFT JOIN spend s ON s.o_custkey = c.c_custkey
@@ -1263,7 +1261,7 @@ def etl_k_anonymity(spark, sf_dir):
     c = load_table(spark, sf_dir, "customer")
     spend = o.groupBy("o_custkey").agg(
         F.expr(
-            "CAST(CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
+            f"CAST(CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)"
             " div 1000000 AS BIGINT)"
         ).alias("spend_band")
     )
@@ -1271,7 +1269,7 @@ def etl_k_anonymity(spark, sf_dir):
         "c_nationkey",
         "c_mktsegment",
         F.expr(
-            "CAST(CAST(round(c_acctbal * 100) AS BIGINT) div 100000 AS BIGINT)"
+            f"CAST({cents_sql('c_acctbal')} div 100000 AS BIGINT)"
         ).alias("bal_band"),
         F.coalesce(F.col("spend_band"), F.lit(-1).cast("long")).alias("sens"),
     )

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import cents_sql
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -1149,7 +1150,7 @@ def _trade_top3_edges(spark, sf_dir):
         )
         .agg(
             F.expr(
-                "CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)"
+                f"CAST(sum({cents_sql('l_extendedprice')}) AS BIGINT)"
             ).alias("cents")
         )
     )
@@ -1164,9 +1165,9 @@ def _trade_top3_edges(spark, sf_dir):
 # The top-3 graph in SQL: edges(src, dst), the twin of _trade_top3_edges.
 # MATERIALIZED: inlined at both sides of reciprocity's self-join, the fact
 # rollup under it took 25 s at sf0.1 in DuckDB, 0.15 s materialized.
-_TOP3_CTE = """flow AS (
+_TOP3_CTE = f"""flow AS (
         SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-               CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
+               CAST(sum({cents_sql('l.l_extendedprice')})
                     AS BIGINT) AS cents
         FROM orders o
         JOIN lineitem l ON o.o_orderkey = l.l_orderkey

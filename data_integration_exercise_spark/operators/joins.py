@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.encode import hex_int, md5_hex
+from ..functions.encode import cents, cents_sql, hex_int, md5_hex
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -516,10 +516,10 @@ def _bloom_positions(key_col: str):
 
 @register(
     "join_bloom_prefilter",
-    oracle="""
+    oracle=f"""
     SELECT c.c_mktsegment,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql('o.o_totalprice')}) AS BIGINT)
                AS revenue_cents
     FROM orders o
     JOIN customer c ON c.c_custkey = o.o_custkey
@@ -583,7 +583,7 @@ def join_bloom_prefilter(spark, sf_dir):
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").cast("long").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            F.sum(cents("o_totalprice"))
             .cast("long")
             .alias("revenue_cents"),
         )
@@ -592,7 +592,7 @@ def join_bloom_prefilter(spark, sf_dir):
 
 @register(
     "join_temporal_scd2",
-    oracle="""
+    oracle=f"""
     WITH seq AS (
         SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
                lag(o_orderstatus) OVER (
@@ -609,7 +609,7 @@ def join_bloom_prefilter(spark, sf_dir):
         WHERE prev_status IS NULL OR prev_status <> o_orderstatus
     ), probes AS (
         SELECT o.o_custkey, l.l_shipdate,
-               CAST(round(l.l_extendedprice * 100) AS BIGINT) AS cents
+               {cents_sql('l.l_extendedprice')} AS cents
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     )
     SELECT h.status AS status_at_ship,
@@ -667,7 +667,7 @@ def join_temporal_scd2(spark, sf_dir):
             F.lit(1).alias("tag"),
             F.col("l_orderkey").alias("tie"),
             F.lit(None).cast("string").alias("status"),
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+            cents("l_extendedprice").alias("cents"),
         )
     )
     stream = changes.unionByName(probes)
@@ -691,12 +691,12 @@ def join_temporal_scd2(spark, sf_dir):
 
 @register(
     "join_null_safe",
-    oracle="""
+    oracle=f"""
     WITH l AS (
         SELECT CASE WHEN o_orderkey % 7 = 0 THEN NULL
                     ELSE o_orderkey % 97 END AS bucket,
                CAST(count(*) AS BIGINT) AS n_orders,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS revenue_cents
         FROM orders GROUP BY 1
     ), r AS (
@@ -731,9 +731,7 @@ def join_null_safe(spark, sf_dir):
         .alias("bucket")
     ).agg(
         F.count("*").cast("long").alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-            "revenue_cents"
-        ),
+        F.sum(cents("o_totalprice")).alias("revenue_cents"),
     )
     r = li.groupBy(
         F.when(F.col("l_orderkey") % 7 == 0, None)
@@ -747,14 +745,14 @@ def join_null_safe(spark, sf_dir):
 
 @register(
     "join_mutual_best_match",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT c_custkey, c_nationkey,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS c_cents
+               {cents_sql('c_acctbal')} AS c_cents
         FROM customer
     ), s AS (
         SELECT s_suppkey, s_nationkey,
-               CAST(round(s_acctbal * 100) AS BIGINT) AS s_cents
+               {cents_sql('s_acctbal')} AS s_cents
         FROM supplier
     ), cand AS (
         SELECT c.c_custkey, s.s_suppkey, c.c_nationkey AS nationkey,
@@ -800,12 +798,12 @@ def join_mutual_best_match(spark, sf_dir):
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("c_cents"),
+        cents("c_acctbal").alias("c_cents"),
     )
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey",
         "s_nationkey",
-        F.round(F.col("s_acctbal") * 100).cast("long").alias("s_cents"),
+        cents("s_acctbal").alias("s_cents"),
     )
     cand = (
         c.join(F.broadcast(s), c.c_nationkey == s.s_nationkey)

@@ -44,6 +44,7 @@ from ..functions.sets import (
     ROWS_PER_BAND,
     V,
     WIDE_ROWS_PER_BAND,
+    array_jaccard,
     band_pairs,
     band_pairs_duck,
     band_sigs_sql,
@@ -411,12 +412,10 @@ def _openvocab_scored_pairs(spark, sf_dir, size_bound=True):
     sets = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.expr(token_hashes_sql()).alias("s")
     )
-    inter = F.size(F.array_intersect("s1", "s2"))
-    denom = F.size("s1") + F.size("s2") - inter
     pairs = (
         cand.join(sets.select(F.col("doc_id").alias("doc1"), F.col("s").alias("s1")), "doc1")
         .join(sets.select(F.col("doc_id").alias("doc2"), F.col("s").alias("s2")), "doc2")
-        .withColumn("jac", inter.cast("double") / denom)
+        .withColumn("jac", array_jaccard("s1", "s2"))
         .filter(F.col("jac") >= 0.8)
         .select("doc1", "doc2", F.round("jac", 4).alias("jaccard"))
     )
@@ -494,7 +493,7 @@ def dedup_lsh_pr_eval(spark, sf_dir):
 
 _SIMHASH_ORACLE = f"""
     WITH tok AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
+        SELECT doc_id, unnest({token_set_duck()}) AS token
         FROM documents
     ), idx AS (
         SELECT doc_id,
@@ -1279,7 +1278,7 @@ def propagate_min_labels(labels, edges, max_iters=50, stats=None):
     "dedup_connected_components",
     oracle=f"""
     WITH RECURSIVE sets AS MATERIALIZED (
-        SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS s
+        SELECT doc_id, lang, {token_set_duck()} AS s
         FROM documents
     ), edges AS MATERIALIZED (
         SELECT a.doc_id AS src, b.doc_id AS dst
@@ -1621,9 +1620,9 @@ def dedup_contamination_ngram(spark, sf_dir):
     oracle=f"""
     WITH d AS (
         SELECT doc_id, lang,
-               array_to_string(list_sort(list_distinct(string_split(text, ' '))), ',')
+               array_to_string(list_sort({token_set_duck()}), ',')
                    AS fp,
-               list_distinct(string_split(text, ' ')) AS s,
+               {token_set_duck()} AS s,
                {md5_bucket_duck("doc_id", 10)}
                    AS bkt
         FROM documents
@@ -1917,7 +1916,7 @@ def multimodal_phash_dedup(spark, sf_dir):
     "dedup_soft_weights",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS s
+        SELECT doc_id, lang, {token_set_duck()} AS s
         FROM documents
     ), pairs AS (
         SELECT d1.doc_id AS a, d2.doc_id AS b
@@ -2136,7 +2135,7 @@ def text_langid_confusion(spark, sf_dir):
     "dedup_threshold_sweep",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS s
+        SELECT doc_id, lang, {token_set_duck()} AS s
         FROM documents
     ), scored AS (
         SELECT (1000 * {inter_duck("d1.s", "d2.s")}) // {union_duck("d1.s", "d2.s")}

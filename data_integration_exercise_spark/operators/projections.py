@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.encode import cents_sql
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -190,10 +191,10 @@ def proj_cast(spark, sf_dir):
 
 @register(
     "sql_adhoc_interface",
-    oracle="""
+    oracle=f"""
     SELECT n.n_name,
            CAST(count(DISTINCT c.c_custkey) AS BIGINT) AS n_customers,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql('o.o_totalprice')}) AS BIGINT)
                AS revenue_cents
     FROM customer c
     JOIN nation n ON n.n_nationkey = c.c_nationkey
@@ -221,10 +222,10 @@ def sql_adhoc_interface(spark, sf_dir):
 
     register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT n.n_name,
                CAST(count(DISTINCT c.c_custkey) AS BIGINT) AS n_customers,
-               CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o.o_totalprice')}) AS BIGINT)
                    AS revenue_cents
         FROM customer c
         JOIN nation n ON n.n_nationkey = c.c_nationkey
@@ -238,10 +239,10 @@ def sql_adhoc_interface(spark, sf_dir):
 
 @register(
     "sql_parameterized",
-    oracle="""
+    oracle=f"""
     SELECT c_mktsegment,
            CAST(count(*) AS BIGINT) AS n_customers,
-           CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql('c_acctbal')}) AS BIGINT)
                AS balance_cents
     FROM customer
     WHERE c_mktsegment IN ('BUILDING', 'MACHINERY') AND c_acctbal >= 100.0
@@ -265,10 +266,10 @@ def sql_parameterized(spark, sf_dir):
 
     register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT c_mktsegment,
                CAST(count(*) AS BIGINT) AS n_customers,
-               CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('c_acctbal')}) AS BIGINT)
                    AS balance_cents
         FROM customer
         WHERE c_mktsegment IN (:seg_a, :seg_b) AND c_acctbal >= :min_bal
@@ -280,14 +281,14 @@ def sql_parameterized(spark, sf_dir):
 
 @register(
     "sql_recursive_cte",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE chain AS (
         SELECT c_custkey, 0 AS depth, c_custkey AS root_key,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS path_balance_cents
+               {cents_sql('c_acctbal')} AS path_balance_cents
         FROM customer WHERE c_custkey < 10
         UNION ALL
         SELECT c.c_custkey, p.depth + 1, p.root_key,
-               p.path_balance_cents + CAST(round(c.c_acctbal * 100) AS BIGINT)
+               p.path_balance_cents + {cents_sql('c.c_acctbal')}
         FROM customer c JOIN chain p ON c.c_custkey // 10 = p.c_custkey
         WHERE c.c_custkey >= 10
     )
@@ -317,14 +318,14 @@ def sql_recursive_cte(spark, sf_dir):
 
     register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         WITH RECURSIVE chain AS (
             SELECT c_custkey, 0 AS depth, c_custkey AS root_key,
-                   CAST(round(c_acctbal * 100) AS BIGINT) AS path_balance_cents
+                   {cents_sql('c_acctbal')} AS path_balance_cents
             FROM customer WHERE c_custkey < 10
             UNION ALL
             SELECT c.c_custkey, p.depth + 1, p.root_key,
-                   p.path_balance_cents + CAST(round(c.c_acctbal * 100) AS BIGINT)
+                   p.path_balance_cents + {cents_sql('c.c_acctbal')}
             FROM customer c JOIN chain p ON c.c_custkey div 10 = p.c_custkey
             WHERE c.c_custkey >= 10
         )

@@ -20,6 +20,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.encode import (
+    cents,
+    cents_sql,
     md5_bucket,
     md5_bucket_duck,
     md5_hex,
@@ -144,7 +146,7 @@ def sample_train_valid_test(spark, sf_dir):
     oracle=f"""
     WITH pri AS (
         SELECT o_orderkey, o_totalprice,
-               CAST(CAST(round(o_totalprice * 100) AS BIGINT) * 65537 AS DOUBLE)
+               CAST({cents_sql('o_totalprice')} * 65537 AS DOUBLE)
                / ({md5_int_duck('o_orderkey', 4)} + 1) AS priority
         FROM orders
     )
@@ -176,8 +178,7 @@ def sample_priority_topk(spark, sf_dir):
     k·P on the driver; the scan is the only full pass."""
     o = load_table(spark, sf_dir, "orders")
     h = md5_int("o_orderkey", 4)
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    priority = (cents * 65537).cast("double") / (h + 1)
+    priority = (cents("o_totalprice") * 65537).cast("double") / (h + 1)
     return (
         o.select(
             "o_orderkey",
@@ -375,7 +376,7 @@ def sample_token_budget_mix(spark, sf_dir):
     "sample_importance_estimate",
     oracle=f"""
     WITH s AS (
-        SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+        SELECT {cents_sql('o_totalprice')} AS cents,
                {md5_bucket_duck('o_orderkey', 10)} = 0 AS in_sample
         FROM orders
     ), agg AS (
@@ -411,7 +412,7 @@ def sample_importance_estimate(spark, sf_dir):
     sample could never be cross-verified."""
     o = load_table(spark, sf_dir, "orders")
     s = o.select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         (md5_bucket("o_orderkey", 10) == 0).alias("in_sample"),
     )
     agg = s.agg(
@@ -536,10 +537,10 @@ _NEYMAN_N = 200
     WITH strata AS (
         SELECT o_orderpriority AS stratum,
                CAST(count(*) AS HUGEINT) AS n_h,
-               CAST(sum(CAST(round(o_totalprice * 100) AS HUGEINT)) AS HUGEINT)
+               CAST(sum(CAST({cents_sql('o_totalprice')} AS HUGEINT)) AS HUGEINT)
                    AS s1,
-               CAST(sum(CAST(round(o_totalprice * 100) AS HUGEINT)
-                        * CAST(round(o_totalprice * 100) AS HUGEINT))
+               CAST(sum(CAST({cents_sql('o_totalprice')} AS HUGEINT)
+                        * CAST({cents_sql('o_totalprice')} AS HUGEINT))
                     AS HUGEINT) AS s2
         FROM orders GROUP BY 1
     ), scored AS (
@@ -576,11 +577,11 @@ def sample_neyman_allocation(spark, sf_dir):
     arithmetic on the 5-row frame — the allocation plan costs one scan
     regardless of volume, and its output feeds the executing sampler."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("decimal(38,0)")
+    price_cents = cents("o_totalprice").cast("decimal(38,0)")
     strata = o.groupBy(F.col("o_orderpriority").alias("stratum")).agg(
         F.count("*").cast("decimal(38,0)").alias("n_h"),
-        F.sum(cents).alias("s1"),
-        F.sum(cents * cents).alias("s2"),
+        F.sum(price_cents).alias("s1"),
+        F.sum(price_cents * price_cents).alias("s2"),
     )
     sd = F.floor(
         F.sqrt(
@@ -873,8 +874,8 @@ _PPS_N = 100  # fixed sample budget (picks)
     oracle=f"""
     WITH ordered AS (
         SELECT o_orderkey, o_custkey, o_orderpriority,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-               sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER (
+               {cents_sql('o_totalprice')} AS cents,
+               sum({cents_sql('o_totalprice')}) OVER (
                    ORDER BY {md5_order_duck('o_orderkey')}
                    ROWS UNBOUNDED PRECEDING) AS cum
         FROM orders
@@ -927,7 +928,7 @@ def sample_pps_systematic(spark, sf_dir):
         "o_orderkey",
         "o_custkey",
         "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     keyed = o.withColumn("h", md5_hex("o_orderkey"))
     parts = keyed.repartitionByRange(8, "h", "o_orderkey").withColumn(
@@ -977,8 +978,8 @@ def sample_pps_systematic(spark, sf_dir):
     oracle=f"""
     WITH ordered AS (
         SELECT o_orderpriority,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-               sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER (
+               {cents_sql('o_totalprice')} AS cents,
+               sum({cents_sql('o_totalprice')}) OVER (
                    ORDER BY {md5_order_duck('o_orderkey')}
                    ROWS UNBOUNDED PRECEDING) AS cum
         FROM orders
@@ -1007,7 +1008,7 @@ def sample_pps_systematic(spark, sf_dir):
     ), truth AS (
         SELECT o_orderpriority,
                CAST(count(*) AS BIGINT) AS true_orders,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS true_revenue_cents
         FROM orders GROUP BY 1
     )
@@ -1039,7 +1040,7 @@ def sample_ht_estimate(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     keyed = o.withColumn("h", md5_hex("o_orderkey"))
     parts = keyed.repartitionByRange(8, "h", "o_orderkey").withColumn(

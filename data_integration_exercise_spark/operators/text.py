@@ -19,7 +19,13 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.encode import md5_bucket, md5_bucket_duck, md5_int_duck, md5_int_sql
-from ..functions.sets import doc_masks, jaccard_duck, mask_jaccard, salted_lang_pairs
+from ..functions.sets import (
+    doc_masks,
+    jaccard_duck,
+    mask_jaccard,
+    salted_lang_pairs,
+    token_set_duck,
+)
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -213,10 +219,10 @@ def text_sentiment_lexicon(spark, sf_dir):
 
 @register(
     "dedup_exact_text",
-    oracle="""
+    oracle=f"""
     WITH fp AS (
         SELECT doc_id,
-               array_to_string(list_sort(list_distinct(string_split(text, ' '))), ',')
+               array_to_string(list_sort({token_set_duck()}), ',')
                    AS fingerprint
         FROM documents
     )
@@ -249,7 +255,7 @@ def dedup_exact_text(spark, sf_dir):
     "dedup_near_jaccard",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS s
+        SELECT doc_id, lang, {token_set_duck()} AS s
         FROM documents
     )
     SELECT d1.doc_id AS doc1,
@@ -338,9 +344,9 @@ def text_keywords_topk(spark, sf_dir):
 
 @register(
     "text_pmi_cooccurrence",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
+        SELECT doc_id, unnest({token_set_duck()}) AS tok
         FROM documents
     ), pairs AS (
         SELECT a.tok AS tok1, b.tok AS tok2, count(*) AS n_ab

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udf, udtf
 from pyspark.sql.types import IntegerType
 
+from ..functions.encode import cents, cents_sql
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -229,11 +230,11 @@ def udtf_python(spark, sf_dir):
 
 @register(
     "udf_grouped_train",
-    oracle="""
+    oracle=f"""
     WITH per_order AS (
         SELECT n.n_name, o.o_orderkey,
                CAST(count(*) AS BIGINT) AS n_items,
-               CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql('o.o_totalprice')} AS cents
         FROM lineitem l
         JOIN orders o ON l.l_orderkey = o.o_orderkey
         JOIN customer c ON o.o_custkey = c.c_custkey
@@ -286,7 +287,7 @@ def udf_grouped_train(spark, sf_dir):
         .select(
             "n_name",
             "n_items",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
     )
 

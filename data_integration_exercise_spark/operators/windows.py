@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.encode import cents, cents_sql
 from ..io import load_table
 from ..registry_util import new_registry
 
@@ -449,10 +450,10 @@ def win_rolling_corr(spark, sf_dir):
 
 @register(
     "win_ewma",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT o_orderpriority AS pri, o_orderdate AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS daily_cents
         FROM orders GROUP BY 1, 2
     ), lagged AS (
@@ -498,12 +499,11 @@ def win_ewma(spark, sf_dir):
     day) map-side; the lag window is partitioned per priority over that
     pre-aggregated frame."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
     daily = (
         o.select(
             F.col("o_orderpriority").alias("pri"),
             F.col("o_orderdate").alias("day"),
-            cents.alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
         .groupBy("pri", "day")
         .agg(F.sum("cents").cast("long").alias("daily_cents"))
@@ -530,10 +530,10 @@ def win_ewma(spark, sf_dir):
 
 @register(
     "win_cusum_drift",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT o_orderpriority AS pri, o_orderdate AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS daily_cents
         FROM orders GROUP BY 1, 2
     ), t AS (
@@ -575,13 +575,12 @@ def win_cusum_drift(spark, sf_dir):
     priority, so each series sorts locally within its task; the fact scan
     reduces map-side before the one small shuffle."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
     daily = (
         o.groupBy(
             F.col("o_orderpriority").alias("pri"),
             F.col("o_orderdate").alias("day"),
         )
-        .agg(F.sum(cents).cast("long").alias("daily_cents"))
+        .agg(F.sum(cents("o_totalprice")).cast("long").alias("daily_cents"))
     )
     w_seq = (
         Window.partitionBy("pri")
@@ -610,10 +609,10 @@ def win_cusum_drift(spark, sf_dir):
 
 @register(
     "win_drawdown",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT o_orderpriority AS pri, o_orderdate AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS daily_cents
         FROM orders GROUP BY 1, 2
     ), cum AS (
@@ -651,10 +650,9 @@ def win_drawdown(spark, sf_dir):
     100 TB: both windows run on the pre-aggregated (priority, day) frame;
     the fact scan reduces map-side before the one small shuffle."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
     daily = o.groupBy(
         F.col("o_orderpriority").alias("pri"), F.col("o_orderdate").alias("day")
-    ).agg(F.sum(cents).cast("long").alias("daily_cents"))
+    ).agg(F.sum(cents("o_totalprice")).cast("long").alias("daily_cents"))
     w = (
         Window.partitionBy("pri")
         .orderBy("day")
@@ -675,10 +673,10 @@ def win_drawdown(spark, sf_dir):
 
 @register(
     "win_hampel_filter",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT o_orderpriority AS pri, o_orderdate AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS cents
         FROM orders GROUP BY 1, 2
     ), lw AS (
@@ -721,7 +719,7 @@ def win_hampel_filter(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.col("o_orderpriority").alias("pri"), F.col("o_orderdate").alias("day")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
+    ).agg(F.sum(cents("o_totalprice")).alias("cents"))
     w = Window.partitionBy("pri").orderBy("day").rowsBetween(-3, 3)
     lw = daily.select(
         "pri",
@@ -749,11 +747,11 @@ def win_hampel_filter(spark, sf_dir):
 
 @register(
     "win_rolling_slope",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT o_orderpriority,
                CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS revenue_cents
         FROM orders GROUP BY 1, 2
     ), sums AS (
@@ -800,9 +798,7 @@ def win_rolling_slope(spark, sf_dir):
             "day"
         ),
     ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-            "revenue_cents"
-        )
+        F.sum(cents("o_totalprice")).alias("revenue_cents")
     )
     w = (
         Window.partitionBy("o_orderpriority")
@@ -837,11 +833,11 @@ def win_rolling_slope(spark, sf_dir):
 
 @register(
     "win_holt_linear",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE daily AS (
         SELECT o_orderpriority AS pri,
                CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS cents
         FROM orders WHERE o_orderdate >= TIMESTAMP '2001-06-01'
         GROUP BY 1, 2
@@ -892,7 +888,7 @@ def win_holt_linear(spark, sf_dir):
         .cast("long")
         .alias("day"),
     ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+        F.sum(cents("o_totalprice")).alias("cents")
     )
     series = daily.groupBy("pri").agg(
         F.transform(
@@ -927,12 +923,12 @@ def win_holt_linear(spark, sf_dir):
 
 @register(
     "win_stl_decompose",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT o_orderpriority AS pri,
                CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                    AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS cents
         FROM orders GROUP BY 1, 2
     ), t AS (
@@ -989,7 +985,7 @@ def win_stl_decompose(spark, sf_dir):
         .cast("long")
         .alias("day"),
     ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+        F.sum(cents("o_totalprice")).alias("cents")
     )
     w = Window.partitionBy("pri").orderBy("day").rowsBetween(-3, 3)
     t = (
@@ -1029,12 +1025,12 @@ def win_stl_decompose(spark, sf_dir):
 
 @register(
     "win_theil_sen",
-    oracle="""
+    oracle=f"""
     WITH monthly AS (
         SELECT o_orderpriority AS pri,
                CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT)
                    AS mi,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS cents
         FROM orders GROUP BY 1, 2
     ), nm AS (
@@ -1081,7 +1077,7 @@ def win_theil_sen(spark, sf_dir):
         .cast("long")
         .alias("mi"),
     ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+        F.sum(cents("o_totalprice")).alias("cents")
     ).localCheckpoint(eager=False)  # referenced 3× (both pair sides + counts)
     a = monthly.select(
         "pri", F.col("mi").alias("a_mi"), F.col("cents").alias("a_cents")
@@ -1118,12 +1114,12 @@ def win_theil_sen(spark, sf_dir):
 
 @register(
     "win_holt_winters",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE daily AS (
         SELECT o_orderpriority AS pri,
                CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                    AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    AS cents
         FROM orders GROUP BY 1, 2
     ), prep AS (
@@ -1193,7 +1189,7 @@ def win_holt_winters(spark, sf_dir):
         .cast("long")
         .alias("day"),
     ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+        F.sum(cents("o_totalprice")).alias("cents")
     )
     series = daily.groupBy("pri").agg(
         F.transform(
@@ -1271,7 +1267,7 @@ _KALMAN_K_SQL = (
         SELECT o_orderpriority AS pri,
                CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                    AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    // 1000 AS y
         FROM orders GROUP BY 1, 2
     ), prep AS (
@@ -1332,7 +1328,7 @@ def win_kalman_filter(spark, sf_dir):
             .alias("day"),
         )
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+            F.sum(cents("o_totalprice")).alias("cents")
         )
         .select("pri", "day", F.expr("cents div 1000").alias("y"))
     )
@@ -1578,12 +1574,12 @@ def win_sax_paa(spark, sf_dir):
 
 @register(
     "win_bollinger_bands",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT o_orderpriority AS pri,
                CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                    AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    // 100 AS y
         FROM orders GROUP BY 1, 2
     ), w AS (
@@ -1633,7 +1629,7 @@ def win_bollinger_bands(spark, sf_dir):
         F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")).cast("long").alias("day"),
     ).agg(
         F.expr(
-            "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) DIV 100"
+            f"CAST(sum({cents_sql('o_totalprice')}) AS BIGINT) DIV 100"
         ).alias("y")
     )
     win = (
@@ -1664,12 +1660,12 @@ def win_bollinger_bands(spark, sf_dir):
 
 @register(
     "win_rsi",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT o_orderpriority AS pri,
                CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
                    AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    // 100 AS y
         FROM orders GROUP BY 1, 2
     ), d AS (
@@ -1718,7 +1714,7 @@ def win_rsi(spark, sf_dir):
         F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")).cast("long").alias("day"),
     ).agg(
         F.expr(
-            "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) DIV 100"
+            f"CAST(sum({cents_sql('o_totalprice')}) AS BIGINT) DIV 100"
         ).alias("y")
     )
     ordered = Window.partitionBy("pri").orderBy("day")
@@ -1760,7 +1756,7 @@ _MP_EXCL = 3  # trivial-match exclusion zone (m/2)
         SELECT o_orderpriority AS pri,
                CAST(date_diff('month', DATE '1970-01-01',
                               CAST(o_orderdate AS DATE)) AS BIGINT) AS m,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                    // 100 AS v
         FROM orders GROUP BY 1, 2
     ), win AS (
@@ -1824,7 +1820,7 @@ def win_matrix_profile(spark, sf_dir):
         .alias("m"),
     ).agg(
         F.expr(
-            "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
+            f"CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)"
             " div 100"
         ).alias("v")
     )
@@ -1891,7 +1887,7 @@ _DTW_W = 8  # Sakoe-Chiba band radius (months)
         SELECT o_orderpriority AS pri,
                CAST(date_diff('month', DATE '1970-01-01',
                               CAST(o_orderdate AS DATE)) AS BIGINT) AS m,
-               CAST(CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+               CAST(CAST(sum({cents_sql('o_totalprice')})
                     AS BIGINT) // 100 AS BIGINT) AS v
         FROM orders GROUP BY 1, 2
     ), ser AS (
@@ -1971,7 +1967,7 @@ def win_dtw_pairs(spark, sf_dir):
         .alias("m"),
     ).agg(
         F.expr(
-            "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
+            f"CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)"
             " div 100"
         ).alias("v")
     )

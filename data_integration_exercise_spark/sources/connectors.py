@@ -27,7 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.encode import md5_int_duck, md5_int_sql
+from ..functions.encode import cents, cents_sql, md5_int_duck, md5_int_sql
 from ..io import load_table, scope_tag, stage_dir, stage_once
 from ..registry_util import new_registry
 from ..schemas import CUSTOMER, TABLES
@@ -153,7 +153,7 @@ def sink_parquet(spark, sf_dir):
     unified = o.join(c, o.o_custkey == c.c_custkey)
     unified.write.mode("overwrite").parquet(path)
     return (
-        spark.read.parquet(path)
+        spark.read.schema(unified.schema).parquet(path)
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -454,16 +454,17 @@ def sink_compacted(spark, sf_dir):
     fragmented = stage_dir(sf_dir, "sink_compacted_fragmented")
     compacted = stage_dir(sf_dir, "sink_compacted")
 
+    o = load_table(spark, sf_dir, "orders")
+
     def write():
-        o = load_table(spark, sf_dir, "orders")
         o.repartition(64).write.mode("overwrite").parquet(fragmented)
-        spark.read.parquet(fragmented).repartition(4).write.mode(
+        spark.read.schema(o.schema).parquet(fragmented).repartition(4).write.mode(
             "overwrite"
         ).parquet(compacted)
 
     stage_once(compacted, write)
     return (
-        spark.read.parquet(compacted)
+        spark.read.schema(o.schema).parquet(compacted)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -530,10 +531,10 @@ def sink_clustered(spark, sf_dir):
     the same cut on the un-clustered source, proving the rewrite is
     content-preserving."""
     path = stage_dir(sf_dir, "sink_clustered")
+    li = load_table(spark, sf_dir, "lineitem")
     stage_once(
         path,
-        lambda: load_table(spark, sf_dir, "lineitem")
-        .repartitionByRange(8, "l_shipdate")
+        lambda: li.repartitionByRange(8, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
         .write.mode("overwrite")
         .parquet(path),
@@ -541,7 +542,7 @@ def sink_clustered(spark, sf_dir):
     lo = F.lit("1997-01-01").cast("timestamp_ntz")
     hi = F.lit("1997-02-01").cast("timestamp_ntz")
     return (
-        spark.read.parquet(path)
+        spark.read.schema(li.schema).parquet(path)
         .filter((F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi))
         .groupBy("l_returnflag")
         .agg(
@@ -646,10 +647,13 @@ def sink_manifest_atomic(spark, sf_dir):
 
     root = stage_dir(sf_dir, "sink_manifest_atomic")
     stage_once(root, lambda: _manifest_stage(spark, sf_dir, root))
+    schema = _manifest_orders(spark, sf_dir).schema
 
     def read_snapshot(vid):
         man = json.load(open(os.path.join(root, "_manifests", f"{vid}.json")))
-        return spark.read.parquet(*[os.path.join(root, p) for p in man["files"]])
+        return spark.read.schema(schema).parquet(
+            *[os.path.join(root, p) for p in man["files"]]
+        )
 
     current = open(os.path.join(root, "_current")).read().strip()
     snap = read_snapshot("v1").withColumn("snapshot", F.lit("v1")).unionByName(
@@ -661,6 +665,13 @@ def sink_manifest_atomic(spark, sf_dir):
     )
 
 
+def _manifest_orders(spark, sf_dir):
+    """The orders columns every manifest-committed batch carries."""
+    return load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
+    )
+
+
 def _manifest_stage(spark, sf_dir, root: str) -> None:
     """Write the three batches and the two committed snapshots (see
     sink_manifest_atomic). Exposed for the test's file-level assertions."""
@@ -669,9 +680,7 @@ def _manifest_stage(spark, sf_dir, root: str) -> None:
 
     data = os.path.join(root, "data")
     os.makedirs(data, exist_ok=True)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
-    )
+    o = _manifest_orders(spark, sf_dir)
 
     def write_batch(df, name: str) -> list[str]:
         staging = os.path.join(root, "staging", name)
@@ -759,6 +768,7 @@ def sink_manifest_expire(spark, sf_dir):
     shutil.rmtree(base, ignore_errors=True)
     root = os.path.join(base, f"run{run}")
     _manifest_stage(spark, sf_dir, root)
+    schema = _manifest_orders(spark, sf_dir).schema
 
     live = open(os.path.join(root, "_current")).read().strip()
     man_dir = os.path.join(root, "_manifests")
@@ -773,7 +783,8 @@ def sink_manifest_expire(spark, sf_dir):
     gc_n, gc_price = 0, 0.0
     if orphans:
         row = (
-            spark.read.parquet(*[os.path.join(data_dir, f) for f in orphans])
+            spark.read.schema(schema)
+            .parquet(*[os.path.join(data_dir, f) for f in orphans])
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
                 F.round(F.sum("o_totalprice"), 4).alias("p"),
@@ -792,7 +803,8 @@ def sink_manifest_expire(spark, sf_dir):
 
     man = json.load(open(os.path.join(man_dir, f"{live}.json")))
     post = (
-        spark.read.parquet(*[os.path.join(root, p) for p in man["files"]])
+        spark.read.schema(schema)
+        .parquet(*[os.path.join(root, p) for p in man["files"]])
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -932,7 +944,7 @@ def plan_runtime_filter(spark, sf_dir):
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
             prev_th,
         )
-    return spark.read.parquet(path)
+    return spark.read.schema(result.schema).parquet(path)
 
 
 #: Z-order interleave of 11 partkey bits with 11 day bits — sized to the
@@ -980,9 +992,9 @@ def sink_zorder(spark, sf_dir):
     cost is one range-repartition + local sort, query cost falls by the
     box selectivity."""
     path = stage_dir(sf_dir, "sink_zorder")
+    li = load_table(spark, sf_dir, "lineitem")
 
     def write():
-        li = load_table(spark, sf_dir, "lineitem")
         day = F.greatest(
             F.lit(0),
             F.least(
@@ -1010,7 +1022,7 @@ def sink_zorder(spark, sf_dir):
     lo = F.lit("1996-01-01").cast("timestamp_ntz")
     hi = F.lit("1996-07-01").cast("timestamp_ntz")
     return (
-        spark.read.parquet(path)
+        spark.read.schema(li.schema).parquet(path)
         .filter(
             (F.col("l_partkey") >= 1000)
             & (F.col("l_partkey") < 1500)
@@ -1059,6 +1071,13 @@ def scan_manifest_pruned(spark, sf_dir):
     data, manifest = base + "/data", base + "/manifest"
     li = load_table(spark, sf_dir, "lineitem")
 
+    def file_stats(df):
+        return df.groupBy(F.input_file_name().alias("file")).agg(
+            F.min("l_shipdate").alias("min_ship"),
+            F.max("l_shipdate").alias("max_ship"),
+            F.count("*").alias("n_rows"),
+        )
+
     def write():
         (
             li.repartitionByRange(16, "l_shipdate")
@@ -1067,13 +1086,7 @@ def scan_manifest_pruned(spark, sf_dir):
             .parquet(data)
         )
         (
-            spark.read.schema(li.schema).parquet(data)
-            .groupBy(F.input_file_name().alias("file"))
-            .agg(
-                F.min("l_shipdate").alias("min_ship"),
-                F.max("l_shipdate").alias("max_ship"),
-                F.count("*").alias("n_rows"),
-            )
+            file_stats(spark.read.schema(li.schema).parquet(data))
             .coalesce(1)
             .write.mode("overwrite")
             .parquet(manifest)
@@ -1086,7 +1099,8 @@ def scan_manifest_pruned(spark, sf_dir):
     # file count — metadata, not data)
     files = [
         r.file
-        for r in spark.read.parquet(manifest)
+        for r in spark.read.schema(file_stats(li).schema)
+        .parquet(manifest)
         .filter((F.col("min_ship") < hi) & (F.col("max_ship") >= lo))
         .select("file")
         .collect()
@@ -1104,7 +1118,7 @@ def scan_manifest_pruned(spark, sf_dir):
 
 @register(
     "sink_idempotent_overwrite",
-    oracle="""
+    oracle=f"""
     WITH final AS (
         SELECT o_orderkey,
                date_trunc('month', o_orderdate) AS month,
@@ -1118,7 +1132,7 @@ def scan_manifest_pruned(spark, sf_dir):
     )
     SELECT month,
            CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql('o_totalprice')}) AS BIGINT)
                AS revenue_cents
     FROM final GROUP BY month
     """,
@@ -1167,7 +1181,7 @@ def sink_idempotent_overwrite(spark, sf_dir):
         .groupBy("month")
         .agg(
             F.count("*").cast("long").alias("n"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            F.sum(cents("o_totalprice"))
             .cast("long")
             .alias("revenue_cents"),
         )
@@ -1177,9 +1191,9 @@ def sink_idempotent_overwrite(spark, sf_dir):
 #: the two versions of the orders table read by scan_time_travel and
 #: etl_reconcile_buckets: v2 deletes the rows with o_orderkey % 13 = 0 and
 #: adds 100 cents to those with o_orderkey % 11 = 0
-_TT_VERSIONS_DUCK = """v1 AS (
+_TT_VERSIONS_DUCK = f"""v1 AS (
         SELECT o_orderkey, o_custkey, o_orderstatus,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
+               {cents_sql('o_totalprice')} AS price_cents
         FROM orders
     ), v2 AS (
         SELECT o_orderkey, o_custkey, o_orderstatus,
@@ -1195,7 +1209,7 @@ def _tt_versions(o):
         "o_orderkey",
         "o_custkey",
         "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
+        cents("o_totalprice").alias("price_cents"),
     )
     v2 = v1.filter(F.col("o_orderkey") % 13 != 0).withColumn(
         "price_cents",
@@ -1258,22 +1272,26 @@ def scan_time_travel(spark, sf_dir):
     data, manifest = base + "/data", base + "/manifest"
     v1, v2 = _tt_versions(load_table(spark, sf_dir, "orders"))
 
+    def files_of(df, ver):
+        return (
+            df.select(F.input_file_name().alias("file"))
+            .distinct()
+            .withColumn("version", F.lit(ver))
+        )
+
     def write():
         v1.write.mode("overwrite").parquet(data + "/v1")
         v2.write.mode("overwrite").parquet(data + "/v2")
         for ver in (1, 2):
             (
-                spark.read.schema(v1.schema).parquet(f"{data}/v{ver}")
-                .select(F.input_file_name().alias("file"))
-                .distinct()
-                .withColumn("version", F.lit(ver))
+                files_of(spark.read.schema(v1.schema).parquet(f"{data}/v{ver}"), ver)
                 .coalesce(1)
                 .write.mode("append")
                 .parquet(manifest)
             )
 
     stage_once(base, write)
-    man = spark.read.parquet(manifest)
+    man = spark.read.schema(files_of(v1, 1).schema).parquet(manifest)
     out = None
     for ver in (1, 2):
         files = [r.file for r in man.filter(F.col("version") == ver).collect()]
@@ -1294,7 +1312,7 @@ def scan_time_travel(spark, sf_dir):
 
 @register(
     "sink_wap_publish",
-    oracle="""
+    oracle=f"""
     WITH staged AS (
         SELECT o_orderkey, o_totalprice FROM orders
         WHERE o_orderstatus IN ('O', 'F', 'P')
@@ -1313,7 +1331,7 @@ def scan_time_travel(spark, sf_dir):
     FROM staged
     UNION ALL
     SELECT 'min_price_cents_pos',
-           CAST(min(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT),
+           CAST(min({cents_sql('o_totalprice')}) AS BIGINT),
            min(o_totalprice) > 0
     FROM staged
     UNION ALL
@@ -1340,15 +1358,15 @@ def sink_wap_publish(spark, sf_dir):
 
     base = stage_dir(sf_dir, "sink_wap_publish")
     staging, published = base + "/staging", base + "/published"
+    o = load_table(spark, sf_dir, "orders")
+    cleaned = o.filter(F.col("o_orderstatus").isin("O", "F", "P")).select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+    )
 
     def write():
         shutil.rmtree(base, ignore_errors=True)
-        o = load_table(spark, sf_dir, "orders")
-        cleaned = o.filter(F.col("o_orderstatus").isin("O", "F", "P")).select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-        )
         cleaned.write.mode("overwrite").parquet(staging)
-        staged = spark.read.parquet(staging)
+        staged = spark.read.schema(cleaned.schema).parquet(staging)
         audit = staged.agg(
             F.count("*").cast("long").alias("row_count"),
             (F.count("*") - F.count_distinct("o_orderkey"))
@@ -1357,9 +1375,7 @@ def sink_wap_publish(spark, sf_dir):
             F.sum(F.when(F.col("o_orderkey").isNull(), 1).otherwise(0))
             .cast("long")
             .alias("null_pk"),
-            F.min(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "min_price_cents"
-            ),
+            F.min(cents("o_totalprice")).alias("min_price_cents"),
         ).collect()[0]
         ok = (
             audit.row_count > 0
@@ -1372,16 +1388,14 @@ def sink_wap_publish(spark, sf_dir):
         os.rename(staging, published)  # atomic same-fs publish
 
     stage_once(base, write)
-    pub = spark.read.parquet(published)
+    pub = spark.read.schema(cleaned.schema).parquet(published)
     agg = pub.agg(
         F.count("*").cast("long").alias("row_count"),
         (F.count("*") - F.count_distinct("o_orderkey")).cast("long").alias("dup_pk"),
         F.sum(F.when(F.col("o_orderkey").isNull(), 1).otherwise(0))
         .cast("long")
         .alias("null_pk"),
-        F.min(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-            "min_price_cents"
-        ),
+        F.min(cents("o_totalprice")).alias("min_price_cents"),
     )
     return agg.selectExpr(
         """stack(5,
@@ -1396,10 +1410,10 @@ def sink_wap_publish(spark, sf_dir):
 
 @register(
     "scan_partition_evolution",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
            CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql('l_extendedprice')}) AS BIGINT)
                AS revenue_cents
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-03-15'
@@ -1469,9 +1483,7 @@ def scan_partition_evolution(spark, sf_dir):
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
-                "revenue_cents"
-            ),
+            F.sum(cents("l_extendedprice")).alias("revenue_cents"),
         )
     )
 
@@ -1525,6 +1537,11 @@ def etl_vacuum_retention_plan(spark, sf_dir):
         "o_orderkey", (F.col("o_orderkey") % 8).cast("long").alias("bucket")
     )
 
+    def files_of(df):
+        return df.groupBy(F.input_file_name().alias("file"), "bucket").agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows")
+        )
+
     def write():
         # commit 1: full table, one file per bucket (hash partition on the
         # bucket value routes each bucket to exactly one task)
@@ -1550,16 +1567,8 @@ def etl_vacuum_retention_plan(spark, sf_dir):
             .parquet(data + "/commit_tmp")
         )
         # manifests record (version, file, n_rows, bucket) at commit time
-        c1 = (
-            spark.read.schema(o.schema).parquet(data + "/commit1")
-            .groupBy(F.input_file_name().alias("file"), "bucket")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
-        )
-        c2 = (
-            spark.read.schema(o.schema).parquet(data + "/commit2")
-            .groupBy(F.input_file_name().alias("file"), "bucket")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
-        )
+        c1 = files_of(spark.read.schema(o.schema).parquet(data + "/commit1"))
+        c2 = files_of(spark.read.schema(o.schema).parquet(data + "/commit2"))
         v1 = c1.withColumn("version", F.lit(1).cast("long"))
         v2 = (
             c1.filter(F.col("bucket") >= 3)
@@ -1574,7 +1583,8 @@ def etl_vacuum_retention_plan(spark, sf_dir):
         )
 
     stage_once(base, write)
-    man = spark.read.parquet(manifest)
+    man_schema = files_of(o).withColumn("version", F.lit(1).cast("long")).schema
+    man = spark.read.schema(man_schema).parquet(manifest)
     live = man.filter(F.col("version") == 2).select("file", "n_rows")
     expired = man.filter(F.col("version") == 1).select("file", "n_rows")
     reclaim = expired.join(F.broadcast(live.select("file")), "file", "left_anti")
@@ -1591,7 +1601,7 @@ def etl_vacuum_retention_plan(spark, sf_dir):
     }
     orphans = [p for p in on_disk if p not in manifest_files]
     orphan_rows = (
-        spark.read.parquet(*orphans).count() if orphans else 0
+        spark.read.schema(o.schema).parquet(*orphans).count() if orphans else 0
     )
     plan = [
         ("live",),
@@ -1663,22 +1673,24 @@ def etl_wap_rollback(spark, sf_dir):
     staging = base + "/staging"
     published = base + "/published"
     quarantine = base + "/quarantine"
+    o = load_table(spark, sf_dir, "orders")
+    v1 = o.select("o_orderkey", "o_totalprice")
+    v2 = o.select((F.col("o_orderkey") % 1000).alias("o_orderkey"), "o_totalprice")
 
     def write():
         shutil.rmtree(base, ignore_errors=True)
-        o = load_table(spark, sf_dir, "orders")
         # v1: good commit — publish
-        o.select("o_orderkey", "o_totalprice").write.mode("overwrite").parquet(
-            staging
-        )
+        v1.write.mode("overwrite").parquet(staging)
         os.rename(staging, published)
         # v2: corrupted commit — stage, audit, roll back
-        o.select(
-            (F.col("o_orderkey") % 1000).alias("o_orderkey"), "o_totalprice"
-        ).write.mode("overwrite").parquet(staging)
+        v2.write.mode("overwrite").parquet(staging)
 
     stage_once(base, write)
-    staged = spark.read.parquet(staging) if os.path.exists(staging) else None
+    staged = (
+        spark.read.schema(v2.schema).parquet(staging)
+        if os.path.exists(staging)
+        else None
+    )
     if staged is not None:
         audit = staged.agg(
             F.count("*").cast("long").alias("n"),
@@ -1690,8 +1702,8 @@ def etl_wap_rollback(spark, sf_dir):
             os.rename(staging, quarantine)  # roll back: quarantine, keep v1
         else:  # pragma: no cover - the corruption is deterministic
             raise RuntimeError("corrupted stage unexpectedly passed audit")
-    pub_n = spark.read.parquet(published).count()
-    q = spark.read.parquet(quarantine)
+    pub_n = spark.read.schema(v1.schema).parquet(published).count()
+    q = spark.read.schema(v2.schema).parquet(quarantine)
     q_audit = q.agg(
         F.count("*").cast("long").alias("n"),
         (F.count("*") - F.count_distinct("o_orderkey")).cast("long").alias(

@@ -43,6 +43,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.encode import (
+    cents,
+    cents_sql,
     md5_bucket,
     md5_bucket_duck,
     md5_int,
@@ -673,10 +675,10 @@ def stream_stream_join(spark, sf_dir):
 
 @register(
     "stream_cdc_upsert",
-    oracle="""
+    oracle=f"""
     WITH latest AS (
         SELECT user_id, event_type,
-               CAST(round(value * 100) AS BIGINT) AS cents,
+               {cents_sql('value')} AS cents,
                epoch_ns(ts) // 1000 AS t, event_id,
                row_number() OVER (
                    PARTITION BY user_id
@@ -729,7 +731,7 @@ def stream_cdc_upsert(spark, sf_dir):
         return df.select(
             "user_id",
             "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            cents("value").alias("cents"),
             F.unix_micros("ts").alias("t"),
             "event_id",
         )
@@ -993,7 +995,7 @@ _QSK_STREAM_K = 512
 _QSK_STREAM_ORACLE = f"""
     WITH c AS (
         SELECT o_orderpriority AS pri, o_orderkey AS k,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+               {cents_sql('o_totalprice')} AS cents,
                {md5_int_duck("o_orderkey", 12)}
                    AS skey
         FROM orders
@@ -1084,7 +1086,7 @@ def stream_quantile_ingest(spark, sf_dir):
         return df.select(
             F.col("o_orderpriority").alias("pri"),
             F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         ).withColumn(
             "skey",
             md5_int("k", 12),

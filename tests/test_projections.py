@@ -6,6 +6,7 @@ import pytest
 
 from data_integration_exercise_spark.operators import projections
 
+from .conftest import SF_SMOKE
 from .parity import assert_parity
 
 
@@ -14,19 +15,25 @@ def test_parity(spark, key):
     assert_parity(spark, key)
 
 
-def test_sql_interface_runs_the_oracle_text_verbatim(spark):
+def test_sql_interface_runs_the_oracle_text_verbatim(spark, monkeypatch):
     """The compatibility claim: the EXACT SQL string the oracle runs on
-    DuckDB is what spark.sql() executes — assert the registered oracle
-    text appears verbatim inside the operator source."""
-    import inspect
+    DuckDB is what spark.sql() executes — record every text the operator
+    hands to spark.sql() and assert it is the registered oracle text."""
     import textwrap
 
     from data_integration_exercise_spark.operators import projections
 
-    src = inspect.getsource(projections.sql_adhoc_interface)
+    ran, sql = [], spark.sql
+
+    def record(q, *args, **kwargs):
+        ran.append(q)
+        return sql(q, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", record)
+    projections.sql_adhoc_interface(spark, SF_SMOKE)
     oracle = projections.ORACLES["sql_adhoc_interface"]
     norm = lambda s: " ".join(textwrap.dedent(s).split())  # noqa: E731
-    assert norm(oracle) in norm(src)
+    assert [norm(q) for q in ran] == [norm(oracle)]
 
 
 def test_recursive_cte_depth_and_coverage(spark):

@@ -188,13 +188,14 @@ def test_every_registered_key_documented_in_survey():
     )
 
 
-def _spelled_outside(home: str, spellings: dict) -> list:
+def _spelled_outside(home: str | None, spellings: dict) -> list:
     """``module: what`` for every package module but functions/``home``
-    whose source matches a pattern of ``spellings``."""
+    (every module if ``home`` is None) whose source matches a pattern of
+    ``spellings``."""
     import data_integration_exercise_spark as pkg
 
     root = os.path.dirname(pkg.__file__)
-    home = os.path.join(root, "functions", home)
+    home = home and os.path.join(root, "functions", home)
     found = []
     for d, _, names in os.walk(root):
         for n in names:
@@ -226,17 +227,50 @@ def test_vector_geometry_is_spelled_only_in_vectors_module():
 
 
 def test_set_similarity_is_spelled_only_in_sets_module():
-    """The DuckDB set intersection, the token-mask AND and the MinHash
-    permutation term are written once, in functions/sets.py: a second
+    """The DuckDB set intersection and token set, the array intersection,
+    the token-mask AND and the MinHash permutation term are written once,
+    in functions/sets.py: a second
     spelling could drift from the encoding or the packing the oracles
     replay, and a size-bound or prefix filter added to the one Jaccard
     would miss the copy."""
     spellings = {
         "DuckDB list_intersect": re.compile(re.escape("list_intersect(")),
+        "DuckDB token set": re.compile(
+            re.escape("list_distinct(string_split(text, ' '))")
+        ),
+        "Column array_intersect": re.compile(re.escape("array_intersect(")),
         "Column bitwiseAND": re.compile(re.escape("bitwiseAND(")),
         "MinHash (a*x + b) % M term": re.compile(
             r"\(\{?a\}? \* \{?\w+\}? \+ \{?b\}?\) ?%"
         ),
     }
     found = _spelled_outside("sets.py", spellings)
+    assert not found, found
+
+
+def test_cents_are_spelled_only_in_encode_module():
+    """Money becomes integer cents, ``round(x * 100)`` cast to a 64-bit
+    integer, and embeddings become milli-units, ``floor(v * 1000 + 0.5)``,
+    only in functions/encode.py: the oracles hash and sum these integers,
+    so a second spelling that drifted (another rounding, another cast)
+    would fork every digest built on it."""
+    spellings = {
+        "SQL cents round(x * 100)": re.compile(r"round\(\w[\w.]* \* 100\)"),
+        "Column cents F.round(F.col(x) * 100)": re.compile(
+            r'F\.round\(F\.col\("\w+"\) \* 100\)'
+        ),
+        "milli * 1000 + 0.5": re.compile(re.escape("* 1000 + 0.5")),
+    }
+    found = _spelled_outside("encode.py", spellings)
+    assert not found, found
+
+
+def test_staged_reads_pass_a_schema():
+    """Every parquet read in the package names its schema, spelled
+    ``.read.schema(...).parquet(``: a read without one infers the schema
+    from the files' footers with a Spark job per call, and a staged output
+    always has the schema of the frame that wrote it."""
+    found = _spelled_outside(
+        None, {"unpinned read": re.compile(re.escape(".read.parquet("))}
+    )
     assert not found, found
